@@ -2,12 +2,17 @@ package graft.cypher
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
+  StructType}
 
 import ast._
-import graft.ops.GraphContractViolation
+import graft.ops.{Fixpoint, GraphContractViolation}
+import graft.ops.Fixpoint.{compareIdSeqs, compareIds}
 import graft.ops.GraphOps.bcastIf
 
 /**
@@ -51,7 +56,7 @@ import graft.ops.GraphOps.bcastIf
  *    right trade whenever the frame is narrower than the graph, which
  *    is what piping it means.
  *  - '''Closure row guard.''' Every round the accumulated pair count
- *    (riding the `localCheckpoint` each round materializes anyway) is
+ *    (taken by the job that materializes the round anyway) is
  *    checked against `maxClosureRows` — default `max(64·E, 1024)`, the
  *    [[graft.ops.GraphOps.sccBounded]] contract, overridable via the
  *    session conf `spark.graft.reach.maxClosureRows` — and a
@@ -110,8 +115,9 @@ private[cypher] object Reach {
     * driverUnionFind precedent generalized): an edge frame whose
     * distinct-pair count sits at or under this bound is collected once
     * and the BFS/σ-DP/pointer-walk loop runs in memory — one job
-    * replaces O(diameter) join+checkpoint+count rounds, the dominant
-    * fixed cost of the family on interactive-scale graphs. Every
+    * replaces the O(diameter) round jobs of the distributed loop (the
+    * [[graft.ops.Fixpoint]] kernel), the dominant fixed cost of the
+    * family on interactive-scale graphs. Every
     * maxClosureRows guard, round bound and typed-error message is
     * enforced identically in both paths (equivalence unit-pinned), and
     * a driver computation whose INTERMEDIATE rows outgrow this same
@@ -149,66 +155,6 @@ private[cypher] object Reach {
     * [[DriverRowsConf]] — the caller falls back to the distributed
     * loop. Never user-visible. */
   private final class DriverOverflow extends RuntimeException
-
-  /** Total ordering matching Spark's own sort/min semantics for the
-    * id values the reach frames carry (longs, strings, tagged
-    * (ordinal, id) struct rows) — the driver fast path must replicate
-    * distributed min-tie-breaks and array orderings exactly. */
-  private def cmpAny(a: Any, b: Any): Int = (a, b) match {
-    case (null, null)                   => 0
-    case (null, _)                      => -1
-    case (_, null)                      => 1
-    case (x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row) =>
-      var i = 0
-      while (i < x.length && i < y.length) {
-        val c = cmpAny(x.get(i), y.get(i))
-        if (c != 0) return c
-        i += 1
-      }
-      Integer.compare(x.length, y.length)
-    case (x: java.lang.Long, y: java.lang.Long)       => x.compareTo(y)
-    case (x: java.lang.Integer, y: java.lang.Integer) => x.compareTo(y)
-    // Spark orders StringType by UTF-8 BINARY bytes; Java's
-    // String.compareTo is UTF-16 code-unit order — they diverge for
-    // supplementary-plane characters (surrogates sort below U+E000 in
-    // UTF-16, above in UTF-8), which would break the documented
-    // driver ≡ distributed tie-break equivalence (ADVICE-r16). Pure
-    // ASCII (the overwhelmingly common id shape) short-circuits.
-    case (x: String, y: String) =>
-      def ascii(s: String): Boolean = {
-        var i = 0
-        while (i < s.length) { if (s.charAt(i) >= 128) return false; i += 1 }
-        true
-      }
-      if (ascii(x) && ascii(y)) x.compareTo(y)
-      else {
-        val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) {
-          val c = java.lang.Integer.compare(a(i) & 0xff, b(i) & 0xff)
-          if (c != 0) return c
-          i += 1
-        }
-        Integer.compare(a.length, b.length)
-      }
-    case (x: java.lang.Comparable[_], _) =>
-      x.asInstanceOf[java.lang.Comparable[Any]].compareTo(b)
-    case _ => throw new IllegalStateException(
-      s"unorderable reach id type: ${a.getClass}")
-  }
-
-  private def cmpSeq(a: Seq[Any], b: Seq[Any]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = cmpAny(a(i), b(i))
-      if (c != 0) return c
-      i += 1
-    }
-    Integer.compare(a.length, b.length)
-  }
 
   /** LocalRelation frame from driver rows — no RDD job at build time. */
   private def localDf(spark: org.apache.spark.sql.SparkSession,
@@ -800,8 +746,6 @@ private[cypher] object Reach {
       confBound: Option[Long], cap: Long,
       guardFor: Long => (Long, Long) => Unit)
       : (DataFrame, Option[DataFrame], Long) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
     val spark = raw.sparkSession
     // RAW (src, dst) rows — the grouped-distinct (__m multiplicity)
     // happens here in memory, replacing the distributed
@@ -892,7 +836,7 @@ private[cypher] object Reach {
       bound)
   }
 
-  private def kLevelLevels(edges: DataFrame, srcCol: String,
+  private[cypher] def kLevelLevels(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame], kind: String, k: Int,
       withParents: Boolean, dagProven: Boolean = false)
       : (DataFrame, Option[DataFrame], Long) = {
@@ -900,16 +844,6 @@ private[cypher] object Reach {
       .where(col("__src").isNotNull && col("__dst").isNotNull)
     val confBound = edges.sparkSession.conf
       .getOption(MaxClosureRowsConf).map(_.toLong)
-    // seed sets and per-round frontiers broadcast under the bound
-    // ([[graft.ops.GraphOps.bcastIf]], guide §3.1): the checkpointed
-    // frames carry no size statistics, so without the hint every
-    // per-round join sort-merges — re-shuffling the static edge frame
-    // every round. The exact counts the loop already takes drive the
-    // decision; frames past the bound keep the shuffle strategy.
-    val sdOpt = seeds.map(sd =>
-      sd.select(col(sd.columns.head).as("__src"))
-        .where(col("__src").isNotNull).distinct().localCheckpoint(false))
-    val sdRows = sdOpt.map(_.count()).getOrElse(-1L)
     val dagWhat =
       if (kind == WalkKind)
         "a plain named path over an unbounded range (per-path rows)"
@@ -925,100 +859,112 @@ private[cypher] object Reach {
     // driver fast path ([[DriverRowsConf]]): edge frame under the
     // bound — collect once, run the DAG check and the whole σ DP in
     // memory (one job replaces O(depth) rounds); identical guards,
-    // identical typed errors; an overgrown attempt falls back below.
-    // Unseeded DPs start from every edge (the driverReachable 1/16
-    // gate, same rationale). Admission probes the RAW edge count — a
-    // scan-only job that bounds the distinct pair count from above —
-    // so the grouped-distinct SHUFFLE is paid only by frames headed
-    // for the distributed loop (round 17, guide §2.4).
-    val drvLim = driverRowsLimit(edges.sparkSession)
-    val eGate = if (sdOpt.isDefined) drvLim else drvLim / 16
-    if (drvLim > 0 && sdRows <= drvLim) {
-      val rawCount = raw.count()
-      if (rawCount > 0 && rawCount <= eGate &&
-          fitsDriverBytes(raw, rawCount)) {
-        try {
-          return driverKLevel(raw, sdOpt, withParents, dagProven,
-            dagWhat, confBound, drvLim, guardFor)
-        } catch { case _: DriverOverflow => () }
-      }
+    // identical typed errors; an overgrown attempt falls back to the
+    // kernel
+    driverOr(raw, seeds) { (sdOpt, drvLim) =>
+      driverKLevel(raw, sdOpt, withParents, dagProven, dagWhat, confBound,
+        drvLim, guardFor)
+    } { sd =>
+      kernelKLevel(raw, sd, withParents, dagProven, dagWhat, confBound,
+        guardFor)
     }
-    val e = raw
-      .groupBy("__src", "__dst").agg(count(lit(1)).as("__m"))
-      .localCheckpoint(false)
-    val eCount = e.count()
-    val bound = confBound.getOrElse(math.max(64L * eCount, 1024L))
+  }
+
+  /** The distributed σ DP of [[kLevelLevels]] on the
+    * [[graft.ops.Fixpoint]] kernel: one job per level. */
+  private def kernelKLevel(raw: DataFrame, sd: Option[DataFrame],
+      withParents: Boolean, dagProven: Boolean, dagWhat: String,
+      confBound: Option[Long], guardFor: Long => (Long, Long) => Unit)
+      : (DataFrame, Option[DataFrame], Long) = {
+    val in = kernelInput(raw, sd)
+    // out-edges with their multiplicity: parallel relationships are
+    // distinct paths, so σ multiplies by the hop's row count
+    val g = Fixpoint.graph("kLevel", in.edges, raw.sparkSession)(
+      (ds: Seq[Any]) => ds.groupBy(identity).iterator
+        .map { case (d, xs) => (d, xs.size.toLong) }.toArray)()
+    val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
     val guardCheck: (Long, Long) => Unit = guardFor(bound)
     // dagProven (round 16): a heterogeneous chain whose LABEL graph
     // is acyclic cannot hold an instance cycle (any cycle projects to
     // a label cycle) — the data-level Kahn peel is skipped entirely
-    if (!dagProven)
-      requireDag(e.drop("__m"),
-        sdOpt.getOrElse(e.select(col("__src")).distinct()), dagWhat)
-    var frontier = (sdOpt match {
-      case Some(sd) => e.join(bcastIf(sd, sdRows), Seq("__src"), "left_semi")
-      case None     => e
-    }).select(col("__src"), col("__dst"), col("__m").as("__sig"),
-      col("__m")).localCheckpoint(false)
-    var parents: DataFrame = frontier.select(col("__src").as("__ps"),
-      col("__dst").as("__pn"), lit(1L).as("__pd"),
-      col("__src").as("__pp"), col("__m").as("__pm"))
-    var levels = frontier.drop("__m").withColumn("__dist", lit(1L))
+    if (!dagProven) {
+      val e = raw.distinct().localCheckpoint(false)
+      requireDag(e, seedFrame(sd.getOrElse(e)), dagWhat)
+    }
+    // (src, end) → (σ at this level, the (via, multiplicity) parent
+    // entries of this level) — distance × branching state, never path
+    // count. Level 1: one entry per grouped edge out of the seeds,
+    // the source itself its parent.
+    var fresh: RDD[(Any, (Long, Array[(Any, Long)]))] =
+      Fixpoint.edgesFrom(g, in.seeds).map { case (s, (d, m)) =>
+        ((s, d): Any, (m, Array[(Any, Long)]((s, m))))
+      }
     var d = 1L
-    var total = frontier.count()
-    var fRows = total
-    def guard(round: Long): Unit = guardCheck(total, round)
-    guard(0)
-    var go = total > 0
-    while (go) {
+    var n = Fixpoint.materialize(fresh, "kLevel:1")().rows
+    var total = n
+    var parentRows = n
+    val levels = ArrayBuffer(d -> fresh)
+    guardCheck(total, 0)
+    while (n > 0) {
       d += 1
       // a DAG's depth bounds the loop; MaxRounds is the backstop
       if (d > MaxRounds)
         throw new CypherBindingException(
           s"k-level reach did not converge in $MaxRounds rounds")
-      val stepped = bcastIf(frontier, fRows)
-        .join(e.select(col("__src").as("__mid"), col("__dst").as("__d2"),
-            col("__m").as("__m2")),
-          col("__dst") === col("__mid"))
-        .localCheckpoint(false)
-      val nxt = stepped
-        .select(col("__src"), col("__d2").as("__dst"),
-          (col("__sig") * col("__m2")).as("__sig"))
-        .groupBy("__src", "__dst")
-        .agg(sum(col("__sig")).as("__sig"))
-        .withColumn("__m", lit(1L))
-        .localCheckpoint(false)
-      val n = nxt.count()
-      go = n > 0
-      if (go) {
-        total += n
-        if (withParents) {
-          // one parent entry per DP EDGE of this round: a path ending
-          // at __d2 at distance d steps back to __dst (=via) at d−1,
-          // traversing __m2 parallel relationships. Counted ONCE
-          // after the loop (round 17) — parents ≤ the stepped frame
-          // whose group-by the per-round guard already sees, so the
-          // per-round count bought no safety, only one job per round
-          val np = stepped.select(col("__src").as("__ps"),
-            col("__d2").as("__pn"), lit(d).as("__pd"),
-            col("__dst").as("__pp"), col("__m2").as("__pm"))
-            .distinct().localCheckpoint(false)
-          parents = parents.unionByName(np).localCheckpoint(false)
+      val front = Fixpoint.frontier(fresh) { case (s, (sig, _)) => (s, sig) }
+      fresh = Fixpoint.expand(front, g) {
+          (v: (Any, Long), mid: Any, e: (Any, Long)) =>
+            val (s, sig) = v
+            val (d2, m2) = e
+            ((s, d2): Any, (Math.multiplyExact(sig, m2), (mid, m2)))
         }
-        guard(d)
-        levels = levels
-          .unionByName(nxt.drop("__m").withColumn("__dist", lit(d)))
-          .localCheckpoint(false)
-        frontier = nxt
-        fRows = n
+        .combineByKey(
+          (c: (Long, (Any, Long))) => (c._1, ArrayBuffer(c._2)),
+          (acc: (Long, ArrayBuffer[(Any, Long)]), c: (Long, (Any, Long))) =>
+            (Math.addExact(acc._1, c._1), acc._2 += c._2),
+          (a: (Long, ArrayBuffer[(Any, Long)]),
+           b: (Long, ArrayBuffer[(Any, Long)])) =>
+            (Math.addExact(a._1, b._1), a._2 ++= b._2),
+          g.part)
+        .mapValues { case (sig, ps) => (sig, ps.toArray) }
+      val st = Fixpoint.materialize(fresh, s"kLevel:$d")(
+        _._2._2.length.toLong)
+      n = st.rows
+      if (n > 0) {
+        total += n
+        // one parent entry per DP edge: a path ending at d2 at
+        // distance d steps back to its via at d−1, traversing m2
+        // parallel relationships — counted into the deferred
+        // parent-volume guard below
+        parentRows += st.sum
+        guardCheck(total, d)
+        levels += d -> fresh
       }
     }
     if (withParents) {
-      // deferred parent-volume guard (one job for the whole DP)
-      total += parents.count()
-      guard(d)
+      // deferred parent-volume guard (one check for the whole DP)
+      total += parentRows
+      guardCheck(total, d)
     }
-    (levels, if (withParents) Some(parents) else None, bound)
+    val spark = raw.sparkSession
+    val t = in.idType
+    val all = spark.sparkContext.union(levels.map { case (lvl, r) =>
+      r.map { case (k, v) => (k, lvl, v) }
+    }.toSeq)
+    val levelsDf = spark.createDataFrame(all.map { case (k, lvl, (sig, _)) =>
+        val (s, e) = k.asInstanceOf[(Any, Any)]
+        Row(s, e, sig, lvl)
+      }, StructType(Seq(StructField("__src", t), StructField("__dst", t),
+        StructField("__sig", LongType), StructField("__dist", LongType))))
+    val parentsDf =
+      if (!withParents) None
+      else Some(spark.createDataFrame(all.flatMap { case (k, lvl, (_, ps)) =>
+          val (s, e) = k.asInstanceOf[(Any, Any)]
+          ps.iterator.map { case (via, m) => Row(s, e, lvl, via, m) }
+        }, StructType(Seq(StructField("__ps", t), StructField("__pn", t),
+          StructField("__pd", LongType), StructField("__pp", t),
+          StructField("__pm", LongType)))))
+    (levelsDf, parentsDf, bound)
   }
 
   /** k smallest distinct lengths per pair (one row per (pair, length)
@@ -1027,7 +973,7 @@ private[cypher] object Reach {
     * cumulative take at k paths across ascending levels. Rows with
     * take = 0 drop — the trim keys on (pair, length) BEFORE any
     * expansion. */
-  private def kLevelTrim(levels: DataFrame, kind: String, k: Int)
+  private[cypher] def kLevelTrim(levels: DataFrame, kind: String, k: Int)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the walk kind keeps everything — no per-pair window at all
@@ -1128,71 +1074,60 @@ private[cypher] object Reach {
   }
 
   /** Multi-parent pointer walk over the k-level parent sets: each
-    * chosen (pair, length) row walks back level by level — the join
+    * chosen (pair, length) row walks back level by level — the lookup
     * keys on (src, cur, REMAINING distance), so a node reached at
     * several distances never mixes levels — multiplying by the
     * branching and the per-hop parallel-edge multiplicity (σ-fold,
     * guarded per step). Emits one row per enumerated path with its
     * full id array and a per-path discriminator __pi (identical
     * arrays from parallel edges stay distinct rows). */
-  private def kLevelWalk(chosen: DataFrame, parents: DataFrame,
+  private[cypher] def kLevelWalk(chosen: DataFrame, parents: DataFrame,
       bound: Long, kind: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // the parent map is fixed across steps — count once, broadcast it
-    // into every step's left join under the bound (bcastIf) so the
-    // growing work frame never shuffles. A driver-built LocalRelation
-    // parent frame skips the checkpoint AND the count job (round 17:
-    // its row count is already on the driver).
-    val parLocal = localLeafRows(parents)
-    val par =
-      if (parLocal.isDefined) parents else parents.localCheckpoint(false)
-    val parRows = parLocal.getOrElse(par.count())
     // driver fast path ([[DriverRowsConf]]): small chosen + parent
     // frames walk in memory — one LocalRelation build replaces
-    // O(max dist) join+checkpoint+count steps; same per-step guard
-    // messages; an overgrown expansion falls back below
+    // O(max dist) walk steps; same per-step guard messages; an
+    // overgrown expansion falls back below
     val drvLim = driverRowsLimit(chosen.sparkSession)
-    if (drvLim > 0 && parRows <= drvLim &&
-        fitsDriverBytes(par, parRows)) {
-      val chosenRows = localLeafRows(chosen).getOrElse(chosen.count())
-      if (chosenRows <= drvLim && fitsDriverBytes(chosen, chosenRows)) {
-        try return driverKLevelWalk(chosen, par, bound, kind, k, drvLim)
-        catch { case _: DriverOverflow => () }
+    if (drvLim > 0 && driverAdmits(parents, drvLim) &&
+        driverAdmits(chosen, drvLim)) {
+      try return driverKLevelWalk(chosen, parents, bound, kind, k, drvLim)
+      catch { case _: DriverOverflow => () }
+    }
+    // kernel walk: finished and parent-less rows pass through
+    val start = Fixpoint.values(
+        chosen.select(col("__src"), col("__dst"), col("__dist")))
+      .map { a =>
+        val d = a(2).asInstanceOf[Long]
+        Walker(a(0), a(1), d, d, a(1), a(1) :: Nil)
       }
-    }
-    val maxDist = {
-      val row = chosen.agg(max(col("__dist"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    var work = chosen.select(col("__src"), col("__dst"), col("__dist"),
-      col("__dist").as("__rem"), col("__dst").as("__cur"),
-      array(col("__dst")).as("__ids"))
-    var step = 0L
-    while (step < maxDist) {
-      work = work.join(bcastIf(par, parRows),
-          col("__src") === col("__ps") && col("__cur") === col("__pn") &&
-            col("__rem") === col("__pd") && col("__rem") >= 1, "left")
-        .withColumn("__j", explode(sequence(lit(1L),
-          when(col("__pp").isNull, lit(1L)).otherwise(col("__pm")))))
-        .select(col("__src"), col("__dst"), col("__dist"),
-          when(col("__pp").isNull, col("__rem"))
-            .otherwise(col("__rem") - 1).as("__rem"),
-          when(col("__pp").isNull, col("__cur"))
-            .otherwise(col("__pp")).as("__cur"),
-          when(col("__pp").isNull, col("__ids"))
-            .otherwise(concat(array(col("__pp")), col("__ids")))
-            .as("__ids"))
-        .localCheckpoint(false)
-      val n = work.count()
-      if (n > bound)
-        throw new GraphContractViolation(
-          s"k-level witnesses: the path expansion hit $n rows at " +
-          s"step $step (bound maxClosureRows=$bound). Narrow the " +
-          s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      step += 1
-    }
-    val full = work.select(col("__src"), col("__dst"), col("__dist"),
-      col("__ids").as("__wids"))
+    val par = Fixpoint.values(parents.select(col("__ps"), col("__pn"),
+        col("__pd"), col("__pp"), col("__pm")))
+      .map(a => ((a(0), a(1), a(2)): Any, (a(3), a(4).asInstanceOf[Long])))
+    val walked = Fixpoint.walk("kLevelWalk", start, par,
+        Fixpoint.partitioner(chosen.sparkSession), from = 0)(
+      w => if (w.rem >= 1) (w.src, w.cur, w.rem) else null,
+      _.dist) { (w, ps) =>
+        if (ps == null) Iterator.single(w)
+        else ps.iterator.flatMap { case (pp, pm) =>
+          (0L until pm).iterator.map(_ =>
+            w.copy(rem = w.rem - 1, cur = pp, ids = pp :: w.ids))
+        }
+      } { (n, step) =>
+        if (n > bound)
+          throw new GraphContractViolation(
+            s"k-level witnesses: the path expansion hit $n rows at " +
+            s"step $step (bound maxClosureRows=$bound). Narrow the " +
+            s"anchor, or raise $MaxClosureRowsConf deliberately.")
+      }
+    val elemT = chosen.schema("__dst").dataType
+    val full = chosen.sparkSession.createDataFrame(
+      walked.map(w => Row(w.src, w.dst, w.dist, w.ids)),
+      StructType(Seq(
+        StructField("__src", chosen.schema("__src").dataType),
+        StructField("__dst", elemT),
+        StructField("__dist", LongType),
+        StructField("__wids", ArrayType(elemT, containsNull = true)))))
     val capped = kind match {
       case "groups" | WalkKind => full
       case _ =>
@@ -1218,8 +1153,7 @@ private[cypher] object Reach {
     * falls back to the distributed walk. */
   private def driverKLevelWalk(chosen: DataFrame, par: DataFrame,
       bound: Long, kind: String, k: Int, cap: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import org.apache.spark.sql.types.IntegerType
     val spark = chosen.sparkSession
     val ch = chosen.select(col("__src"), col("__dst"), col("__dist"))
       .collect()
@@ -1282,14 +1216,14 @@ private[cypher] object Reach {
         work.groupBy(w => (w.src, w.dst)).valuesIterator.flatMap { g =>
           g.sortWith { (a, b) =>
             if (a.dist != b.dist) a.dist < b.dist
-            else cmpSeq(a.ids, b.ids) < 0
+            else compareIdSeqs(a.ids, b.ids) < 0
           }.take(k)
         }
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     capped.toSeq.groupBy(w => (w.src, w.dst, w.dist)).valuesIterator
       .foreach { g =>
-        g.sortWith((a, b) => cmpSeq(a.ids, b.ids) < 0).zipWithIndex
+        g.sortWith((a, b) => compareIdSeqs(a.ids, b.ids) < 0).zipWithIndex
           .foreach { case (w, i) =>
             out += Row(w.src, w.dst, w.dist, w.ids, i + 1)
           }
@@ -1434,8 +1368,6 @@ private[cypher] object Reach {
       confBound: Option[Long], cap: Long,
       guardFor: Long => (Long, Int) => Unit)
       : (DataFrame, DataFrame, Long) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
     val spark = raw.sparkSession
     // RAW rows, deduped in memory (round 17) — see [[driverReachable]]
     val pairs = raw.collect().map(r => (r.get(0), r.get(1))).distinct
@@ -1512,7 +1444,7 @@ private[cypher] object Reach {
     * __dist, parents (__ps, __pd, __pp), the closure bound). Distance-1
     * parents are the source itself. State per round is the new pairs'
     * parent EDGES — distance × branching, no per-path state. */
-  private def allParentsPairs(edges: DataFrame, srcCol: String,
+  private[cypher] def allParentsPairs(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame])
       : (DataFrame, DataFrame, Long) = {
     val raw = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
@@ -1525,76 +1457,28 @@ private[cypher] object Reach {
           s"allShortestPaths witnesses: the parent set hit $total rows " +
           s"after round $round (bound maxClosureRows=$bound). Narrow " +
           s"the anchor, or raise $MaxClosureRowsConf deliberately.")
-    val sdOpt = seeds.map(s =>
-      s.select(col(s.columns.head).as("__src"))
-        .where(col("__src").isNotNull).distinct().localCheckpoint(false))
-    val sdRows = sdOpt.map(_.count()).getOrElse(-1L)
     // driver fast path ([[DriverRowsConf]]) — same contract as
-    // [[driverReachable]], incl. the 1/16 unseeded gate and the
-    // scan-only raw-count admission (round 17)
-    val drvLim = driverRowsLimit(edges.sparkSession)
-    val eGate = if (sdOpt.isDefined) drvLim else drvLim / 16
-    if (drvLim > 0 && sdRows <= drvLim) {
-      val rawCount = raw.count()
-      if (rawCount > 0 && rawCount <= eGate &&
-          fitsDriverBytes(raw, rawCount)) {
-        try return driverAllParents(raw, sdOpt, confBound, drvLim,
-          guardFor)
-        catch { case _: DriverOverflow => () }
-      }
+    // [[driverReachable]]
+    driverOr(raw, seeds) { (sdOpt, drvLim) =>
+      driverAllParents(raw, sdOpt, confBound, drvLim, guardFor)
+    } { sd =>
+      val (all, t, bound) = kernelBfs(raw, sd, "allParents",
+        allParents = true, confBound, guardFor,
+        "allShortestPaths witnesses: BFS did not converge in " +
+        s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
+      val spark = raw.sparkSession
+      (spark.createDataFrame(all.map { case (k, (dist, _)) =>
+          val (s, d) = k.asInstanceOf[(Any, Any)]
+          Row(s, d, dist)
+        }, StructType(Seq(StructField("__src", t), StructField("__dst", t),
+          StructField("__dist", LongType)))),
+        spark.createDataFrame(all.flatMap { case (k, (_, vias)) =>
+          val (s, d) = k.asInstanceOf[(Any, Any)]
+          vias.iterator.map(v => Row(s, d, v))
+        }, StructType(Seq(StructField("__ps", t), StructField("__pd", t),
+          StructField("__pp", t)))),
+        bound)
     }
-    val e = raw.distinct().localCheckpoint(false)
-    val eCount = e.count()
-    val bound = confBound.getOrElse(math.max(64L * eCount, 1024L))
-    val guard: (Long, Int) => Unit = guardFor(bound)
-    var seen = (sdOpt match {
-      case Some(sd) =>
-        e.join(bcastIf(sd, sdRows), Seq("__src"), "left_semi")
-      case None => e
-    }).withColumn("__dist", lit(1L)).localCheckpoint(false)
-    var parentsAcc = seen.select(col("__src").as("__ps"),
-      col("__dst").as("__pd"), col("__src").as("__pp"))
-    var frontier = seen
-    var total = frontier.count()
-    var fRows = total
-    guard(total, 0)
-    var rounds = 0
-    var go = total > 0
-    while (go) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          "allShortestPaths witnesses: BFS did not converge in " +
-          s"$MaxRounds rounds — the edge set's diameter exceeds the " +
-          "guard")
-      // small frontiers broadcast (bcastIf): e never shuffles per round
-      val newParents = bcastIf(frontier, fRows)
-        .join(e.select(col("__src").as("__mid"), col("__dst").as("__d2")),
-          col("__dst") === col("__mid"))
-        .select(col("__src"), col("__d2"), col("__dst").as("__via"))
-        .distinct()
-        .join(seen.select(col("__src"), col("__dst").as("__d2")),
-          Seq("__src", "__d2"), "left_anti")
-        .localCheckpoint(false)
-      val next = newParents.select(col("__src"),
-          col("__d2").as("__dst")).distinct()
-        .withColumn("__dist", lit((rounds + 1).toLong))
-        .localCheckpoint(false)
-      val n = next.count()
-      go = n > 0
-      if (go) {
-        total += n + newParents.count()
-        guard(total, rounds)
-        parentsAcc = parentsAcc.unionByName(newParents.select(
-            col("__src").as("__ps"), col("__d2").as("__pd"),
-            col("__via").as("__pp")))
-          .localCheckpoint(false)
-        seen = seen.unionByName(next).localCheckpoint(false)
-        frontier = next
-        fRows = n
-      }
-    }
-    (seen, parentsAcc, bound)
   }
 
   /** In-memory σ-fold pointer walk — the driver fast path of
@@ -1604,8 +1488,6 @@ private[cypher] object Reach {
     * [[DriverOverflow]] past `cap`. */
   private def driverReconstructAll(pairs: DataFrame, parents: DataFrame,
       bound: Long, cap: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
     val spark = pairs.sparkSession
     val pr = pairs.select(col("__src"), col("__dst"), col("__dist"))
       .collect()
@@ -1669,64 +1551,67 @@ private[cypher] object Reach {
   }
 
   /** Multi-parent pointer walk: enumerate EVERY minimal path per pair
-    * (the reconstructWitnessIds loop over an all-parents frame — the
-    * join multiplies by the branching, guarded per step). */
-  private def reconstructAllWitnessIds(pairs0: DataFrame,
-      parents0: DataFrame, bound: Long): DataFrame = {
-    // driver-built LocalRelation inputs skip the checkpoint and the
-    // count jobs (round 17) — localLeafRows is a safe upper bound
-    val pairsLocal = localLeafRows(pairs0)
-    val parentsLocal = localLeafRows(parents0)
-    val pairs =
-      if (pairsLocal.isDefined) pairs0 else pairs0.localCheckpoint(false)
-    val parents =
-      if (parentsLocal.isDefined) parents0
-      else parents0.localCheckpoint(false)
-    // the parent frame is fixed across steps — count once, broadcast
-    // under the bound (bcastIf) so the growing work frame never
-    // shuffles during the walk
-    val parRows = parentsLocal.getOrElse(parents.count())
+    * (the reconstructWitnessIds walk over an all-parents frame — each
+    * step multiplies a row by its node's parents, guarded per step). */
+  private[cypher] def reconstructAllWitnessIds(pairs: DataFrame,
+      parents: DataFrame, bound: Long): DataFrame = {
     // driver fast path ([[DriverRowsConf]]): walk the collected
     // parent sets in memory; same per-step guard; fallback past cap
     val drvLim = driverRowsLimit(pairs.sparkSession)
-    if (drvLim > 0 && parRows <= drvLim &&
-        fitsDriverBytes(parents, parRows)) {
-      val pairRows = pairsLocal.getOrElse(pairs.count())
-      if (pairRows <= drvLim && fitsDriverBytes(pairs, pairRows)) {
-        try return driverReconstructAll(pairs, parents, bound, drvLim)
-        catch { case _: DriverOverflow => () }
+    if (drvLim > 0 && driverAdmits(parents, drvLim) &&
+        driverAdmits(pairs, drvLim)) {
+      try return driverReconstructAll(pairs, parents, bound, drvLim)
+      catch { case _: DriverOverflow => () }
+    }
+    // kernel walk: a pair row starts UNSTARTED (no ids yet) and its
+    // first step is the inner join onto the pair's own parents; every
+    // later step multiplies a row by its current node's parents
+    val start = Fixpoint.values(
+        pairs.select(col("__src"), col("__dst"), col("__dist")))
+      .map(a => Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(1), Nil))
+    val par = Fixpoint.values(
+        parents.select(col("__ps"), col("__pd"), col("__pp")))
+      .map(a => ((a(0), a(1)): Any, a(2)))
+    val walked = Fixpoint.walk("allWalk", start, par,
+        Fixpoint.partitioner(pairs.sparkSession), from = 0)(
+      w => if (w.ids.isEmpty) (w.src, w.dst)
+           else if (w.cur == w.src) null
+           else (w.src, w.cur),
+      _.dist) { (w, ps) =>
+        if (w.ids.isEmpty)
+          if (ps == null) Iterator.empty
+          else ps.iterator.map(pp => w.copy(cur = pp, ids = w.dst :: Nil))
+        else if (ps == null) // a parent-less pointer: the left-join miss
+          Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
+        else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
+      } { (n, step) =>
+        if (step >= 1 && n > bound)
+          throw new GraphContractViolation(
+            s"allShortestPaths witnesses: the path expansion hit $n rows " +
+            s"at step $step (bound maxClosureRows=$bound). Narrow the " +
+            s"anchor, or raise $MaxClosureRowsConf deliberately.")
       }
-    }
-    val maxDist = {
-      val row = pairs.agg(max(col("__dist"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    var work = pairs.join(bcastIf(parents, parRows),
-        col("__src") === col("__ps") && col("__dst") === col("__pd"))
-      .select(col("__src"), col("__dst"), col("__dist"),
-        col("__pp").as("__cur"), array(col("__dst")).as("__ids"))
-    var step = 1L
-    while (step < maxDist) {
-      work = work.join(bcastIf(parents, parRows),
-          col("__src") === col("__ps") && col("__cur") === col("__pd") &&
-            col("__cur") =!= col("__src"), "left")
-        .select(col("__src"), col("__dst"), col("__dist"),
-          when(col("__cur") === col("__src"), col("__cur"))
-            .otherwise(col("__pp")).as("__cur"),
-          when(col("__cur") === col("__src"), col("__ids"))
-            .otherwise(concat(array(col("__cur")), col("__ids")))
-            .as("__ids"))
-        .localCheckpoint(false)
-      val n = work.count()
-      if (n > bound)
-        throw new GraphContractViolation(
-          s"allShortestPaths witnesses: the path expansion hit $n rows " +
-          s"at step $step (bound maxClosureRows=$bound). Narrow the " +
-          s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      step += 1
-    }
-    work.select(col("__src"), col("__dst"), col("__dist"),
-      concat(array(col("__src")), col("__ids")).as("__wids"))
+    witnessFrame(pairs, walked)
+  }
+
+  /** One row of a kernel pointer walk: the pair and its distance, the
+    * remaining distance (k-level walks), the node the walk stands on
+    * and the ids walked so far, nearest the source first. */
+  private final case class Walker(src: Any, dst: Any, dist: Long,
+      rem: Long, cur: Any, ids: List[Any])
+
+  /** A finished single/all-parents walk as (__src, __dst, __dist,
+    * __wids) rows, the source prepended to each id array. */
+  private def witnessFrame(pairs: DataFrame, walked: RDD[Walker])
+      : DataFrame = {
+    val dstT = pairs.schema("__dst").dataType
+    pairs.sparkSession.createDataFrame(
+      walked.map(w => Row(w.src, w.dst, w.dist, w.src :: w.ids)),
+      StructType(Seq(
+        StructField("__src", pairs.schema("__src").dataType),
+        StructField("__dst", dstT),
+        StructField("__dist", LongType),
+        StructField("__wids", ArrayType(dstT, containsNull = true)))))
   }
 
   /** In-memory single-parent pointer walk — the driver fast path of
@@ -1735,8 +1620,6 @@ private[cypher] object Reach {
     * expansion), so the input gate alone bounds it — no overflow
     * fallback needed. */
   private def driverReconstructSingle(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
     val spark = pairs.sparkSession
     val pr = pairs.select(col("__src"), col("__dst"), col("__dist"),
       col("__par")).collect()
@@ -1773,48 +1656,30 @@ private[cypher] object Reach {
 
   /** Parent-pointer walk: (src, dst, dist, par) pair rows → the full
     * witness id array [src, …, dst] per pair. A pair at distance k
-    * resolves after k−1 join steps — the loop runs max(dist)−1 times,
-    * each step one slim self-join; finished rows pass through. */
-  private def reconstructWitnessIds(pairs0: DataFrame): DataFrame = {
-    // a driver-built LocalRelation pair frame skips the checkpoint
-    // and the count job (round 17)
-    val pairsLocal = localLeafRows(pairs0)
-    val pairs =
-      if (pairsLocal.isDefined) pairs0 else pairs0.localCheckpoint(false)
-    val parents = pairs.select(col("__src").as("__ps"),
-      col("__dst").as("__pd"), col("__par").as("__pp"))
-    // pair-sized pointer map, fixed across steps: count once,
-    // broadcast under the bound (bcastIf)
-    val parRows = pairsLocal.getOrElse(pairs.count())
+    * resolves after k−1 steps — the walk runs max(dist)−1 steps, each
+    * one kernel job over the rows still walking
+    * ([[graft.ops.Fixpoint.walk]]). */
+  private[cypher] def reconstructWitnessIds(pairs: DataFrame): DataFrame = {
     // driver fast path ([[DriverRowsConf]]): the single-parent walk in
-    // memory — one LocalRelation replaces max-dist−1 join steps. The
-    // pair frame IS the parent map here, so the one count gates both.
-    if (parRows <= driverRowsLimit(pairs.sparkSession) &&
-        driverRowsLimit(pairs.sparkSession) > 0 &&
-        fitsDriverBytes(pairs, parRows))
+    // memory — one LocalRelation replaces max-dist−1 walk steps. The
+    // pair frame IS the parent map here, so the one count gates both
+    val drvLim = driverRowsLimit(pairs.sparkSession)
+    if (drvLim > 0 && driverAdmits(pairs, drvLim))
       return driverReconstructSingle(pairs)
-    val maxDist = {
-      val row = pairs.agg(max(col("__dist"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    var work = pairs.select(col("__src"), col("__dst"), col("__dist"),
-      col("__par").as("__cur"), array(col("__dst")).as("__ids"))
-    var step = 1L
-    while (step < maxDist) {
-      work = work.join(bcastIf(parents, parRows),
-          col("__src") === col("__ps") && col("__cur") === col("__pd") &&
-            col("__cur") =!= col("__src"), "left")
-        .select(col("__src"), col("__dst"), col("__dist"),
-          when(col("__cur") === col("__src"), col("__cur"))
-            .otherwise(col("__pp")).as("__cur"),
-          when(col("__cur") === col("__src"), col("__ids"))
-            .otherwise(concat(array(col("__cur")), col("__ids")))
-            .as("__ids"))
-        .localCheckpoint(false)
-      step += 1
-    }
-    work.select(col("__src"), col("__dst"), col("__dist"),
-      concat(array(col("__src")), col("__ids")).as("__wids"))
+    val in = Fixpoint.values(pairs.select(col("__src"), col("__dst"),
+      col("__dist"), col("__par")))
+    val start = in.map(a =>
+      Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(3), a(1) :: Nil))
+    val walked = Fixpoint.walk("walk", start,
+        in.map(a => ((a(0), a(1)): Any, a(3))),
+        Fixpoint.partitioner(pairs.sparkSession), from = 1)(
+      w => if (w.cur == w.src) null else (w.src, w.cur),
+      _.dist) { (w, ps) =>
+        if (ps == null) // a parent-less pointer: the left-join miss
+          Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
+        else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
+      } { (_, _) => () }
+    witnessFrame(pairs, walked)
   }
 
   /** Witness id array → the canonical node-struct array: posexplode
@@ -2354,14 +2219,14 @@ private[cypher] object Reach {
    * All (src, dst) pairs connected by a directed path of length ≥ 1 —
    * restricted to `src ∈ seeds` when a seed frame is given.
    *
-   * Frontier BFS, not closure doubling: each round joins only the NEW
-   * pairs of the previous round to the base edges (slim keys), dedupes,
-   * and anti-joins the accumulated seen set — so round work is bounded
-   * by the undiscovered pair count and the loop stops the first round
-   * nothing new appears (≤ diameter rounds, each one job via the lazy
-   * localCheckpoint the round's count probe materializes). At cluster
-   * scale every frame here is (src, dst) pairs — 16 B rows
-   * hash-partitioned on the join key. The accumulated pair count is
+   * Frontier BFS, not closure doubling: each round extends only the NEW
+   * pairs of the previous round along the base edges (slim keys),
+   * dedupes, and drops the pairs earlier rounds found — so round work
+   * is bounded by the undiscovered pair count and the loop stops the
+   * first round nothing new appears (≤ diameter rounds, each ONE job
+   * on the [[graft.ops.Fixpoint]] kernel: the edges are grouped by
+   * source once, the frontier shuffles to them, and the state of
+   * discovered pairs stays co-partitioned with the new ones). The accumulated pair count is
    * guarded by `maxClosureRows` (default `max(64·E, 1024)`; session
    * conf [[MaxClosureRowsConf]] overrides; an explicit argument wins)
    * — the output is closure-sized, and on a well-connected graph that
@@ -2378,9 +2243,8 @@ private[cypher] object Reach {
     * distributed loop. */
   private def driverReachable(raw: DataFrame, sdOpt: Option[DataFrame],
       withDist: Boolean, withParent: Boolean, confBound: Option[Long],
-      cap: Long, guardFor: Long => (Long, Int) => Unit): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
+      cap: Long, guardFor: Long => (Long, Int) => Unit)
+      : DataFrame = {
     val spark = raw.sparkSession
     // RAW rows, deduped here in memory — the distinct SHUFFLE +
     // checkpoint happens only on the distributed path (round 17); the
@@ -2420,7 +2284,7 @@ private[cypher] object Reach {
           if (!seen.contains((s, d2))) {
             // min-id tie-break over this round's discoverers
             fresh.get((s, d2)) match {
-              case Some(p) if cmpAny(p, mid) <= 0 => ()
+              case Some(p) if compareIds(p, mid) <= 0 => ()
               case _ => fresh((s, d2)) = mid
             }
           }
@@ -2470,97 +2334,157 @@ private[cypher] object Reach {
           "graph is too well-connected for an unanchored closure — " +
           "anchor an endpoint (a literal WHERE equality or a piped " +
           s"frame), or raise $MaxClosureRowsConf deliberately.")
-    val sdOpt = seeds.map(s =>
-      s.select(col(s.columns.head).as("__src"))
-        .where(col("__src").isNotNull).distinct().localCheckpoint(false))
-    val sdRows = sdOpt.map(_.count()).getOrElse(-1L)
     // driver fast path ([[DriverRowsConf]]): collect the slim edge
     // frame once, run the whole BFS in memory — identical guards and
-    // typed errors; an overgrown closure falls back below. UNSEEDED
-    // closures grow with the whole graph (every edge seeds the
-    // frontier), so they only qualify at 1/16 of the bound — a
-    // measured 750k-edge unseeded closure ran 3.5× SLOWER driver-side
-    // (q74 quiet A/B 3.4 → 11.8 s) while the seeded cones over the
-    // same frame all won. Admission probes the RAW edge count — a
-    // scan-only job bounding the distinct count from above — so the
-    // distinct SHUFFLE is paid only by frames headed for the
-    // distributed loop (round 17, guide §2.4).
-    val drvLim = driverRowsLimit(edges.sparkSession)
+    // typed errors; an overgrown closure falls back to the kernel
+    driverOr(raw, seeds) { (sdOpt, drvLim) =>
+      driverReachable(raw, sdOpt, withDist, withParent, confBound, drvLim,
+        guardFor)
+    } { sd =>
+      val (all, t, _) = kernelBfs(raw, sd, "reach", allParents = false,
+        confBound, guardFor,
+        "unbounded variable-length: reachability did not converge in " +
+        s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
+      raw.sparkSession.createDataFrame(all.map { case (k, (dist, par)) =>
+          val (s, d) = k.asInstanceOf[(Any, Any)]
+          Row.fromSeq(Seq(s, d) ++ (if (withDist) Seq(dist) else Nil) ++
+            (if (withParent) Seq(par(0)) else Nil))
+        }, StructType(
+          Seq(StructField("__src", t), StructField("__dst", t)) ++
+          (if (withDist) Seq(StructField("__dist", LongType)) else Nil) ++
+          (if (withParent) Seq(StructField("__par", t)) else Nil)))
+    }
+  }
+
+  /** Runs `driver` — an in-memory fast path of a reach loop — when the
+    * edge frame is admitted ([[DriverRowsConf]]); otherwise, or when the
+    * attempt outgrows the bound ([[DriverOverflow]]), runs `kernel`,
+    * the distributed loop. UNSEEDED loops grow with the whole graph
+    * (every edge seeds the frontier), so they only qualify at 1/16 of
+    * the bound — a measured 750k-edge unseeded closure ran 3.5× SLOWER
+    * driver-side (q74 quiet A/B 3.4 → 11.8 s) while the seeded cones
+    * over the same frame all won. Admission probes the RAW edge count —
+    * a scan-only job bounding the distinct count from above — so the
+    * distinct SHUFFLE is paid only by frames headed for the distributed
+    * loop (round 17, guide §2.4). `driver` gets the deduplicated seed
+    * frame and the row bound; `kernel` gets the seeds, deduplicated
+    * when the gate ran. */
+  private def driverOr[R](raw: DataFrame, seeds: Option[DataFrame])(
+      driver: (Option[DataFrame], Long) => R)(
+      kernel: Option[DataFrame] => R): R = {
+    val drvLim = driverRowsLimit(raw.sparkSession)
+    if (drvLim <= 0) return kernel(seeds)
+    val sdOpt = seeds.map(seedFrame)
+    val sdRows = sdOpt.map(_.count()).getOrElse(-1L)
     val eGate = if (sdOpt.isDefined) drvLim else drvLim / 16
-    if (drvLim > 0 && sdRows <= drvLim) {
+    if (sdRows <= drvLim) {
       val rawCount = raw.count()
       if (rawCount > 0 && rawCount <= eGate &&
           fitsDriverBytes(raw, rawCount)) {
-        try return driverReachable(raw, sdOpt, withDist, withParent,
-          confBound, drvLim, guardFor)
+        try return driver(sdOpt, drvLim)
         catch { case _: DriverOverflow => () }
       }
     }
-    val e = raw.distinct().localCheckpoint(false)
-    val eCount = e.count()
-    val bound = confBound.getOrElse(math.max(64L * eCount, 1024L))
-    val guard: (Long, Int) => Unit = guardFor(bound)
-    var seen = sdOpt match {
-      case Some(sd) =>
-        e.join(bcastIf(sd, sdRows), Seq("__src"), "left_semi")
-          .localCheckpoint(false)
-      case None => e
-    }
-    // `withDist`: carry the first-discovery round as `__dist` — BFS
-    // first discovery IS the minimum hop count, so the output is one
-    // row per pair with its shortest-path length. The round's new
-    // pairs all share one distance, so the column is a per-round
-    // literal: the BFS joins stay slim (src, dst) either way.
-    if (withDist) seen = seen.withColumn("__dist", lit(1L))
-    // `withParent` (round 13): record one first-discovery PREDECESSOR
-    // per pair (min-id tie-break — deterministic) so a witness path
-    // can be rebuilt by walking the pointers; a distance-1 pair's
-    // parent is the source itself
-    if (withParent) seen = seen.withColumn("__par", col("__src"))
-    var frontier = seen
-    var total = frontier.count()
-    var fRows = total
+    kernel(sdOpt)
+  }
+
+  /** True when a driver fast path may collect `df`: within `lim` rows
+    * and the byte budget. A driver-built LocalRelation frame needs no
+    * count job (round 17: its row count is already on the driver). */
+  private def driverAdmits(df: DataFrame, lim: Long): Boolean = {
+    val rows = localLeafRows(df).getOrElse(df.count())
+    rows <= lim && fitsDriverBytes(df, rows)
+  }
+
+  /** The distributed first-discovery BFS of [[reachablePairs]] and
+    * [[allParentsPairs]] on the [[graft.ops.Fixpoint]] kernel: one job
+    * per round. The state is one entry per discovered (src, node) pair:
+    * its distance and its parents — the frontier nodes it was first
+    * reached through, all of them with `allParents`, else only the
+    * min-id one (deterministic); a distance-1 pair's parent is its
+    * source. The guard counts pairs, plus parent entries with
+    * `allParents`. Returns every discovered entry, the id type and the
+    * closure bound. */
+  private def kernelBfs(raw: DataFrame, seeds: Option[DataFrame],
+      loop: String, allParents: Boolean, confBound: Option[Long],
+      guardFor: Long => (Long, Int) => Unit, roundsMsg: String)
+      : (RDD[(Any, (Long, Array[Any]))], DataType, Long) = {
+    val in = kernelInput(raw, seeds)
+    val g = Fixpoint.graph(loop, in.edges, raw.sparkSession)(distinctIds)()
+    val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
+    val guard = guardFor(bound)
+    // every discovered pair, flagged when the last round found it
+    var state: RDD[(Any, ((Long, Array[Any]), Boolean))] =
+      Fixpoint.edgesFrom(g, in.seeds)
+        .map { case (s, d) => ((s, d): Any, ((1L, Array[Any](s)), true)) }
+        .partitionBy(g.part)
+    var rows = Fixpoint.materialize(state, s"$loop:0")().rows
+    var n = rows
+    var total = n
     guard(total, 0)
     var rounds = 0
-    var go = total > 0
-    while (go) {
+    while (n > 0) {
       rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          s"unbounded variable-length: reachability did not converge in " +
-          s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
-      // small frontiers broadcast (bcastIf): e never shuffles per round
-      val stepped = bcastIf(frontier, fRows)
-        .join(e.select(col("__src").as("__mid"), col("__dst").as("__d2")),
-          col("__dst") === col("__mid"))
-      val next0 =
-        if (withParent)
-          // keep ONE deterministic predecessor per new pair (the
-          // frontier node it was discovered through, min id)
-          stepped.groupBy(col("__src"), col("__d2"))
-            .agg(min(col("__dst")).as("__par"))
-            .select(col("__src"), col("__d2").as("__dst"), col("__par"))
-            .join(seen.select(col("__src"), col("__dst")),
-              Seq("__src", "__dst"), "left_anti")
-        else stepped
-          .select(col("__src"), col("__d2").as("__dst")).distinct()
-          .join(seen, Seq("__src", "__dst"), "left_anti")
-      val next = (if (withDist)
-          next0.withColumn("__dist", lit((rounds + 1).toLong))
-        else next0)
-        .localCheckpoint(false)
-      val n = next.count()
-      go = n > 0
-      if (go) {
-        total += n
+      if (rounds > MaxRounds) throw new CypherBindingException(roundsMsg)
+      val dist = rounds + 1L
+      val fresh = state.filter(_._2._2)
+      val stepped =
+        Fixpoint.expand(Fixpoint.frontier(fresh)((s, _) => s), g) {
+          (s: Any, mid: Any, d2: Any) => ((s, d2): Any, mid)
+        }
+      // a (src, via) frontier entry reaches each distinct out-neighbour
+      // once, so grouped vias are distinct
+      val cands: RDD[(Any, Array[Any])] =
+        if (allParents) stepped.groupByKey(g.part).mapValues(_.toArray)
+        else stepped.reduceByKey(g.part,
+          (a, b) => if (compareIds(a, b) <= 0) a else b).mapValues(Array(_))
+      val next = Fixpoint.settle(cands, state.mapValues(_._1)) {
+        (pars, old) => if (old.isEmpty) Some((dist, pars)) else None
+      }
+      // pairs are never rewritten, so the state grows by the fresh ones
+      val st = Fixpoint.materialize(next, s"$loop:$rounds") {
+        case (_, ((_, pars), isNew)) => if (isNew) pars.length.toLong else 0L
+      }
+      n = st.rows - rows
+      rows = st.rows
+      state = next
+      if (n > 0) {
+        total += n + (if (allParents) st.sum else 0L)
         guard(total, rounds)
-        seen = seen.unionByName(next).localCheckpoint(false)
-        frontier = next
-        fRows = n
       }
     }
-    seen
+    (state.mapValues(_._1), in.idType, bound)
   }
+
+  /** A seed frame as the driver fast paths read it: its first column
+    * as `__src`, nulls dropped, deduplicated and checkpointed. */
+  private def seedFrame(s: DataFrame): DataFrame =
+    s.select(col(s.columns.head).as("__src"))
+      .where(col("__src").isNotNull).distinct().localCheckpoint(false)
+
+  /** A reach loop's kernel entry: the slim edge pairs and the seed ids
+    * as plain values of one id type (the wider type of the edge and
+    * seed columns, which the DataFrame joins compared in). */
+  private final class KernelInput(val edges: RDD[(Any, Any)],
+      val seeds: Option[RDD[Any]], val idType: DataType)
+
+  private def kernelInput(raw: DataFrame, seeds: Option[DataFrame])
+      : KernelInput = {
+    val t = Fixpoint.commonType(Seq(raw.schema("__src").dataType,
+      raw.schema("__dst").dataType) ++
+      seeds.map(s => s.schema(s.columns.head).dataType): _*)
+    val edges = Fixpoint.values(raw.select(
+        Fixpoint.castTo(raw, "__src", t), Fixpoint.castTo(raw, "__dst", t)))
+      .map(a => (a(0), a(1)))
+    val sd = seeds.map { s =>
+      Fixpoint.values(s.select(Fixpoint.castTo(s, s.columns.head, t)))
+        .map(_(0)).filter(_ != null)
+    }
+    new KernelInput(edges, sd, t)
+  }
+
+  /** A node's distinct out-neighbours. */
+  private val distinctIds: Seq[Any] => Array[Any] = _.distinct.toArray
 
   /**
    * allShortestPaths over an unbounded range, ANCHORED form: one row
@@ -2591,8 +2515,6 @@ private[cypher] object Reach {
   private def driverAllShortestWitnesses(raw: DataFrame, sd: DataFrame,
       confBound: Option[Long], cap: Long,
       guardFor: Long => (Long, Int, String) => Unit): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
     val spark = raw.sparkSession
     // RAW rows, deduped in memory (round 17) — see [[driverReachable]]
     val pairs = raw.collect().map(r => (r.get(0), r.get(1))).distinct

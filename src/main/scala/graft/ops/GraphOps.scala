@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType}
+
+import graft.ops.Fixpoint.compareIds
 
 /**
  * Graph analytics over edge lists, complementing
@@ -1215,86 +1218,30 @@ object GraphOps {
    * Weighted single-source (or multi-source) shortest paths (round
    * 11): distributed frontier RELAXATION — Bellman-Ford's shape, the
    * standard Spark lowering (a Dijkstra priority queue has no
-   * distributed form). Each round joins only the rows IMPROVED last
-   * round against the edge list, min-aggregates candidate distances
+   * distributed form). Each round extends only the rows IMPROVED last
+   * round along their out-edges, min-aggregates candidate distances
    * per destination, and keeps the ones that beat the settled table —
    * so round work tracks the improvement wavefront, not the node
    * count, and the loop stops the first round nothing improves.
-   * Output: one (node, dist) row per reachable node, sources at 0.0.
+   * Output: one (node, dist) row per reachable node, sources at 0.0;
+   * the node column takes the wider of the edge and source id types.
    *
-   * Weights must be NON-NEGATIVE (checked up front, one limit-1 probe
-   * on the edge scan): relaxation still converges with negative
+   * Weights must be NON-NEGATIVE (checked by the job that groups the
+   * edges): relaxation still converges with negative
    * edges, but a negative CYCLE would improve forever — the typed
    * error beats a silent maxIter timeout. Rounds are bounded by
    * `maxIter` (weighted improvement can revisit a node up to V−1
    * times in the worst case; the guard fails typed, never loops).
    *
-   * Scale shape: slim (node, dist) frames hash-joined against the
-   * once-checkpointed edge list; per-round lineage cut + one count
-   * probe; the settled table is node-bounded. The same posture as
-   * the unweighted reach BFS, plus the min-combine per round.
+   * Scale shape: runs on the [[Fixpoint]] kernel ([[relax]]) — the
+   * edges are grouped by source once, and each round is one job over
+   * the improved nodes; the settled state holds one entry per node.
    */
   def weightedSssp(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, sources: DataFrame,
-      maxIter: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
-    require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-        col(weightCol).cast(DoubleType).as("__w"))
-      .where(col("__s").isNotNull && col("__d").isNotNull &&
-        col("__w").isNotNull)
-      .localCheckpoint(false)
-    if (e.where(col("__w") < 0).limit(1).count() > 0)
-      throw new GraphContractViolation(
-        "weightedSssp: negative edge weight — relaxation requires " +
-        "w >= 0 (a negative cycle would improve forever)")
-    var dist = sources
-      .select(col(sources.columns.head).as("__n")).distinct()
-      .where(col("__n").isNotNull)
-      .withColumn("__dist", lit(0.0))
-      .localCheckpoint(false)
-    var frontier = dist
-    // full counts replace the limit-1 probes: the number doubles as
-    // the broadcast-hint bound (bcastIf) so the static edge frame is
-    // never shuffled per relaxation round; distRows is a monotone
-    // upper bound on the settled table (safe for the hint — it can
-    // only miss a broadcast, never over-broadcast)
-    var fRows = frontier.count()
-    var distRows = fRows
-    var go = fRows > 0
-    var i = 0
-    while (go) {
-      i += 1
-      if (i > maxIter)
-        throw new GraphContractViolation(
-          s"weightedSssp: relaxation did not converge in $maxIter " +
-          "rounds — raise maxIter (dense weighted improvement can " +
-          "take up to V-1 rounds)")
-      val cand = bcastIf(frontier, fRows).join(e, col("__n") === col("__s"))
-        .select(col("__d").as("__n"),
-          (col("__dist") + col("__w")).as("__cd"))
-        .groupBy(col("__n")).agg(min(col("__cd")).as("__cd"))
-      val improved = cand
-        .join(bcastIf(dist.select(col("__n"), col("__dist").as("__old")),
-          distRows), Seq("__n"), "left")
-        .where(col("__old").isNull || col("__cd") < col("__old"))
-        .select(col("__n"), col("__cd").as("__dist"))
-        .localCheckpoint(false)
-      val n = improved.count()
-      go = n > 0
-      if (go) {
-        dist = dist
-          .join(bcastIf(improved.select(col("__n").as("__ni")), n),
-            col("__n") === col("__ni"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint(false)
-        frontier = improved
-        fRows = n
-        distRows += n
-      }
-    }
-    dist.select(col("__n").as("node"), col("__dist").as("dist"))
-  }
+      maxIter: Int = 100): DataFrame =
+    relax("weightedSssp", edges, srcCol, dstCol, weightCol, sources,
+      maxIter, withPred = false)
 
   /**
    * Weighted shortest-path TREE (round 11): [[weightedSssp]] carrying
@@ -1307,136 +1254,158 @@ object GraphOps {
    * same struct-min trick as MERGE's winner rule), so the tree is
    * deterministic and a SQL oracle reproduces it with a plain min().
    *
-   * Same relaxation shape and guards as [[weightedSssp]]; the only
-   * addition is the pred member riding the per-round min-combine
-   * struct. Output: (node, dist, pred).
+   * Same relaxation, guards and kernel loop as [[weightedSssp]]
+   * ([[relax]]), with the pred riding the per-round min-combine.
+   * Output: (node, dist, pred); the node and pred columns take the
+   * wider of the edge and source id types.
    */
   def weightedSsspTree(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, sources: DataFrame,
-      maxIter: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StringType}
+      maxIter: Int = 100): DataFrame =
+    relax("weightedSsspTree", edges, srcCol, dstCol, weightCol, sources,
+      maxIter, withPred = true)
+
+  /** The relaxation loop of [[weightedSssp]] and [[weightedSsspTree]]
+    * (`withPred`) on the [[Fixpoint]] kernel: the edges are grouped by
+    * source once (that job also counts negative weights), and each
+    * round is one job — the improved nodes extend along their
+    * out-edges on their own partitions, candidates min-combine per
+    * node, and a candidate replaces the node's entry in the settled
+    * state (one entry per node) only when it beats it. Without preds
+    * every candidate carries a null pred, so a node improves only on a
+    * strictly smaller distance.
+    * Output (node, dist[, pred]); errors name `op`. */
+  private def relax(op: String, edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String, sources: DataFrame,
+      maxIter: Int, withPred: Boolean): DataFrame = {
+    import org.apache.spark.sql.types.DoubleType
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
+    val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
         col(weightCol).cast(DoubleType).as("__w"))
       .where(col("__s").isNotNull && col("__d").isNotNull &&
         col("__w").isNotNull)
-      .localCheckpoint(false)
-    if (e.where(col("__w") < 0).limit(1).count() > 0)
+    val src = sources.select(col(sources.columns.head).as("__n"))
+    val t = Fixpoint.commonType(e.schema("__s").dataType,
+      e.schema("__d").dataType, src.schema("__n").dataType)
+    // node → (dst, weight) out-edges; the build job also counts the
+    // negative weights
+    val g = Fixpoint.graph(op, Fixpoint.values(e.select(
+        Fixpoint.castTo(e, "__s", t), Fixpoint.castTo(e, "__d", t),
+        col("__w"))).map(a => (a(0), (a(1), a(2).asInstanceOf[Double]))),
+      spark)((es: Seq[(Any, Double)]) => es.toArray)(
+      _.count(_._2 < 0).toLong)
+    if (g.sum > 0)
       throw new GraphContractViolation(
-        "weightedSsspTree: negative edge weight — relaxation requires " +
+        s"$op: negative edge weight — relaxation requires " +
         "w >= 0 (a negative cycle would improve forever)")
-    val predType = e.schema("__s").dataType
-    var dist = sources
-      .select(col(sources.columns.head).as("__n")).distinct()
-      .where(col("__n").isNotNull)
-      .withColumn("__dist", lit(0.0))
-      .withColumn("__pred", lit(null).cast(predType))
-      .localCheckpoint(false)
-    var frontier = dist
-    // same count-driven broadcast hints as weightedSssp (see there)
-    var fRows = frontier.count()
-    var distRows = fRows
-    var go = fRows > 0
+    // node → (dist, pred), partitioned by node, each entry flagged
+    // when the last round improved it: the sources at 0.0 with a null
+    // pred
+    var state: RDD[(Any, ((Double, Any), Boolean))] = Fixpoint.values(
+        src.select(Fixpoint.castTo(src, "__n", t)))
+      .flatMap(a => Option(a(0)).map(n => (n, ((0.0, null: Any), true))))
+      .reduceByKey(g.part, (a, _) => a)
+    var n = Fixpoint.materialize(state, s"$op:0")().rows
     var i = 0
-    while (go) {
+    while (n > 0) {
       i += 1
       if (i > maxIter)
         throw new GraphContractViolation(
-          s"weightedSsspTree: relaxation did not converge in $maxIter " +
+          s"$op: relaxation did not converge in $maxIter " +
           "rounds — raise maxIter (dense weighted improvement can " +
           "take up to V-1 rounds)")
-      val cand = bcastIf(frontier, fRows).join(e, col("__n") === col("__s"))
-        .select(col("__d").as("__n"),
-          struct((col("__dist") + col("__w")).as("__cd"),
-            col("__s").as("__cp")).as("__c"))
-        .groupBy(col("__n")).agg(min(col("__c")).as("__c"))
-        .select(col("__n"), col("__c.__cd").as("__cd"),
-          col("__c.__cp").as("__cp"))
-      val improved = cand
-        .join(bcastIf(dist.select(col("__n"), col("__dist").as("__old"),
-            col("__pred").as("__oldp")), distRows), Seq("__n"), "left")
-        .where(col("__old").isNull || col("__cd") < col("__old") ||
-          (col("__cd") === col("__old") && col("__oldp").isNotNull &&
-            col("__cp") < col("__oldp")))
-        .select(col("__n"), col("__cd").as("__dist"),
-          col("__cp").as("__pred"))
-        .localCheckpoint(false)
-      val n = improved.count()
-      go = n > 0
-      if (go) {
-        dist = dist
-          .join(bcastIf(improved.select(col("__n").as("__ni")), n),
-            col("__n") === col("__ni"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint(false)
-        frontier = improved
-        fRows = n
-        distRows += n
+      // the frontier already sits on its nodes' edge partitions
+      val cands = Fixpoint.expand(
+          state.filter(_._2._2).mapValues(_._1._1), g) {
+          (dist: Double, node: Any, e: (Any, Double)) =>
+            (e._1, (dist + e._2, if (withPred) node else null))
+        }.reduceByKey(g.part, (a, b) => if (treeOrder(a, b) <= 0) a else b)
+      val next = Fixpoint.settle(cands, state.mapValues(_._1)) {
+        case (c, None) => Some(c)
+        case (c, Some((old, oldp))) =>
+          val d = compareIds(c._1, old)
+          if (d < 0 || (d == 0 && oldp != null &&
+              compareIds(c._2, oldp) < 0)) Some(c)
+          else None
       }
+      n = Fixpoint.materialize(next, s"$op:$i")(
+        v => if (v._2._2) 1L else 0L).sum
+      state = next
     }
-    dist.select(col("__n").as("node"), col("__dist").as("dist"),
-      col("__pred").as("pred"))
+    val rows = state.map { case (k, ((dist, pred), _)) =>
+      if (withPred) Row(k, dist, pred) else Row(k, dist)
+    }
+    spark.createDataFrame(rows, StructType(Seq(StructField("node", t),
+      StructField("dist", DoubleType)) ++
+      (if (withPred) Seq(StructField("pred", t)) else Nil)))
+  }
+
+  /** The shortest-path tree's order on (dist, pred) entries: distance
+    * first, then the smaller predecessor, a source's null pred
+    * smallest — Spark's `min(struct(dist, pred))` order. */
+  private def treeOrder(a: (Double, Any), b: (Double, Any)): Int = {
+    val c = compareIds(a._1, b._1)
+    if (c != 0) c else compareIds(a._2, b._2)
   }
 
   /**
    * Route expansion over a [[weightedSsspTree]] (round 11): one row
    * per HOP of every node's cheapest route — (node, pos, hop), pos 0
    * at the source, the last pos at the node itself. Iterative
-   * pred-following: each round joins the still-walking heads against
-   * the tree's (node → pred) map, so round work is the number of
-   * unfinished routes and the loop ends when every head reaches a
-   * source (null pred). Output rows = Σ route lengths — bounded by
-   * nodes × the tree's depth; `maxIter` guards a malformed tree
-   * (a pred cycle cannot arise from [[weightedSsspTree]] itself, but
-   * a hand-edited frame could) with a typed error.
+   * pred-following: each round moves the still-walking heads one pred
+   * link back, so round work is the number of unfinished routes and
+   * the loop ends when every head reaches a source (null pred).
+   * Output rows = Σ route lengths — bounded by nodes × the tree's
+   * depth; `maxIter` guards a malformed tree (a pred cycle cannot
+   * arise from [[weightedSsspTree]] itself, but a hand-edited frame
+   * could) with a typed error.
    *
-   * Scale: the tree is node-sized (broadcast-able); each round is one
-   * hash join of the shrinking head set against it plus a union onto
-   * the accumulated rows, lineage-cut per round.
+   * Runs on the [[Fixpoint]] kernel: the tree's (node → pred) links
+   * are indexed once as the loop's adjacency, and each round is one
+   * job that shuffles only the heads still walking.
    */
   def ssspRoutes(tree: DataFrame, maxIter: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.sql.types.{IntegerType, StringType}
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    val t = tree.select(col("node").cast(StringType).as("__tn"),
-        col("pred").cast(StringType).as("__tp"))
-      .localCheckpoint(false)
-    // walking state: (target, head, back) — back = hops walked back
-    // from the target so far; finished rows (head's pred null) retire
-    var acc = tree.select(col("node").cast(StringType).as("__target"),
-        col("node").cast(StringType).as("__hop"), lit(0).as("__back"))
-      .localCheckpoint(false)
-    var frontier = acc
-    // the node-sized pred map broadcasts under the bound (bcastIf):
-    // neither the heads nor the map shuffle per round
-    val tRows = t.count()
+    val spark = tree.sparkSession
+    val t = Fixpoint.values(tree.select(col("node").cast(StringType),
+      col("pred").cast(StringType)))
+    val g = Fixpoint.graph("routes",
+      t.flatMap(a => Option(a(1)).map(p => (a(0), p))), spark)(
+      (ps: Seq[Any]) => ps.toArray)()
+    // walking heads: hop → (target, back), back = hops walked back
+    // from the target so far
+    var fresh: RDD[(Any, (Any, Int))] = t.map(a => (a(0), (a(0), 0)))
+    var n = Fixpoint.materialize(fresh, "routes:0")().rows
+    val acc = scala.collection.mutable.ArrayBuffer(fresh)
     var i = 0
-    var go = frontier.limit(1).count() > 0
-    while (go) {
+    while (n > 0) {
       i += 1
       if (i > maxIter)
         throw new GraphContractViolation(
           s"ssspRoutes: route expansion did not terminate in $maxIter " +
           "rounds — the tree's pred links do not reach a source " +
           "(malformed or cyclic tree)")
-      val next = frontier
-        .join(bcastIf(t, tRows), frontier("__hop") === t("__tn"))
-        .where(col("__tp").isNotNull)
-        .select(col("__target"), col("__tp").as("__hop"),
-          (col("__back") + 1).as("__back"))
-        .localCheckpoint(false)
-      go = next.limit(1).count() > 0
-      if (go) {
-        acc = acc.unionByName(next).localCheckpoint(false)
-        frontier = next
+      fresh = Fixpoint.expand(fresh, g) {
+        (v: (Any, Int), _: Any, pred: Any) => (pred, (v._1, v._2 + 1))
       }
+      n = Fixpoint.materialize(fresh, s"routes:$i")().rows
+      if (n > 0) acc += fresh
     }
     // pos = route length − back (source at 0, target last)
-    val lens = acc.groupBy(col("__target"))
-      .agg(max(col("__back")).as("__len"))
-    acc.join(lens, Seq("__target"))
-      .select(col("__target").as("node"),
-        (col("__len") - col("__back")).as("pos"),
-        col("__hop").as("hop"))
+    val rows = spark.sparkContext.union(acc.toSeq)
+      .flatMap { case (hop, (target, back)) =>
+        Option(target).map(tg => (tg, (hop, back)))
+      }
+      .groupByKey(g.part)
+      .flatMap { case (target, hops) =>
+        val len = hops.iterator.map(_._2).max
+        hops.iterator.map { case (hop, back) => Row(target, len - back, hop) }
+      }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("node", StringType), StructField("pos", IntegerType),
+      StructField("hop", StringType))))
   }
 }
 

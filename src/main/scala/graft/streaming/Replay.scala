@@ -70,33 +70,45 @@ object Replay {
   private def checkpointRoot(spark: SparkSession): Option[String] =
     spark.conf.getOption(CheckpointDirConf).filter(_.nonEmpty)
 
+  /** Checkpoint manager for the replay queries. Spark's default
+    * FileContext-based manager makes Hadoop's local filesystem fork a
+    * `readlink` process for every rename (one per state-store and log
+    * commit); the FileSystem-based manager renames through NIO. */
+  private val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private val CheckpointManager = "org.apache.spark.sql.execution." +
+    "streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
   private def withReplayConf[R](spark: SparkSession, partitions: Int,
       noDataBatches: Boolean)(body: String => R): R = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevP = spark.conf.get(pKey)
-    val prevN = spark.conf.getOption(nKey)
     val parts = spark.conf.getOption(PartitionsConf)
       .map(_.toInt).getOrElse(partitions)
-    spark.conf.set(pKey, parts)
-    spark.conf.set(nKey, noDataBatches.toString)
-    val ckpt = checkpointRoot(spark).map { root =>
-      java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(root), "graft_replay_ckpt").toString
-    }
-    try body(ckpt.orNull)
-    finally {
-      spark.conf.set(pKey, prevP)
-      prevN match {
-        case Some(v) => spark.conf.set(nKey, v)
-        case None    => spark.conf.unset(nKey)
+    val overrides = Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" ->
+        noDataBatches.toString,
+      CheckpointManagerKey -> CheckpointManager)
+    val prev = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    var ckpt: Option[java.nio.file.Path] = None
+    try {
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      ckpt = checkpointRoot(spark).map(root =>
+        java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(root), "graft_replay_ckpt"))
+      body(ckpt.map(_.toString).orNull)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
       ckpt.foreach { d =>
         try {
           import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
+          val paths = {
+            val walk = java.nio.file.Files.walk(d)
+            try walk.iterator().asScala.toVector finally walk.close()
+          }
+          paths.sortBy(-_.getNameCount)
             .foreach(java.nio.file.Files.deleteIfExists(_))
         } catch { case _: Throwable => () }
       }

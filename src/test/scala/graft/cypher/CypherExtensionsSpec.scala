@@ -1517,7 +1517,12 @@ class CypherExtensionsSpec extends AnyFunSuite {
            |RETURN a.Name AS an, b.Name AS bn, length(p) AS l
            |ORDER BY an, bn, l""".stripMargin)
         .map(x => (x.getString(0), x.getString(1), x.getLong(2)))
-      assert(run("*") == run("*1..3"), s"selector $kw diverged")
+      val bounded = run("*1..3")
+      assert(run("*") == bounded, s"selector $kw diverged")
+      // the distributed kernel loop (driver fast path off) agrees too
+      spark.conf.set(Reach.DriverRowsConf, "0")
+      try assert(run("*") == bounded, s"selector $kw diverged on the kernel")
+      finally spark.conf.unset(Reach.DriverRowsConf)
     }
   }
 
@@ -1535,7 +1540,12 @@ class CypherExtensionsSpec extends AnyFunSuite {
          |ORDER BY an, bn, l, ns""".stripMargin)
       .map(x => (x.getString(0), x.getString(1), x.getLong(2),
         x.getString(3), x.getInt(4)))
-    assert(run("*") == run("*1..4") && run("*").nonEmpty)
+    val bounded = run("*1..4")
+    assert(run("*") == bounded && bounded.nonEmpty)
+    // the distributed kernel loop (driver fast path off) agrees too
+    spark.conf.set(Reach.DriverRowsConf, "0")
+    try assert(run("*") == bounded)
+    finally spark.conf.unset(Reach.DriverRowsConf)
     // [*0..]: the zero-hop identity row joins the enumeration — one
     // node, zero relationships, length 0
     val z = rows(
@@ -5887,16 +5897,7 @@ class CypherExtensionsSpec extends AnyFunSuite {
         grew = next.size > closure.size
         closure = next
       }
-      val got = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == closure, s"trial $trial: reach mismatch")
-      // seeded run ≡ full closure restricted to the seed sources
       val seeds = (0 until n).map(_.toLong).filter(_ => nextInt(3) == 0)
-      val seeded = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d",
-          seeds = Some(seeds.toDF("id")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(seeded == closure.filter(p => seeds.contains(p._1)),
-        s"trial $trial: seeded reach mismatch")
       // withDist ≡ brute BFS layering: min hop count per pair
       val brute = scala.collection.mutable.Map.empty[(Long, Long), Long]
       var layer = dedup
@@ -5907,11 +5908,28 @@ class CypherExtensionsSpec extends AnyFunSuite {
           yield (a, e2)).filterNot(brute.contains)
         d += 1
       }
-      val gotDist = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d",
-          withDist = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-        .toMap
-      assert(gotDist == brute.toMap, s"trial $trial: dist mismatch")
+      // both paths: the driver fast path and, with driverRows = 0, the
+      // distributed kernel loop
+      for (driverRows <- Seq(None, Some("0"))) {
+        val path = driverRows.fold("driver")(_ => "kernel")
+        driverRows.foreach(spark.conf.set(Reach.DriverRowsConf, _))
+        try {
+          val got = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d")
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          assert(got == closure, s"trial $trial $path: reach mismatch")
+          // seeded run ≡ full closure restricted to the seed sources
+          val seeded = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d",
+              seeds = Some(seeds.toDF("id")))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          assert(seeded == closure.filter(p => seeds.contains(p._1)),
+            s"trial $trial $path: seeded reach mismatch")
+          val gotDist = Reach.reachablePairs(pairs.toDF("s", "d"), "s", "d",
+              withDist = true)
+            .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+            .toMap
+          assert(gotDist == brute.toMap, s"trial $trial $path: dist mismatch")
+        } finally spark.conf.unset(Reach.DriverRowsConf)
+      }
     }
   }
 
