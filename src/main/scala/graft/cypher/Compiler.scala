@@ -2136,9 +2136,12 @@ object Compiler {
     // Every OTHER edge-updating op keys on the pair alone — a later
     // plain MERGE treats the pair as matched (its anti-join finds a
     // row, so it never creates a third), and a pair-keyed SET/DELETE
-    // that MATCHES a duplicated pair now FAILS at execution
-    // (pairDupVerdict/pairDupAssert) instead of silently rewriting/removing the
-    // sibling row the match did not address. Callers who need to
+    // that MATCHES a duplicated pair fails with a typed error when the
+    // query is BUILT (pairDupCheck evaluates pairDupVerdict once, at
+    // build time; the emitted plan carries no check, so a duplicate
+    // that reaches the snapshot after the build is not caught) instead
+    // of silently rewriting/removing the sibling row the match did not
+    // address. Callers who need to
     // address ONE parallel row must carry the discriminating property
     // (map-keyed MERGE). The guard's cost is one partial agg over the
     // snapshot semi-filtered to the matched keys — not a
@@ -2548,8 +2551,8 @@ object Compiler {
       if (!needGuard) snapBase.join(feedKeys, keyCols, "left_anti")
       else {
         // exact key count → broadcast-hinted verdict semi-join and
-        // anti-join; assert rides the snapshot stream (see
-        // [[pairDupAssert]] — the r16 feed-side wrapper forced both
+        // anti-join; the verdict runs once, when the query is built
+        // (see [[pairDupCheck]] — the r16 feed-side wrapper forced both
         // joins to full sort-merge)
         val kRows = feedW.count()
         val hinted = graft.ops.GraphOps.bcastIf(feedKeys, kRows)

@@ -2,9 +2,6 @@ package graft.cypher
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
@@ -12,8 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
 
 import ast._
 import graft.ops.{Fixpoint, GraphContractViolation}
-import graft.ops.Fixpoint.{compareIdSeqs, compareIds}
-import graft.ops.GraphOps.bcastIf
+import graft.ops.Fixpoint.{DriverOverflow, Rows, compareIds}
 
 /**
  * Unbounded variable-length `[*]` / `[*1..]` → REACHABLE-PAIR lowering
@@ -110,21 +106,21 @@ private[cypher] object Reach {
   /** Session conf key overriding the closure row bound. */
   val MaxClosureRowsConf = "spark.graft.reach.maxClosureRows"
 
-  /** Session conf key bounding the DRIVER fast path of the iterative
+  /** Session conf key bounding the DRIVER executor of the iterative
     * reach loops (optimization round 16 — the driverKahn /
     * driverUnionFind precedent generalized): an edge frame whose
-    * distinct-pair count sits at or under this bound is collected once
-    * and the BFS/σ-DP/pointer-walk loop runs in memory — one job
-    * replaces the O(diameter) round jobs of the distributed loop (the
-    * [[graft.ops.Fixpoint]] kernel), the dominant fixed cost of the
-    * family on interactive-scale graphs. Every
-    * maxClosureRows guard, round bound and typed-error message is
-    * enforced identically in both paths (equivalence unit-pinned), and
-    * a driver computation whose INTERMEDIATE rows outgrow this same
-    * bound abandons the attempt and falls back to the distributed loop
-    * — a 100 TB frame never runs driver-side, and a small frame with a
-    * huge closure only pays one bounded in-memory attempt. Set 0 to
-    * disable (the equivalence tests do). */
+    * row count sits at or under this bound is collected once and the
+    * BFS/σ-DP/pointer-walk loop runs in driver memory — no job replaces
+    * the O(diameter) round jobs of the cluster executor, the dominant
+    * fixed cost of the family on interactive-scale graphs. Both
+    * executors run the same [[graft.ops.Fixpoint]] loop closures, so
+    * every maxClosureRows guard, round bound and typed-error message is
+    * the same; a driver run whose rows outgrow this same bound abandons
+    * the attempt ([[graft.ops.Fixpoint.DriverOverflow]]) and reruns on
+    * the cluster — a 100 TB frame never runs driver-side, and a small
+    * frame with a huge closure only pays one bounded in-memory attempt.
+    * Set 0 to run every loop on the cluster (the executor-equivalence
+    * units do). */
   val DriverRowsConf = "spark.graft.reach.driverRows"
   val DriverRowsDefault = 2000000L
 
@@ -150,19 +146,6 @@ private[cypher] object Reach {
     rows * graft.ops.GraphOps.estRowBytes(df.schema) <=
       df.sparkSession.conf.getOption(DriverBytesConf).map(_.toLong)
         .getOrElse(DriverBytesDefault)
-
-  /** Thrown internally when a driver fast-path attempt outgrows
-    * [[DriverRowsConf]] — the caller falls back to the distributed
-    * loop. Never user-visible. */
-  private final class DriverOverflow extends RuntimeException
-
-  /** LocalRelation frame from driver rows — no RDD job at build time. */
-  private def localDf(spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[org.apache.spark.sql.Row], schema: StructType)
-      : DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
 
   /** Row-count upper bound of a frame that is just projections/filters
     * over a LocalRelation — i.e. a frame the driver fast path built —
@@ -729,113 +712,11 @@ private[cypher] object Reach {
     * accessors under `SHORTEST k`), it additionally records one
     * (src, node, dist, via, mult) parent entry per DP edge — distance
     * × branching state, never path count — for the per-level pointer
-    * walk. Returns (levels, parents, bound). */
-  /** In-memory σ DP over the collected grouped edge frame — the
-    * driver fast path of [[kLevelLevels]] (see [[DriverRowsConf]]).
-    * Replicates the distributed loop state for state: per-round total
-    * accounting against the SAME guard (identical typed errors), the
-    * deferred parent-volume guard, the MaxRounds backstop, and the
-    * anchored-cone DAG narrowing. Throws [[DriverOverflow]] — caught
-    * by the caller, which falls back to the distributed loop — when
-    * any tracked row set outgrows `cap`. A σ overflow past Long also
-    * falls back (the distributed path owns exact overflow behavior).
-    * Results come back as LocalRelation frames: trim/walk/resolution
-    * stay ordinary DataFrame code over them. */
-  private def driverKLevel(raw: DataFrame, sdOpt: Option[DataFrame],
-      withParents: Boolean, dagProven: Boolean, dagWhat: String,
-      confBound: Option[Long], cap: Long,
-      guardFor: Long => (Long, Long) => Unit)
-      : (DataFrame, Option[DataFrame], Long) = {
-    val spark = raw.sparkSession
-    // RAW (src, dst) rows — the grouped-distinct (__m multiplicity)
-    // happens here in memory, replacing the distributed
-    // groupBy(src, dst) SHUFFLE + checkpoint that was the family's
-    // single most expensive fixed job at bench scale (round 17,
-    // guide §2.4: remove shuffles outright)
-    val mMap = scala.collection.mutable.LinkedHashMap
-      .empty[(Any, Any), Long]
-    raw.collect().foreach { r =>
-      val k = (r.get(0), r.get(1))
-      mMap(k) = mMap.getOrElse(k, 0L) + 1L
-    }
-    // the closure bound derives from the DISTINCT pair count — exactly
-    // the distributed path's eCount
-    val bound = confBound.getOrElse(math.max(64L * mMap.size, 1024L))
-    val guardCheck = guardFor(bound)
-    val seedSet: Option[collection.Set[Any]] =
-      sdOpt.map(_.collect().iterator.map(_.get(0)).toSet)
-    if (!dagProven)
-      driverRequireDag(mMap.keysIterator.toArray,
-        seedSet.getOrElse(mMap.keysIterator.map(_._1).toSet), dagWhat)
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[(Any, Long)]]
-    mMap.foreach { case ((s, d), m) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]) +=
-        ((d, m))
-    }
-    def overflowSafe[A](body: => A): A =
-      try body catch { case _: ArithmeticException =>
-        throw new DriverOverflow }
-    // round 1: one (src, dst) entry per grouped edge out of the seeds
-    var frontier = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
-    mMap.foreach { case ((s, d), m) =>
-      if (seedSet.forall(_.contains(s))) frontier((s, d)) = m
-    }
-    val levels = scala.collection.mutable.ArrayBuffer.empty[Row]
-    frontier.foreach { case ((s, t), sig) => levels += Row(s, t, sig, 1L) }
-    val parents =
-      scala.collection.mutable.LinkedHashSet.empty[(Any, Any, Long, Any, Long)]
-    if (withParents) frontier.foreach { case ((s, t), sig) =>
-      parents += ((s, t, 1L, s, sig)) // round-1 pm = the edge's __m
-    }
-    var total = frontier.size.toLong
-    guardCheck(total, 0)
-    var d = 1L
-    while (frontier.nonEmpty) {
-      d += 1
-      if (d > MaxRounds)
-        throw new CypherBindingException(
-          s"k-level reach did not converge in $MaxRounds rounds")
-      val next = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
-      frontier.foreach { case ((s, mid), sig) =>
-        adj.get(mid).foreach(_.foreach { case (d2, m2) =>
-          overflowSafe {
-            val add = Math.multiplyExact(sig, m2)
-            next((s, d2)) = next.get((s, d2))
-              .fold(add)(Math.addExact(_, add))
-          }
-          if (withParents) parents += ((s, d2, d, mid, m2))
-        })
-      }
-      if (next.nonEmpty) {
-        total += next.size
-        guardCheck(total, d)
-        if (total > cap || parents.size > cap) throw new DriverOverflow
-        next.foreach { case ((s, t), sig) => levels += Row(s, t, sig, d) }
-      }
-      frontier = next
-    }
-    if (withParents) {
-      total += parents.size
-      guardCheck(total, d)
-    }
-    val srcT = raw.schema("__src").dataType
-    val dstT = raw.schema("__dst").dataType
-    val lvT = StructType(Seq(StructField("__src", srcT),
-      StructField("__dst", dstT), StructField("__sig", LongType),
-      StructField("__dist", LongType)))
-    val paT = StructType(Seq(StructField("__ps", srcT),
-      StructField("__pn", dstT), StructField("__pd", LongType),
-      StructField("__pp", srcT), StructField("__pm", LongType)))
-    (localDf(spark, levels.toSeq, lvT),
-      if (withParents)
-        Some(localDf(spark, parents.iterator.map(p =>
-          Row(p._1, p._2, p._3, p._4, p._5)).toSeq, paT))
-      else None,
-      bound)
-  }
-
+    * walk. Returns (levels, parents, bound).
+    *
+    * One [[graft.ops.Fixpoint.loop]] level per round: in driver memory
+    * when [[driverOr]] admits the edge frame (the DAG check then runs
+    * on the collected pairs), one job per level otherwise. */
   private[cypher] def kLevelLevels(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame], kind: String, k: Int,
       withParents: Boolean, dagProven: Boolean = false)
@@ -856,115 +737,79 @@ private[cypher] object Reach {
           s"k-level reach hit $total level rows after round $round " +
           s"(bound maxClosureRows=$bound). Narrow the anchor, or " +
           s"raise $MaxClosureRowsConf deliberately.")
-    // driver fast path ([[DriverRowsConf]]): edge frame under the
-    // bound — collect once, run the DAG check and the whole σ DP in
-    // memory (one job replaces O(depth) rounds); identical guards,
-    // identical typed errors; an overgrown attempt falls back to the
-    // kernel
-    driverOr(raw, seeds) { (sdOpt, drvLim) =>
-      driverKLevel(raw, sdOpt, withParents, dagProven, dagWhat, confBound,
-        drvLim, guardFor)
-    } { sd =>
-      kernelKLevel(raw, sd, withParents, dagProven, dagWhat, confBound,
-        guardFor)
-    }
-  }
-
-  /** The distributed σ DP of [[kLevelLevels]] on the
-    * [[graft.ops.Fixpoint]] kernel: one job per level. */
-  private def kernelKLevel(raw: DataFrame, sd: Option[DataFrame],
-      withParents: Boolean, dagProven: Boolean, dagWhat: String,
-      confBound: Option[Long], guardFor: Long => (Long, Long) => Unit)
-      : (DataFrame, Option[DataFrame], Long) = {
-    val in = kernelInput(raw, sd)
-    // out-edges with their multiplicity: parallel relationships are
-    // distinct paths, so σ multiplies by the hop's row count
-    val g = Fixpoint.graph("kLevel", in.edges, raw.sparkSession)(
-      (ds: Seq[Any]) => ds.groupBy(identity).iterator
-        .map { case (d, xs) => (d, xs.size.toLong) }.toArray)()
-    val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
-    val guardCheck: (Long, Long) => Unit = guardFor(bound)
-    // dagProven (round 16): a heterogeneous chain whose LABEL graph
-    // is acyclic cannot hold an instance cycle (any cycle projects to
-    // a label cycle) — the data-level Kahn peel is skipped entirely
-    if (!dagProven) {
-      val e = raw.distinct().localCheckpoint(false)
-      requireDag(e, seedFrame(sd.getOrElse(e)), dagWhat)
-    }
-    // (src, end) → (σ at this level, the (via, multiplicity) parent
-    // entries of this level) — distance × branching state, never path
-    // count. Level 1: one entry per grouped edge out of the seeds,
-    // the source itself its parent.
-    var fresh: RDD[(Any, (Long, Array[(Any, Long)]))] =
-      Fixpoint.edgesFrom(g, in.seeds).map { case (s, (d, m)) =>
-        ((s, d): Any, (m, Array[(Any, Long)]((s, m))))
+    driverOr(raw, seeds) { (sd, driver) =>
+      val spark = raw.sparkSession
+      val in = loopInput(raw, sd, driver)
+      // out-edges with their multiplicity: parallel relationships are
+      // distinct paths, so σ multiplies by the hop's row count
+      val g = Fixpoint.graph("kLevel", in.edges, spark) {
+        (ds: collection.Seq[Any]) =>
+          val m = scala.collection.mutable.HashMap.empty[Any, Long]
+          ds.foreach(d => m(d) = m.getOrElse(d, 0L) + 1L)
+          m.toArray
       }
-    var d = 1L
-    var n = Fixpoint.materialize(fresh, "kLevel:1")().rows
-    var total = n
-    var parentRows = n
-    val levels = ArrayBuffer(d -> fresh)
-    guardCheck(total, 0)
-    while (n > 0) {
-      d += 1
-      // a DAG's depth bounds the loop; MaxRounds is the backstop
-      if (d > MaxRounds)
-        throw new CypherBindingException(
-          s"k-level reach did not converge in $MaxRounds rounds")
-      val front = Fixpoint.frontier(fresh) { case (s, (sig, _)) => (s, sig) }
-      fresh = Fixpoint.expand(front, g) {
-          (v: (Any, Long), mid: Any, e: (Any, Long)) =>
-            val (s, sig) = v
-            val (d2, m2) = e
-            ((s, d2): Any, (Math.multiplyExact(sig, m2), (mid, m2)))
-        }
-        .combineByKey(
-          (c: (Long, (Any, Long))) => (c._1, ArrayBuffer(c._2)),
-          (acc: (Long, ArrayBuffer[(Any, Long)]), c: (Long, (Any, Long))) =>
-            (Math.addExact(acc._1, c._1), acc._2 += c._2),
-          (a: (Long, ArrayBuffer[(Any, Long)]),
-           b: (Long, ArrayBuffer[(Any, Long)])) =>
-            (Math.addExact(a._1, b._1), a._2 ++= b._2),
-          g.part)
-        .mapValues { case (sig, ps) => (sig, ps.toArray) }
-      val st = Fixpoint.materialize(fresh, s"kLevel:$d")(
-        _._2._2.length.toLong)
-      n = st.rows
-      if (n > 0) {
-        total += n
-        // one parent entry per DP edge: a path ending at d2 at
-        // distance d steps back to its via at d−1, traversing m2
-        // parallel relationships — counted into the deferred
-        // parent-volume guard below
+      val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
+      val guard = guardFor(bound) _
+      // dagProven (round 16): a heterogeneous chain whose LABEL graph
+      // is acyclic cannot hold an instance cycle (any cycle projects to
+      // a label cycle) — the data-level Kahn peel is skipped entirely
+      if (!dagProven) held(in.edges) match {
+        case Some(es) =>
+          val pairs = es.distinct.toArray
+          driverRequireDag(pairs, in.seeds.flatMap(held)
+            .fold(pairs.iterator.map(_._1).toSet)(_.toSet), dagWhat)
+        case None =>
+          val e = raw.distinct().localCheckpoint(false)
+          requireDag(e, seedFrame(sd.getOrElse(e)), dagWhat)
+      }
+      // (src, end) at level r + 1 → (σ, its (via, multiplicity) parent
+      // entries). The guard numbers a level by its length, round 0 by 0.
+      var total = 0L
+      var parentRows = 0L
+      var level = 0L
+      val levels = Fixpoint.loop("kLevel", g, in.seeds, once = false,
+          MaxRounds - 1)(Fixpoint.Frontier[(Any, Long), (Any, Long),
+          (Long, List[(Any, Long)])](
+        // level 1: one entry per grouped edge out of the seeds, the
+        // source itself its parent
+        seed = { case (s, (d, m)) => ((s, d), (m, List((s, m)))) },
+        front = { case (s, (sig, _)) => (s, sig) },
+        // a path ending at d2 steps back to its via `mid`, traversing
+        // m2 parallel relationships
+        extend = { case ((s, sig), mid, (d2, m2)) =>
+          ((s, d2), (Math.multiplyExact(sig, m2), List((mid, m2))))
+        },
+        combine = (a, b) => (Math.addExact(a._1, b._1), b._2 ::: a._2),
+        sum = _._2.length.toLong)) { (r, st) =>
+        level = r + 1L
+        total += st.rows
         parentRows += st.sum
-        guardCheck(total, d)
-        levels += d -> fresh
+        guard(total, if (r == 0) 0L else level)
+      }(throw new CypherBindingException(
+        s"k-level reach did not converge in $MaxRounds rounds"))
+      if (withParents) {
+        // deferred parent-volume guard (one check for the whole DP)
+        total += parentRows
+        guard(total, level)
       }
+      val t = in.idType
+      val levelsDf = Fixpoint.frame(spark, levels.map {
+          case (key, (r, (sig, _))) =>
+            val (s, e) = key.asInstanceOf[(Any, Any)]
+            Row(s, e, sig, r + 1L)
+        }, StructType(Seq(StructField("__src", t), StructField("__dst", t),
+          StructField("__sig", LongType), StructField("__dist", LongType))))
+      val parentsDf =
+        if (!withParents) None
+        else Some(Fixpoint.frame(spark, levels.flatMap {
+            case (key, (r, (_, ps))) =>
+              val (s, e) = key.asInstanceOf[(Any, Any)]
+              ps.iterator.map { case (via, m) => Row(s, e, r + 1L, via, m) }
+          }, StructType(Seq(StructField("__ps", t), StructField("__pn", t),
+            StructField("__pd", LongType), StructField("__pp", t),
+            StructField("__pm", LongType)))))
+      (levelsDf, parentsDf, bound)
     }
-    if (withParents) {
-      // deferred parent-volume guard (one check for the whole DP)
-      total += parentRows
-      guardCheck(total, d)
-    }
-    val spark = raw.sparkSession
-    val t = in.idType
-    val all = spark.sparkContext.union(levels.map { case (lvl, r) =>
-      r.map { case (k, v) => (k, lvl, v) }
-    }.toSeq)
-    val levelsDf = spark.createDataFrame(all.map { case (k, lvl, (sig, _)) =>
-        val (s, e) = k.asInstanceOf[(Any, Any)]
-        Row(s, e, sig, lvl)
-      }, StructType(Seq(StructField("__src", t), StructField("__dst", t),
-        StructField("__sig", LongType), StructField("__dist", LongType))))
-    val parentsDf =
-      if (!withParents) None
-      else Some(spark.createDataFrame(all.flatMap { case (k, lvl, (_, ps)) =>
-          val (s, e) = k.asInstanceOf[(Any, Any)]
-          ps.iterator.map { case (via, m) => Row(s, e, lvl, via, m) }
-        }, StructType(Seq(StructField("__ps", t), StructField("__pn", t),
-          StructField("__pd", LongType), StructField("__pp", t),
-          StructField("__pm", LongType)))))
-    (levelsDf, parentsDf, bound)
   }
 
   /** k smallest distinct lengths per pair (one row per (pair, length)
@@ -1084,50 +929,41 @@ private[cypher] object Reach {
   private[cypher] def kLevelWalk(chosen: DataFrame, parents: DataFrame,
       bound: Long, kind: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // driver fast path ([[DriverRowsConf]]): small chosen + parent
-    // frames walk in memory — one LocalRelation build replaces
-    // O(max dist) walk steps; same per-step guard messages; an
-    // overgrown expansion falls back below
-    val drvLim = driverRowsLimit(chosen.sparkSession)
-    if (drvLim > 0 && driverAdmits(parents, drvLim) &&
-        driverAdmits(chosen, drvLim)) {
-      try return driverKLevelWalk(chosen, parents, bound, kind, k, drvLim)
-      catch { case _: DriverOverflow => () }
-    }
-    // kernel walk: finished and parent-less rows pass through
-    val start = Fixpoint.values(
-        chosen.select(col("__src"), col("__dst"), col("__dist")))
-      .map { a =>
-        val d = a(2).asInstanceOf[Long]
-        Walker(a(0), a(1), d, d, a(1), a(1) :: Nil)
-      }
-    val par = Fixpoint.values(parents.select(col("__ps"), col("__pn"),
-        col("__pd"), col("__pp"), col("__pm")))
-      .map(a => ((a(0), a(1), a(2)): Any, (a(3), a(4).asInstanceOf[Long])))
-    val walked = Fixpoint.walk("kLevelWalk", start, par,
-        Fixpoint.partitioner(chosen.sparkSession), from = 0)(
-      w => if (w.rem >= 1) (w.src, w.cur, w.rem) else null,
-      _.dist) { (w, ps) =>
-        if (ps == null) Iterator.single(w)
-        else ps.iterator.flatMap { case (pp, pm) =>
-          (0L until pm).iterator.map(_ =>
-            w.copy(rem = w.rem - 1, cur = pp, ids = pp :: w.ids))
-        }
-      } { (n, step) =>
-        if (n > bound)
-          throw new GraphContractViolation(
-            s"k-level witnesses: the path expansion hit $n rows at " +
-            s"step $step (bound maxClosureRows=$bound). Narrow the " +
-            s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      }
+    val spark = chosen.sparkSession
     val elemT = chosen.schema("__dst").dataType
-    val full = chosen.sparkSession.createDataFrame(
-      walked.map(w => Row(w.src, w.dst, w.dist, w.ids)),
-      StructType(Seq(
-        StructField("__src", chosen.schema("__src").dataType),
-        StructField("__dst", elemT),
-        StructField("__dist", LongType),
-        StructField("__wids", ArrayType(elemT, containsNull = true)))))
+    val full = driverOrWalk(parents, chosen) { driver =>
+      // finished and parent-less rows pass through
+      val start = Fixpoint.rows(
+          chosen.select(col("__src"), col("__dst"), col("__dist")), driver)
+        .map { a =>
+          val d = a(2).asInstanceOf[Long]
+          Walker(a(0), a(1), d, d, a(1), a(1) :: Nil)
+        }
+      val par = Fixpoint.rows(parents.select(col("__ps"), col("__pn"),
+          col("__pd"), col("__pp"), col("__pm")), driver)
+        .map(a => ((a(0), a(1), a(2)): Any, (a(3), a(4).asInstanceOf[Long])))
+      val walked = Fixpoint.walk("kLevelWalk", start, par, spark, from = 0)(
+        w => if (w.rem >= 1) (w.src, w.cur, w.rem) else null,
+        _.dist) { (w, ps) =>
+          if (ps == null) Iterator.single(w)
+          else ps.iterator.flatMap { case (pp, pm) =>
+            (0L until pm).iterator.map(_ =>
+              w.copy(rem = w.rem - 1, cur = pp, ids = pp :: w.ids))
+          }
+        } { (n, step) =>
+          if (n > bound)
+            throw new GraphContractViolation(
+              s"k-level witnesses: the path expansion hit $n rows at " +
+              s"step $step (bound maxClosureRows=$bound). Narrow the " +
+              s"anchor, or raise $MaxClosureRowsConf deliberately.")
+        }
+      Fixpoint.frame(spark, walked.map(w => Row(w.src, w.dst, w.dist, w.ids)),
+        StructType(Seq(
+          StructField("__src", chosen.schema("__src").dataType),
+          StructField("__dst", elemT),
+          StructField("__dist", LongType),
+          StructField("__wids", ArrayType(elemT, containsNull = true)))))
+    }
     val capped = kind match {
       case "groups" | WalkKind => full
       case _ =>
@@ -1141,101 +977,6 @@ private[cypher] object Reach {
     capped.withColumn("__pi", row_number().over(
       Window.partitionBy("__src", "__dst", "__dist")
         .orderBy(col("__wids"))))
-  }
-
-  /** In-memory multi-parent pointer walk — the driver fast path of
-    * [[kLevelWalk]] over collected chosen/parent frames (see
-    * [[DriverRowsConf]]): identical step semantics (finished and
-    * parent-less rows pass through unchanged, parallel-edge
-    * multiplicity expands copies), identical per-step guard message,
-    * the same (length, id-array) cap order and per-path __pi
-    * discriminator. Throws [[DriverOverflow]] past `cap` — the caller
-    * falls back to the distributed walk. */
-  private def driverKLevelWalk(chosen: DataFrame, par: DataFrame,
-      bound: Long, kind: String, k: Int, cap: Long): DataFrame = {
-    import org.apache.spark.sql.types.IntegerType
-    val spark = chosen.sparkSession
-    val ch = chosen.select(col("__src"), col("__dst"), col("__dist"))
-      .collect()
-    val pmap = scala.collection.mutable.HashMap
-      .empty[(Any, Any, Long),
-        scala.collection.mutable.ArrayBuffer[(Any, Long)]]
-    par.select(col("__ps"), col("__pn"), col("__pd"), col("__pp"),
-        col("__pm")).collect()
-      .foreach { r =>
-        pmap.getOrElseUpdate((r.get(0), r.get(1), r.getLong(2)),
-          scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]) +=
-          ((r.get(3), r.getLong(4)))
-      }
-    val maxDist =
-      if (ch.isEmpty) 0L else ch.iterator.map(_.getLong(2)).max
-    case class W(src: Any, dst: Any, dist: Long, rem: Long, cur: Any,
-      ids: List[Any])
-    var work = scala.collection.mutable.ArrayBuffer.empty[W]
-    ch.foreach(r => work += W(r.get(0), r.get(1), r.getLong(2),
-      r.getLong(2), r.get(1), r.get(1) :: Nil))
-    var step = 0L
-    while (step < maxDist) {
-      val nw = scala.collection.mutable.ArrayBuffer.empty[W]
-      work.foreach { w =>
-        val ms =
-          if (w.rem >= 1) pmap.get((w.src, w.cur, w.rem)) else None
-        ms match {
-          case None => nw += w // finished / parent-less: pass through
-          case Some(ps) => ps.foreach { case (pp, pm) =>
-            var j = 0L
-            while (j < pm) {
-              nw += W(w.src, w.dst, w.dist, w.rem - 1, pp, pp :: w.ids)
-              // cap INSIDE the expansion (ADVICE-r16): a high-branching
-              // step must overflow to the distributed loop while the
-              // buffer is still cap-sized, not after materializing up
-              // to `bound` (64·|E|) growing-List rows in driver memory.
-              // The end-of-step `bound` guard below keeps its exact
-              // full-step count and message; a step that would pass
-              // `bound` but exceeds `cap` mid-build re-runs distributed
-              // and hits the same bound guard with its own count.
-              if (nw.size > cap) throw new DriverOverflow
-              j += 1
-            }
-          }
-        }
-      }
-      work = nw
-      val n = work.size.toLong
-      if (n > bound)
-        throw new GraphContractViolation(
-          s"k-level witnesses: the path expansion hit $n rows at " +
-          s"step $step (bound maxClosureRows=$bound). Narrow the " +
-          s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      if (n > cap) throw new DriverOverflow
-      step += 1
-    }
-    val capped: Iterator[W] = kind match {
-      case "groups" | WalkKind => work.iterator
-      case _ =>
-        work.groupBy(w => (w.src, w.dst)).valuesIterator.flatMap { g =>
-          g.sortWith { (a, b) =>
-            if (a.dist != b.dist) a.dist < b.dist
-            else compareIdSeqs(a.ids, b.ids) < 0
-          }.take(k)
-        }
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    capped.toSeq.groupBy(w => (w.src, w.dst, w.dist)).valuesIterator
-      .foreach { g =>
-        g.sortWith((a, b) => compareIdSeqs(a.ids, b.ids) < 0).zipWithIndex
-          .foreach { case (w, i) =>
-            out += Row(w.src, w.dst, w.dist, w.ids, i + 1)
-          }
-      }
-    val elemT = chosen.schema("__dst").dataType
-    val schema = StructType(Seq(
-      StructField("__src", chosen.schema("__src").dataType),
-      StructField("__dst", elemT),
-      StructField("__dist", LongType),
-      StructField("__wids", ArrayType(elemT, containsNull = true)),
-      StructField("__pi", IntegerType)))
-    localDf(spark, out.toSeq, schema)
   }
 
   /** Reverse BFS output → forward orientation: an R-path d→x over
@@ -1359,87 +1100,6 @@ private[cypher] object Reach {
       .getOrElse(run(srcC, dstC, None, rev = false))
   }
 
-  /** In-memory all-parents BFS — the driver fast path of
-    * [[allParentsPairs]] (see [[DriverRowsConf]]): same rounds, same
-    * per-round total accounting (new pairs + new parent edges) against
-    * the caller's guard, same typed errors. Throws [[DriverOverflow]]
-    * past `cap`. */
-  private def driverAllParents(raw: DataFrame, sdOpt: Option[DataFrame],
-      confBound: Option[Long], cap: Long,
-      guardFor: Long => (Long, Int) => Unit)
-      : (DataFrame, DataFrame, Long) = {
-    val spark = raw.sparkSession
-    // RAW rows, deduped in memory (round 17) — see [[driverReachable]]
-    val pairs = raw.collect().map(r => (r.get(0), r.get(1))).distinct
-    val bound = confBound.getOrElse(math.max(64L * pairs.length, 1024L))
-    val guard = guardFor(bound)
-    val seedSet: Option[collection.Set[Any]] =
-      sdOpt.map(_.collect().iterator.map(_.get(0)).toSet)
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    pairs.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[Any]) += d
-    }
-    val seen = scala.collection.mutable.LinkedHashMap
-      .empty[(Any, Any), Long]
-    val parents =
-      scala.collection.mutable.ArrayBuffer.empty[(Any, Any, Any)]
-    pairs.foreach { case (s, d) =>
-      if (seedSet.forall(_.contains(s))) {
-        seen((s, d)) = 1L
-        parents += ((s, d, s))
-      }
-    }
-    var frontier: Iterable[(Any, Any)] = seen.keys.toSeq
-    var total = frontier.size.toLong
-    guard(total, 0)
-    if (total > cap) throw new DriverOverflow
-    var rounds = 0
-    while (frontier.nonEmpty) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          "allShortestPaths witnesses: BFS did not converge in " +
-          s"$MaxRounds rounds — the edge set's diameter exceeds the " +
-          "guard")
-      // every (src, new node, via) triple of this round, distinct
-      val fresh = scala.collection.mutable.LinkedHashMap
-        .empty[(Any, Any), scala.collection.mutable.LinkedHashSet[Any]]
-      frontier.foreach { case (s, mid) =>
-        adj.get(mid).foreach(_.foreach { d2 =>
-          if (!seen.contains((s, d2)))
-            fresh.getOrElseUpdate((s, d2),
-              scala.collection.mutable.LinkedHashSet.empty[Any]) += mid
-        })
-      }
-      if (fresh.nonEmpty) {
-        val n = fresh.size.toLong
-        val np = fresh.valuesIterator.map(_.size.toLong).sum
-        total += n + np
-        guard(total, rounds)
-        if (total > cap) throw new DriverOverflow
-        fresh.foreach { case ((s, d2), vias) =>
-          seen((s, d2)) = (rounds + 1).toLong
-          vias.foreach(v => parents += ((s, d2, v)))
-        }
-      }
-      frontier = fresh.keys.toSeq
-    }
-    val srcT = raw.schema("__src").dataType
-    val dstT = raw.schema("__dst").dataType
-    val pairT = StructType(Seq(StructField("__src", srcT),
-      StructField("__dst", dstT), StructField("__dist", LongType)))
-    val parT = StructType(Seq(StructField("__ps", srcT),
-      StructField("__pd", dstT), StructField("__pp", srcT)))
-    (localDf(spark,
-        seen.iterator.map { case ((s, d), dist) => Row(s, d, dist) }.toSeq,
-        pairT),
-      localDf(spark,
-        parents.iterator.map(p => Row(p._1, p._2, p._3)).toSeq, parT),
-      bound)
-  }
-
   /** BFS recording ALL first-discovery parents per pair: (pairs with
     * __dist, parents (__ps, __pd, __pp), the closure bound). Distance-1
     * parents are the source itself. State per round is the new pairs'
@@ -1457,23 +1117,19 @@ private[cypher] object Reach {
           s"allShortestPaths witnesses: the parent set hit $total rows " +
           s"after round $round (bound maxClosureRows=$bound). Narrow " +
           s"the anchor, or raise $MaxClosureRowsConf deliberately.")
-    // driver fast path ([[DriverRowsConf]]) — same contract as
-    // [[driverReachable]]
-    driverOr(raw, seeds) { (sdOpt, drvLim) =>
-      driverAllParents(raw, sdOpt, confBound, drvLim, guardFor)
-    } { sd =>
-      val (all, t, bound) = kernelBfs(raw, sd, "allParents",
+    driverOr(raw, seeds) { (sd, driver) =>
+      val (all, t, bound) = bfs(raw, sd, driver, "allParents",
         allParents = true, confBound, guardFor,
         "allShortestPaths witnesses: BFS did not converge in " +
         s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
       val spark = raw.sparkSession
-      (spark.createDataFrame(all.map { case (k, (dist, _)) =>
-          val (s, d) = k.asInstanceOf[(Any, Any)]
-          Row(s, d, dist)
+      (Fixpoint.frame(spark, all.map { case (key, (r, _)) =>
+          val (s, d) = key.asInstanceOf[(Any, Any)]
+          Row(s, d, r + 1L)
         }, StructType(Seq(StructField("__src", t), StructField("__dst", t),
           StructField("__dist", LongType)))),
-        spark.createDataFrame(all.flatMap { case (k, (_, vias)) =>
-          val (s, d) = k.asInstanceOf[(Any, Any)]
+        Fixpoint.frame(spark, all.flatMap { case (key, (_, vias)) =>
+          val (s, d) = key.asInstanceOf[(Any, Any)]
           vias.iterator.map(v => Row(s, d, v))
         }, StructType(Seq(StructField("__ps", t), StructField("__pd", t),
           StructField("__pp", t)))),
@@ -1481,120 +1137,43 @@ private[cypher] object Reach {
     }
   }
 
-  /** In-memory σ-fold pointer walk — the driver fast path of
-    * [[reconstructAllWitnessIds]] (see [[DriverRowsConf]]): identical
-    * step semantics (finished rows pass through, branching multiplies
-    * rows) and the same per-step guard message. Throws
-    * [[DriverOverflow]] past `cap`. */
-  private def driverReconstructAll(pairs: DataFrame, parents: DataFrame,
-      bound: Long, cap: Long): DataFrame = {
-    val spark = pairs.sparkSession
-    val pr = pairs.select(col("__src"), col("__dst"), col("__dist"))
-      .collect()
-    val pmap = scala.collection.mutable.HashMap
-      .empty[(Any, Any), scala.collection.mutable.ArrayBuffer[Any]]
-    parents.select(col("__ps"), col("__pd"), col("__pp")).collect()
-      .foreach { r =>
-        pmap.getOrElseUpdate((r.get(0), r.get(1)),
-          scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(2)
-      }
-    val maxDist =
-      if (pr.isEmpty) 0L else pr.iterator.map(_.getLong(2)).max
-    case class W(src: Any, dst: Any, dist: Long, cur: Any,
-      ids: List[Any])
-    var work = scala.collection.mutable.ArrayBuffer.empty[W]
-    // initial inner join: one row per (pair, final-node parent)
-    pr.foreach { r =>
-      pmap.get((r.get(0), r.get(1))).foreach(_.foreach { pp =>
-        work += W(r.get(0), r.get(1), r.getLong(2), pp, r.get(1) :: Nil)
-      })
-    }
-    var step = 1L
-    while (step < maxDist) {
-      val nw = scala.collection.mutable.ArrayBuffer.empty[W]
-      work.foreach { w =>
-        if (w.cur == w.src) nw += w // finished: pass through
-        else {
-          val ms =
-            if (w.cur == null) None else pmap.get((w.src, w.cur))
-          ms match {
-            case None =>
-              // the distributed left-join miss branch, replicated
-              nw += W(w.src, w.dst, w.dist, null, w.cur :: w.ids)
-            case Some(ps) => ps.foreach { pp =>
-              nw += W(w.src, w.dst, w.dist, pp, w.cur :: w.ids)
-              // incremental cap (ADVICE-r16): overflow before the step
-              // materializes past the driver band, not after
-              if (nw.size > cap) throw new DriverOverflow
-            }
-          }
-        }
-      }
-      work = nw
-      val n = work.size.toLong
-      if (n > bound)
-        throw new GraphContractViolation(
-          s"allShortestPaths witnesses: the path expansion hit $n rows " +
-          s"at step $step (bound maxClosureRows=$bound). Narrow the " +
-          s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      if (n > cap) throw new DriverOverflow
-      step += 1
-    }
-    val dstT = pairs.schema("__dst").dataType
-    val schema = StructType(Seq(
-      StructField("__src", pairs.schema("__src").dataType),
-      StructField("__dst", dstT),
-      StructField("__dist", LongType),
-      StructField("__wids", ArrayType(dstT, containsNull = true))))
-    localDf(spark, work.iterator.map(w =>
-      Row(w.src, w.dst, w.dist, w.src :: w.ids)).toSeq, schema)
-  }
-
   /** Multi-parent pointer walk: enumerate EVERY minimal path per pair
     * (the reconstructWitnessIds walk over an all-parents frame — each
     * step multiplies a row by its node's parents, guarded per step). */
   private[cypher] def reconstructAllWitnessIds(pairs: DataFrame,
-      parents: DataFrame, bound: Long): DataFrame = {
-    // driver fast path ([[DriverRowsConf]]): walk the collected
-    // parent sets in memory; same per-step guard; fallback past cap
-    val drvLim = driverRowsLimit(pairs.sparkSession)
-    if (drvLim > 0 && driverAdmits(parents, drvLim) &&
-        driverAdmits(pairs, drvLim)) {
-      try return driverReconstructAll(pairs, parents, bound, drvLim)
-      catch { case _: DriverOverflow => () }
+      parents: DataFrame, bound: Long): DataFrame =
+    driverOrWalk(parents, pairs) { driver =>
+      // a pair row starts UNSTARTED (no ids yet) and its first step is
+      // the inner join onto the pair's own parents; every later step
+      // multiplies a row by its current node's parents
+      val start = Fixpoint.rows(
+          pairs.select(col("__src"), col("__dst"), col("__dist")), driver)
+        .map(a => Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(1), Nil))
+      val par = Fixpoint.rows(
+          parents.select(col("__ps"), col("__pd"), col("__pp")), driver)
+        .map(a => ((a(0), a(1)): Any, a(2)))
+      witnessFrame(pairs, Fixpoint.walk("allWalk", start, par,
+          pairs.sparkSession, from = 0)(
+        w => if (w.ids.isEmpty) (w.src, w.dst)
+             else if (w.cur == w.src) null
+             else (w.src, w.cur),
+        _.dist) { (w, ps) =>
+          if (w.ids.isEmpty)
+            if (ps == null) Iterator.empty
+            else ps.iterator.map(pp => w.copy(cur = pp, ids = w.dst :: Nil))
+          else if (ps == null) // a parent-less pointer: the left-join miss
+            Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
+          else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
+        } { (n, step) =>
+          if (step >= 1 && n > bound)
+            throw new GraphContractViolation(
+              s"allShortestPaths witnesses: the path expansion hit $n rows " +
+              s"at step $step (bound maxClosureRows=$bound). Narrow the " +
+              s"anchor, or raise $MaxClosureRowsConf deliberately.")
+        })
     }
-    // kernel walk: a pair row starts UNSTARTED (no ids yet) and its
-    // first step is the inner join onto the pair's own parents; every
-    // later step multiplies a row by its current node's parents
-    val start = Fixpoint.values(
-        pairs.select(col("__src"), col("__dst"), col("__dist")))
-      .map(a => Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(1), Nil))
-    val par = Fixpoint.values(
-        parents.select(col("__ps"), col("__pd"), col("__pp")))
-      .map(a => ((a(0), a(1)): Any, a(2)))
-    val walked = Fixpoint.walk("allWalk", start, par,
-        Fixpoint.partitioner(pairs.sparkSession), from = 0)(
-      w => if (w.ids.isEmpty) (w.src, w.dst)
-           else if (w.cur == w.src) null
-           else (w.src, w.cur),
-      _.dist) { (w, ps) =>
-        if (w.ids.isEmpty)
-          if (ps == null) Iterator.empty
-          else ps.iterator.map(pp => w.copy(cur = pp, ids = w.dst :: Nil))
-        else if (ps == null) // a parent-less pointer: the left-join miss
-          Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
-        else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
-      } { (n, step) =>
-        if (step >= 1 && n > bound)
-          throw new GraphContractViolation(
-            s"allShortestPaths witnesses: the path expansion hit $n rows " +
-            s"at step $step (bound maxClosureRows=$bound). Narrow the " +
-            s"anchor, or raise $MaxClosureRowsConf deliberately.")
-      }
-    witnessFrame(pairs, walked)
-  }
 
-  /** One row of a kernel pointer walk: the pair and its distance, the
+  /** One row of a pointer walk: the pair and its distance, the
     * remaining distance (k-level walks), the node the walk stands on
     * and the ids walked so far, nearest the source first. */
   private final case class Walker(src: Any, dst: Any, dist: Long,
@@ -1602,10 +1181,10 @@ private[cypher] object Reach {
 
   /** A finished single/all-parents walk as (__src, __dst, __dist,
     * __wids) rows, the source prepended to each id array. */
-  private def witnessFrame(pairs: DataFrame, walked: RDD[Walker])
+  private def witnessFrame(pairs: DataFrame, walked: Rows[Walker])
       : DataFrame = {
     val dstT = pairs.schema("__dst").dataType
-    pairs.sparkSession.createDataFrame(
+    Fixpoint.frame(pairs.sparkSession,
       walked.map(w => Row(w.src, w.dst, w.dist, w.src :: w.ids)),
       StructType(Seq(
         StructField("__src", pairs.schema("__src").dataType),
@@ -1614,73 +1193,28 @@ private[cypher] object Reach {
         StructField("__wids", ArrayType(dstT, containsNull = true)))))
   }
 
-  /** In-memory single-parent pointer walk — the driver fast path of
-    * [[reconstructWitnessIds]]: one row per pair, the same pass-through
-    * and left-join-miss semantics. The output is pair-sized (no
-    * expansion), so the input gate alone bounds it — no overflow
-    * fallback needed. */
-  private def driverReconstructSingle(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val pr = pairs.select(col("__src"), col("__dst"), col("__dist"),
-      col("__par")).collect()
-    val pmap = scala.collection.mutable.HashMap.empty[(Any, Any), Any]
-    pr.foreach(r => pmap((r.get(0), r.get(1))) = r.get(3))
-    val maxDist =
-      if (pr.isEmpty) 0L else pr.iterator.map(_.getLong(2)).max
-    case class W(src: Any, dst: Any, dist: Long, cur: Any,
-      ids: List[Any])
-    var work = pr.map(r =>
-      W(r.get(0), r.get(1), r.getLong(2), r.get(3), r.get(1) :: Nil))
-      .toSeq
-    var step = 1L
-    while (step < maxDist) {
-      work = work.map { w =>
-        if (w.cur == w.src) w // finished: pass through
-        else pmap.get((w.src, w.cur)) match {
-          case Some(pp) => W(w.src, w.dst, w.dist, pp, w.cur :: w.ids)
-          case None     => // the distributed left-join miss branch
-            W(w.src, w.dst, w.dist, null, w.cur :: w.ids)
-        }
-      }
-      step += 1
-    }
-    val dstT = pairs.schema("__dst").dataType
-    val schema = StructType(Seq(
-      StructField("__src", pairs.schema("__src").dataType),
-      StructField("__dst", dstT),
-      StructField("__dist", LongType),
-      StructField("__wids", ArrayType(dstT, containsNull = true))))
-    localDf(spark, work.iterator.map(w =>
-      Row(w.src, w.dst, w.dist, w.src :: w.ids)).toSeq, schema)
-  }
-
   /** Parent-pointer walk: (src, dst, dist, par) pair rows → the full
     * witness id array [src, …, dst] per pair. A pair at distance k
-    * resolves after k−1 steps — the walk runs max(dist)−1 steps, each
-    * one kernel job over the rows still walking
-    * ([[graft.ops.Fixpoint.walk]]). */
-  private[cypher] def reconstructWitnessIds(pairs: DataFrame): DataFrame = {
-    // driver fast path ([[DriverRowsConf]]): the single-parent walk in
-    // memory — one LocalRelation replaces max-dist−1 walk steps. The
-    // pair frame IS the parent map here, so the one count gates both
-    val drvLim = driverRowsLimit(pairs.sparkSession)
-    if (drvLim > 0 && driverAdmits(pairs, drvLim))
-      return driverReconstructSingle(pairs)
-    val in = Fixpoint.values(pairs.select(col("__src"), col("__dst"),
-      col("__dist"), col("__par")))
-    val start = in.map(a =>
-      Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(3), a(1) :: Nil))
-    val walked = Fixpoint.walk("walk", start,
-        in.map(a => ((a(0), a(1)): Any, a(3))),
-        Fixpoint.partitioner(pairs.sparkSession), from = 1)(
-      w => if (w.cur == w.src) null else (w.src, w.cur),
-      _.dist) { (w, ps) =>
-        if (ps == null) // a parent-less pointer: the left-join miss
-          Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
-        else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
-      } { (_, _) => () }
-    witnessFrame(pairs, walked)
-  }
+    * resolves after k−1 steps — the walk runs max(dist)−1 steps
+    * ([[graft.ops.Fixpoint.walk]]: one job per step on the cluster;
+    * in driver memory when the pair frame, which is also the parent
+    * map, is admitted). */
+  private[cypher] def reconstructWitnessIds(pairs: DataFrame): DataFrame =
+    driverOrWalk(pairs) { driver =>
+      val in = Fixpoint.rows(pairs.select(col("__src"), col("__dst"),
+        col("__dist"), col("__par")), driver)
+      val start = in.map(a =>
+        Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(3), a(1) :: Nil))
+      witnessFrame(pairs, Fixpoint.walk("walk", start,
+          in.map(a => ((a(0), a(1)): Any, a(3))), pairs.sparkSession,
+          from = 1)(
+        w => if (w.cur == w.src) null else (w.src, w.cur),
+        _.dist) { (w, ps) =>
+          if (ps == null) // a parent-less pointer: the left-join miss
+            Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
+          else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
+        } { (_, _) => () })
+    }
 
   /** Witness id array → the canonical node-struct array: posexplode
     * the positions, join the node table ONCE, re-collect in order. */
@@ -2226,106 +1760,25 @@ private[cypher] object Reach {
    * first round nothing new appears (≤ diameter rounds, each ONE job
    * on the [[graft.ops.Fixpoint]] kernel: the edges are grouped by
    * source once, the frontier shuffles to them, and the state of
-   * discovered pairs stays co-partitioned with the new ones). The accumulated pair count is
-   * guarded by `maxClosureRows` (default `max(64·E, 1024)`; session
-   * conf [[MaxClosureRowsConf]] overrides; an explicit argument wins)
+   * discovered pairs stays co-partitioned with the new ones; no job
+   * at all when [[driverOr]] admits the edge frame to driver memory).
+   * The accumulated pair count is guarded by `maxClosureRows` (default
+   * `max(64·E, 1024)`; session conf [[MaxClosureRowsConf]] overrides)
    * — the output is closure-sized, and on a well-connected graph that
    * is O(V²) BEFORE any endpoint filter in the surrounding join DAG
    * can apply, which is exactly why anchored endpoints seed the
    * frontier instead (see [[rewrite]]).
    */
-  /** In-memory frontier BFS — the driver fast path of
-    * [[reachablePairs]] (see [[DriverRowsConf]]): same synchronized
-    * multi-source rounds, the same per-round total accounting against
-    * the caller's guard, the same min-id first-discovery parent
-    * tie-break, MaxRounds backstop and typed errors. Throws
-    * [[DriverOverflow]] past `cap` — the caller falls back to the
-    * distributed loop. */
-  private def driverReachable(raw: DataFrame, sdOpt: Option[DataFrame],
-      withDist: Boolean, withParent: Boolean, confBound: Option[Long],
-      cap: Long, guardFor: Long => (Long, Int) => Unit)
-      : DataFrame = {
-    val spark = raw.sparkSession
-    // RAW rows, deduped here in memory — the distinct SHUFFLE +
-    // checkpoint happens only on the distributed path (round 17); the
-    // closure bound derives from the deduped count, exactly the
-    // distributed path's eCount
-    val pairs = raw.collect().map(r => (r.get(0), r.get(1))).distinct
-    val bound = confBound.getOrElse(math.max(64L * pairs.length, 1024L))
-    val guard = guardFor(bound)
-    val seedSet: Option[collection.Set[Any]] =
-      sdOpt.map(_.collect().iterator.map(_.get(0)).toSet)
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    pairs.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[Any]) += d
-    }
-    // (src, dst) -> (first-discovery dist, first-discovery parent)
-    val seen = scala.collection.mutable.LinkedHashMap
-      .empty[(Any, Any), (Long, Any)]
-    pairs.foreach { case (s, d) =>
-      if (seedSet.forall(_.contains(s))) seen((s, d)) = (1L, s)
-    }
-    var frontier: Iterable[(Any, Any)] = seen.keys.toSeq
-    var total = frontier.size.toLong
-    guard(total, 0)
-    if (total > cap) throw new DriverOverflow
-    var rounds = 0
-    while (frontier.nonEmpty) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          s"unbounded variable-length: reachability did not converge in " +
-          s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
-      val fresh = scala.collection.mutable.HashMap.empty[(Any, Any), Any]
-      frontier.foreach { case (s, mid) =>
-        adj.get(mid).foreach(_.foreach { d2 =>
-          if (!seen.contains((s, d2))) {
-            // min-id tie-break over this round's discoverers
-            fresh.get((s, d2)) match {
-              case Some(p) if compareIds(p, mid) <= 0 => ()
-              case _ => fresh((s, d2)) = mid
-            }
-          }
-        })
-      }
-      if (fresh.nonEmpty) {
-        total += fresh.size
-        guard(total, rounds)
-        if (total > cap) throw new DriverOverflow
-        fresh.foreach { case ((s, d2), par) =>
-          seen((s, d2)) = ((rounds + 1).toLong, par)
-        }
-      }
-      frontier = fresh.keys.toSeq
-    }
-    val srcT = raw.schema("__src").dataType
-    val dstT = raw.schema("__dst").dataType
-    val fields = Seq(StructField("__src", srcT),
-      StructField("__dst", dstT)) ++
-      (if (withDist) Seq(StructField("__dist", LongType)) else Nil) ++
-      (if (withParent) Seq(StructField("__par", srcT)) else Nil)
-    val rows = seen.iterator.map { case ((s, d), (dist, par)) =>
-      Row.fromSeq(Seq(s, d) ++
-        (if (withDist) Seq(dist) else Nil) ++
-        (if (withParent) Seq(par) else Nil))
-    }.toSeq
-    localDf(spark, rows, StructType(fields))
-  }
-
   private[cypher] def reachablePairs(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame] = None,
-      maxClosureRows: Option[Long] = None,
       withDist: Boolean = false,
       withParent: Boolean = false): DataFrame = {
     // self-loop edges stay: (a)→(a) is a legitimate length-1 path, and
     // cycle pairs (a, a) via longer loops arise from the BFS naturally
     val raw = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .where(col("__src").isNotNull && col("__dst").isNotNull)
-    val confBound = maxClosureRows
-      .orElse(edges.sparkSession.conf.getOption(MaxClosureRowsConf)
-        .map(_.toLong))
+    val confBound = edges.sparkSession.conf.getOption(MaxClosureRowsConf)
+      .map(_.toLong)
     def guardFor(bound: Long)(total: Long, round: Int): Unit =
       if (total > bound)
         throw new GraphContractViolation(
@@ -2334,21 +1787,15 @@ private[cypher] object Reach {
           "graph is too well-connected for an unanchored closure — " +
           "anchor an endpoint (a literal WHERE equality or a piped " +
           s"frame), or raise $MaxClosureRowsConf deliberately.")
-    // driver fast path ([[DriverRowsConf]]): collect the slim edge
-    // frame once, run the whole BFS in memory — identical guards and
-    // typed errors; an overgrown closure falls back to the kernel
-    driverOr(raw, seeds) { (sdOpt, drvLim) =>
-      driverReachable(raw, sdOpt, withDist, withParent, confBound, drvLim,
-        guardFor)
-    } { sd =>
-      val (all, t, _) = kernelBfs(raw, sd, "reach", allParents = false,
+    driverOr(raw, seeds) { (sd, driver) =>
+      val (all, t, _) = bfs(raw, sd, driver, "reach", allParents = false,
         confBound, guardFor,
         "unbounded variable-length: reachability did not converge in " +
         s"$MaxRounds rounds — the edge set's diameter exceeds the guard")
-      raw.sparkSession.createDataFrame(all.map { case (k, (dist, par)) =>
-          val (s, d) = k.asInstanceOf[(Any, Any)]
-          Row.fromSeq(Seq(s, d) ++ (if (withDist) Seq(dist) else Nil) ++
-            (if (withParent) Seq(par(0)) else Nil))
+      Fixpoint.frame(raw.sparkSession, all.map { case (key, (r, pars)) =>
+          val (s, d) = key.asInstanceOf[(Any, Any)]
+          Row.fromSeq(Seq(s, d) ++ (if (withDist) Seq(r + 1L) else Nil) ++
+            (if (withParent) Seq(pars.head) else Nil))
         }, StructType(
           Seq(StructField("__src", t), StructField("__dst", t)) ++
           (if (withDist) Seq(StructField("__dist", LongType)) else Nil) ++
@@ -2356,24 +1803,23 @@ private[cypher] object Reach {
     }
   }
 
-  /** Runs `driver` — an in-memory fast path of a reach loop — when the
-    * edge frame is admitted ([[DriverRowsConf]]); otherwise, or when the
-    * attempt outgrows the bound ([[DriverOverflow]]), runs `kernel`,
-    * the distributed loop. UNSEEDED loops grow with the whole graph
+  /** Runs a reach loop `run(seeds, driver)` in driver memory (`driver`
+    * = the row cap) when the edge frame is admitted
+    * ([[DriverRowsConf]]); otherwise, or when that attempt outgrows the
+    * cap ([[graft.ops.Fixpoint.DriverOverflow]]), on the cluster
+    * (`driver` = None). UNSEEDED loops grow with the whole graph
     * (every edge seeds the frontier), so they only qualify at 1/16 of
     * the bound — a measured 750k-edge unseeded closure ran 3.5× SLOWER
     * driver-side (q74 quiet A/B 3.4 → 11.8 s) while the seeded cones
     * over the same frame all won. Admission probes the RAW edge count —
     * a scan-only job bounding the distinct count from above — so the
-    * distinct SHUFFLE is paid only by frames headed for the distributed
-    * loop (round 17, guide §2.4). `driver` gets the deduplicated seed
-    * frame and the row bound; `kernel` gets the seeds, deduplicated
-    * when the gate ran. */
+    * distinct SHUFFLE is paid only by frames headed for the cluster
+    * (round 17, guide §2.4). `run` gets the seeds deduplicated when
+    * the gate ran. */
   private def driverOr[R](raw: DataFrame, seeds: Option[DataFrame])(
-      driver: (Option[DataFrame], Long) => R)(
-      kernel: Option[DataFrame] => R): R = {
+      run: (Option[DataFrame], Option[Long]) => R): R = {
     val drvLim = driverRowsLimit(raw.sparkSession)
-    if (drvLim <= 0) return kernel(seeds)
+    if (drvLim <= 0) return run(seeds, None)
     val sdOpt = seeds.map(seedFrame)
     val sdRows = sdOpt.map(_.count()).getOrElse(-1L)
     val eGate = if (sdOpt.isDefined) drvLim else drvLim / 16
@@ -2381,11 +1827,23 @@ private[cypher] object Reach {
       val rawCount = raw.count()
       if (rawCount > 0 && rawCount <= eGate &&
           fitsDriverBytes(raw, rawCount)) {
-        try return driver(sdOpt, drvLim)
+        try return run(sdOpt, Some(drvLim))
         catch { case _: DriverOverflow => () }
       }
     }
-    kernel(sdOpt)
+    run(sdOpt, None)
+  }
+
+  /** [[driverOr]] for a pointer walk over `inputs`: in driver memory
+    * when each input is admitted, in order ([[driverAdmits]]). */
+  private def driverOrWalk[R](inputs: DataFrame*)(run: Option[Long] => R)
+      : R = {
+    val drvLim = driverRowsLimit(inputs.head.sparkSession)
+    if (drvLim > 0 && inputs.forall(driverAdmits(_, drvLim))) {
+      try return run(Some(drvLim))
+      catch { case _: DriverOverflow => () }
+    }
+    run(None)
   }
 
   /** True when a driver fast path may collect `df`: within `lim` rows
@@ -2396,64 +1854,38 @@ private[cypher] object Reach {
     rows <= lim && fitsDriverBytes(df, rows)
   }
 
-  /** The distributed first-discovery BFS of [[reachablePairs]] and
-    * [[allParentsPairs]] on the [[graft.ops.Fixpoint]] kernel: one job
-    * per round. The state is one entry per discovered (src, node) pair:
-    * its distance and its parents — the frontier nodes it was first
-    * reached through, all of them with `allParents`, else only the
-    * min-id one (deterministic); a distance-1 pair's parent is its
-    * source. The guard counts pairs, plus parent entries with
-    * `allParents`. Returns every discovered entry, the id type and the
-    * closure bound. */
-  private def kernelBfs(raw: DataFrame, seeds: Option[DataFrame],
-      loop: String, allParents: Boolean, confBound: Option[Long],
-      guardFor: Long => (Long, Int) => Unit, roundsMsg: String)
-      : (RDD[(Any, (Long, Array[Any]))], DataType, Long) = {
-    val in = kernelInput(raw, seeds)
-    val g = Fixpoint.graph(loop, in.edges, raw.sparkSession)(distinctIds)()
+  /** The first-discovery BFS of [[reachablePairs]] and
+    * [[allParentsPairs]] on [[graft.ops.Fixpoint.loop]]: one entry per
+    * discovered (src, node) pair at distance round + 1, valued by its
+    * parents — the frontier nodes it was first reached through, all of
+    * them with `allParents`, else only the min-id one (deterministic);
+    * a distance-1 pair's parent is its source. The guard counts pairs,
+    * plus the parent entries of rounds ≥ 1 with `allParents`. Returns
+    * every entry, the id type and the closure bound. */
+  private def bfs(raw: DataFrame, seeds: Option[DataFrame],
+      driver: Option[Long], loop: String, allParents: Boolean,
+      confBound: Option[Long], guardFor: Long => (Long, Int) => Unit,
+      roundsMsg: String): (Rows[(Any, (Int, List[Any]))], DataType, Long) = {
+    val in = loopInput(raw, seeds, driver)
+    val g = Fixpoint.graph(loop, in.edges, raw.sparkSession)(distinctIds)
     val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
     val guard = guardFor(bound)
-    // every discovered pair, flagged when the last round found it
-    var state: RDD[(Any, ((Long, Array[Any]), Boolean))] =
-      Fixpoint.edgesFrom(g, in.seeds)
-        .map { case (s, d) => ((s, d): Any, ((1L, Array[Any](s)), true)) }
-        .partitionBy(g.part)
-    var rows = Fixpoint.materialize(state, s"$loop:0")().rows
-    var n = rows
-    var total = n
-    guard(total, 0)
-    var rounds = 0
-    while (n > 0) {
-      rounds += 1
-      if (rounds > MaxRounds) throw new CypherBindingException(roundsMsg)
-      val dist = rounds + 1L
-      val fresh = state.filter(_._2._2)
-      val stepped =
-        Fixpoint.expand(Fixpoint.frontier(fresh)((s, _) => s), g) {
-          (s: Any, mid: Any, d2: Any) => ((s, d2): Any, mid)
-        }
-      // a (src, via) frontier entry reaches each distinct out-neighbour
-      // once, so grouped vias are distinct
-      val cands: RDD[(Any, Array[Any])] =
-        if (allParents) stepped.groupByKey(g.part).mapValues(_.toArray)
-        else stepped.reduceByKey(g.part,
-          (a, b) => if (compareIds(a, b) <= 0) a else b).mapValues(Array(_))
-      val next = Fixpoint.settle(cands, state.mapValues(_._1)) {
-        (pars, old) => if (old.isEmpty) Some((dist, pars)) else None
-      }
-      // pairs are never rewritten, so the state grows by the fresh ones
-      val st = Fixpoint.materialize(next, s"$loop:$rounds") {
-        case (_, ((_, pars), isNew)) => if (isNew) pars.length.toLong else 0L
-      }
-      n = st.rows - rows
-      rows = st.rows
-      state = next
-      if (n > 0) {
-        total += n + (if (allParents) st.sum else 0L)
-        guard(total, rounds)
-      }
-    }
-    (state.mapValues(_._1), in.idType, bound)
+    var total = 0L
+    val all = Fixpoint.loop(loop, g, in.seeds, once = true, MaxRounds)(
+      Fixpoint.Frontier[Any, Any, List[Any]](
+        seed = (s, d) => ((s, d), List(s)),
+        front = (s, _) => s,
+        extend = (s, mid, d2) => ((s, d2), List(mid)),
+        // a (src, via) entry reaches each distinct out-neighbour once,
+        // so the gathered vias are distinct
+        combine =
+          if (allParents) (a, b) => b ::: a
+          else (a, b) => if (compareIds(a.head, b.head) <= 0) a else b,
+        sum = if (allParents) _.length.toLong else _ => 0L)) { (r, st) =>
+      total += st.rows + (if (r > 0) st.sum else 0L)
+      guard(total, r)
+    }(throw new CypherBindingException(roundsMsg))
+    (all, in.idType, bound)
   }
 
   /** A seed frame as the driver fast paths read it: its first column
@@ -2462,29 +1894,37 @@ private[cypher] object Reach {
     s.select(col(s.columns.head).as("__src"))
       .where(col("__src").isNotNull).distinct().localCheckpoint(false)
 
-  /** A reach loop's kernel entry: the slim edge pairs and the seed ids
-    * as plain values of one id type (the wider type of the edge and
-    * seed columns, which the DataFrame joins compared in). */
-  private final class KernelInput(val edges: RDD[(Any, Any)],
-      val seeds: Option[RDD[Any]], val idType: DataType)
+  /** A reach loop's input: the slim edge pairs and the seed ids as
+    * plain values of one id type (the wider type of the edge and seed
+    * columns, which the DataFrame joins compared in), collected into
+    * driver memory when `driver` holds the cap. */
+  private final class LoopInput(val edges: Rows[(Any, Any)],
+      val seeds: Option[Rows[Any]], val idType: DataType)
 
-  private def kernelInput(raw: DataFrame, seeds: Option[DataFrame])
-      : KernelInput = {
+  private def loopInput(raw: DataFrame, seeds: Option[DataFrame],
+      driver: Option[Long]): LoopInput = {
     val t = Fixpoint.commonType(Seq(raw.schema("__src").dataType,
       raw.schema("__dst").dataType) ++
       seeds.map(s => s.schema(s.columns.head).dataType): _*)
-    val edges = Fixpoint.values(raw.select(
-        Fixpoint.castTo(raw, "__src", t), Fixpoint.castTo(raw, "__dst", t)))
+    val edges = Fixpoint.rows(raw.select(Fixpoint.castTo(raw, "__src", t),
+        Fixpoint.castTo(raw, "__dst", t)), driver)
       .map(a => (a(0), a(1)))
     val sd = seeds.map { s =>
-      Fixpoint.values(s.select(Fixpoint.castTo(s, s.columns.head, t)))
-        .map(_(0)).filter(_ != null)
+      Fixpoint.rows(s.select(Fixpoint.castTo(s, s.columns.head, t)), driver)
+        .flatMap(a => Option(a(0)))
     }
-    new KernelInput(edges, sd, t)
+    new LoopInput(edges, sd, t)
+  }
+
+  /** The rows of a driver-memory input, None on the cluster. */
+  private def held[T](rows: Rows[T]): Option[collection.Seq[T]] = rows match {
+    case Fixpoint.Local(rs, _) => Some(rs)
+    case _                     => None
   }
 
   /** A node's distinct out-neighbours. */
-  private val distinctIds: Seq[Any] => Array[Any] = _.distinct.toArray
+  private val distinctIds: collection.Seq[Any] => Array[Any] =
+    _.distinct.toArray
 
   /**
    * allShortestPaths over an unbounded range, ANCHORED form: one row
@@ -2493,111 +1933,25 @@ private[cypher] object Reach {
    * count. σ comes from the same frontier BFS that computes reach
    * (Brandes' forward pass, the [[graft.ops.GraphOps]] betweenness
    * posture): a node first discovered at round k+1 has
-   * σ(v) = Σ σ(u) over its round-k predecessors — one groupBy-sum per
-   * round on slim (src, dst, σ) rows; every walk of length d_min is
-   * necessarily a simple shortest path, so σ counts paths with NO
-   * per-path state anywhere. The final σ-fold row multiplication is a
-   * map-side `explode(sequence(1, σ))`.
+   * σ(v) = Σ σ(u) over its round-k predecessors — one sum per key per
+   * round of the [[graft.ops.Fixpoint.loop]]; every walk of length
+   * d_min is necessarily a simple shortest path, so σ counts paths
+   * with NO per-path state anywhere. The final σ-fold row
+   * multiplication is a flat map over the pairs.
    *
    * Scale posture: requires seeds (the witness set is only bounded on
    * an anchored cone — [[rewrite]] enforces it); the accumulated pair
    * count rides the same `maxClosureRows` guard as [[reachablePairs]],
    * and the summed witness count is guarded against the same bound
-   * before the explode, so a combinatorial σ blowup fails fast with a
+   * before the expansion, so a combinatorial σ blowup fails fast with a
    * typed error instead of materializing.
    */
-  /** In-memory σ BFS — the driver fast path of
-    * [[allShortestWitnesses]] (see [[DriverRowsConf]]): BigInt σ
-    * mirrors the distributed Decimal sums, the per-round σ cap, the
-    * per-round row guard, the final witness-total guard and the σ-fold
-    * expansion all replicate with identical typed errors. Throws
-    * [[DriverOverflow]] past `cap`. */
-  private def driverAllShortestWitnesses(raw: DataFrame, sd: DataFrame,
-      confBound: Option[Long], cap: Long,
-      guardFor: Long => (Long, Int, String) => Unit): DataFrame = {
-    val spark = raw.sparkSession
-    // RAW rows, deduped in memory (round 17) — see [[driverReachable]]
-    val pairs = raw.collect().map(r => (r.get(0), r.get(1))).distinct
-    val bound = confBound.getOrElse(math.max(64L * pairs.length, 1024L))
-    val guard = guardFor(bound)
-    val seedSet: collection.Set[Any] =
-      sd.collect().iterator.map(_.get(0)).toSet
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    pairs.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[Any]) += d
-    }
-    val seen = scala.collection.mutable.LinkedHashMap
-      .empty[(Any, Any), (Long, BigInt)]
-    pairs.foreach { case (s, d) =>
-      if (seedSet.contains(s)) seen((s, d)) = (1L, BigInt(1))
-    }
-    var frontier: Seq[((Any, Any), BigInt)] = seen.iterator
-      .map { case (k, (_, sig)) => (k, sig) }.toSeq
-    var total = frontier.size.toLong
-    guard(total, 0, "the anchored cone")
-    if (total > cap) throw new DriverOverflow
-    val sigmaCap = Long.MaxValue >> 20
-    var rounds = 0
-    while (frontier.nonEmpty) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          s"allShortestPaths: BFS did not converge in $MaxRounds " +
-          "rounds — the edge set's diameter exceeds the guard")
-      val next = scala.collection.mutable.LinkedHashMap
-        .empty[(Any, Any), BigInt]
-      frontier.foreach { case ((s, mid), sig) =>
-        adj.get(mid).foreach(_.foreach { d2 =>
-          if (!seen.contains((s, d2)))
-            next((s, d2)) = next.getOrElse((s, d2), BigInt(0)) + sig
-        })
-      }
-      val n = next.size.toLong
-      if (n > 0 && next.valuesIterator.max > sigmaCap)
-        throw new GraphContractViolation(
-          s"allShortestPaths: shortest-path witness count σ exceeded " +
-          s"$sigmaCap per pair after round $rounds (Long overflow " +
-          "territory on a diamond-rich DAG). Narrow the anchor — the " +
-          "witness expansion would not be materializable anyway.")
-      if (n > 0) {
-        total += n
-        guard(total, rounds, "the anchored cone")
-        if (total > cap) throw new DriverOverflow
-        next.foreach { case (k, sig) =>
-          seen(k) = ((rounds + 1).toLong, sig)
-        }
-      }
-      frontier = next.toSeq
-    }
-    val witnesses = seen.valuesIterator.map(_._2).sum
-    if (witnesses > BigInt(bound))
-      throw new GraphContractViolation(
-        s"allShortestPaths: the witness expansion hit $witnesses rows " +
-        s"after round $rounds (bound maxClosureRows=$bound). Narrow " +
-        s"the anchor, or raise $MaxClosureRowsConf deliberately.")
-    if (witnesses > BigInt(cap)) throw new DriverOverflow
-    val schema = StructType(Seq(
-      StructField("__src", raw.schema("__src").dataType),
-      StructField("__dst", raw.schema("__dst").dataType),
-      StructField("__dist", LongType)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    seen.foreach { case ((s, d), (dist, sig)) =>
-      var i = BigInt(0)
-      while (i < sig) { out += Row(s, d, dist); i += 1 }
-    }
-    localDf(spark, out.toSeq, schema)
-  }
-
   private[cypher] def allShortestWitnesses(edges: DataFrame,
-      srcCol: String, dstCol: String, seeds: DataFrame,
-      maxClosureRows: Option[Long] = None): DataFrame = {
+      srcCol: String, dstCol: String, seeds: DataFrame): DataFrame = {
     val raw = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .where(col("__src").isNotNull && col("__dst").isNotNull)
-    val confBound = maxClosureRows
-      .orElse(edges.sparkSession.conf.getOption(MaxClosureRowsConf)
-        .map(_.toLong))
+    val confBound = edges.sparkSession.conf.getOption(MaxClosureRowsConf)
+      .map(_.toLong)
     def guardFor(bound: Long)(total: Long, round: Int,
         what: String): Unit =
       if (total > bound)
@@ -2605,106 +1959,49 @@ private[cypher] object Reach {
           s"allShortestPaths: $what hit $total rows after round $round " +
           s"(bound maxClosureRows=$bound). Narrow the anchor, or raise " +
           s"$MaxClosureRowsConf deliberately.")
-    val sd = seeds.select(col(seeds.columns.head).as("__src"))
-      .where(col("__src").isNotNull).distinct().localCheckpoint(false)
-    val sdRows = sd.count()
-    // driver fast path ([[DriverRowsConf]]): the σ BFS in memory —
-    // same guards (row bound, σ cap, round backstop), same typed
-    // errors; fallback past the driver cap. Scan-only raw-count
-    // admission (round 17) — see [[reachablePairs]].
-    val drvLim = driverRowsLimit(edges.sparkSession)
-    if (drvLim > 0 && sdRows <= drvLim) {
-      val rawCount = raw.count()
-      if (rawCount > 0 && rawCount <= drvLim &&
-          fitsDriverBytes(raw, rawCount)) {
-        try return driverAllShortestWitnesses(raw, sd, confBound,
-          drvLim, guardFor)
-        catch { case _: DriverOverflow => () }
-      }
-    }
-    val e = raw.distinct().localCheckpoint(false)
-    val eCount = e.count()
-    val bound = confBound.getOrElse(math.max(64L * eCount, 1024L))
-    val guard: (Long, Int, String) => Unit = guardFor(bound)
-    var seen = e.join(bcastIf(sd, sdRows), Seq("__src"), "left_semi")
-      .withColumn("__dist", lit(1L))
-      .withColumn("__sigma", lit(1L))
-      .localCheckpoint(false)
-    var frontier = seen
-    var total = frontier.count()
-    var fRows = total
-    guard(total, 0, "the anchored cone")
-    var rounds = 0
-    var go = total > 0
-    while (go) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          s"allShortestPaths: BFS did not converge in $MaxRounds " +
-          "rounds — the edge set's diameter exceeds the guard")
-      // σ(v at k+1) = Σ σ(u at k): partial-agg groupBy BEFORE the
-      // anti-join (the sum only involves frontier rows; nodes already
-      // seen are strictly closer and contribute nothing). The per-pair
-      // sum runs in DecimalType(38,0) — a Long sum wraps SILENTLY on
-      // diamond-rich DAGs (Fibonacci-like growth), and with more than
-      // 2^20 contributing predecessors a wrap can land positive and
-      // under any cap; decimal cannot wrap (per-round sums stay far
-      // below 38 digits), so the cap check below is exact.
-      val nextD = bcastIf(frontier, fRows)
-        .join(e.select(col("__src").as("__mid"), col("__dst").as("__d2")),
-          col("__dst") === col("__mid"))
-        .select(col("__src"), col("__d2").as("__dst"), col("__sigma"))
-        .groupBy(col("__src"), col("__dst"))
-        .agg(sum(col("__sigma")
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .as("__sigmaD"))
-        .join(seen.select(col("__src"), col("__dst")),
-          Seq("__src", "__dst"), "left_anti")
-        .withColumn("__dist", lit((rounds + 1).toLong))
-        .localCheckpoint(false)
-      // one probe job per round: row count + max σ. The cap keeps the
-      // materialized Long σ (and the explode(sequence(1, σ)) below)
-      // in safe territory.
-      val probe = nextD.agg(count(lit(1)),
-        coalesce(max(col("__sigmaD")),
-          lit(1).cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .first()
-      val n = probe.getLong(0)
+    driverOr(raw, Some(seeds)) { (sd, driver) =>
+      val spark = raw.sparkSession
+      val in = loopInput(raw, sd, driver)
+      val g = Fixpoint.graph("allShortest", in.edges, spark)(distinctIds)
+      val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
+      val guard = guardFor(bound) _
+      // The cap keeps σ — and the σ-fold expansion below — in safe
+      // territory. σ sums per key saturate at Long.MaxValue, past the
+      // cap, so an overflowing sum trips the cap instead of wrapping.
       val sigmaCap = Long.MaxValue >> 20
-      if (n > 0 && probe.getDecimal(1).compareTo(
-            java.math.BigDecimal.valueOf(sigmaCap)) > 0)
+      var total = 0L
+      var witnesses = BigInt(0)
+      var rounds = 0
+      val seen = Fixpoint.loop("allShortest", g, in.seeds, once = true,
+          MaxRounds)(Fixpoint.Frontier[Any, (Any, Long), Long](
+        seed = (s, d) => ((s, d), 1L),
+        front = (s, sig) => (s, sig),
+        extend = { case ((s, sig), _, d2) => ((s, d2), sig) },
+        combine = Fixpoint.addSat,
+        sum = sig => sig, max = sig => sig)) { (r, st) =>
+        rounds = r
+        if (st.rows > 0 && st.max > sigmaCap)
+          throw new GraphContractViolation(
+            s"allShortestPaths: shortest-path witness count σ exceeded " +
+            s"$sigmaCap per pair after round $r (Long overflow " +
+            "territory on a diamond-rich DAG). Narrow the anchor — the " +
+            "witness expansion would not be materializable anyway.")
+        total += st.rows
+        witnesses += st.sum
+        guard(total, r, "the anchored cone")
+      }(throw new CypherBindingException(
+        s"allShortestPaths: BFS did not converge in $MaxRounds " +
+        "rounds — the edge set's diameter exceeds the guard"))
+      if (witnesses > bound)
         throw new GraphContractViolation(
-          s"allShortestPaths: shortest-path witness count σ exceeded " +
-          s"$sigmaCap per pair after round $rounds (Long overflow " +
-          "territory on a diamond-rich DAG). Narrow the anchor — the " +
-          "witness expansion would not be materializable anyway.")
-      // exact: every per-pair σ is ≤ sigmaCap, so the Long cast is
-      // value-preserving
-      val next = nextD.select(col("__src"), col("__dst"), col("__dist"),
-        col("__sigmaD").cast(org.apache.spark.sql.types.LongType)
-          .as("__sigma"))
-      go = n > 0
-      if (go) {
-        total += n
-        guard(total, rounds, "the anchored cone")
-        seen = seen.union(next).localCheckpoint(false)
-        frontier = next
-        fRows = n
-      }
+          s"allShortestPaths: the witness expansion hit $witnesses rows " +
+          s"after round $rounds (bound maxClosureRows=$bound). Narrow " +
+          s"the anchor, or raise $MaxClosureRowsConf deliberately.")
+      Fixpoint.frame(spark, seen.flatMap { case (key, (r, sig)) =>
+          val (s, d) = key.asInstanceOf[(Any, Any)]
+          (0L until sig).iterator.map(_ => Row(s, d, r + 1L))
+        }, StructType(Seq(StructField("__src", in.idType),
+          StructField("__dst", in.idType), StructField("__dist", LongType))))
     }
-    // decimal sum: the TOTAL across pairs can overflow Long even when
-    // every per-pair σ is in range
-    val witnesses = seen
-      .agg(coalesce(sum(col("__sigma")
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))), lit(0)))
-      .first().getDecimal(0)
-    if (witnesses.compareTo(new java.math.BigDecimal(bound)) > 0)
-      throw new GraphContractViolation(
-        s"allShortestPaths: the witness expansion hit $witnesses rows " +
-        s"after round $rounds (bound maxClosureRows=$bound). Narrow " +
-        s"the anchor, or raise $MaxClosureRowsConf deliberately.")
-    seen.select(col("__src"), col("__dst"), col("__dist"),
-        explode(sequence(lit(1L), col("__sigma"))).as("__w"))
-      .drop("__w")
   }
 }

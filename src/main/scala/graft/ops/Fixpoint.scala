@@ -9,7 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Spark-core kernel for frontier loops and parent-pointer walks — the
@@ -40,6 +40,12 @@ import org.apache.spark.sql.types.DataType
  * once per partition, each step shuffles only the rows still walking to
  * the index, and finished rows leave the loop.
  *
+ * Executors: [[loop]] and [[walk]] run the same closures either on the
+ * cluster or in driver memory, by where their input [[Rows]] are held
+ * ([[Dist]] or [[Local]]). In driver memory a loop runs no job at all:
+ * the collected edges group into one map, the state updates in place,
+ * and a round costs its frontier plus its new entries.
+ *
  * Ids are plain JVM values compared by `equals`/`hashCode`: longs,
  * strings, and struct ids as schema-free [[Row]]s. Callers cast the id
  * columns of one loop to a single type first ([[commonType]]), because
@@ -66,14 +72,29 @@ object Fixpoint {
   val RoundProperty = "graft.fixpoint.round"
 
   /** Row count of a materialized RDD plus the sum and the max of two
-    * per-row measures, all taken by the job that materialized it. */
+    * non-negative per-row measures, all taken by the job that
+    * materialized it. The sum saturates at `Long.MaxValue`. */
   final case class Stats(rows: Long, sum: Long, max: Long)
 
-  /** Adjacency of a loop: one `node → out-edges` map per partition of
-    * `part`. `sum` is the graph build's summed measure (the edge count
-    * unless the caller measured something else). */
+  /** `a + b` for non-negative longs, saturating at `Long.MaxValue`. */
+  def addSat(a: Long, b: Long): Long = {
+    val s = a + b
+    if (s < 0) Long.MaxValue else s
+  }
+
+  /** A loop's out-edges grouped per source node, held where the loop
+    * runs. `sum` is the build's summed measure (the edge count unless
+    * the caller measured something else). */
+  sealed trait Edges[E] { def sum: Long }
+
+  /** Adjacency of a cluster loop: one `node → out-edges` map per
+    * partition of `part`. */
   final class Graph[E](val adj: RDD[mutable.HashMap[Any, Array[E]]],
-      val part: Partitioner, val sum: Long)
+      val part: Partitioner, val sum: Long) extends Edges[E]
+
+  /** Adjacency of a driver loop: one map, and the cap of its rows. */
+  final class LocalGraph[E](val adj: collection.Map[Any, Array[E]],
+      val sum: Long, val cap: Long) extends Edges[E]
 
   /** Heap bytes one grouped out-edge is budgeted at: a reference plus a
     * boxed id. [[graph]] sizes edge partitions by it. */
@@ -141,6 +162,74 @@ object Fixpoint {
     case x      => x
   }
 
+  /** Thrown when a [[Local]] loop, walk or expansion outgrows its cap,
+    * or when one of its closures overflows a long: the caller reruns it
+    * on the cluster, which owns that error. Never user-visible. */
+  final class DriverOverflow extends RuntimeException(null, null, false, false)
+
+  /** A loop's rows, held where the loop runs: [[Dist]] on the cluster,
+    * [[Local]] in driver memory. */
+  sealed trait Rows[T] {
+    def map[U: ClassTag](f: T => U): Rows[U]
+    def flatMap[U: ClassTag](f: T => IterableOnce[U]): Rows[U]
+  }
+
+  final case class Dist[T](rdd: RDD[T]) extends Rows[T] {
+    def map[U: ClassTag](f: T => U): Rows[U] = Dist(rdd.map(f))
+    def flatMap[U: ClassTag](f: T => IterableOnce[U]): Rows[U] =
+      Dist(rdd.flatMap(f))
+  }
+
+  /** Rows in driver memory, at most `cap` of them: an expansion past
+    * `cap` throws [[DriverOverflow]]. */
+  final case class Local[T](rows: collection.Seq[T], cap: Long)
+      extends Rows[T] {
+    def map[U: ClassTag](f: T => U): Rows[U] = Local(rows.map(f), cap)
+    def flatMap[U: ClassTag](f: T => IterableOnce[U]): Rows[U] = {
+      val out = mutable.ArrayBuffer.empty[U]
+      rows.foreach(t => f(t).iterator.foreach { u =>
+        out += u
+        if (out.size > cap) throw new DriverOverflow
+      })
+      Local(out, cap)
+    }
+  }
+
+  /** `df`'s rows as arrays of values: collected into driver memory
+    * under cap `c` when `driver` is `Some(c)` (a LocalRelation collects
+    * without a job; struct values stay as collected, since nothing
+    * shuffles them), else distributed ([[values]]). */
+  def rows(df: DataFrame, driver: Option[Long]): Rows[Array[Any]] =
+    driver match {
+      case Some(cap) => Local(mutable.ArraySeq.make(df.collect()
+        .map(r => Array.tabulate[Any](r.length)(r.get))), cap)
+      case None => Dist(values(df))
+    }
+
+  /** The loop's exit: `rows` as a DataFrame of `schema` — a
+    * LocalRelation for driver rows (no job, and a later admission reads
+    * its size from the plan), else a scan of the RDD. */
+  def frame(spark: SparkSession, rows: Rows[Row], schema: StructType)
+      : DataFrame = rows match {
+    case Dist(rdd)    =>
+      spark.createDataFrame(rdd, schema)
+    case Local(rs, _) =>
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rs.asJava, schema)
+  }
+
+  private def rdd[T](r: Rows[T]): RDD[T] = r match {
+    case Dist(rdd) => rdd
+    case _         => throw new IllegalArgumentException(
+      "a loop mixes driver and cluster rows")
+  }
+
+  private def seq[T](r: Rows[T]): collection.Seq[T] = r match {
+    case Local(rs, _) => rs
+    case _            => throw new IllegalArgumentException(
+      "a loop mixes driver and cluster rows")
+  }
+
   /** Local-checkpoints `rdd` and materializes it in ONE job tagged
     * `tag`, returning `f` of each partition's rows. */
   private def run[T, A: ClassTag](rdd: RDD[T], tag: String)(
@@ -159,10 +248,12 @@ object Fixpoint {
       : Stats = {
     val parts = run(rdd, tag) { it =>
       var n = 0L; var s = 0L; var m = 0L
-      it.foreach { t => n += 1; s += sum(t); m = math.max(m, max(t)) }
+      it.foreach { t =>
+        n += 1; s = addSat(s, sum(t)); m = math.max(m, max(t))
+      }
       (n, s, m)
     }
-    Stats(parts.map(_._1).sum, parts.map(_._2).sum,
+    Stats(parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(addSat),
       if (parts.isEmpty) 0L else parts.map(_._3).max)
   }
 
@@ -178,7 +269,7 @@ object Fixpoint {
     * (`<name>:regroup`) moves the maps onto a width that fits, and the
     * loop runs at that width ([[Graph.part]]). */
   def graph[A: ClassTag, E: ClassTag](name: String, edges: RDD[(Any, A)],
-      spark: SparkSession)(group: Seq[A] => Array[E])(
+      spark: SparkSession)(group: collection.Seq[A] => Array[E])(
       measure: Array[E] => Long = (es: Array[E]) => es.length.toLong)
       : Graph[E] = {
     val base = partitioner(spark)
@@ -197,24 +288,41 @@ object Fixpoint {
     else {
       val part = new NodePartitioner(math.min(width, Int.MaxValue).toInt)
       val wide = adjacency(adj.flatMap(_.iterator).partitionBy(part))(
-        (es: Seq[Array[E]]) => es.head)
+        (es: collection.Seq[Array[E]]) => es.head)
       run(wide, s"$name:regroup")(_ => ())
       new Graph(wide, part, parts.map(_._1).sum)
     }
   }
 
+  /** [[graph]] of `edges` where they are held. In driver memory the
+    * out-edges group into one map, with no job. */
+  def graph[A: ClassTag, E: ClassTag](name: String, edges: Rows[(Any, A)],
+      spark: SparkSession)(group: collection.Seq[A] => Array[E]): Edges[E] =
+    edges match {
+      case Dist(rdd) => graph(name, rdd, spark)(group)()
+      case Local(rs, cap) =>
+        val m = grouped(rs.iterator)(group)
+        new LocalGraph(m, m.valuesIterator.map(_.length.toLong).sum, cap)
+    }
+
   /** One `node → group(payloads)` map per partition of `pairs`. */
-  private def adjacency[A, E](pairs: RDD[(Any, A)])(group: Seq[A] => E)
+  private def adjacency[A, E](pairs: RDD[(Any, A)])(group: collection.Seq[A] => E)
       : RDD[mutable.HashMap[Any, E]] =
-    pairs.mapPartitions({ it =>
-      val raw = mutable.HashMap.empty[Any, mutable.ArrayBuffer[A]]
-      it.foreach { case (k, a) =>
-        raw.getOrElseUpdate(k, mutable.ArrayBuffer.empty[A]) += a
-      }
-      val m = mutable.HashMap.empty[Any, E]
-      raw.foreach { case (k, as) => m(k) = group(as.toSeq) }
-      Iterator.single(m)
-    }, preservesPartitioning = true)
+    pairs.mapPartitions(it => Iterator.single(grouped(it)(group)),
+      preservesPartitioning = true)
+
+  /** `pairs` as one `key → group(payloads)` map. */
+  private def grouped[A, E](pairs: Iterator[(Any, A)])(group: collection.Seq[A] => E)
+      : mutable.HashMap[Any, E] = {
+    val raw = mutable.HashMap.empty[Any, mutable.ArrayBuffer[A]]
+    pairs.foreach { case (k, a) =>
+      raw.getOrElseUpdate(k, new mutable.ArrayBuffer[A](4)) += a
+    }
+    val m = new mutable.HashMap[Any, E](raw.size * 2,
+      mutable.HashMap.defaultLoadFactor)
+    raw.foreach { case (k, as) => m(k) = group(as) }
+    m
+  }
 
   /** The out-edges of `seeds` as (source, edge) rows — every edge of
     * the graph when `seeds` is None. Seeds without out-edges drop out
@@ -281,17 +389,194 @@ object Fixpoint {
     }
   }
 
-  /** Parent-pointer walk. `start` is materialized first (job
-    * `<name>:start`, which also takes the largest `dist` — the walk's
-    * step bound); then each step `s` of `from until maxDist` is one job
-    * (`<name>:<s>`): the rows still walking (`key` non-null) shuffle to
-    * the partitioned `parents` index and move on through
-    * `step(row, the key's parent entries or null)`; finished rows
-    * (`key` null) leave the loop. `guard(rows, s)` sees the walk's
-    * total row count after every step. Returns every row at the end.
-    * A step task holds one partition of the parent index in a map. */
-  def walk[W: ClassTag, P: ClassTag](name: String, start: RDD[W],
-      parents: RDD[(Any, P)], part: Partitioner, from: Long)(
+  /** The closures of one frontier loop, stated once for both
+    * executors ([[loop]]). The loop's entries are keyed by (src, node)
+    * pairs:
+    *  - `seed(src, e)`: the entry an out-edge `e` of seed `src` starts;
+    *  - `front(src, c)`: what an entry (src, node) → c the last round
+    *    added carries along its node's out-edges;
+    *  - `extend(f, node, e)`: the candidate entry reached along
+    *    out-edge `e` of `node`;
+    *  - `combine`: merges two candidates with one key (it may update
+    *    and return its first argument);
+    *  - `sum`, `max`: the per-entry measures of a round's [[Stats]]. */
+  final case class Frontier[E, F, C](
+      seed: (Any, E) => (Any, C),
+      front: (Any, C) => F,
+      extend: (F, Any, E) => (Any, C),
+      combine: (C, C) => C,
+      sum: C => Long = (_: C) => 0L,
+      max: C => Long = (_: C) => 0L)
+
+  /** Frontier loop `f` over `g`, from the out-edges of `seeds` (every
+    * edge of `g` when None). Round 0 adds the seed entries; round r ≥ 1
+    * extends the entries round r − 1 added and combines the candidates
+    * per key. With `once`, a candidate whose key already has an entry
+    * drops (first discovery); otherwise every combined candidate is a
+    * new entry (a level per round). `guard(r, the Stats of the entries
+    * round r added)` runs on the driver after every round, the last,
+    * empty one included; the loop ends after a round that adds
+    * nothing, and calls `diverged` instead of a round past
+    * `maxRounds`. Returns every entry with the round that added it.
+    *
+    * The loop runs where `g` is held. On the cluster each round is ONE
+    * job (`<name>:<r>`): the candidates combine onto the loop's
+    * [[NodePartitioner]] and [[settle]] into the co-partitioned state.
+    * In driver memory a round touches only its frontier and its new
+    * entries; after the guard, [[DriverOverflow]] is thrown once the
+    * entries plus their summed measure pass the cap. */
+  def loop[E: ClassTag, F: ClassTag, C: ClassTag](name: String, g: Edges[E],
+      seeds: Option[Rows[Any]], once: Boolean, maxRounds: Int)(
+      f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
+      diverged: => Nothing): Rows[(Any, (Int, C))] = g match {
+    case d: Graph[E @unchecked] =>
+      Dist(distLoop(name, d, seeds.map(rdd), once, maxRounds, f)(guard)(
+        diverged))
+    case l: LocalGraph[E @unchecked] =>
+      Local(localLoop(l, seeds.map(seq), once, maxRounds, f)(guard)(
+        diverged), l.cap)
+  }
+
+  private def distLoop[E: ClassTag, F: ClassTag, C: ClassTag](name: String,
+      g: Graph[E], seeds: Option[RDD[Any]], once: Boolean, maxRounds: Int,
+      f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
+      diverged: => Nothing): RDD[(Any, (Int, C))] = {
+    // entries flagged true when the last round added them
+    type State = RDD[(Any, ((Int, C), Boolean))]
+    var r = 0
+    var rows = 0L
+    def settled(next: State): Long = {
+      val st = materialize(next, s"$name:$r")(
+        { case (_, ((_, c), isNew)) => if (isNew) f.sum(c) else 0L },
+        { case (_, ((_, c), isNew)) => if (isNew) f.max(c) else 0L })
+      val added = st.rows - (if (once) rows else 0L)
+      rows = st.rows
+      guard(r, st.copy(rows = added))
+      added
+    }
+    var added: State = edgesFrom(g, seeds)
+      .map { case (s, e) => f.seed(s, e) }
+      .reduceByKey(g.part, f.combine).mapValues(c => ((0, c), true))
+    var n = settled(added)
+    var state = added // once: every entry so far
+    val levels = mutable.ArrayBuffer(added) // otherwise: every round's
+    while (n > 0) {
+      r += 1
+      if (r > maxRounds) diverged
+      val round = r
+      val cands = expand(
+          frontier(added.filter(_._2._2))((s, v) => f.front(s, v._1._2)), g)(
+          f.extend).reduceByKey(g.part, f.combine)
+      added =
+        if (once) settle(cands, state.mapValues(_._1)) { (c, old) =>
+          if (old.isEmpty) Some((round, c)) else None
+        }
+        else cands.mapValues(c => ((round, c), true))
+      n = settled(added)
+      if (once) state = added
+      else if (n > 0) levels += added
+    }
+    (if (once) state else g.adj.sparkContext.union(levels.toSeq))
+      .mapValues(_._1)
+  }
+
+  private def localLoop[E, F, C](g: LocalGraph[E],
+      seeds: Option[collection.Seq[Any]], once: Boolean, maxRounds: Int,
+      f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
+      diverged: => Nothing): collection.Seq[(Any, (Int, C))] = {
+    val out = mutable.ArrayBuffer.empty[(Any, (Int, C))]
+    val keys = mutable.HashSet.empty[Any] // once: every key with an entry
+    var r = 0
+    var held = 0L
+    def offer(cands: mutable.HashMap[Any, C], kc: (Any, C)): Unit = {
+      val (k, c) = kc
+      if (!(once && keys(k)))
+        cands(k) = cands.get(k) match {
+          case Some(old) => f.combine(old, c)
+          case None      => c
+        }
+    }
+    def add(cands: mutable.HashMap[Any, C]): Unit = {
+      var sum = 0L
+      var max = 0L
+      cands.foreach { case (k, c) =>
+        out += ((k, (r, c)))
+        if (once) keys += k
+        sum = addSat(sum, f.sum(c))
+        max = math.max(max, f.max(c))
+      }
+      guard(r, Stats(cands.size, sum, max))
+      held = addSat(held, addSat(cands.size, sum))
+      if (held > g.cap) throw new DriverOverflow
+    }
+    try {
+      var added = mutable.HashMap.empty[Any, C]
+      seeds.fold(g.adj.keysIterator)(_.iterator.distinct).foreach(s =>
+        g.adj.get(s).foreach(_.foreach(e => offer(added, f.seed(s, e)))))
+      add(added)
+      while (added.nonEmpty) {
+        r += 1
+        if (r > maxRounds) diverged
+        val cands = mutable.HashMap.empty[Any, C]
+        added.foreach { case (k, c) =>
+          val (s, node) = k.asInstanceOf[(Any, Any)]
+          g.adj.get(node).foreach { es =>
+            val v = f.front(s, c)
+            es.foreach(e => offer(cands, f.extend(v, node, e)))
+          }
+        }
+        add(cands)
+        added = cands
+      }
+    } catch { case _: ArithmeticException => throw new DriverOverflow }
+    out
+  }
+
+  /** Parent-pointer walk, run where `start` is held. Each step `s` of
+    * `from until` the largest `dist` moves the rows still walking
+    * (`key` non-null) on through `step(row, the key's parent entries
+    * or null)`; finished rows (`key` null) leave the loop. `guard(rows,
+    * s)` sees the walk's total row count after every step. Returns
+    * every row at the end.
+    *
+    * On the cluster, `start` is materialized first (job
+    * `<name>:start`, which also takes the step bound), then each step
+    * is one job (`<name>:<s>`) that shuffles the walking rows to the
+    * `parents` index, partitioned at the session's shuffle width; a
+    * step task holds one partition of the index in a map. In driver
+    * memory the index is one map, and a step's expansion throws
+    * [[DriverOverflow]] as soon as the walk's rows pass the cap. */
+  def walk[W: ClassTag, P: ClassTag](name: String, start: Rows[W],
+      parents: Rows[(Any, P)], spark: SparkSession, from: Long)(
+      key: W => Any, dist: W => Long)(
+      step: (W, Array[P]) => Iterator[W])(
+      guard: (Long, Long) => Unit): Rows[W] = start match {
+    case Dist(st) =>
+      Dist(distWalk(name, st, rdd(parents), partitioner(spark), from)(
+        key, dist)(step)(guard))
+    case Local(st, cap) =>
+      val index = grouped(seq(parents).iterator)(_.toArray)
+      val done = st.filter(key(_) == null).to(mutable.ArrayBuffer)
+      var live = st.filter(key(_) != null)
+      val steps = st.iterator.map(dist).maxOption.getOrElse(0L)
+      var s = from
+      while (s < steps) {
+        val out = mutable.ArrayBuffer.empty[W]
+        live.foreach(w => step(w, index.getOrElse(key(w), null)).foreach {
+          x =>
+            out += x
+            if (done.size + out.size > cap) throw new DriverOverflow
+        })
+        guard(done.size + out.size, s)
+        done ++= out.iterator.filter(key(_) == null)
+        live = out.filter(key(_) != null)
+        s += 1
+      }
+      Local(done ++= live, cap)
+  }
+
+  private def distWalk[W: ClassTag, P: ClassTag](name: String,
+      start: RDD[W], parents: RDD[(Any, P)], part: Partitioner, from: Long)(
       key: W => Any, dist: W => Long)(
       step: (W, Array[P]) => Iterator[W])(
       guard: (Long, Long) => Unit): RDD[W] = {

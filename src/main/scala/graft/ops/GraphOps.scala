@@ -1293,7 +1293,7 @@ object GraphOps {
     val g = Fixpoint.graph(op, Fixpoint.values(e.select(
         Fixpoint.castTo(e, "__s", t), Fixpoint.castTo(e, "__d", t),
         col("__w"))).map(a => (a(0), (a(1), a(2).asInstanceOf[Double]))),
-      spark)((es: Seq[(Any, Double)]) => es.toArray)(
+      spark)((es: collection.Seq[(Any, Double)]) => es.toArray)(
       _.count(_._2 < 0).toLong)
     if (g.sum > 0)
       throw new GraphContractViolation(
@@ -1373,7 +1373,7 @@ object GraphOps {
       col("pred").cast(StringType)))
     val g = Fixpoint.graph("routes",
       t.flatMap(a => Option(a(1)).map(p => (a(0), p))), spark)(
-      (ps: Seq[Any]) => ps.toArray)()
+      (ps: collection.Seq[Any]) => ps.toArray)()
     // walking heads: hop → (target, back), back = hops walked back
     // from the target so far
     var fresh: RDD[(Any, (Any, Int))] = t.map(a => (a(0), (a(0), 0)))

@@ -36,7 +36,9 @@ object Hashing {
     * callers must materialize shared localCheckpoints FIRST (one
     * count), so concurrent first-actions never race the checkpoint.
     * The first task failure rethrows with its original exception type
-    * after every task has been awaited. */
+    * after every task has been awaited. An interrupt of the caller
+    * interrupts every task and waits for the pool threads to end before
+    * it propagates, so no task outlives the call. */
   private[graft] def concurrently(tasks: (() => Unit)*): Unit = {
     if (tasks.size <= 1) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -49,6 +51,11 @@ object Hashing {
         catch {
           case e: java.util.concurrent.ExecutionException =>
             if (firstErr == null) firstErr = e.getCause
+          case e: InterruptedException =>
+            pool.shutdownNow()
+            pool.awaitTermination(Long.MaxValue,
+              java.util.concurrent.TimeUnit.NANOSECONDS)
+            throw e
         }
       }
       if (firstErr != null) throw firstErr

@@ -5939,13 +5939,16 @@ class CypherExtensionsSpec extends AnyFunSuite {
     // is 94 pairs — a bound between the two PROVES the anchored run
     // never materializes the full closure
     val chain = (0L until 99L).map(i => (i, i + 1)).toDF("s", "d")
-    val full = intercept[graft.ops.GraphContractViolation] {
-      Reach.reachablePairs(chain, "s", "d", maxClosureRows = Some(500L))
-    }
-    assert(full.getMessage.contains("maxClosureRows=500"))
-    val cone = Reach.reachablePairs(chain, "s", "d",
-      seeds = Some(Seq(5L).toDF("id")), maxClosureRows = Some(500L))
-    assert(cone.count() == 94L)
+    spark.conf.set(Reach.MaxClosureRowsConf, "500")
+    try {
+      val full = intercept[graft.ops.GraphContractViolation] {
+        Reach.reachablePairs(chain, "s", "d")
+      }
+      assert(full.getMessage.contains("maxClosureRows=500"))
+      val cone = Reach.reachablePairs(chain, "s", "d",
+        seeds = Some(Seq(5L).toDF("id")))
+      assert(cone.count() == 94L)
+    } finally spark.conf.unset(Reach.MaxClosureRowsConf)
   }
 
   test("literal WHERE anchors seed the reach frontier (src and dst side)") {

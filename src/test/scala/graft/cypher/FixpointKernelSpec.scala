@@ -3,23 +3,25 @@ package graft.cypher
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
 import graft.ops.{Fixpoint, GraphContractViolation, GraphOps}
 
 /**
- * The distributed reach and shortest-path loops on the
- * [[graft.ops.Fixpoint]] kernel: equivalence with the driver fast
- * paths on random graphs, every typed guard on the kernel path with its
- * exact message, and the job budget — a fixed setup count plus ONE job
- * per round and per walk step, so per-round Catalyst work shows up as a
- * failing unit.
+ * The reach and shortest-path loops on the [[graft.ops.Fixpoint]]
+ * executors: the in-memory and the RDD executor agree with each other
+ * and with brute-force references on random graphs, every typed guard
+ * keeps its exact message on both, and the job budget holds — on the
+ * cluster a fixed setup count plus ONE job per round and per walk step,
+ * so per-round Catalyst work shows up as a failing unit; in driver
+ * memory no round job at all.
  */
 class FixpointKernelSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -29,8 +31,8 @@ class FixpointKernelSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  /** `body` with the driver fast paths off: every loop runs on the
-    * kernel. */
+  /** `body` with the driver executor off: every loop runs on the
+    * cluster. */
   private def kernel[A](body: => A): A = {
     spark.conf.set(Reach.DriverRowsConf, "0")
     try body finally spark.conf.unset(Reach.DriverRowsConf)
@@ -45,12 +47,68 @@ class FixpointKernelSpec extends AnyFunSuite {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  /** Runs `f` on the driver path and on the kernel; both must agree. */
-  private def same(what: String)(f: => DataFrame): Unit = {
-    val drv = rowsOf(f)
+  /** Runs `f` on the in-memory and on the RDD executor; both must
+    * agree. Returns the rows. */
+  private def same(what: String)(f: => DataFrame): Seq[Row] = {
+    val drv = f.collect().toSeq
     val ker = kernel(rowsOf(f))
-    assert(ker == drv, s"$what: kernel ≠ driver twin")
+    assert(ker == drv.map(_.toString).sorted,
+      s"$what: in-memory ≠ RDD executor")
+    drv
   }
+
+  private def bag[T](xs: Seq[T]): Map[T, Int] =
+    xs.groupBy(identity).view.mapValues(_.size).toMap
+
+  /** Every minimal path out of each seed over the distinct edges, as
+    * (src, dst, length, nodes): BFS distances, then every walk that
+    * steps one distance level at a time. */
+  private def minimalPaths(es: Seq[(Long, Long)], seeds: Seq[Long])
+      : Seq[(Long, Long, Long, List[Long])] = {
+    val out = es.distinct.groupMap(_._1)(_._2)
+    seeds.distinct.flatMap { s =>
+      val dist = mutable.Map.empty[Long, Long]
+      var front = Seq(s)
+      var d = 0L
+      while (front.nonEmpty) {
+        d += 1
+        front = front.flatMap(out.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        front.foreach(dist(_) = d)
+      }
+      def grow(path: List[Long], i: Long)
+          : Seq[(Long, Long, Long, List[Long])] =
+        out.getOrElse(path.head, Nil)
+          .filter(w => dist.get(w).contains(i + 1)).flatMap { w =>
+            val p = w :: path
+            (s, w, i + 1, p.reverse) +: grow(p, i + 1)
+          }
+      grow(List(s), 0)
+    }
+  }
+
+  /** Walk counts per (seed, node, length) on a DAG, each edge row a
+    * distinct hop (parallel edges multiply). */
+  private def walkCounts(es: Seq[(Long, Long)], seeds: Seq[Long])
+      : Map[(Long, Long, Long), Long] = {
+    val out = es.groupMap(_._1)(_._2)
+    seeds.distinct.flatMap { s =>
+      var level = Map(s -> 1L)
+      var len = 0L
+      val acc = mutable.ArrayBuffer.empty[((Long, Long, Long), Long)]
+      while (level.nonEmpty) {
+        len += 1
+        level = level.toSeq.flatMap { case (u, c) =>
+          out.getOrElse(u, Nil).map(w => (w, c))
+        }.groupMapReduce(_._1)(_._2)(_ + _)
+        level.foreach { case (w, c) => acc += (((s, w, len), c)) }
+      }
+      acc
+    }.toMap
+  }
+
+  private def witnessRow(r: Row): (Long, Long, Long, List[Long]) =
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3).toList)
 
   private final class Lcg(var s: Long) {
     def next(bound: Int): Int = {
@@ -59,42 +117,60 @@ class FixpointKernelSpec extends AnyFunSuite {
     }
   }
 
-  // --------------------------------------------- kernel ≡ driver twins
+  // ------------------ in-memory ≡ RDD executor ≡ brute force
 
-  test("kernel ≡ driver twins: reach pairs, parents and witness walks " +
-      "on random cyclic graphs") {
+  test("in-memory ≡ RDD executor: reach pairs, parents, witness walks " +
+      "and σ rows on random cyclic graphs, against brute force") {
     import spark.implicits._
     val rnd = new Lcg(0x5DEECE66DL)
     for (trial <- 1 to 4) {
       val n = 6 + rnd.next(8)
-      val edges = (1 to 8 + rnd.next(20))
-        .map(_ => (rnd.next(n).toLong, rnd.next(n).toLong)).toDF("s", "d")
-      val seeds = Seq(rnd.next(n).toLong, rnd.next(n).toLong).toDF("id")
+      val es = (1 to 8 + rnd.next(20))
+        .map(_ => (rnd.next(n).toLong, rnd.next(n).toLong))
+      val edges = es.toDF("s", "d")
+      val seedIds = Seq(rnd.next(n).toLong, rnd.next(n).toLong)
+      val seeds = seedIds.toDF("id")
+      val minimal = minimalPaths(es, seedIds)
       same(s"trial $trial closure")(
         Reach.reachablePairs(edges, "s", "d", withDist = true))
       same(s"trial $trial witnesses")(Reach.reconstructWitnessIds(
         Reach.reachablePairs(edges, "s", "d", seeds = Some(seeds),
           withDist = true, withParent = true)))
-      same(s"trial $trial all-parents witnesses") {
+      val all = same(s"trial $trial all-parents witnesses") {
         val (pairs, parents, bound) =
           Reach.allParentsPairs(edges, "s", "d", Some(seeds))
         Reach.reconstructAllWitnessIds(pairs, parents, bound)
       }
+      assert(bag(all.map(witnessRow)) == bag(minimal),
+        s"trial $trial: all-parents witnesses ≠ every minimal path")
+      val sigma = same(s"trial $trial σ rows")(
+        Reach.allShortestWitnesses(edges, "s", "d", seeds))
+      assert(bag(sigma.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))) ==
+        bag(minimal.map(p => (p._1, p._2, p._3))),
+        s"trial $trial: σ rows ≠ one per minimal path")
     }
   }
 
-  test("kernel ≡ driver twins: k-level levels and walks on random DAGs " +
-      "with parallel edges") {
+  test("in-memory ≡ RDD executor: k-level levels and walks on random " +
+      "DAGs with parallel edges, levels against brute force") {
     import spark.implicits._
     val rnd = new Lcg(42L)
     for (trial <- 1 to 3; (kind, k) <- Seq(("groups", 2), ("shortest", 3),
         (Reach.WalkKind, 1))) {
       val n = 6 + rnd.next(6)
-      val edges = (1 to 10 + rnd.next(12)).map { _ =>
+      val es = (1 to 10 + rnd.next(12)).map { _ =>
         val a = rnd.next(n - 1)
         (a.toLong, (a + 1 + rnd.next(n - 1 - a)).toLong)
-      }.toDF("s", "d")
-      val seeds = Seq(0L, rnd.next(n).toLong).toDF("id")
+      }
+      val edges = es.toDF("s", "d")
+      val seedIds = Seq(0L, rnd.next(n).toLong)
+      val seeds = seedIds.toDF("id")
+      val levels = same(s"trial $trial $kind $k levels")(
+        Reach.kLevelLevels(edges, "s", "d", Some(seeds), kind, k,
+          withParents = false)._1)
+      assert(levels.map(r => (r.getLong(0), r.getLong(1), r.getLong(3)) ->
+          r.getLong(2)).toMap == walkCounts(es, seedIds),
+        s"trial $trial: levels ≠ walk counts")
       same(s"trial $trial $kind $k") {
         val (levels, parents, bound) = Reach.kLevelLevels(edges, "s", "d",
           Some(seeds), kind, k, withParents = true)
@@ -226,22 +302,29 @@ class FixpointKernelSpec extends AnyFunSuite {
       s"converge in ${Reach.MaxRounds} rounds — the edge set's diameter " +
       "exceeds the guard"
     def check(): Unit = {
-      assert(intercept[GraphContractViolation](Reach.reachablePairs(
-        chain(99), "s", "d", maxClosureRows = Some(500L)))
-        .getMessage == closure)
+      withConf(Reach.MaxClosureRowsConf, "500") {
+        assert(intercept[GraphContractViolation](Reach.reachablePairs(
+          chain(99), "s", "d")).getMessage == closure)
+      }
       // seeded at 0, a chain of MaxRounds + 1 edges needs one round
       // more than the backstop allows
       assert(intercept[CypherBindingException](Reach.reachablePairs(
         chain(Reach.MaxRounds + 1L), "s", "d", seeds = Some(seed0)))
         .getMessage == rounds)
     }
-    check() // the driver fast path: the reference text
+    check()
     kernel(check())
   }
 
   test("kernel guard: allShortestPaths witnesses parent-set and " +
       "path-expansion bounds keep their messages") {
-    kernel {
+    def msg(what: String, n: Any, round: Int, bound: Long) =
+      s"allShortestPaths: $what hit $n rows after round $round (bound " +
+      s"maxClosureRows=$bound). Narrow the anchor, or raise " +
+      s"${Reach.MaxClosureRowsConf} deliberately."
+    def witnesses(e: DataFrame) = Reach.allShortestWitnesses(e, "s", "d",
+      seed0)
+    def check(): Unit = {
       // width 3, depth 4: pairs + parents reach 15, 27, 39 by round 3
       withConf(Reach.MaxClosureRowsConf, "30") {
         assert(intercept[GraphContractViolation](Reach.allParentsPairs(
@@ -260,7 +343,29 @@ class FixpointKernelSpec extends AnyFunSuite {
         "allShortestPaths witnesses: the path expansion hit 120 rows at " +
         "step 2 (bound maxClosureRows=100). Narrow the anchor, or raise " +
         s"${Reach.MaxClosureRowsConf} deliberately.")
+      // σ rows: 3 pairs per layer, 12 after round 3; σ = 3^(layer − 1),
+      // 120 witnesses, counted after the empty round 4
+      withConf(Reach.MaxClosureRowsConf, "10") {
+        assert(intercept[GraphContractViolation](
+          witnesses(lattice(3, 4))).getMessage ==
+          msg("the anchored cone", 12, 3, 10))
+      }
+      withConf(Reach.MaxClosureRowsConf, "100") {
+        assert(intercept[GraphContractViolation](
+          witnesses(lattice(3, 4))).getMessage ==
+          msg("the witness expansion", 120, 4, 100))
+      }
+      // width 2: σ = 2^43 at layer 44, added by round 43, passes the cap
+      // Long.MaxValue >> 20 = 2^43 − 1
+      assert(intercept[GraphContractViolation](
+          witnesses(lattice(2, 45))).getMessage ==
+        "allShortestPaths: shortest-path witness count σ exceeded " +
+        s"${Long.MaxValue >> 20} per pair after round 43 (Long overflow " +
+        "territory on a diamond-rich DAG). Narrow the anchor — the " +
+        "witness expansion would not be materializable anyway.")
     }
+    check()
+    kernel(check())
   }
 
   test("kernel guard: k-level level-row and path-expansion bounds keep " +
@@ -271,7 +376,7 @@ class FixpointKernelSpec extends AnyFunSuite {
       s"k-level reach hit $n level rows after round $round (bound " +
       s"maxClosureRows=$bound). Narrow the anchor, or raise " +
       s"${Reach.MaxClosureRowsConf} deliberately."
-    kernel {
+    def check(): Unit = {
       // 3 level rows per round: 12 after round 4
       withConf(Reach.MaxClosureRowsConf, "10") {
         assert(intercept[GraphContractViolation](levels(false))
@@ -291,6 +396,8 @@ class FixpointKernelSpec extends AnyFunSuite {
         "(bound maxClosureRows=100). Narrow the anchor, or raise " +
         s"${Reach.MaxClosureRowsConf} deliberately.")
     }
+    check()
+    kernel(check())
   }
 
   test("kernel guard: shortest paths, tree and route walk keep their " +
@@ -405,6 +512,37 @@ class FixpointKernelSpec extends AnyFunSuite {
             s"${tagged.mkString(", ")}")
         }
       }
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
+        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+    }
+  }
+
+  test("the driver executor launches no round jobs") {
+    val dir = Files.createTempDirectory("graft_fixpoint_driver_jobs")
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      writeTables(dir)
+      // untagged jobs while each query is built: the admission counts,
+      // the collects of the edge and seed frames and the DataFrame work
+      // around the loops — the counts the parent commit's driver twins
+      // launched
+      val setup = Map(
+        "q124_unbounded_witness" -> 9,
+        "q163_hetero_allshortest_witness" -> 7,
+        "q173_hetero_klevel_witness" -> 11,
+        "q72_all_shortest" -> 9)
+      val seen = for ((name, _) <- setup) yield {
+        val build = () => SparkEntry.queries(name)(spark, dir.toString)
+        build() // warm-up: the first read of each table lists its files
+        val tags = jobs.during(build())
+        assert(tags.forall(_ == null), s"$name: tagged jobs ran: $tags")
+        name -> tags.size
+      }
+      assert(seen.forall { case (n, c) => c <= setup(n) },
+        s"untagged jobs per query: $seen, budget $setup")
     } finally {
       spark.sparkContext.removeSparkListener(jobs)
       Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
