@@ -2,13 +2,13 @@ package graft.cypher
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
   StructType}
 
 import ast._
-import graft.ops.{Fixpoint, GraphContractViolation}
+import graft.ops.{Fixpoint, GraphContractViolation, GraphOps}
 import graft.ops.Fixpoint.{DriverOverflow, Rows, compareIds}
 
 /**
@@ -107,19 +107,20 @@ private[cypher] object Reach {
   val MaxClosureRowsConf = "spark.graft.reach.maxClosureRows"
 
   /** Session conf key bounding the DRIVER executor of the iterative
-    * reach loops (optimization round 16 — the driverKahn /
-    * driverUnionFind precedent generalized): an edge frame whose
-    * row count sits at or under this bound is collected once and the
-    * BFS/σ-DP/pointer-walk loop runs in driver memory — no job replaces
-    * the O(diameter) round jobs of the cluster executor, the dominant
-    * fixed cost of the family on interactive-scale graphs. Both
-    * executors run the same [[graft.ops.Fixpoint]] loop closures, so
-    * every maxClosureRows guard, round bound and typed-error message is
-    * the same; a driver run whose rows outgrow this same bound abandons
-    * the attempt ([[graft.ops.Fixpoint.DriverOverflow]]) and reruns on
-    * the cluster — a 100 TB frame never runs driver-side, and a small
-    * frame with a huge closure only pays one bounded in-memory attempt.
-    * Set 0 to run every loop on the cluster (the executor-equivalence
+    * reach loops (optimization round 16): an edge frame whose row
+    * count sits at or under this bound is collected once and the
+    * BFS/σ-DP/DAG-check/pointer-walk loop runs in driver memory — no
+    * job replaces the O(diameter) round jobs of the cluster executor,
+    * the dominant fixed cost of the family on interactive-scale
+    * graphs. Both executors run the same [[graft.ops.Fixpoint]] loop
+    * closures, so every maxClosureRows guard, round bound and
+    * typed-error message is the same; a driver run whose rows outgrow
+    * this same bound abandons the attempt
+    * ([[graft.ops.Fixpoint.DriverOverflow]]) and reruns on the cluster
+    * — a 100 TB frame never runs driver-side, and a small frame with a
+    * huge closure only pays one bounded in-memory attempt.
+    * Set 0 to run every loop on the cluster, the DAG check included:
+    * nothing is collected to the driver then (the executor-equivalence
     * units do). */
   val DriverRowsConf = "spark.graft.reach.driverRows"
   val DriverRowsDefault = 2000000L
@@ -569,133 +570,64 @@ private[cypher] object Reach {
     (out, catalog.withExtraEdges(extra.result()))
   }
 
-  /** Cycle guard for the k-level σ DP (round 15): Kahn's peel over the
-    * slim edge frame — repeatedly drop edges whose source has no
-    * remaining incoming edge; a non-shrinking non-empty fixpoint is a
-    * cycle. The σ DP counts WALKS; beyond the minimal length a walk
-    * may revisit an edge, diverging from Cypher's trail contract on
-    * cyclic graphs — so k > 1 selectors over unbounded ranges require
-    * a DAG (bound the range [*lo..hi] for exact trail semantics on
-    * cyclic graphs). Rounds = the longest chain; each round is one
-    * slim semi-join. */
-  /** Edge-count bound under which the DAG check collects to the
-    * DRIVER (the [[graft.ops.Dedup.connectedComponents]]
-    * driverUnionFind precedent): one collect + an in-memory Kahn
-    * replaces O(depth) distributed semi-join rounds — the dominant
-    * fixed cost of the k-level family on small graphs, while frames
-    * past the bound keep the distributed peel. */
-  val DriverDagEdgeLimit = 1000000L
-
-  private def isDag(e: DataFrame, what: String): Boolean = {
-    var cur = e
-    var n = cur.count()
-    if (n == 0) return true
-    if (n <= DriverDagEdgeLimit) return driverKahn(e)
-    var rounds = 0
-    while (n > 0) {
-      rounds += 1
-      if (rounds > MaxRounds)
-        throw new CypherBindingException(
-          s"$what: the DAG check did not converge in $MaxRounds rounds")
-      val next = cur.join(
-        cur.select(col("__dst").as("__s2")).distinct(),
-        col("__src") === col("__s2"), "left_semi").localCheckpoint(false)
-      val n2 = next.count()
-      if (n2 == n) return false
-      cur = next; n = n2
+  /** Cycle guard for the k-level σ DP, run where the loop's input is
+    * held. The σ DP counts WALKS; beyond the minimal length a walk may
+    * revisit an edge, diverging from Cypher's trail contract on cyclic
+    * graphs — so the k-level family over unbounded ranges requires a
+    * DAG (bound the range [*lo..hi] for exact trail semantics on
+    * cyclic graphs). A whole-graph Kahn peel ([[peels]]) passes the
+    * common acyclic case; on a cycle, only the seeds' cone — the node
+    * set a first-discovery BFS reaches from them
+    * ([[graft.ops.GraphOps.hops]]) — is peeled again, so a cycle the DP
+    * never walks does not reject the query. */
+  private def requireDag(in: LoopInput, spark: SparkSession,
+      what: String): Unit = {
+    def diverged = throw new CypherBindingException(
+      s"$what: the DAG check did not converge in $MaxRounds rounds")
+    // each node's distinct out-edges, behind a null one to itself
+    val g = Fixpoint.graph("dag", in.edges, spark)(
+      (ds: collection.Seq[Any]) => (null +: ds.distinct).toArray)()
+    val acyclic = peels("dag", g, None)(diverged) || in.seeds.exists { sd =>
+      val cone = GraphOps.hops("dagCone", in.edges, sd, Long.MaxValue,
+        MaxRounds, spark)(diverged)
+      peels("dagPeel", g, Some(cone.map(_._1)))(diverged)
     }
-    true
+    if (!acyclic)
+      throw new GraphContractViolation(s"$what over a CYCLIC graph — " +
+        "the k-level lowering counts walks, which revisit edges beyond " +
+        "the minimal length; bound the range [*lo..hi] for exact trail " +
+        "semantics")
   }
 
-  /** In-memory Kahn over a collected edge list. Keys are whatever the
-    * frame holds — longs, strings, or tagged (ordinal, id) structs;
-    * Spark's Row equality/hashCode make them usable as map keys. */
-  private def driverKahn(e: DataFrame): Boolean =
-    driverKahnPairs(e.select(col("__src"), col("__dst")).collect()
-      .map(r => (r.get(0), r.get(1))))
-
-  private def driverKahnPairs(pairs: Array[(Any, Any)]): Boolean = {
-    val indeg = scala.collection.mutable.HashMap.empty[Any, Int]
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    pairs.foreach { case (s, d) =>
-      indeg.getOrElseUpdate(s, 0)
-      indeg(d) = indeg.getOrElse(d, 0) + 1
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[Any]) += d
-    }
-    val queue = scala.collection.mutable.Queue.empty[Any]
-    indeg.foreach { case (v, deg) => if (deg == 0) queue += v }
-    var seen = 0
-    while (queue.nonEmpty) {
-      val v = queue.dequeue(); seen += 1
-      adj.get(v).foreach(_.foreach { d =>
-        val nd = indeg(d) - 1
-        indeg(d) = nd
-        if (nd == 0) queue += d
-      })
-    }
-    seen == indeg.size
+  /** Kahn's peel on [[graft.ops.Fixpoint.loop]] of the edges of `g` out
+    * of `nodes` (every edge when None; a node set closed under
+    * successors): a node's entry is (peeled in-edges, in-degree).
+    * Round 0 counts the in-degrees — each node's null edge to itself
+    * adds none — and every later round adds the in-edges out of the
+    * nodes that peeled, a node peeling once its count reaches its
+    * in-degree. True when every node peels: a DAG. */
+  private def peels(name: String, g: Fixpoint.Edges[Any],
+      nodes: Option[Rows[Any]])(diverged: => Nothing): Boolean = {
+    // the candidate along `node`'s edge to `d`; along its null edge, none
+    def hit(node: Any, d: Any, c: (Long, Long)) =
+      if (d == null) ((null, node), (0L, 0L)) else ((null, d), c)
+    var all = 0L
+    var peeled = 0L
+    Fixpoint.loop(name, g, nodes, MaxRounds)(
+      Fixpoint.Frontier[Any, Unit, (Long, Long)](
+        seed = (s, d) => hit(s, d, (0L, 1L)),
+        front = (_, _) => (),
+        extend = (_, node, d) => hit(node, d, (1L, 0L)),
+        combine = (a, b) => (a._1 + b._1, a._2 + b._2),
+        merge = Some((c, old) => old.fold(Option(c))(o =>
+          if (c._1 == 0) None else Some((o._1 + c._1, o._2)))),
+        grows = c => c._1 == c._2,
+        sum = c => if (c._1 == c._2) 1L else 0L)) { (r, st) =>
+      if (r == 0) all = st.rows
+      peeled += st.sum
+    }(diverged)
+    peeled == all
   }
-
-  /** The k-level family's cyclic-graph error — one string shared by
-    * the distributed and driver DAG checks. */
-  private def cyclicMsg(what: String): String =
-    s"$what over a CYCLIC graph — the k-level lowering counts " +
-    "walks, which revisit edges beyond the minimal length; " +
-    "bound the range [*lo..hi] for exact trail semantics"
-
-  /** Driver twin of [[requireDag]] over already-collected pairs:
-    * whole-graph Kahn first; on a cycle, narrow to the seed set's
-    * reachable cone and only reject if the cone itself is cyclic.
-    * Known error-behavior divergence (ADVICE-r16, accepted): the cone
-    * closure here is NOT subject to the maxClosureRows guard the
-    * distributed requireDag inherits via reachablePairs — on a
-    * cyclic-but-huge-cone graph this path reports cyclic/acyclic where
-    * the distributed path would throw the closure-bound error. The
-    * ≤ 2M-edge admission gate bounds the work, so the divergence is
-    * message-only, never unbounded compute. */
-  private def driverRequireDag(pairs: Array[(Any, Any)],
-      seedSet: collection.Set[Any], what: String): Unit = {
-    if (driverKahnPairs(pairs)) return
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    pairs.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[Any]) += d
-    }
-    val reach = scala.collection.mutable.HashSet.empty[Any]
-    var front = seedSet.toSeq.flatMap(s =>
-      adj.getOrElse(s, Nil)).distinct.filterNot(reach)
-    while (front.nonEmpty) {
-      reach ++= front
-      front = front.flatMap(v => adj.getOrElse(v, Nil))
-        .distinct.filterNot(reach)
-    }
-    val cone = pairs.filter { case (s, _) => reach(s) || seedSet(s) }
-    if (!driverKahnPairs(cone))
-      throw new GraphContractViolation(cyclicMsg(what))
-  }
-
-  /** DAG requirement for the k-level σ DP: cheap whole-graph Kahn
-    * peel first (free pass on the common acyclic case); when a cycle
-    * exists, narrow to the anchor's REACHABLE CONE — a cycle the DP
-    * never walks must not reject the query — via one set-closure from
-    * the seeds, and only reject if the cone itself is cyclic. */
-  private def requireDag(e: DataFrame, sd: DataFrame,
-      what: String): Unit =
-    if (!isDag(e, what)) {
-      val cone = reachablePairs(e, "__src", "__dst", seeds = Some(sd))
-        .select(col("__dst").as("__cn")).distinct()
-      val coneEdges = e.join(cone, col("__src") === col("__cn"),
-          "left_semi")
-        .unionByName(e.join(
-          sd.select(col(sd.columns.head).as("__cn")).distinct(),
-          col("__src") === col("__cn"), "left_semi"))
-        .distinct().localCheckpoint(false)
-      if (!isDag(coneEdges, what))
-        throw new GraphContractViolation(cyclicMsg(what))
-    }
 
   /** k-level σ DP levels (round 15, split out round 16): runs the
     * anchored — or, round 16, UNANCHORED (seeds = None: the frontier
@@ -715,8 +647,9 @@ private[cypher] object Reach {
     * walk. Returns (levels, parents, bound).
     *
     * One [[graft.ops.Fixpoint.loop]] level per round: in driver memory
-    * when [[driverOr]] admits the edge frame (the DAG check then runs
-    * on the collected pairs), one job per level otherwise. */
+    * when [[driverOr]] admits the edge frame, one job per level
+    * otherwise; the DAG check ([[requireDag]]) runs on the same
+    * executor first. */
   private[cypher] def kLevelLevels(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame], kind: String, k: Int,
       withParents: Boolean, dagProven: Boolean = false)
@@ -747,28 +680,20 @@ private[cypher] object Reach {
           val m = scala.collection.mutable.HashMap.empty[Any, Long]
           ds.foreach(d => m(d) = m.getOrElse(d, 0L) + 1L)
           m.toArray
-      }
+      }()
       val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
       val guard = guardFor(bound) _
       // dagProven (round 16): a heterogeneous chain whose LABEL graph
       // is acyclic cannot hold an instance cycle (any cycle projects to
       // a label cycle) — the data-level Kahn peel is skipped entirely
-      if (!dagProven) held(in.edges) match {
-        case Some(es) =>
-          val pairs = es.distinct.toArray
-          driverRequireDag(pairs, in.seeds.flatMap(held)
-            .fold(pairs.iterator.map(_._1).toSet)(_.toSet), dagWhat)
-        case None =>
-          val e = raw.distinct().localCheckpoint(false)
-          requireDag(e, seedFrame(sd.getOrElse(e)), dagWhat)
-      }
+      if (!dagProven) requireDag(in, spark, dagWhat)
       // (src, end) at level r + 1 → (σ, its (via, multiplicity) parent
       // entries). The guard numbers a level by its length, round 0 by 0.
       var total = 0L
       var parentRows = 0L
       var level = 0L
-      val levels = Fixpoint.loop("kLevel", g, in.seeds, once = false,
-          MaxRounds - 1)(Fixpoint.Frontier[(Any, Long), (Any, Long),
+      val levels = Fixpoint.loop("kLevel", g, in.seeds, MaxRounds - 1)(
+          Fixpoint.Frontier[(Any, Long), (Any, Long),
           (Long, List[(Any, Long)])](
         // level 1: one entry per grouped edge out of the seeds, the
         // source itself its parent
@@ -1867,11 +1792,11 @@ private[cypher] object Reach {
       confBound: Option[Long], guardFor: Long => (Long, Int) => Unit,
       roundsMsg: String): (Rows[(Any, (Int, List[Any]))], DataType, Long) = {
     val in = loopInput(raw, seeds, driver)
-    val g = Fixpoint.graph(loop, in.edges, raw.sparkSession)(distinctIds)
+    val g = Fixpoint.graph(loop, in.edges, raw.sparkSession)(distinctIds)()
     val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
     val guard = guardFor(bound)
     var total = 0L
-    val all = Fixpoint.loop(loop, g, in.seeds, once = true, MaxRounds)(
+    val all = Fixpoint.loop(loop, g, in.seeds, MaxRounds)(
       Fixpoint.Frontier[Any, Any, List[Any]](
         seed = (s, d) => ((s, d), List(s)),
         front = (s, _) => s,
@@ -1881,6 +1806,7 @@ private[cypher] object Reach {
         combine =
           if (allParents) (a, b) => b ::: a
           else (a, b) => if (compareIds(a.head, b.head) <= 0) a else b,
+        merge = Fixpoint.firstDiscovery,
         sum = if (allParents) _.length.toLong else _ => 0L)) { (r, st) =>
       total += st.rows + (if (r > 0) st.sum else 0L)
       guard(total, r)
@@ -1914,12 +1840,6 @@ private[cypher] object Reach {
         .flatMap(a => Option(a(0)))
     }
     new LoopInput(edges, sd, t)
-  }
-
-  /** The rows of a driver-memory input, None on the cluster. */
-  private def held[T](rows: Rows[T]): Option[collection.Seq[T]] = rows match {
-    case Fixpoint.Local(rs, _) => Some(rs)
-    case _                     => None
   }
 
   /** A node's distinct out-neighbours. */
@@ -1962,7 +1882,7 @@ private[cypher] object Reach {
     driverOr(raw, Some(seeds)) { (sd, driver) =>
       val spark = raw.sparkSession
       val in = loopInput(raw, sd, driver)
-      val g = Fixpoint.graph("allShortest", in.edges, spark)(distinctIds)
+      val g = Fixpoint.graph("allShortest", in.edges, spark)(distinctIds)()
       val bound = confBound.getOrElse(math.max(64L * g.sum, 1024L))
       val guard = guardFor(bound) _
       // The cap keeps σ — and the σ-fold expansion below — in safe
@@ -1972,12 +1892,13 @@ private[cypher] object Reach {
       var total = 0L
       var witnesses = BigInt(0)
       var rounds = 0
-      val seen = Fixpoint.loop("allShortest", g, in.seeds, once = true,
-          MaxRounds)(Fixpoint.Frontier[Any, (Any, Long), Long](
+      val seen = Fixpoint.loop("allShortest", g, in.seeds, MaxRounds)(
+          Fixpoint.Frontier[Any, (Any, Long), Long](
         seed = (s, d) => ((s, d), 1L),
         front = (s, sig) => (s, sig),
         extend = { case ((s, sig), _, d2) => ((s, d2), sig) },
         combine = Fixpoint.addSat,
+        merge = Fixpoint.firstDiscovery,
         sum = sig => sig, max = sig => sig)) { (r, st) =>
         rounds = r
         if (st.rows > 0 && st.max > sigmaCap)

@@ -15,9 +15,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * Spark-core kernel for frontier loops and parent-pointer walks — the
  * split Shark (SIGMOD 2013) runs SQL and iterative analytics on:
  * DataFrames at the loop boundary, pair RDDs inside. A loop enters from
- * a DataFrame once ([[values]]), runs every round as ONE job and leaves
- * through `createDataFrame`, so a round pays no Catalyst analysis,
- * planning, AQE stage jobs or whole-stage codegen.
+ * a DataFrame once ([[rows]]), runs every round as ONE job and leaves
+ * through `createDataFrame` ([[frame]]), so a round pays no Catalyst
+ * analysis, planning, AQE stage jobs or whole-stage codegen.
+ *
+ * Every iterative loop is one [[loop]] of [[Frontier]] closures. Its
+ * state rule (`Frontier.merge`) meets a round's combined candidate with
+ * its key's entry: written only when absent (first discovery: the reach
+ * BFS, allShortestPaths σ, `GraphOps.bfsDistances`, the DAG check's
+ * cone), replaced when better (`GraphOps.weightedSssp`), accumulated
+ * (the DAG check's Kahn peel), or no merge, a level per round (the
+ * k-level σ DP, `GraphOps.ssspRoutes`). A loop whose starts are entries
+ * themselves runs from a [[Root]] ([[rooted]]).
  *
  * Anatomy of a round:
  *  - the edge set is grouped per source node ONCE into one hash map
@@ -32,9 +41,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    next round extends them);
  *  - [[settle]] merges them into the loop's co-partitioned state, one
  *    entry per key (a narrow dependency: the state never shuffles);
- *  - [[materialize]] local-checkpoints the round's output and takes its
- *    row count, plus one summed and one maxed per-row measure, from
- *    that same job.
+ *  - the round's job local-checkpoints the new state and takes its
+ *    written and growing entry counts, plus one summed and one maxed
+ *    per-entry measure.
  *
  * Walks ([[walk]]) follow the same shape: parent entries are indexed
  * once per partition, each step shuffles only the rows still walking to
@@ -71,9 +80,9 @@ object Fixpoint {
     * any other job. */
   val RoundProperty = "graft.fixpoint.round"
 
-  /** Row count of a materialized RDD plus the sum and the max of two
-    * non-negative per-row measures, all taken by the job that
-    * materialized it. The sum saturates at `Long.MaxValue`. */
+  /** The entries a loop round wrote: their count plus the sum and the
+    * max of two non-negative per-entry measures. The sum saturates at
+    * `Long.MaxValue`. */
   final case class Stats(rows: Long, sum: Long, max: Long)
 
   /** `a + b` for non-negative longs, saturating at `Long.MaxValue`. */
@@ -109,7 +118,7 @@ object Fixpoint {
   /** Hash partitioner that places a (src, node) pair key by its NODE
     * and any other key by its own hash. A loop's pair state then sits
     * on the edge partitions of the nodes it extends from, so turning it
-    * into the next round's frontier ([[frontier]]) needs no shuffle. */
+    * into the next round's frontier, keyed by node, needs no shuffle. */
   final class NodePartitioner(val numPartitions: Int) extends Partitioner {
     def getPartition(key: Any): Int = key match {
       case (_, node) => place(node)
@@ -128,17 +137,6 @@ object Fixpoint {
     override def hashCode: Int = numPartitions
   }
 
-  /** A (src, node)-keyed state as a frontier keyed by node, valued
-    * `f(src, value)` — in place when the state is partitioned by
-    * [[NodePartitioner]], which already put each pair on its node's
-    * partition. */
-  def frontier[V, F](state: RDD[(Any, V)])(f: (Any, V) => F)
-      : RDD[(Any, F)] =
-    state.mapPartitions(_.map { case (k, v) =>
-      val (s, node) = k.asInstanceOf[(Any, Any)]
-      (node, f(s, v))
-    }, preservesPartitioning = true)
-
   /** The type every id column of one loop is cast to: Spark's wider
     * common type of `types` (the type a join between them compares
     * in). */
@@ -154,7 +152,7 @@ object Fixpoint {
   /** The loop's entry: `df`'s rows as arrays of plain values (nested
     * struct values become schema-free rows, so shuffles do not carry a
     * schema per id). */
-  def values(df: DataFrame): RDD[Array[Any]] =
+  private def values(df: DataFrame): RDD[Array[Any]] =
     df.rdd.map(r => Array.tabulate[Any](r.length)(i => plain(r.get(i))))
 
   private def plain(v: Any): Any = v match {
@@ -218,6 +216,36 @@ object Fixpoint {
       spark.createDataFrame(rs.asJava, schema)
   }
 
+  /** `a` and `b`, held where both are. */
+  def union[T: ClassTag](a: Rows[T], b: Rows[T]): Rows[T] = a match {
+    case Dist(x)       => Dist(x.union(rdd(b)))
+    case Local(x, cap) => Local(x ++ seq(b), cap)
+  }
+
+  /** `rows` grouped by key where they are held, each key `k` with its
+    * values `as` turned into `f(k, as)`: one shuffle on the cluster (run
+    * by the job that reads the result), one map in driver memory. */
+  def regroup[A: ClassTag, B: ClassTag](rows: Rows[(Any, A)])(
+      f: (Any, collection.Seq[A]) => IterableOnce[B]): Rows[B] = rows match {
+    case Dist(rdd) =>
+      Dist(rdd.groupByKey().flatMap { case (k, as) => f(k, as.toSeq) })
+    case Local(rs, cap) =>
+      Local(grouped(rs.iterator)((as: collection.Seq[A]) => as).toSeq, cap)
+        .flatMap { case (k, as) => f(k, as) }
+  }
+
+  /** The key of a rooted loop's root ([[rooted]]); no id equals it. */
+  case object Root
+
+  /** `edges` plus one out-edge [[Root]] → `start(s)` per start `s`, and
+    * the seeds of a loop from the root (the root once per start, which
+    * the loop counts once): seeded there, a loop's round 0 writes the
+    * starts' own entries. */
+  def rooted[A: ClassTag](edges: Rows[(Any, A)], starts: Rows[Any])(
+      start: Any => A): (Rows[(Any, A)], Rows[Any]) =
+    (union(edges, starts.map(s => (Root: Any, start(s)))),
+      starts.map(_ => Root))
+
   private def rdd[T](r: Rows[T]): RDD[T] = r match {
     case Dist(rdd) => rdd
     case _         => throw new IllegalArgumentException(
@@ -241,69 +269,65 @@ object Fixpoint {
     try sc.runJob(rdd, f) finally sc.setLocalProperty(RoundProperty, prev)
   }
 
-  /** [[run]] returning the row count and the sum of `sum` and max of
-    * `max` over the rows (`max` is 0 for an empty RDD). */
-  def materialize[T](rdd: RDD[T], tag: String)(
-      sum: T => Long = (_: T) => 0L, max: T => Long = (_: T) => 0L)
-      : Stats = {
+  /** [[run]] returning the (saturating) sum of each of the `sums` and
+    * the max of `max` over the rows (0 for an empty RDD). */
+  private def materialize[T](rdd: RDD[T], tag: String)(sums: (T => Long)*)(
+      max: T => Long): (Seq[Long], Long) = {
     val parts = run(rdd, tag) { it =>
-      var n = 0L; var s = 0L; var m = 0L
+      val s = new Array[Long](sums.length); var m = 0L
       it.foreach { t =>
-        n += 1; s = addSat(s, sum(t)); m = math.max(m, max(t))
+        var i = 0
+        while (i < s.length) { s(i) = addSat(s(i), sums(i)(t)); i += 1 }
+        m = math.max(m, max(t))
       }
-      (n, s, m)
+      (s, m)
     }
-    Stats(parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(addSat),
-      if (parts.isEmpty) 0L else parts.map(_._3).max)
+    (sums.indices.map(i => parts.map(_._1(i)).foldLeft(0L)(addSat)),
+      parts.map(_._2).maxOption.getOrElse(0L))
   }
 
-  /** Groups `edges` (source → edge payload) into per-partition
-    * adjacency maps — ONE shuffle and one job (`<name>:edges`) for
-    * the whole loop. `group` folds a node's raw payloads into its
+  /** Groups `edges` (source → edge payload) into a loop's adjacency
+    * where they are held. `group` folds a node's raw payloads into its
     * out-edges (dedup, multiplicity); `measure` is summed over every
-    * node's out-edges into [[Graph.sum]]. The build runs at the base
+    * node's out-edges into [[Edges.sum]]. In driver memory the
+    * out-edges group into one map, with no job. On the cluster they
+    * group into per-partition adjacency maps — ONE shuffle and one job
+    * (`<name>:edges`) for the whole loop. The build runs at the base
     * [[partitioner]] width; when the grouped out-edges, at
     * [[EdgeBytes]] each, average more than the session's
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (default 64 MB,
     * so 2^20^ out-edges) per partition, one more job
     * (`<name>:regroup`) moves the maps onto a width that fits, and the
     * loop runs at that width ([[Graph.part]]). */
-  def graph[A: ClassTag, E: ClassTag](name: String, edges: RDD[(Any, A)],
+  def graph[A: ClassTag, E: ClassTag](name: String, edges: Rows[(Any, A)],
       spark: SparkSession)(group: collection.Seq[A] => Array[E])(
       measure: Array[E] => Long = (es: Array[E]) => es.length.toLong)
-      : Graph[E] = {
-    val base = partitioner(spark)
-    val adj = adjacency(edges.partitionBy(base))(group)
-    val parts = run(adj, s"$name:edges") { it =>
-      val m = it.next()
-      (m.valuesIterator.map(measure).sum,
-        m.valuesIterator.map(_.length.toLong).sum)
-    }
-    val perPart = math.max(1L, spark.conf
-      .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .fold(64L << 20)(JavaUtils.byteStringAsBytes) / EdgeBytes)
-    val width = (parts.map(_._2).sum + perPart - 1) / perPart
-    if (width <= base.numPartitions)
-      new Graph(adj, base, parts.map(_._1).sum)
-    else {
-      val part = new NodePartitioner(math.min(width, Int.MaxValue).toInt)
-      val wide = adjacency(adj.flatMap(_.iterator).partitionBy(part))(
-        (es: collection.Seq[Array[E]]) => es.head)
-      run(wide, s"$name:regroup")(_ => ())
-      new Graph(wide, part, parts.map(_._1).sum)
-    }
+      : Edges[E] = edges match {
+    case Local(rs, cap) =>
+      val m = grouped(rs.iterator)(group)
+      new LocalGraph(m, m.valuesIterator.map(measure).sum, cap)
+    case Dist(rdd) =>
+      val base = partitioner(spark)
+      val adj = adjacency(rdd.partitionBy(base))(group)
+      val parts = run(adj, s"$name:edges") { it =>
+        val m = it.next()
+        (m.valuesIterator.map(measure).sum,
+          m.valuesIterator.map(_.length.toLong).sum)
+      }
+      val perPart = math.max(1L, spark.conf
+        .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        .fold(64L << 20)(JavaUtils.byteStringAsBytes) / EdgeBytes)
+      val width = (parts.map(_._2).sum + perPart - 1) / perPart
+      if (width <= base.numPartitions)
+        new Graph(adj, base, parts.map(_._1).sum)
+      else {
+        val part = new NodePartitioner(math.min(width, Int.MaxValue).toInt)
+        val wide = adjacency(adj.flatMap(_.iterator).partitionBy(part))(
+          (es: collection.Seq[Array[E]]) => es.head)
+        run(wide, s"$name:regroup")(_ => ())
+        new Graph(wide, part, parts.map(_._1).sum)
+      }
   }
-
-  /** [[graph]] of `edges` where they are held. In driver memory the
-    * out-edges group into one map, with no job. */
-  def graph[A: ClassTag, E: ClassTag](name: String, edges: Rows[(Any, A)],
-      spark: SparkSession)(group: collection.Seq[A] => Array[E]): Edges[E] =
-    edges match {
-      case Dist(rdd) => graph(name, rdd, spark)(group)()
-      case Local(rs, cap) =>
-        val m = grouped(rs.iterator)(group)
-        new LocalGraph(m, m.valuesIterator.map(_.length.toLong).sum, cap)
-    }
 
   /** One `node → group(payloads)` map per partition of `pairs`. */
   private def adjacency[A, E](pairs: RDD[(Any, A)])(group: collection.Seq[A] => E)
@@ -328,7 +352,7 @@ object Fixpoint {
     * the graph when `seeds` is None. Seeds without out-edges drop out
     * and repeated seeds count once (the semi-join the DataFrame loops
     * ran). */
-  def edgesFrom[E: ClassTag](g: Graph[E], seeds: Option[RDD[Any]])
+  private def edgesFrom[E: ClassTag](g: Graph[E], seeds: Option[RDD[Any]])
       : RDD[(Any, E)] = seeds match {
     case None =>
       g.adj.flatMap(_.iterator.flatMap { case (s, es) =>
@@ -350,7 +374,7 @@ object Fixpoint {
     * extended along its node's out-edges by `f(value, node, edge)`. The
     * frontier shuffles to the edge partitions unless it is already
     * partitioned like them. */
-  def expand[V: ClassTag, E, C: ClassTag](frontier: RDD[(Any, V)],
+  private def expand[V: ClassTag, E, C: ClassTag](frontier: RDD[(Any, V)],
       g: Graph[E])(f: (V, Any, E) => C): RDD[C] =
     frontier.partitionBy(g.part).zipPartitions(g.adj) { (fit, mit) =>
       val m = mit.next()
@@ -369,7 +393,7 @@ object Fixpoint {
     * key, each flagged true when this round wrote it — the round's
     * fresh entries. Narrow: a task holds its candidate partition in a
     * map and streams its state partition past it. */
-  def settle[C: ClassTag, V: ClassTag](cands: RDD[(Any, C)],
+  private def settle[C: ClassTag, V: ClassTag](cands: RDD[(Any, C)],
       state: RDD[(Any, V)])(f: (C, Option[V]) => Option[V])
       : RDD[(Any, (V, Boolean))] = {
     require(cands.partitioner.isDefined &&
@@ -393,143 +417,156 @@ object Fixpoint {
     * executors ([[loop]]). The loop's entries are keyed by (src, node)
     * pairs:
     *  - `seed(src, e)`: the entry an out-edge `e` of seed `src` starts;
-    *  - `front(src, c)`: what an entry (src, node) → c the last round
-    *    added carries along its node's out-edges;
+    *  - `front(src, c)`: what an entry (src, node) → c carries along
+    *    its node's out-edges;
     *  - `extend(f, node, e)`: the candidate entry reached along
     *    out-edge `e` of `node`;
     *  - `combine`: merges two candidates with one key (it may update
     *    and return its first argument);
+    *  - `merge`, the state rule: `merge(candidate, the key's entry)` is
+    *    the key's new entry, or None to keep the old one
+    *    ([[firstDiscovery]] writes only when absent); without it, each
+    *    round's combined candidates are entries of their own (a level);
+    *  - `grows`: whether an entry a round wrote extends in the next;
     *  - `sum`, `max`: the per-entry measures of a round's [[Stats]]. */
   final case class Frontier[E, F, C](
       seed: (Any, E) => (Any, C),
       front: (Any, C) => F,
       extend: (F, Any, E) => (Any, C),
       combine: (C, C) => C,
+      merge: Option[(C, Option[C]) => Option[C]] = None,
+      grows: C => Boolean = (_: C) => true,
       sum: C => Long = (_: C) => 0L,
       max: C => Long = (_: C) => 0L)
 
+  /** The state rule of a first-discovery loop: a key keeps its first
+    * entry. */
+  def firstDiscovery[C]: Option[(C, Option[C]) => Option[C]] =
+    Some((c: C, old: Option[C]) => if (old.isEmpty) Some(c) else None)
+
   /** Frontier loop `f` over `g`, from the out-edges of `seeds` (every
-    * edge of `g` when None). Round 0 adds the seed entries; round r ≥ 1
-    * extends the entries round r − 1 added and combines the candidates
-    * per key. With `once`, a candidate whose key already has an entry
-    * drops (first discovery); otherwise every combined candidate is a
-    * new entry (a level per round). `guard(r, the Stats of the entries
-    * round r added)` runs on the driver after every round, the last,
-    * empty one included; the loop ends after a round that adds
-    * nothing, and calls `diverged` instead of a round past
-    * `maxRounds`. Returns every entry with the round that added it.
+    * edge of `g` when None). Round 0 writes the seed entries; round
+    * r ≥ 1 extends the entries round r − 1 wrote that grow, and
+    * combines the candidates per key; each round writes its combined
+    * candidates by `f.merge`. `guard(r, the Stats of the entries round
+    * r wrote)` runs on the driver after every round; the loop ends
+    * after a round that wrote no growing entry, and calls `diverged`
+    * instead of a round past `maxRounds`. Returns every entry with the
+    * round that last wrote it.
     *
     * The loop runs where `g` is held. On the cluster each round is ONE
     * job (`<name>:<r>`): the candidates combine onto the loop's
     * [[NodePartitioner]] and [[settle]] into the co-partitioned state.
-    * In driver memory a round touches only its frontier and its new
-    * entries; after the guard, [[DriverOverflow]] is thrown once the
+    * In driver memory a round touches only its frontier and its
+    * candidates; after the guard, [[DriverOverflow]] is thrown once the
     * entries plus their summed measure pass the cap. */
   def loop[E: ClassTag, F: ClassTag, C: ClassTag](name: String, g: Edges[E],
-      seeds: Option[Rows[Any]], once: Boolean, maxRounds: Int)(
+      seeds: Option[Rows[Any]], maxRounds: Int)(
       f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
       diverged: => Nothing): Rows[(Any, (Int, C))] = g match {
     case d: Graph[E @unchecked] =>
-      Dist(distLoop(name, d, seeds.map(rdd), once, maxRounds, f)(guard)(
-        diverged))
+      Dist(distLoop(name, d, seeds.map(rdd), maxRounds, f)(guard)(diverged))
     case l: LocalGraph[E @unchecked] =>
-      Local(localLoop(l, seeds.map(seq), once, maxRounds, f)(guard)(
-        diverged), l.cap)
+      Local(localLoop(l, seeds.map(seq), maxRounds, f)(guard)(diverged),
+        l.cap)
   }
 
   private def distLoop[E: ClassTag, F: ClassTag, C: ClassTag](name: String,
-      g: Graph[E], seeds: Option[RDD[Any]], once: Boolean, maxRounds: Int,
+      g: Graph[E], seeds: Option[RDD[Any]], maxRounds: Int,
       f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
       diverged: => Nothing): RDD[(Any, (Int, C))] = {
-    // entries flagged true when the last round added them
+    // entries flagged true when the last round wrote them
     type State = RDD[(Any, ((Int, C), Boolean))]
     var r = 0
-    var rows = 0L
+    val levels = mutable.ArrayBuffer.empty[State] // a level per round: each
+    // materializes a round; returns how many of its written entries grow
     def settled(next: State): Long = {
-      val st = materialize(next, s"$name:$r")(
-        { case (_, ((_, c), isNew)) => if (isNew) f.sum(c) else 0L },
-        { case (_, ((_, c), isNew)) => if (isNew) f.max(c) else 0L })
-      val added = st.rows - (if (once) rows else 0L)
-      rows = st.rows
-      guard(r, st.copy(rows = added))
-      added
+      def written(m: C => Long)(e: (Any, ((Int, C), Boolean))): Long =
+        if (e._2._2) m(e._2._1._2) else 0L
+      val (Seq(n, grown, sum), max) = materialize(next, s"$name:$r")(
+        written(_ => 1L), written(c => if (f.grows(c)) 1L else 0L),
+        written(f.sum))(written(f.max))
+      guard(r, Stats(n, sum, max))
+      if (f.merge.isEmpty && (n > 0 || r == 0)) levels += next
+      grown
     }
-    var added: State = edgesFrom(g, seeds)
-      .map { case (s, e) => f.seed(s, e) }
-      .reduceByKey(g.part, f.combine).mapValues(c => ((0, c), true))
-    var n = settled(added)
-    var state = added // once: every entry so far
-    val levels = mutable.ArrayBuffer(added) // otherwise: every round's
-    while (n > 0) {
+    def write(cands: RDD[(Any, C)], state: State): State = {
+      val round = r
+      f.merge.fold[State](cands.mapValues(c => ((round, c), true)))(m =>
+        settle(cands, state.mapValues(_._1)) { (c, old) =>
+          m(c, old.map(_._2)).map((round, _))
+        })
+    }
+    // round 0 meets no entries, partitioned like the edges
+    var state = write(edgesFrom(g, seeds)
+      .map { case (s, e) => f.seed(s, e) }.reduceByKey(g.part, f.combine),
+      g.adj.mapPartitions(_ => Iterator.empty, preservesPartitioning = true))
+    var grown = settled(state)
+    while (grown > 0) {
       r += 1
       if (r > maxRounds) diverged
-      val round = r
-      val cands = expand(
-          frontier(added.filter(_._2._2))((s, v) => f.front(s, v._1._2)), g)(
-          f.extend).reduceByKey(g.part, f.combine)
-      added =
-        if (once) settle(cands, state.mapValues(_._1)) { (c, old) =>
-          if (old.isEmpty) Some((round, c)) else None
-        }
-        else cands.mapValues(c => ((round, c), true))
-      n = settled(added)
-      if (once) state = added
-      else if (n > 0) levels += added
+      // the growing entries as a frontier keyed by node, in place: the
+      // state's partitioner already put each one on its node's partition
+      val front = state.mapPartitions(_.collect {
+        case ((s, node), ((_, c), true)) if f.grows(c) => (node, f.front(s, c))
+      }, preservesPartitioning = true)
+      state = write(expand(front, g)(f.extend).reduceByKey(g.part, f.combine),
+        state)
+      grown = settled(state)
     }
-    (if (once) state else g.adj.sparkContext.union(levels.toSeq))
+    (if (f.merge.isDefined) state else g.adj.sparkContext.union(levels.toSeq))
       .mapValues(_._1)
   }
 
   private def localLoop[E, F, C](g: LocalGraph[E],
-      seeds: Option[collection.Seq[Any]], once: Boolean, maxRounds: Int,
+      seeds: Option[collection.Seq[Any]], maxRounds: Int,
       f: Frontier[E, F, C])(guard: (Int, Stats) => Unit)(
       diverged: => Nothing): collection.Seq[(Any, (Int, C))] = {
-    val out = mutable.ArrayBuffer.empty[(Any, (Int, C))]
-    val keys = mutable.HashSet.empty[Any] // once: every key with an entry
+    val levels = mutable.ArrayBuffer.empty[(Any, (Int, C))]
+    // with a merge rule: one entry per key, in first-write order
+    val state = mutable.LinkedHashMap.empty[Any, (Int, C)]
     var r = 0
     var held = 0L
-    def offer(cands: mutable.HashMap[Any, C], kc: (Any, C)): Unit = {
-      val (k, c) = kc
-      if (!(once && keys(k)))
-        cands(k) = cands.get(k) match {
-          case Some(old) => f.combine(old, c)
-          case None      => c
+    def offer(cands: mutable.HashMap[Any, C], kc: (Any, C)): Unit =
+      cands(kc._1) = cands.get(kc._1).fold(kc._2)(f.combine(_, kc._2))
+    // writes a round's candidates; returns the written entries that grow
+    def write(cands: mutable.HashMap[Any, C]): collection.Seq[(Any, C)] = {
+      var fresh = 0L
+      val written = cands.toSeq.flatMap { case (k, c) =>
+        val old = state.get(k)
+        f.merge.fold(Option(c))(_(c, old.map(_._2))).map { v =>
+          if (f.merge.isEmpty) levels += ((k, (r, v))) else state(k) = (r, v)
+          if (old.isEmpty) fresh += 1
+          (k, v)
         }
-    }
-    def add(cands: mutable.HashMap[Any, C]): Unit = {
-      var sum = 0L
-      var max = 0L
-      cands.foreach { case (k, c) =>
-        out += ((k, (r, c)))
-        if (once) keys += k
-        sum = addSat(sum, f.sum(c))
-        max = math.max(max, f.max(c))
       }
-      guard(r, Stats(cands.size, sum, max))
-      held = addSat(held, addSat(cands.size, sum))
+      val sum = written.iterator.map(kv => f.sum(kv._2)).foldLeft(0L)(addSat)
+      guard(r, Stats(written.size, sum,
+        written.iterator.map(kv => f.max(kv._2)).maxOption.getOrElse(0L)))
+      held = addSat(held, addSat(fresh, sum))
       if (held > g.cap) throw new DriverOverflow
+      written.filter(kv => f.grows(kv._2))
     }
     try {
-      var added = mutable.HashMap.empty[Any, C]
+      val seeded = mutable.HashMap.empty[Any, C]
       seeds.fold(g.adj.keysIterator)(_.iterator.distinct).foreach(s =>
-        g.adj.get(s).foreach(_.foreach(e => offer(added, f.seed(s, e)))))
-      add(added)
-      while (added.nonEmpty) {
+        g.adj.get(s).foreach(_.foreach(e => offer(seeded, f.seed(s, e)))))
+      var grown = write(seeded)
+      while (grown.nonEmpty) {
         r += 1
         if (r > maxRounds) diverged
         val cands = mutable.HashMap.empty[Any, C]
-        added.foreach { case (k, c) =>
+        grown.foreach { case (k, c) =>
           val (s, node) = k.asInstanceOf[(Any, Any)]
           g.adj.get(node).foreach { es =>
             val v = f.front(s, c)
             es.foreach(e => offer(cands, f.extend(v, node, e)))
           }
         }
-        add(cands)
-        added = cands
+        grown = write(cands)
       }
     } catch { case _: ArithmeticException => throw new DriverOverflow }
-    out
+    if (f.merge.isEmpty) levels else state.toSeq
   }
 
   /** Parent-pointer walk, run where `start` is held. Each step `s` of
@@ -583,20 +620,22 @@ object Fixpoint {
     val index = adjacency(parents.partitionBy(part))(_.toArray)
     index.localCheckpoint() // materialized by the first step's job
     val finished = (w: W) => if (key(w) == null) 1L else 0L
-    val s0 = materialize(start, s"$name:start")(finished, dist)
+    val (Seq(done0), steps) = materialize(start, s"$name:start")(finished)(
+      dist)
     val done = mutable.ArrayBuffer(start.filter(key(_) == null))
-    var doneRows = s0.sum
+    var doneRows = done0
     var live = start.filter(key(_) != null)
     var s = from
-    while (s < s0.max) {
+    while (s < steps) {
       val out = live.map(w => (key(w), w)).partitionBy(part)
         .zipPartitions(index) { (wit, mit) =>
           val m = mit.next()
           wit.flatMap { case (k, w) => step(w, m.getOrElse(k, null)) }
         }
-      val st = materialize(out, s"$name:$s")(finished)
-      guard(doneRows + st.rows, s)
-      doneRows += st.sum
+      val (Seq(rows, fin), _) = materialize(out, s"$name:$s")(
+        _ => 1L, finished)(_ => 0L)
+      guard(doneRows + rows, s)
+      doneRows += fin
       done += out.filter(key(_) == null)
       live = out.filter(key(_) != null)
       s += 1

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  LongType, MapType, StringType, StructField, StructType}
 
 import graft.ops.Fixpoint.compareIds
 
@@ -383,7 +383,9 @@ object GraphOps {
    * [[Dedup.connectedComponents]] convergence pattern; no content hash
    * needed thanks to monotonicity). Peel depth is bounded by the
    * longest chain hanging off the core — tiny for co-occurrence
-   * graphs, `maxIter` backstops adversarial paths.
+   * graphs, `maxIter` backstops adversarial paths: a peel still
+   * shrinking after `maxIter` rounds fails typed rather than return a
+   * half-peeled graph.
    */
   def kCoreExact(edges: DataFrame, aCol: String, bCol: String,
                  k: Int, maxIter: Int = 50): DataFrame = {
@@ -399,6 +401,11 @@ object GraphOps {
       converged = n2 == n || n2 == 0L
       e = next; n = n2
     }
+    if (!converged)
+      throw new GraphContractViolation(
+        s"kCoreExact: peeling did not converge in $maxIter rounds — " +
+        "raise maxIter (a chain hanging off the core peels one edge " +
+        "per end per round)")
     symmetric(e).groupBy("node").agg(count(lit(1)).as("deg"))
   }
 
@@ -471,50 +478,54 @@ object GraphOps {
   /**
    * Multi-source BFS hop distances over a DIRECTED edge list, bounded
    * depth: dist(v) = min hops from any source, for all v reachable in
-   * ≤ `maxHops`. Sources are a 1-column DataFrame (any name).
+   * ≤ `maxHops`. Sources are a 1-column DataFrame (any name); a null
+   * source reports (null, 0). The node column takes the wider of the
+   * edge and source id types.
    *
-   * Classic frontier iteration (Beamer et al.'s top-down direction,
-   * which is the right shape for Spark — the frontier is a slim
-   * (node) set): each hop joins the CURRENT frontier to edges on src,
-   * anti-joins the visited set, and unions the survivors in. All rows
-   * are ≤ 16 B (node, dist); the visited set is checkpointed per hop
-   * so plan depth is O(1), and the frontier join broadcasts whenever
-   * the frontier is small (which BFS frontiers usually are at the
-   * start and end of the wave). No per-path enumeration anywhere —
-   * this is O(V+E) per wave, never O(paths).
+   * Runs on the [[Fixpoint]] kernel ([[hops]]): the edges are grouped
+   * by source once, and each hop is one job over the nodes the last
+   * hop first reached — O(V+E) over the whole wave, never O(paths).
    */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    sources: DataFrame, maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
+    val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(false)
-    val src0 = sources.toDF("node").distinct()
-    var visited = src0.withColumn("dist", lit(0L)).localCheckpoint(false)
-    var frontier = visited
-    // the count that materializes each wave's checkpoint doubles as
-    // the broadcast-hint bound probe (bcastIf): a small frontier
-    // broadcasts into the wave join so the static edge frame is never
-    // shuffled per hop
-    var fRows = frontier.count()
-    var hop = 0L
-    while (hop < maxHops) {
-      hop += 1
-      val next = bcastIf(frontier, fRows)
-        .join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(false)
-      val n = next.count()
-      if (n == 0) hop = maxHops // converged: nothing new reachable
-      else {
-        visited = visited.union(next).localCheckpoint(false)
-        frontier = next
-        fRows = n
-      }
-    }
-    visited
+    val src = sources.toDF("node")
+    val t = Fixpoint.commonType(e.schema("src").dataType,
+      e.schema("dst").dataType, src.schema("node").dataType)
+    val reached = hops("bfs", Fixpoint.rows(e.select(
+        Fixpoint.castTo(e, "src", t), Fixpoint.castTo(e, "dst", t)), None)
+        .map(a => (a(0), a(1))),
+      Fixpoint.rows(src.select(Fixpoint.castTo(src, "node", t)), None)
+        .map(_(0)), maxHops, maxHops, spark)(
+      throw new IllegalStateException("bfsDistances: past the hop bound"))
+    Fixpoint.frame(spark, reached.map { case (n, h) => Row(n, h) },
+      StructType(Seq(StructField("node", t, src.schema("node").nullable),
+        StructField("dist", LongType, nullable = false))))
+  }
+
+  /** First-discovery hop counts (node, hops) from `starts` (hop 0)
+    * along `edges`, out to `maxHops`: a [[Fixpoint.loop]] from the
+    * starts' root, run where the edges are held. [[bfsDistances]] and
+    * the k-level DAG check's seed cone share it. */
+  private[graft] def hops(name: String, edges: Fixpoint.Rows[(Any, Any)],
+      starts: Fixpoint.Rows[Any], maxHops: Long, maxRounds: Int,
+      spark: SparkSession)(diverged: => Nothing)
+      : Fixpoint.Rows[(Any, Long)] = {
+    val (es, root) = Fixpoint.rooted(edges, starts)(identity)
+    val g = Fixpoint.graph(name, es, spark)(
+      (ds: collection.Seq[Any]) => ds.distinct.toArray)()
+    Fixpoint.loop(name, g, Some(root), maxRounds)(
+      Fixpoint.Frontier[Any, Long, Long](
+        seed = (_, s) => ((null, s), 0L),
+        front = (_, h) => h,
+        extend = (h, _, d) => ((null, d), h + 1),
+        combine = (a, _) => a,
+        merge = Fixpoint.firstDiscovery,
+        grows = _ < maxHops))((_, _) => ())(diverged)
+      .map { case (k, (_, h)) => (k.asInstanceOf[(Any, Any)]._2, h) }
   }
 
   /**
@@ -1266,19 +1277,19 @@ object GraphOps {
       maxIter, withPred = true)
 
   /** The relaxation loop of [[weightedSssp]] and [[weightedSsspTree]]
-    * (`withPred`) on the [[Fixpoint]] kernel: the edges are grouped by
-    * source once (that job also counts negative weights), and each
-    * round is one job — the improved nodes extend along their
-    * out-edges on their own partitions, candidates min-combine per
-    * node, and a candidate replaces the node's entry in the settled
-    * state (one entry per node) only when it beats it. Without preds
-    * every candidate carries a null pred, so a node improves only on a
+    * (`withPred`) on a [[Fixpoint.loop]] from the sources' root
+    * ([[Fixpoint.rooted]]): round 0 writes the sources at 0.0 with a
+    * null pred; the edges are grouped by source once (that job also
+    * counts negative weights), and each round is one job — the
+    * improved nodes extend along their out-edges, candidates
+    * min-combine per node, and a candidate replaces the node's entry
+    * (one entry per node) only when it beats it. Without preds every
+    * candidate carries a null pred, so a node improves only on a
     * strictly smaller distance.
     * Output (node, dist[, pred]); errors name `op`. */
   private def relax(op: String, edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, sources: DataFrame,
       maxIter: Int, withPred: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
@@ -1288,55 +1299,40 @@ object GraphOps {
     val src = sources.select(col(sources.columns.head).as("__n"))
     val t = Fixpoint.commonType(e.schema("__s").dataType,
       e.schema("__d").dataType, src.schema("__n").dataType)
-    // node → (dst, weight) out-edges; the build job also counts the
-    // negative weights
-    val g = Fixpoint.graph(op, Fixpoint.values(e.select(
+    // node → (dst, weight) out-edges, the root's at 0.0; the build job
+    // also counts the negative weights
+    val (es, root) = Fixpoint.rooted(Fixpoint.rows(e.select(
         Fixpoint.castTo(e, "__s", t), Fixpoint.castTo(e, "__d", t),
-        col("__w"))).map(a => (a(0), (a(1), a(2).asInstanceOf[Double]))),
-      spark)((es: collection.Seq[(Any, Double)]) => es.toArray)(
+        col("__w")), None).map(a => (a(0), (a(1), a(2).asInstanceOf[Double]))),
+      Fixpoint.rows(src.select(Fixpoint.castTo(src, "__n", t)), None)
+        .flatMap(a => Option(a(0))))(n => (n, 0.0))
+    val g = Fixpoint.graph(op, es, spark)(
+      (ws: collection.Seq[(Any, Double)]) => ws.toArray)(
       _.count(_._2 < 0).toLong)
     if (g.sum > 0)
       throw new GraphContractViolation(
         s"$op: negative edge weight — relaxation requires " +
         "w >= 0 (a negative cycle would improve forever)")
-    // node → (dist, pred), partitioned by node, each entry flagged
-    // when the last round improved it: the sources at 0.0 with a null
-    // pred
-    var state: RDD[(Any, ((Double, Any), Boolean))] = Fixpoint.values(
-        src.select(Fixpoint.castTo(src, "__n", t)))
-      .flatMap(a => Option(a(0)).map(n => (n, ((0.0, null: Any), true))))
-      .reduceByKey(g.part, (a, _) => a)
-    var n = Fixpoint.materialize(state, s"$op:0")().rows
-    var i = 0
-    while (n > 0) {
-      i += 1
-      if (i > maxIter)
-        throw new GraphContractViolation(
-          s"$op: relaxation did not converge in $maxIter " +
-          "rounds — raise maxIter (dense weighted improvement can " +
-          "take up to V-1 rounds)")
-      // the frontier already sits on its nodes' edge partitions
-      val cands = Fixpoint.expand(
-          state.filter(_._2._2).mapValues(_._1._1), g) {
-          (dist: Double, node: Any, e: (Any, Double)) =>
-            (e._1, (dist + e._2, if (withPred) node else null))
-        }.reduceByKey(g.part, (a, b) => if (treeOrder(a, b) <= 0) a else b)
-      val next = Fixpoint.settle(cands, state.mapValues(_._1)) {
-        case (c, None) => Some(c)
-        case (c, Some((old, oldp))) =>
-          val d = compareIds(c._1, old)
-          if (d < 0 || (d == 0 && oldp != null &&
-              compareIds(c._2, oldp) < 0)) Some(c)
-          else None
-      }
-      n = Fixpoint.materialize(next, s"$op:$i")(
-        v => if (v._2._2) 1L else 0L).sum
-      state = next
-    }
-    val rows = state.map { case (k, ((dist, pred), _)) =>
-      if (withPred) Row(k, dist, pred) else Row(k, dist)
-    }
-    spark.createDataFrame(rows, StructType(Seq(StructField("node", t),
+    // (null, node) → (dist, pred)
+    val settled = Fixpoint.loop(op, g, Some(root), maxIter)(
+      Fixpoint.Frontier[(Any, Double), Double, (Double, Any)](
+        seed = { case (_, (n, _)) => ((null, n), (0.0, null)) },
+        front = (_, c) => c._1,
+        extend = { case (dist, node, (d, w)) =>
+          ((null, d), (dist + w, if (withPred) node else null))
+        },
+        combine = (a, b) => if (treeOrder(a, b) <= 0) a else b,
+        merge = Some((c, old) =>
+          if (old.forall(treeOrder(c, _) < 0)) Some(c) else None)))(
+      (_, _) => ())(
+      throw new GraphContractViolation(
+        s"$op: relaxation did not converge in $maxIter " +
+        "rounds — raise maxIter (dense weighted improvement can " +
+        "take up to V-1 rounds)"))
+    Fixpoint.frame(spark, settled.map { case (k, (_, (dist, pred))) =>
+        val n = k.asInstanceOf[(Any, Any)]._2
+        if (withPred) Row(n, dist, pred) else Row(n, dist)
+      }, StructType(Seq(StructField("node", t),
       StructField("dist", DoubleType)) ++
       (if (withPred) Seq(StructField("pred", t)) else Nil)))
   }
@@ -1366,44 +1362,37 @@ object GraphOps {
    * job that shuffles only the heads still walking.
    */
   def ssspRoutes(tree: DataFrame, maxIter: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, StringType}
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     val spark = tree.sparkSession
-    val t = Fixpoint.values(tree.select(col("node").cast(StringType),
-      col("pred").cast(StringType)))
-    val g = Fixpoint.graph("routes",
-      t.flatMap(a => Option(a(1)).map(p => (a(0), p))), spark)(
-      (ps: collection.Seq[Any]) => ps.toArray)()
-    // walking heads: hop → (target, back), back = hops walked back
-    // from the target so far
-    var fresh: RDD[(Any, (Any, Int))] = t.map(a => (a(0), (a(0), 0)))
-    var n = Fixpoint.materialize(fresh, "routes:0")().rows
-    val acc = scala.collection.mutable.ArrayBuffer(fresh)
-    var i = 0
-    while (n > 0) {
-      i += 1
-      if (i > maxIter)
-        throw new GraphContractViolation(
-          s"ssspRoutes: route expansion did not terminate in $maxIter " +
-          "rounds — the tree's pred links do not reach a source " +
-          "(malformed or cyclic tree)")
-      fresh = Fixpoint.expand(fresh, g) {
-        (v: (Any, Int), _: Any, pred: Any) => (pred, (v._1, v._2 + 1))
-      }
-      n = Fixpoint.materialize(fresh, s"routes:$i")().rows
-      if (n > 0) acc += fresh
-    }
+    val links = Fixpoint.rows(tree.select(col("node").cast(StringType),
+      col("pred").cast(StringType)), None).flatMap(a =>
+        if (a(0) == null) None else Some((a(0), a(1))))
+    val g = Fixpoint.graph("routes", links.flatMap { case (n, p) =>
+      Option(p).map((n, _)) }, spark)((ps: collection.Seq[Any]) => ps.toArray)()
+    // a level per round: (target, hop) → back, the hops walked back from
+    // the target; round r walks back r + 1
+    val walked = Fixpoint.loop("routes", g, None, maxIter - 1)(
+      Fixpoint.Frontier[Any, (Any, Int), Int](
+        seed = (node, pred) => ((node, pred), 1),
+        front = (target, back) => (target, back),
+        extend = { case ((target, back), _, pred) =>
+          ((target, pred), back + 1)
+        },
+        combine = (a, _) => a))((_, _) => ())(
+      throw new GraphContractViolation(
+        s"ssspRoutes: route expansion did not terminate in $maxIter " +
+        "rounds — the tree's pred links do not reach a source " +
+        "(malformed or cyclic tree)"))
     // pos = route length − back (source at 0, target last)
-    val rows = spark.sparkContext.union(acc.toSeq)
-      .flatMap { case (hop, (target, back)) =>
-        Option(target).map(tg => (tg, (hop, back)))
-      }
-      .groupByKey(g.part)
-      .flatMap { case (target, hops) =>
-        val len = hops.iterator.map(_._2).max
-        hops.iterator.map { case (hop, back) => Row(target, len - back, hop) }
-      }
-    spark.createDataFrame(rows, StructType(Seq(
+    val hops = Fixpoint.union(links.map { case (n, _) => (n, (n, 0)) },
+      walked.map { case (k, (_, back)) =>
+        val (target, hop) = k.asInstanceOf[(Any, Any)]
+        (target, (hop, back))
+      })
+    Fixpoint.frame(spark, Fixpoint.regroup(hops) { (target, hs) =>
+        val len = hs.iterator.map(_._2).max
+        hs.iterator.map { case (hop, back) => Row(target, len - back, hop) }
+      }, StructType(Seq(
       StructField("node", StringType), StructField("pos", IntegerType),
       StructField("hop", StringType))))
   }

@@ -15,9 +15,10 @@ import graft.SparkEntry
 import graft.ops.{Fixpoint, GraphContractViolation, GraphOps}
 
 /**
- * The reach and shortest-path loops on the [[graft.ops.Fixpoint]]
- * executors: the in-memory and the RDD executor agree with each other
- * and with brute-force references on random graphs, every typed guard
+ * The reach, DAG-check, BFS and shortest-path loops on the
+ * [[graft.ops.Fixpoint]] executors: the in-memory and the RDD executor
+ * agree with each other and with brute-force references on random
+ * graphs, every typed guard
  * keeps its exact message on both, and the job budget holds — on the
  * cluster a fixed setup count plus ONE job per round and per walk step,
  * so per-round Catalyst work shows up as a failing unit; in driver
@@ -265,6 +266,140 @@ class FixpointKernelSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
+  /** True when a cycle is reachable from `from` (every node when
+    * None): a depth-first search that meets a node still on its stack. */
+  private def cyclicFrom(es: Seq[(Long, Long)], from: Option[Seq[Long]])
+      : Boolean = {
+    val out = es.groupMap(_._1)(_._2)
+    val done = mutable.Set.empty[Long]
+    val onStack = mutable.Set.empty[Long]
+    def dfs(v: Long): Boolean =
+      if (onStack(v)) true
+      else if (done(v)) false
+      else {
+        onStack += v
+        val hit = out.getOrElse(v, Nil).exists(dfs)
+        onStack -= v
+        done += v
+        hit
+      }
+    from.getOrElse(es.flatMap(e => Seq(e._1, e._2))).distinct.exists(dfs)
+  }
+
+  private val dagWhat = "a k > 1 path selector (GROUPS 2)"
+  private val cyclicMsg = s"$dagWhat over a CYCLIC graph — the k-level " +
+    "lowering counts walks, which revisit edges beyond the minimal " +
+    "length; bound the range [*lo..hi] for exact trail semantics"
+
+  /** The k-level levels of `es` from `seeds` (every source when None)
+    * as walk counts, or the DAG check's rejection. */
+  private def dagChecked(es: Seq[(Long, Long)], seeds: Option[Seq[Long]])
+      : Either[String, Map[(Long, Long, Long), Long]] = {
+    import spark.implicits._
+    try Right(Reach.kLevelLevels(es.toDF("s", "d"), "s", "d",
+        seeds.map(_.toDF("id")), "groups", 2, withParents = false)._1
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)) ->
+        r.getLong(2)).toMap)
+    catch { case e: GraphContractViolation => Left(e.getMessage) }
+  }
+
+  test("the DAG check agrees with a depth-first search on both " +
+      "executors: random DAGs and cyclic graphs, anchored and not") {
+    val rnd = new Lcg(99L)
+    def expect(es: Seq[(Long, Long)], seeds: Option[Seq[Long]],
+        what: String): Unit = {
+      val want =
+        if (cyclicFrom(es, seeds)) Left(cyclicMsg)
+        else Right(walkCounts(es, seeds.getOrElse(es.map(_._1))))
+      assert(dagChecked(es, seeds) == want, s"$what: in-memory")
+      assert(kernel(dagChecked(es, seeds)) == want, s"$what: RDD executor")
+    }
+    for (trial <- 1 to 6) {
+      val n = 5 + rnd.next(6)
+      val dag = trial % 2 == 1
+      val es = (1 to 6 + rnd.next(10)).map { _ =>
+        if (dag) {
+          val a = rnd.next(n - 1)
+          (a.toLong, (a + 1 + rnd.next(n - 1 - a)).toLong)
+        } else (rnd.next(n).toLong, rnd.next(n).toLong)
+      }
+      expect(es, Some(Seq(rnd.next(n).toLong, rnd.next(n).toLong)),
+        s"trial $trial anchored")
+      expect(es, None, s"trial $trial unanchored")
+    }
+    // a cycle in the seed's cone rejects; one upstream of the cone,
+    // feeding one of its nodes, does not
+    val cone = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    expect(cone :+ ((3L, 1L)), Some(Seq(0L)), "cycle in the cone")
+    expect(cone ++ Seq((5L, 6L), (6L, 5L), (6L, 2L)), Some(Seq(0L)),
+      "cycle outside the cone")
+    expect(cone ++ Seq((5L, 6L), (6L, 5L), (6L, 2L)), None,
+      "unanchored over a cycle")
+    expect(cone :+ ((2L, 2L)), Some(Seq(0L)), "self-loop in the cone")
+  }
+
+  test("the DAG check's cone answers on both executors under a small " +
+      "maxClosureRows") {
+    // the seed's cone is a 12-node cycle: 12 reach pairs from the seed,
+    // past the bound — the cone is peeled, never closed into pairs
+    val ring = (0L until 12L).map(i => (i, (i + 1) % 12)) :+ ((20L, 21L))
+    withConf(Reach.MaxClosureRowsConf, "5") {
+      assert(dagChecked(ring, Some(Seq(0L))) == Left(cyclicMsg))
+      assert(kernel(dagChecked(ring, Some(Seq(0L)))) == Left(cyclicMsg))
+    }
+  }
+
+  test("bfsDistances matches a brute-force BFS: cycles, self-loops, " +
+      "duplicate and null sources, long and string ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val rnd = new Lcg(5L)
+    def brute(es: Seq[(Long, Long)], srcs: Seq[Long], maxHops: Int)
+        : Map[Long, Long] = {
+      val out = es.groupMap(_._1)(_._2)
+      val dist = mutable.Map(srcs.distinct.map(_ -> 0L): _*)
+      var front = srcs.distinct
+      for (h <- 1 to maxHops) {
+        front = front.flatMap(out.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        front.foreach(dist(_) = h.toLong)
+      }
+      dist.toMap
+    }
+    for (trial <- 1 to 3; maxHops <- Seq(1, 2, 3, 40)) {
+      val n = 6 + rnd.next(8)
+      val es = (1 to 6 + rnd.next(14))
+        .map(_ => (rnd.next(n).toLong, rnd.next(n).toLong)) :+ ((1L, 1L))
+      val srcs = Seq(rnd.next(n).toLong, rnd.next(n).toLong)
+      val want = brute(es, srcs, maxHops)
+      val sources = (srcs ++ srcs).map(Option(_)) :+ None
+      val longs = GraphOps.bfsDistances(es.toDF("s", "d"), "s", "d",
+        sources.toDF("id"), maxHops)
+      assert(longs.schema == StructType(Seq(
+        StructField("node", LongType, nullable = true),
+        StructField("dist", LongType, nullable = false))))
+      val got = longs.collect().toSeq
+      assert(got.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          r.getLong(1))).sorted ==
+        ((None, 0L) +: want.toSeq.map { case (v, d) => (Some(v), d) })
+          .sorted, s"trial $trial maxHops $maxHops: long ids")
+      val strs = GraphOps.bfsDistances(
+        es.map { case (a, b) => (s"v$a", s"v$b") }.toDF("s", "d"), "s", "d",
+        sources.map(_.map(v => s"v$v").orNull).toDF("id"), maxHops)
+      assert(strs.schema.map(_.dataType) == Seq(StringType, LongType))
+      assert(strs.collect().map(r => (Option(r.getString(0)), r.getLong(1)))
+        .toSeq.sorted == ((None, 0L) +: want.toSeq.map { case (v, d) =>
+          (Some(s"v$v"), d) }).sorted,
+        s"trial $trial maxHops $maxHops: string ids")
+    }
+    // non-null sources of a non-nullable column: a non-nullable node
+    val plain = GraphOps.bfsDistances(Seq((0L, 1L)).toDF("s", "d"), "s", "d",
+      Seq(0L).toDF("id"), 2)
+    assert(plain.schema("node").nullable == false)
+    assert(plain.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((0L, 0L), (1L, 1L)))
+  }
+
   // ------------------------------------------ typed guards, kernel path
 
   private def chain(n: Long): DataFrame = {
@@ -427,8 +562,9 @@ class FixpointKernelSpec extends AnyFunSuite {
   // ------------------------------------------------ one job per round
 
   /** Minimal TPC-H tables for the reach twins and the GraphOps route
-    * query: 25 nations in 5 regions, 10 customers with 3 orders each,
-    * 3 lineitems per order over 20 parts. */
+    * and BFS queries: 25 nations in 5 regions, 10 customers with 3
+    * orders each, 3 lineitems per order over 20 parts and 3 suppliers,
+    * each at a quantity past g07's co-supply cut. */
   private def writeTables(dir: Path): Unit = {
     import spark.implicits._
     def put(df: DataFrame, t: String): Unit =
@@ -447,7 +583,7 @@ class FixpointKernelSpec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice"), "part")
     put((for (o <- 0 until 30; i <- 0 until 3) yield (o.toLong,
-        ((o * 7 + i * 3) % 20).toLong, (i + 1).toLong, 1.0, 2.0, 0.0, 0.0,
+        ((o * 7 + i * 3) % 20).toLong, (i + 1).toLong, 50.0, 2.0, 0.0, 0.0,
         "N", "O", java.sql.Date.valueOf("1995-02-01"), i + 1))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
@@ -488,13 +624,17 @@ class FixpointKernelSpec extends AnyFunSuite {
     try {
       writeTables(dir)
       // untagged jobs: the DataFrame work at the loop boundary — the
-      // window that derives q187's nation chain and g28's edges, and
-      // q188's k-trim between the σ DP and its walk. None of it grows
-      // with the round count; the kernel's own jobs are all tagged.
+      // window that derives the nation chain of q170, q187 and g28, the
+      // joins and the sorted limit behind g07's co-supply edges and
+      // sources, and the k-trim of q170 and q188 after the σ DP. None
+      // of it grows with the round count; the kernel's own jobs, q170's
+      // DAG check and g07's BFS included, are all tagged.
       val setup = Map(
         "q187_dist_unbounded_witness" -> 1,
         "q188_dist_hetero_klevel_witness" -> 1,
         "q189_dist_allshortest_witness" -> 0,
+        "q170_klevel_unanchored" -> 4,
+        "g07_bfs_hops" -> 5,
         "g28_sssp_routes" -> 1)
       kernel {
         for ((name, maxUntagged) <- setup) {
@@ -533,6 +673,7 @@ class FixpointKernelSpec extends AnyFunSuite {
         "q124_unbounded_witness" -> 9,
         "q163_hetero_allshortest_witness" -> 7,
         "q173_hetero_klevel_witness" -> 11,
+        "q169_klevel_witness" -> 13,
         "q72_all_shortest" -> 9)
       val seen = for ((name, _) <- setup) yield {
         val build = () => SparkEntry.queries(name)(spark, dir.toString)

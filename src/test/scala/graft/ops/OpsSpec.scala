@@ -3814,6 +3814,17 @@ class OpsSpec extends AnyFunSuite {
     assert(GraphOps.kCoreExact(tree, "a", "b", k = 2).isEmpty)
   }
 
+  test("kCoreExact fails typed when maxIter runs out before the fixpoint") {
+    // a 10-node path peels one edge per end per round: 3 rounds leave 3
+    // of its 9 edges, and its 2-core is empty
+    val path = (1L to 9L).map(i => (i, i + 1)).toDF("a", "b")
+    assert(intercept[GraphContractViolation](
+        GraphOps.kCoreExact(path, "a", "b", k = 2, maxIter = 3)).getMessage ==
+      "kCoreExact: peeling did not converge in 3 rounds — raise maxIter " +
+      "(a chain hanging off the core peels one edge per end per round)")
+    assert(GraphOps.kCoreExact(path, "a", "b", k = 2).isEmpty)
+  }
+
   test("kCore: K4 plus a tail — 3-core is exactly the K4") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val tail = Seq((4L, 5L), (5L, 6L)) // degree-1/2 chain peels away
