@@ -575,58 +575,29 @@ private[cypher] object Reach {
     * revisit an edge, diverging from Cypher's trail contract on cyclic
     * graphs — so the k-level family over unbounded ranges requires a
     * DAG (bound the range [*lo..hi] for exact trail semantics on
-    * cyclic graphs). A whole-graph Kahn peel ([[peels]]) passes the
-    * common acyclic case; on a cycle, only the seeds' cone — the node
-    * set a first-discovery BFS reaches from them
-    * ([[graft.ops.GraphOps.hops]]) — is peeled again, so a cycle the DP
-    * never walks does not reject the query. */
+    * cyclic graphs). A whole-graph Kahn peel ([[GraphOps.peel]]) passes
+    * the common acyclic case; on a cycle, only the seeds' cone — the
+    * node set a first-discovery BFS reaches from them ([[GraphOps.hops]])
+    * — is peeled again, so a cycle the DP never walks does not reject
+    * the query. */
   private def requireDag(in: LoopInput, spark: SparkSession,
       what: String): Unit = {
     def diverged = throw new CypherBindingException(
       s"$what: the DAG check did not converge in $MaxRounds rounds")
-    // each node's distinct out-edges, behind a null one to itself
-    val g = Fixpoint.graph("dag", in.edges, spark)(
-      (ds: collection.Seq[Any]) => (null +: ds.distinct).toArray)()
-    val acyclic = peels("dag", g, None)(diverged) || in.seeds.exists { sd =>
-      val cone = GraphOps.hops("dagCone", in.edges, sd, Long.MaxValue,
-        MaxRounds, spark)(diverged)
-      peels("dagPeel", g, Some(cone.map(_._1)))(diverged)
+    val g = GraphOps.peelGraph("dag", in.edges, spark)
+    // Kahn's peel of the edges out of `nodes`: true when every node peels
+    def peels(name: String, nodes: Option[Rows[Any]]): Boolean =
+      GraphOps.peel(name, g, nodes, 1, Int.MaxValue, MaxRounds)(diverged)._2
+    val acyclic = peels("dag", None) || in.seeds.exists { sd =>
+      val cone = GraphOps.hops("dagCone", in.edges, sd.map(s => (null, s)),
+        Long.MaxValue, MaxRounds, spark)(diverged)
+      peels("dagPeel", Some(cone.map(_._1._2)))
     }
     if (!acyclic)
       throw new GraphContractViolation(s"$what over a CYCLIC graph — " +
         "the k-level lowering counts walks, which revisit edges beyond " +
         "the minimal length; bound the range [*lo..hi] for exact trail " +
         "semantics")
-  }
-
-  /** Kahn's peel on [[graft.ops.Fixpoint.loop]] of the edges of `g` out
-    * of `nodes` (every edge when None; a node set closed under
-    * successors): a node's entry is (peeled in-edges, in-degree).
-    * Round 0 counts the in-degrees — each node's null edge to itself
-    * adds none — and every later round adds the in-edges out of the
-    * nodes that peeled, a node peeling once its count reaches its
-    * in-degree. True when every node peels: a DAG. */
-  private def peels(name: String, g: Fixpoint.Edges[Any],
-      nodes: Option[Rows[Any]])(diverged: => Nothing): Boolean = {
-    // the candidate along `node`'s edge to `d`; along its null edge, none
-    def hit(node: Any, d: Any, c: (Long, Long)) =
-      if (d == null) ((null, node), (0L, 0L)) else ((null, d), c)
-    var all = 0L
-    var peeled = 0L
-    Fixpoint.loop(name, g, nodes, MaxRounds)(
-      Fixpoint.Frontier[Any, Unit, (Long, Long)](
-        seed = (s, d) => hit(s, d, (0L, 1L)),
-        front = (_, _) => (),
-        extend = (_, node, d) => hit(node, d, (1L, 0L)),
-        combine = (a, b) => (a._1 + b._1, a._2 + b._2),
-        merge = Some((c, old) => old.fold(Option(c))(o =>
-          if (c._1 == 0) None else Some((o._1 + c._1, o._2)))),
-        grows = c => c._1 == c._2,
-        sum = c => if (c._1 == c._2) 1L else 0L)) { (r, st) =>
-      if (r == 0) all = st.rows
-      peeled += st.sum
-    }(diverged)
-    peeled == all
   }
 
   /** k-level σ DP levels (round 15, split out round 16): runs the
@@ -776,8 +747,7 @@ private[cypher] object Reach {
     * under the same maxClosureRows guard. */
   private def kLevelReach(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Option[DataFrame], kind: String, k: Int,
-      dagProven: Boolean = false, minLen: Int = 1)
-      : DataFrame = {
+      dagProven: Boolean = false, minLen: Int): DataFrame = {
     val (levels, _, bound) =
       kLevelLevels(edges, srcCol, dstCol, seeds, kind, k,
         withParents = false, dagProven = dagProven)
@@ -818,7 +788,7 @@ private[cypher] object Reach {
       fwdSeeds: () => Option[DataFrame],
       revSeeds: () => Option[DataFrame],
       node: NodeDef, ndf: DataFrame, kind: String, k: Int,
-      minLen: Int = 1): DataFrame = {
+      minLen: Int): DataFrame = {
     val (srcC, dstC) = (e.srcIdColumn, e.sinkIdColumn)
     def run(sc: String, dc: String, sd: Option[DataFrame], rev: Boolean)
         : DataFrame = {
@@ -1258,13 +1228,9 @@ private[cypher] object Reach {
   private def stratifiedReach(defs: Seq[EdgeDef], verb: String,
       srcPat: NodePat, dstPat: NodePat, where: Option[Expr],
       catalog: GraphCatalog, outer: Option[Compiler.Ctx],
-      needDist: Boolean, allShortest: Boolean,
-      wantWitness: Boolean = false,
-      allowIdentity: Boolean = false,
-      selector: Option[(String, Int)] = None,
-      minLen: Int = 1,
-      undirected: Boolean = false)
-      : (DataFrame, String, String) = {
+      needDist: Boolean, allShortest: Boolean, wantWitness: Boolean,
+      allowIdentity: Boolean, selector: Option[(String, Int)], minLen: Int,
+      undirected: Boolean): (DataFrame, String, String) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
       ShortType, StringType}
     val shape = defs.map(d => s"${d.fromLabel}→${d.toLabel}")

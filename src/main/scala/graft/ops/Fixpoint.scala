@@ -22,11 +22,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * Every iterative loop is one [[loop]] of [[Frontier]] closures. Its
  * state rule (`Frontier.merge`) meets a round's combined candidate with
  * its key's entry: written only when absent (first discovery: the reach
- * BFS, allShortestPaths σ, `GraphOps.bfsDistances`, the DAG check's
- * cone), replaced when better (`GraphOps.weightedSssp`), accumulated
- * (the DAG check's Kahn peel), or no merge, a level per round (the
- * k-level σ DP, `GraphOps.ssspRoutes`). A loop whose starts are entries
- * themselves runs from a [[Root]] ([[rooted]]).
+ * BFS, allShortestPaths σ, `GraphOps.hops` for `bfsDistances`, harmonic
+ * centrality and the DAG check's cone), replaced when better
+ * (`weightedSssp`), accumulated (`GraphOps.peel`: k-cores, the DAG
+ * check's Kahn peel), or no merge, a level per round (the k-level σ DP,
+ * `ssspRoutes`). A loop whose starts are entries themselves runs from a
+ * [[Root]] ([[rooted]]).
  *
  * Anatomy of a round:
  *  - the edge set is grouped per source node ONCE into one hash map
@@ -241,8 +242,8 @@ object Fixpoint {
     * the seeds of a loop from the root (the root once per start, which
     * the loop counts once): seeded there, a loop's round 0 writes the
     * starts' own entries. */
-  def rooted[A: ClassTag](edges: Rows[(Any, A)], starts: Rows[Any])(
-      start: Any => A): (Rows[(Any, A)], Rows[Any]) =
+  def rooted[S, A: ClassTag](edges: Rows[(Any, A)], starts: Rows[S])(
+      start: S => A): (Rows[(Any, A)], Rows[Any]) =
     (union(edges, starts.map(s => (Root: Any, start(s)))),
       starts.map(_ => Root))
 

@@ -359,66 +359,101 @@ object GraphOps {
    * deterministic and mirrorable — extra rounds past convergence are
    * no-ops, so callers pick `peels` ≥ the expected peel depth (peel
    * depth is tiny for the near-dup / co-occurrence graphs this targets;
-   * the exact core would loop to fixpoint with the same per-round
-   * plan).
+   * [[kCoreExact]] peels to the fixpoint).
    *
    * Returns (node, deg): nodes surviving all rounds with their induced
-   * degree. Per round: one groupBy over the symmetric edge list + two
-   * semi joins to filter edges by surviving endpoints — all slim
-   * (node, nbr) rows, no adjacency lists; lineage cut per round.
+   * degree, which the last peel may have dropped below k. Runs on the
+   * [[Fixpoint]] kernel ([[peel]]): the symmetric edges are grouped by
+   * node once, and each peel is one job over the neighbours of the
+   * nodes the last peel removed.
    */
   def kCore(edges: DataFrame, aCol: String, bCol: String,
             k: Int, peels: Int = 4): DataFrame = {
     require(k >= 1 && peels >= 1, "k and peels must be >= 1")
-    var e = canonical(edges, aCol, bCol).localCheckpoint(false)
-    for (_ <- 1 to peels) e = peelOnce(e, k)
-    symmetric(e).groupBy("node").agg(count(lit(1)).as("deg"))
+    core("kCore", edges, aCol, bCol, k, peels, peels)(
+      throw new IllegalStateException("kCore: past the peel bound"))._1
   }
 
   /**
-   * EXACT k-core: peel to the fixpoint instead of a fixed round count.
-   * Peeling only ever REMOVES edges, so an unchanged edge count is the
-   * fixpoint — detected with the count that already materializes each
-   * round's lazy checkpoint (one job per round, the
-   * [[Dedup.connectedComponents]] convergence pattern; no content hash
-   * needed thanks to monotonicity). Peel depth is bounded by the
-   * longest chain hanging off the core — tiny for co-occurrence
-   * graphs, `maxIter` backstops adversarial paths: a peel still
-   * shrinking after `maxIter` rounds fails typed rather than return a
-   * half-peeled graph.
+   * EXACT k-core: [[kCore]]'s peel run to the fixpoint. Peel depth is
+   * bounded by the longest chain hanging off the core — tiny for
+   * co-occurrence graphs; `maxIter` backstops adversarial paths. It
+   * bounds the peels that remove an edge plus, unless the graph
+   * empties, the one that finds none to remove; a graph that needs
+   * more fails typed rather than return a half-peeled graph.
    */
   def kCoreExact(edges: DataFrame, aCol: String, bCol: String,
                  k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1 && maxIter >= 1, "k and maxIter must be >= 1")
-    var e = canonical(edges, aCol, bCol).localCheckpoint(false)
-    var n = e.count()
-    var iter = 0
-    var converged = n == 0L
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val next = peelOnce(e, k)
-      val n2 = next.count()
-      converged = n2 == n || n2 == 0L
-      e = next; n = n2
-    }
-    if (!converged)
-      throw new GraphContractViolation(
-        s"kCoreExact: peeling did not converge in $maxIter rounds — " +
-        "raise maxIter (a chain hanging off the core peels one edge " +
-        "per end per round)")
-    symmetric(e).groupBy("node").agg(count(lit(1)).as("deg"))
+    def tooDeep = throw new GraphContractViolation(
+      s"kCoreExact: peeling did not converge in $maxIter rounds — " +
+      "raise maxIter (a chain hanging off the core peels one edge " +
+      "per end per round)")
+    // the round after peel maxIter may only confirm the fixpoint
+    val (out, whole, last) = core("kCoreExact", edges, aCol, bCol, k,
+      Int.MaxValue, math.max(maxIter, maxIter + 1))(tooDeep)
+    if (last + (if (whole) 0 else 1) > maxIter) tooDeep
+    out
   }
 
-  /** One synchronous peel round: drop every node with induced degree
-    * < k, keep only edges between survivors. Lazy checkpoint — the
-    * caller's next count/aggregate materializes it. */
-  private def peelOnce(e: DataFrame, k: Int): DataFrame = {
-    val keep = symmetric(e).groupBy("node").agg(count(lit(1)).as("d"))
-      .where(col("d") >= k).select("node")
-    e.join(keep.withColumnRenamed("node", "lo"), Seq("lo"), "left_semi")
-      .join(keep.withColumnRenamed("node", "hi"), Seq("hi"), "left_semi")
-      .select("lo", "hi")
-      .localCheckpoint(false)
+  /** [[peel]] of the [[symmetric]] edges of [[canonical]], its (node,
+    * remaining degree) rows as a (node, deg) frame. */
+  private def core(name: String, edges: DataFrame, aCol: String,
+      bCol: String, k: Int, peels: Int, maxRounds: Int)(
+      diverged: => Nothing): (DataFrame, Boolean, Int) = {
+    val spark = edges.sparkSession
+    val sym = symmetric(canonical(edges, aCol, bCol))
+    val (left, whole, last) = peel(name, peelGraph(name, Fixpoint.rows(sym,
+      None).map(a => (a(0), a(1))), spark), None, k, peels, maxRounds)(diverged)
+    (Fixpoint.frame(spark, left.map { case (n, d) => Row(n, d) },
+      StructType(Seq(sym.schema("node"),
+        StructField("deg", LongType, nullable = false)))), whole, last)
+  }
+
+  /** `edges` grouped for [[peel]]: each node's distinct out-edges behind
+    * a null one to itself, so that round 0 gives every node an entry. */
+  private[graft] def peelGraph(name: String, edges: Fixpoint.Rows[(Any, Any)],
+      spark: SparkSession): Fixpoint.Edges[Any] =
+    Fixpoint.graph(name, edges, spark)(
+      (ds: collection.Seq[Any]) => (null +: ds.distinct).toArray)()
+
+  /** Synchronous peel on a [[Fixpoint.loop]] of the edges of `g` (a
+    * [[peelGraph]]) out of `nodes` (every edge when None; else a node
+    * set closed under successors). A node's entry is (removed in-edges,
+    * in-degree, its peel); peel 1 (round 0) counts the in-degrees. A
+    * node peels on the write that drops its remaining in-degree below
+    * `k` at a peel ≤ `peels`, then grows and keeps its entry. Symmetric
+    * edges: the k-core peel; k = 1 over directed edges: Kahn's. Returns
+    * each unpeeled node's remaining in-degree (when > 0), whether every
+    * node peeled, and the last peel in which a node peeled with
+    * in-edges left. */
+  private[graft] def peel(name: String, g: Fixpoint.Edges[Any],
+      nodes: Option[Fixpoint.Rows[Any]], k: Int, peels: Int, maxRounds: Int)(
+      diverged: => Nothing): (Fixpoint.Rows[(Any, Long)], Boolean, Int) = {
+    def peeled(c: (Long, Long, Int)) = c._2 - c._1 < k && c._3 <= peels
+    // the candidate along `node`'s edge to `d`; along its null edge, none
+    def hit(node: Any, d: Any, c: (Long, Long, Int)) =
+      if (d == null) ((null, node), (0L, 0L, c._3)) else ((null, d), c)
+    var (left, last) = (0L, 0) // nodes not peeled; last edge-removing peel
+    val entries = Fixpoint.loop(name, g, nodes, maxRounds)(
+      Fixpoint.Frontier[Any, Int, (Long, Long, Int)](
+        seed = (s, d) => hit(s, d, (0L, 1L, 1)),
+        front = (_, c) => c._3 + 1,
+        extend = (p, node, d) => hit(node, d, (1L, 0L, p)),
+        combine = (a, b) => (a._1 + b._1, a._2 + b._2, a._3),
+        merge = Some((c, old) => old.fold(Option(c))(o =>
+          if (c._1 == 0 || peeled(o)) None
+          else Some((o._1 + c._1, o._2, c._3)))),
+        grows = peeled,
+        sum = c => if (peeled(c)) 1L else 0L,
+        max = c => if (peeled(c)) c._2 - c._1 else 0L)) { (r, st) =>
+      left += (if (r == 0) st.rows else 0L) - st.sum
+      if (st.max > 0) last = r + 1
+    }(diverged)
+    (entries.flatMap { case (key, (_, c)) =>
+      if (peeled(c) || c._1 == c._2) None
+      else Some((key.asInstanceOf[(Any, Any)]._2, c._2 - c._1))
+    }, left == 0, last)
   }
 
   /**
@@ -499,33 +534,35 @@ object GraphOps {
         Fixpoint.castTo(e, "src", t), Fixpoint.castTo(e, "dst", t)), None)
         .map(a => (a(0), a(1))),
       Fixpoint.rows(src.select(Fixpoint.castTo(src, "node", t)), None)
-        .map(_(0)), maxHops, maxHops, spark)(
+        .map(a => (null, a(0))), maxHops, maxHops, spark)(
       throw new IllegalStateException("bfsDistances: past the hop bound"))
-    Fixpoint.frame(spark, reached.map { case (n, h) => Row(n, h) },
+    Fixpoint.frame(spark, reached.map { case ((_, n), h) => Row(n, h) },
       StructType(Seq(StructField("node", t, src.schema("node").nullable),
         StructField("dist", LongType, nullable = false))))
   }
 
-  /** First-discovery hop counts (node, hops) from `starts` (hop 0)
-    * along `edges`, out to `maxHops`: a [[Fixpoint.loop]] from the
-    * starts' root, run where the edges are held. [[bfsDistances]] and
-    * the k-level DAG check's seed cone share it. */
+  /** First-discovery hop counts ((tag, node), hops) from the (tag,
+    * start) pairs of `starts` (hop 0) along `edges`, out to `maxHops`,
+    * one BFS per tag: a [[Fixpoint.loop]] from the starts' root, run
+    * where the edges are held. [[bfsDistances]] and the k-level DAG
+    * check's seed cone tag every start null; [[harmonicCentrality]]
+    * tags each with its source. */
   private[graft] def hops(name: String, edges: Fixpoint.Rows[(Any, Any)],
-      starts: Fixpoint.Rows[Any], maxHops: Long, maxRounds: Int,
+      starts: Fixpoint.Rows[(Any, Any)], maxHops: Long, maxRounds: Int,
       spark: SparkSession)(diverged: => Nothing)
-      : Fixpoint.Rows[(Any, Long)] = {
+      : Fixpoint.Rows[((Any, Any), Long)] = {
     val (es, root) = Fixpoint.rooted(edges, starts)(identity)
     val g = Fixpoint.graph(name, es, spark)(
       (ds: collection.Seq[Any]) => ds.distinct.toArray)()
     Fixpoint.loop(name, g, Some(root), maxRounds)(
-      Fixpoint.Frontier[Any, Long, Long](
-        seed = (_, s) => ((null, s), 0L),
-        front = (_, h) => h,
-        extend = (h, _, d) => ((null, d), h + 1),
+      Fixpoint.Frontier[Any, (Any, Long), Long](
+        seed = (_, s) => (s, 0L),
+        front = (t, h) => (t, h),
+        extend = { case ((t, h), _, d) => ((t, d), h + 1) },
         combine = (a, _) => a,
         merge = Fixpoint.firstDiscovery,
         grows = _ < maxHops))((_, _) => ())(diverged)
-      .map { case (k, (_, h)) => (k.asInstanceOf[(Any, Any)]._2, h) }
+      .map { case (k, (_, h)) => (k.asInstanceOf[(Any, Any)], h) }
   }
 
   /**
@@ -699,9 +736,10 @@ object GraphOps {
 
   /** Converged k-truss: peel until the edge COUNT stops changing —
     * convergence detection rides the count that materializes each
-    * round's checkpoint (one job per round, the [[kCoreExact]]
-    * pattern). `maxRounds` bounds pathological graphs; `maxDegree` is
-    * the same pre-peel hub valve as [[kTruss]]. */
+    * round's checkpoint (one job per round). `maxRounds` bounds
+    * pathological graphs: a peel still shrinking after `maxRounds`
+    * rounds fails typed rather than return a half-peeled graph.
+    * `maxDegree` is the same pre-peel hub valve as [[kTruss]]. */
   def kTrussExact(edges: DataFrame, aCol: String, bCol: String, k: Int,
                   maxRounds: Int = 50,
                   maxDegree: Option[Int] = None): DataFrame = {
@@ -718,6 +756,11 @@ object GraphOps {
       n = n2
       r += 1
     }
+    if (!done)
+      throw new GraphContractViolation(
+        s"kTrussExact: peeling did not converge in $maxRounds rounds — " +
+        "raise maxRounds (each round drops only the edges left in " +
+        "fewer than k - 2 triangles)")
     e
   }
 
@@ -772,46 +815,35 @@ object GraphOps {
    * graph, bounded at `maxHops`: `H(s) = Σ_{v ≠ s} 1/d(s,v)` summed
    * over reached nodes — the centrality that stays well-defined on
    * disconnected graphs (unreachable nodes contribute 0, not ∞).
-   * Output: (src, n_reached, harmonic), harmonic rounded to 6.
+   * Output: (src, n_reached, harmonic), harmonic rounded to 6; a
+   * source that reaches nothing has no row.
    *
-   * Scale shape: the [[bfsDistances]] frontier waves carry the source
-   * id, so state is (src, node) pairs — bounded by
+   * Scale shape: the [[bfsDistances]] BFS ([[hops]]) with each entry
+   * tagged by its source, so state is (src, node) pairs — bounded by
    * |sources|·reachable, which is why this is a SAMPLED-sources
    * centrality (estimating all-nodes centrality samples sources; the
-   * all-pairs form is quadratic and intentionally absent). Each wave
-   * is one join + one anti-join over slim rows, frontier/visited
-   * checkpointed per wave, early exit on an empty frontier.
+   * all-pairs form is quadratic and intentionally absent). The
+   * symmetric edges are grouped by node once, and each hop is one job
+   * over the pairs the last hop first reached.
    */
   def harmonicCentrality(edges: DataFrame, aCol: String, bCol: String,
                          sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val sym = symmetric(canonical(edges, aCol, bCol)).localCheckpoint(false)
-    val srcs = sources.toDF("node").distinct()
-    var visited = srcs.select(col("node").as("src"), col("node"),
-      lit(0L).as("dist")).localCheckpoint(false)
-    var frontier = visited
-    var fRows = frontier.count()
-    var hop = 1
-    var done = false
-    while (hop <= maxHops && !done) {
-      // small frontiers broadcast into the wave join (bcastIf): the
-      // symmetrized edge frame is never shuffled per hop
-      val next = bcastIf(frontier, fRows).join(sym, Seq("node"))
-        .select(col("src"), col("nbr").as("node"), lit(hop.toLong).as("dist"))
-        .distinct()
-        .join(visited.select(col("src"), col("node")), Seq("src", "node"),
-          "left_anti")
-        .localCheckpoint(false)
-      val n = next.count()
-      if (n == 0) done = true
-      else {
-        visited = visited.union(next).localCheckpoint(false)
-        frontier = next
-        fRows = n
-        hop += 1
-      }
-    }
-    visited.where(col("dist") > 0)
+    val spark = edges.sparkSession
+    val sym = symmetric(canonical(edges, aCol, bCol))
+    val src = sources.toDF("node")
+    val t = Fixpoint.commonType(sym.schema("node").dataType,
+      src.schema("node").dataType)
+    val reached = hops("harmonic", Fixpoint.rows(sym.select(
+        Fixpoint.castTo(sym, "node", t), Fixpoint.castTo(sym, "nbr", t)), None)
+        .map(a => (a(0), a(1))), Fixpoint.rows(src.select(col("node"),
+        Fixpoint.castTo(src, "node", t)), None).map(a => (a(0), a(1))),
+      maxHops, maxHops, spark)(
+      throw new IllegalStateException("harmonicCentrality: past the hop bound"))
+    Fixpoint.frame(spark, reached.flatMap { case ((s, _), h) =>
+        if (h > 0) Some(Row(s, h)) else None
+      }, StructType(Seq(src.schema("node").copy(name = "src"),
+        StructField("dist", LongType, nullable = false))))
       .groupBy(col("src"))
       .agg(count(lit(1)).as("n_reached"),
         round(sum(lit(1.0) / col("dist").cast("double")), 6).as("harmonic"))

@@ -15,7 +15,7 @@ import graft.SparkEntry
 import graft.ops.{Fixpoint, GraphContractViolation, GraphOps}
 
 /**
- * The reach, DAG-check, BFS and shortest-path loops on the
+ * The reach, DAG-check, BFS, k-core and shortest-path loops on the
  * [[graft.ops.Fixpoint]] executors: the in-memory and the RDD executor
  * agree with each other and with brute-force references on random
  * graphs, every typed guard
@@ -400,6 +400,158 @@ class FixpointKernelSpec extends AnyFunSuite {
       Set((0L, 0L), (1L, 1L)))
   }
 
+  /** The canonical undirected edges of `es`: (lo, hi), no self-loops. */
+  private def canon(es: Seq[(Long, Long)]): Set[(Long, Long)] =
+    es.collect { case (a, b) if a != b => (a min b, a max b) }.toSet
+
+  private def degrees(e: Set[(Long, Long)]): Map[Long, Long] =
+    e.toSeq.flatMap(x => Seq(x._1, x._2))
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+
+  /** One synchronous peel: the edges between nodes of degree ≥ k. */
+  private def peelOnce(e: Set[(Long, Long)], k: Int): Set[(Long, Long)] = {
+    val d = degrees(e)
+    e.filter(x => d(x._1) >= k && d(x._2) >= k)
+  }
+
+  /** A random graph on `n` nodes with repeated, reversed and self-loop
+    * edges. */
+  private def randomGraph(rnd: Lcg, n: Int, m: Int): Seq[(Long, Long)] =
+    (1 to m).map(_ => (rnd.next(n).toLong, rnd.next(n).toLong))
+
+  private def degs(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** kCore's and kCoreExact's output schema over non-null long ids. */
+  private val coreSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("deg", LongType, nullable = false)))
+  }
+
+  test("kCore matches a brute-force synchronous peel: peels 1-5, k 1-4") {
+    import spark.implicits._
+    val rnd = new Lcg(17L)
+    for (k <- 1 to 4; peels <- 1 to 5) {
+      val es = randomGraph(rnd, 6 + rnd.next(8), 8 + rnd.next(24))
+      val got = GraphOps.kCore(es.toDF("a", "b"), "a", "b", k, peels)
+      assert(got.schema == coreSchema)
+      assert(degs(got) == degrees(Iterator.iterate(canon(es))(peelOnce(_, k))
+        .drop(peels).next()), s"k $k peels $peels: $es")
+    }
+    // 5's neighbour 6 peels on the last peel: 5 stays at degree 1 < k
+    val tail = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    assert(degs(GraphOps.kCore(tail.toDF("a", "b"), "a", "b", 2, 1)) ==
+      Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
+    // the node column: the ids' common type, nullable when both are
+    import org.apache.spark.sql.types._
+    val strs = GraphOps.kCore(Seq(("x", "y")).toDF("a", "b"), "a", "b", 1, 1)
+    assert(strs.schema == StructType(Seq(StructField("node", StringType),
+      StructField("deg", LongType, nullable = false))))
+    assert(rowsOf(strs) == Seq("[x,1]", "[y,1]"))
+    assert(GraphOps.kCoreExact(Seq((1, 2L)).toDF("a", "b"), "a", "b", 1)
+      .schema == coreSchema)
+  }
+
+  test("kCoreExact matches the brute-force peel loop, maxIter swept from " +
+      "1 to the peel depth + 1") {
+    import spark.implicits._
+    val rnd = new Lcg(19L)
+    // peels until one removes nothing or empties the graph; fails once
+    // maxIter peels did neither
+    def exact(es: Seq[(Long, Long)], k: Int, maxIter: Int)
+        : Either[String, Map[Long, Long]] = {
+      var e = canon(es)
+      var iter = 0
+      var done = e.isEmpty
+      while (!done && iter < maxIter) {
+        iter += 1
+        val next = peelOnce(e, k)
+        done = next.size == e.size || next.isEmpty
+        e = next
+      }
+      if (done) Right(degrees(e))
+      else Left(s"kCoreExact: peeling did not converge in $maxIter rounds " +
+        "— raise maxIter (a chain hanging off the core peels one edge per " +
+        "end per round)")
+    }
+    def depth(es: Seq[(Long, Long)], k: Int): Int =
+      (1 to 100).find(exact(es, k, _).isRight).get
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val graphs = Seq(
+      "K4 and a chain" -> (k4 ++ Seq((4L, 5L), (5L, 6L), (6L, 7L)), 2),
+      "a path that empties" -> ((1L to 7L).map(i => (i, i + 1)), 2),
+      "a triangle and a path" -> (Seq((1L, 2L), (2L, 3L), (1L, 3L),
+        (4L, 5L), (5L, 6L)), 2),
+      "random" -> (randomGraph(rnd, 12, 30), 3))
+    for ((what, (es, k)) <- graphs; maxIter <- 1 to depth(es, k) + 1) {
+      val want = exact(es, k, maxIter)
+      val got =
+        try Right(GraphOps.kCoreExact(es.toDF("a", "b"), "a", "b", k,
+          maxIter))
+        catch { case e: GraphContractViolation => Left(e.getMessage) }
+      assert(got.map(degs) == want, s"$what, maxIter $maxIter")
+      got.foreach(df => assert(df.schema == coreSchema))
+    }
+  }
+
+  test("harmonicCentrality matches a brute-force BFS per source: cycles, " +
+      "self-loops, duplicate, null and absent sources, long and string ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val rnd = new Lcg(23L)
+    def brute(es: Seq[(Long, Long)], srcs: Seq[Long], maxHops: Int)
+        : Map[Long, (Long, Double)] = {
+      val nbrs = canon(es).toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupMap(_._1)(_._2)
+      srcs.distinct.flatMap { s =>
+        val dist = mutable.Map(s -> 0L)
+        var front = Seq(s)
+        for (h <- 1 to maxHops) {
+          front = front.flatMap(nbrs.getOrElse(_, Nil)).distinct
+            .filterNot(dist.contains)
+          front.foreach(dist(_) = h.toLong)
+        }
+        val far = dist.values.filter(_ > 0)
+        if (far.isEmpty) None
+        else Some(s -> (far.size.toLong, BigDecimal(far.map(1.0 / _).sum)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      }.toMap
+    }
+    def schema(src: DataType, nullable: Boolean) = StructType(Seq(
+      StructField("src", src, nullable),
+      StructField("n_reached", LongType, nullable = false),
+      StructField("harmonic", DoubleType, nullable = true)))
+    for (trial <- 1 to 2; maxHops <- Seq(1, 2, 20)) {
+      val n = 6 + rnd.next(8)
+      val es = randomGraph(rnd, n, 6 + rnd.next(14)) :+ ((1L, 1L))
+      // 99 is outside the graph; the first source comes twice
+      val srcs = Seq(rnd.next(n).toLong, rnd.next(n).toLong, 99L)
+      val want = brute(es, srcs, maxHops)
+      val sources = (srcs.head +: srcs).map(Option(_)) :+ None
+      val longs = GraphOps.harmonicCentrality(es.toDF("a", "b"), "a", "b",
+        sources.toDF("id"), maxHops)
+      assert(longs.schema == schema(LongType, nullable = true))
+      assert(longs.collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getDouble(2))).toMap == want,
+        s"trial $trial maxHops $maxHops: long ids")
+      val strs = GraphOps.harmonicCentrality(
+        es.map { case (a, b) => (s"v$a", s"v$b") }.toDF("a", "b"), "a", "b",
+        sources.map(_.map(v => s"v$v").orNull).toDF("id"), maxHops)
+      assert(strs.schema == schema(StringType, nullable = true))
+      assert(strs.collect().map(r => r.getString(0) ->
+          (r.getLong(1), r.getDouble(2))).toMap ==
+        want.map { case (s, v) => s"v$s" -> v },
+        s"trial $trial maxHops $maxHops: string ids")
+    }
+    // int sources over long edges keep their own type
+    val ints = GraphOps.harmonicCentrality(Seq((1L, 2L)).toDF("a", "b"), "a",
+      "b", Seq(1).toDF("id"), 1)
+    assert(ints.schema == schema(IntegerType, nullable = false))
+    assert(ints.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+      .toSeq == Seq((1, 1L, 1.0)))
+  }
+
   // ------------------------------------------ typed guards, kernel path
 
   private def chain(n: Long): DataFrame = {
@@ -625,17 +777,21 @@ class FixpointKernelSpec extends AnyFunSuite {
       writeTables(dir)
       // untagged jobs: the DataFrame work at the loop boundary — the
       // window that derives the nation chain of q170, q187 and g28, the
-      // joins and the sorted limit behind g07's co-supply edges and
-      // sources, and the k-trim of q170 and q188 after the σ DP. None
-      // of it grows with the round count; the kernel's own jobs, q170's
-      // DAG check and g07's BFS included, are all tagged.
+      // joins and the sorted limit behind the co-supply edges and
+      // sources of g05, g07, g14 and g25, and the k-trim of q170 and
+      // q188 after the σ DP. None of it grows with the round count; the
+      // kernel's own jobs, q170's DAG check, the BFS of g07 and g14 and
+      // the peel of g05 and g25 included, are all tagged.
       val setup = Map(
         "q187_dist_unbounded_witness" -> 1,
         "q188_dist_hetero_klevel_witness" -> 1,
         "q189_dist_allshortest_witness" -> 0,
         "q170_klevel_unanchored" -> 4,
         "g07_bfs_hops" -> 5,
-        "g28_sssp_routes" -> 1)
+        "g28_sssp_routes" -> 1,
+        "g05_kcore" -> 3,
+        "g14_harmonic" -> 6,
+        "g25_kcore_exact" -> 3)
       kernel {
         for ((name, maxUntagged) <- setup) {
           val build = () => SparkEntry.queries(name)(spark, dir.toString)

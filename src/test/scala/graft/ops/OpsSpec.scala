@@ -4264,6 +4264,27 @@ class OpsSpec extends AnyFunSuite {
     assert(GraphOps.kTrussExact(e, "a", "b", k = 5).count() == 0L)
   }
 
+  test("kTrussExact fails typed when maxRounds runs out before the fixpoint") {
+    // 11 nodes, 26 edges: the 4-truss peel drops 3, 3, 3, 2, 3 and 1
+    // edges, and a 7th round confirms the 11-edge truss (6 rounds reach
+    // it unconfirmed)
+    val e = Seq((0L, 2L), (0L, 3L), (0L, 5L), (0L, 7L), (0L, 8L), (1L, 10L),
+      (2L, 4L), (2L, 7L), (2L, 8L), (2L, 9L), (3L, 4L), (3L, 5L), (3L, 8L),
+      (3L, 9L), (3L, 10L), (4L, 7L), (4L, 9L), (4L, 10L), (5L, 6L), (5L, 7L),
+      (5L, 10L), (6L, 7L), (6L, 9L), (6L, 10L), (7L, 9L), (9L, 10L))
+      .toDF("a", "b")
+    for (rounds <- Seq(3, 6))
+      assert(intercept[GraphContractViolation](
+          GraphOps.kTrussExact(e, "a", "b", k = 4, maxRounds = rounds))
+        .getMessage == s"kTrussExact: peeling did not converge in $rounds " +
+        "rounds — raise maxRounds (each round drops only the edges left " +
+        "in fewer than k - 2 triangles)")
+    val truss = Seq((2L, 4L), (2L, 7L), (2L, 9L), (3L, 4L), (3L, 9L),
+      (3L, 10L), (4L, 7L), (4L, 9L), (4L, 10L), (7L, 9L), (9L, 10L))
+    assert(GraphOps.kTrussExact(e, "a", "b", k = 4, maxRounds = 7)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq == truss)
+  }
+
   test("tokenEntropy: uniform > repeated; empty is 0; known value") {
     val r = spark.range(1).select(
       round(TextOps.tokenEntropy(lit("a b a c")), 6).as("h"),
