@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -27,6 +28,8 @@ object Bench {
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the run's shape beside sf: priors come only from same-shape runs
+    val cpuCount = spark.sparkContext.defaultParallelism
 
     // JVM/codegen warmup on the smallest table so per-query numbers
     // measure the plan, not first-use JIT + classloading.
@@ -77,13 +80,17 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith)) }
+    // generated classes each query compiled in its last timed run
+    val codegenClasses = scala.collection.mutable.Map.empty[String, Long]
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def timeQuery(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       def one(): Double = {
-        val t0 = System.nanoTime()
+        val (t0, c0) = (System.nanoTime(), compiled())
         val ok = try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+        codegenClasses(name) = compiled() - c0
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       var times = (1 to runs).map(_ => one())
@@ -129,12 +136,15 @@ object Bench {
     // prior is the per-query MIN across the last several BENCH_FULL_*
     // artifacts (or SPARK_GRAFT_BENCH_PREV), so one inflated committed
     // artifact can't launder the next round's phantom through a raised
-    // baseline. SPARK_GRAFT_RETIME_FACTOR overrides the quiet factor
-    // (the loud tightening still applies).
+    // baseline; (d) only artifacts of the same run shape (sf directory
+    // and CPU count) are priors — a 4-CPU run read against 32-CPU
+    // priors re-timed nearly every query. SPARK_GRAFT_RETIME_FACTOR
+    // overrides the quiet factor (the loud tightening still applies).
     val quietFactor =
       sys.env.getOrElse("SPARK_GRAFT_RETIME_FACTOR", "2.0").toDouble
-    def parseQueries(p: java.nio.file.Path): Map[String, Double] = {
-      val line = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    def read(p: java.nio.file.Path): String =
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    def parseQueries(line: String): Map[String, Double] = {
       val m = java.util.regex.Pattern
         .compile("\"queries\":\\{([^}]*)\\}").matcher(line)
       if (!m.find()) Map.empty[String, Double]
@@ -157,8 +167,9 @@ object Bench {
       val recent = Option(new java.io.File(".").listFiles()).toSeq.flatten
         .filter(f => f.getName.startsWith("BENCH_FULL_") &&
           f.getName.endsWith(".json"))
-        .sortBy(-_.lastModified).take(6).map(_.toPath)
-      explicit.getOrElse(recent)
+        .sortBy(-_.lastModified).iterator.map(f => read(f.toPath))
+        .filter(sameShape(_, sfDir, cpuCount)).take(6).toSeq
+      explicit.map(_.map(read)).getOrElse(recent)
         .map(parseQueries)
         .foldLeft(Map.empty[String, Double]) { (acc, m) =>
           m.foldLeft(acc) { case (a, (k, v)) =>
@@ -228,7 +239,9 @@ object Bench {
       .mkString("{", ",", "}")
     val calibJson = calibSamples.map(v => f"$v%.3f").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val fullLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"fast_runs":$fastRuns,"fast_cutoff_sec":$fastCutoff%.1f,"agg":"min","calib_start":$calibStart%.3f,"calib_end":$calibEnd%.3f,"calib_samples":$calibJson,"calib_drift":$drift%.2f,"retimed":$retimedJson,"total_inflated":$stillInflated}"""
+    val codegenJson = results.map { case (k, _) =>
+      "\"" + k + "\":" + codegenClasses.getOrElse(k, 0L) }.mkString("{", ",", "}")
+    val fullLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"codegen_classes":$codegenJson,"sf":"$sfDir","cpus":$cpuCount,"runs":$runs,"fast_runs":$fastRuns,"fast_cutoff_sec":$fastCutoff%.1f,"agg":"min","calib_start":$calibStart%.3f,"calib_end":$calibEnd%.3f,"calib_samples":$calibJson,"calib_drift":$drift%.2f,"retimed":$retimedJson,"total_inflated":$stillInflated}"""
     println(fullLine)
     // The driver keeps only the last ~2000 chars of stdout; with 150+
     // queries the full line above no longer fits that tail (every
@@ -263,6 +276,19 @@ object Bench {
     if (inlined.length <= tailBudget) println(inlined)
     else println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"worst12":$worst,"agg":"min","calib_start":$calibStart%.3f,"calib_drift":$drift%.2f,"total_inflated":$stillInflated,"queries_inlined":false,"full":"$fullPath"}""")
     spark.stop()
+  }
+
+  /** Whether the bench artifact `line` was written by a run of the same
+   *  shape: its `sf` is `sf` and its `cpus` is `cpus`. An artifact
+   *  without a `cpus` field (written before it was recorded) is of
+   *  another shape. */
+  def sameShape(line: String, sf: String, cpus: Int): Boolean = {
+    def field(re: String) = {
+      val m = java.util.regex.Pattern.compile(re).matcher(line)
+      if (m.find()) Some(m.group(1)) else None
+    }
+    field("\"sf\":\"([^\"]*)\"").contains(sf) &&
+      field("\"cpus\":(\\d+)").contains(cpus.toString)
   }
 
   /**

@@ -46,6 +46,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    written and growing entry counts, plus one summed and one maxed
  *    per-entry measure.
  *
+ * Loops without a graph use the tagged job alone: the model loops of
+ * [[Similarity]] (k-means, power iteration, farthest-point picks)
+ * local-checkpoint their corpus in a first [[run]], then [[job]] once
+ * per round against a driver-held iterate.
+ *
  * Walks ([[walk]]) follow the same shape: parent entries are indexed
  * once per partition, each step shuffles only the rows still walking to
  * the index, and finished rows leave the loop.
@@ -260,10 +265,17 @@ object Fixpoint {
   }
 
   /** Local-checkpoints `rdd` and materializes it in ONE job tagged
-    * `tag`, returning `f` of each partition's rows. */
-  private def run[T, A: ClassTag](rdd: RDD[T], tag: String)(
+    * `tag` ([[job]]), returning `f` of each partition's rows. */
+  private[ops] def run[T, A: ClassTag](rdd: RDD[T], tag: String)(
       f: Iterator[T] => A): Array[A] = {
     rdd.localCheckpoint()
+    job(rdd, tag)(f)
+  }
+
+  /** ONE job over `rdd` carrying [[RoundProperty]] `tag`, returning `f`
+    * of each partition's rows. */
+  private[ops] def job[T, A: ClassTag](rdd: RDD[T], tag: String)(
+      f: Iterator[T] => A): Array[A] = {
     val sc = rdd.sparkContext
     val prev = sc.getLocalProperty(RoundProperty)
     sc.setLocalProperty(RoundProperty, tag)

@@ -298,6 +298,22 @@ object GraphOps {
         greatest(col("a"), col("b")).as("hi"))
       .distinct()
 
+  /** Both directions of every non-null, non-loop edge as (node, nbr),
+    * the ids cast to their common type and NOT deduped: the input of
+    * the kernel loops, whose graph build dedups each node's out-edges
+    * ([[peelGraph]], [[hops]]) without [[canonical]]'s shuffle. */
+  private def bothWays(edges: DataFrame, aCol: String, bCol: String)
+      : DataFrame = {
+    val ab = edges.select(col(aCol).as("a"), col(bCol).as("b"))
+    val t = Fixpoint.commonType(ab.schema("a").dataType,
+      ab.schema("b").dataType)
+    val e = ab.select(Fixpoint.castTo(ab, "a", t).as("a"),
+        Fixpoint.castTo(ab, "b", t).as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+    e.select(col("a").as("node"), col("b").as("nbr"))
+      .union(e.select(col("b").as("node"), col("a").as("nbr")))
+  }
+
   /** Both directions of the canonical undirected edge set as
     * (node, nbr) rows — still an edge LIST (2|E| slim rows), not
     * adjacency lists; no per-node collection anywhere. */
@@ -396,13 +412,13 @@ object GraphOps {
     out
   }
 
-  /** [[peel]] of the [[symmetric]] edges of [[canonical]], its (node,
+  /** [[peel]] of the undirected edges ([[bothWays]]), its (node,
     * remaining degree) rows as a (node, deg) frame. */
   private def core(name: String, edges: DataFrame, aCol: String,
       bCol: String, k: Int, peels: Int, maxRounds: Int)(
       diverged: => Nothing): (DataFrame, Boolean, Int) = {
     val spark = edges.sparkSession
-    val sym = symmetric(canonical(edges, aCol, bCol))
+    val sym = bothWays(edges, aCol, bCol)
     val (left, whole, last) = peel(name, peelGraph(name, Fixpoint.rows(sym,
       None).map(a => (a(0), a(1))), spark), None, k, peels, maxRounds)(diverged)
     (Fixpoint.frame(spark, left.map { case (n, d) => Row(n, d) },
@@ -830,7 +846,7 @@ object GraphOps {
                          sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val spark = edges.sparkSession
-    val sym = symmetric(canonical(edges, aCol, bCol))
+    val sym = bothWays(edges, aCol, bCol)
     val src = sources.toDF("node")
     val t = Fixpoint.commonType(sym.schema("node").dataType,
       src.schema("node").dataType)

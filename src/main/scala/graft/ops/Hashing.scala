@@ -26,6 +26,9 @@ object Hashing {
   def mulHash(id: Column): Column =
     (pmod(id.cast(LongType), lit(M)) * lit(C)) % lit(M)
 
+  /** [[mulHash]] of one id, for code outside a DataFrame plan. */
+  def mulHash(id: Long): Long = Math.floorMod(id, M) * C % M
+
   /** Run INDEPENDENT Spark actions from a small thread pool so one
     * job's tasks back-fill the executors another job's tail leaves
     * idle (guide §2.6 — Spark's scheduler happily runs several jobs in

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1258,66 +1259,192 @@ object Similarity {
     topKPerGroup(scored, "query_id", "neighbor_id", "cos_sim", k)
   }
 
+  /** A corpus row of the Spark-core model loops: its id, its vector
+    * as doubles (null for a null vector) and which elements are null
+    * (`nulls` is null when none is). */
+  private final case class Vec(id: Any, v: Array[Double],
+      nulls: Array[Boolean]) {
+    def len: Int = if (v == null) 0 else v.length
+    def has(i: Int): Boolean = nulls == null || !nulls(i)
+    /** The id as a long; a null id throws. */
+    def lid: Long = id.asInstanceOf[java.lang.Long].longValue
+  }
+
+  /** `df`'s (`id`, `vecCol`) rows as [[Vec]]s, the vector cast to
+    * `array<double>` by the plan. The loops' first job local-checkpoints
+    * it ([[Fixpoint.run]]), so every later round reads the checkpoint. */
+  private def vecs(df: DataFrame, id: Column, vecCol: String): RDD[Vec] =
+    df.select(id, col(vecCol).cast("array<double>")).rdd.map { r =>
+      if (r.isNullAt(1)) Vec(r.get(0), null, null)
+      else {
+        val xs = r.getSeq[java.lang.Double](1)
+        Vec(r.get(0), xs.map(x => if (x == null) 0.0 else x.doubleValue)
+          .toArray, if (xs.contains(null)) xs.map(_ == null).toArray else null)
+      }
+    }
+
+  /** Spark's `round(d, scale)` of a double: HALF_UP on its shortest
+    * decimal form; NaN and infinities pass through. */
+  private def roundHalfUp(d: Double, scale: Int): Double =
+    if (d.isNaN || d.isInfinite) d
+    else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+      .toDouble
+
+  private def boxed(d: Double): java.lang.Double = d
+
+  /** Per-dimension sums and counts of the non-null terms added, over as
+    * many dimensions as the longest vector [[touch]]ed. Each sum starts
+    * at 0.0 and adds its terms in order, as Spark's `sum` does. */
+  private final class DimSums extends Serializable {
+    var s = new Array[Double](0)
+    var n = new Array[Long](0)
+    def touch(len: Int): Unit = if (len > s.length) {
+      s = java.util.Arrays.copyOf(s, len)
+      n = java.util.Arrays.copyOf(n, len)
+    }
+    def add(i: Int, x: Double): Unit = { s(i) += x; n(i) += 1 }
+    /** Adds `p`'s non-null elements, each to its dimension. */
+    def addVec(p: Vec): DimSums = {
+      touch(p.len)
+      for (i <- 0 until p.len) if (p.has(i)) add(i, p.v(i))
+      this
+    }
+    def addAll(o: DimSums): DimSums = {
+      touch(o.s.length)
+      for (i <- o.s.indices) { s(i) += o.s(i); n(i) += o.n(i) }
+      this
+    }
+    /** Each dimension's mean (`avg`): null where no term was added. */
+    def means: Vec = Vec(null, Array.tabulate(s.length)(i =>
+        if (n(i) > 0) s(i) / n(i) else 0.0),
+      if (n.forall(_ > 0)) null else n.map(_ == 0))
+  }
+
+  /** `parts`' per-partition sums added in partition order. */
+  private def total(parts: Iterable[DimSums]): DimSums =
+    parts.foldLeft(new DimSums)(_ addAll _)
+
+  /** The first `k` of `it` in [[Hashing.mulHash]] order, then by id
+    * ([[seedCentroids]]' order), on a bounded heap. */
+  private def firstInHashOrder(it: Iterator[Vec], k: Int): Seq[Vec] = {
+    val ord = Ordering.by((p: Vec) => (Hashing.mulHash(p.lid), p.lid))
+    val heap = scala.collection.mutable.PriorityQueue.empty[Vec](ord)
+    it.foreach { p =>
+      if (heap.size < k) heap.enqueue(p)
+      else if (ord.lt(p, heap.head)) { heap.dequeue(); heap.enqueue(p) }
+    }
+    heap.toSeq.sorted(ord)
+  }
+
+  /** Σ `term(i)` over the `i < n` that `has(i)`, in order from 0.0 (as
+    * Spark's `sum`); null when there is no such `i`. */
+  private def sumTerms(n: Int, has: Int => Boolean)(term: Int => Double)
+      : java.lang.Double = {
+    var acc = 0.0
+    var any = false
+    var i = 0
+    while (i < n) {
+      if (has(i)) { acc += term(i); any = true }
+      i += 1
+    }
+    if (any) acc else null
+  }
+
+  /** `p`'s cluster among `cents` (null = dropped out) and its distance
+    * Σ StrictMath.pow(p_i − c_i, 2) over the non-null dims both have:
+    * the least distance rounded HALF_UP to 9 dp, a null one first (as
+    * SQL's ascending sort puts it), the smaller index on a tie; index
+    * -1 when `p` shares no dim with any centroid. */
+  private def nearest(p: Vec, cents: Array[Vec]): (Int, java.lang.Double) = {
+    var best = -1
+    var bestD: java.lang.Double = null
+    var bestKey: java.lang.Double = null
+    for (c <- cents.indices) {
+      val q = cents(c)
+      if (q != null && math.min(p.len, q.len) > 0) {
+        val d = sumTerms(math.min(p.len, q.len), i => p.has(i) && q.has(i))(
+          i => StrictMath.pow(p.v(i) - q.v(i), 2))
+        val key = if (d == null) null else boxed(roundHalfUp(d, 9))
+        if (best < 0 || (bestKey != null && (key == null ||
+            java.lang.Double.compare(key, bestKey) < 0))) {
+          best = c; bestD = d; bestKey = key
+        }
+      }
+    }
+    (best, bestD)
+  }
+
   /**
    * Oracle-mode Lloyd k-means: `iterations` rounds of
-   * assign-to-nearest + per-cluster mean, fully relational and
-   * engine-pinned — the verifiable twin of [[refineCentroids]] (whose
-   * native map-only assignment is the production path). Determinism
-   * contract (the [[topPcProjection]] trick): the argmin orders by the
-   * distance ROUNDED to 9 decimals with the centroid index as
-   * tie-break, and each round's centroids round to 6 — so a SQL engine
+   * assign-to-nearest + per-cluster mean, engine-pinned — the
+   * verifiable twin of [[refineCentroids]] (whose native map-only
+   * assignment is the production path). Determinism contract (the
+   * [[topPcProjection]] trick): a row's distance to a centroid is
+   * Σ `StrictMath.pow(x − c, 2)` (Spark's `pow`) over the dims both
+   * have, in dim order, skipping null elements; the argmin orders by
+   * that distance ROUNDED HALF_UP to 9 decimals with the centroid index
+   * as tie-break, and each round's centroid is `round(avg, 6)` per
+   * (cluster, dim) over the members' non-null values — so a SQL engine
    * reproduces every assignment and every centroid exactly. Seeds are
    * the hash-ordered corpus rows ([[seedCentroids]]' selection).
-   * Clusters that lose all members drop out (their dims vanish from
-   * the centroid frame), identically on both engines. Output:
-   * (idCol, cluster, dist) — final-round assignment with its squared
-   * L2 distance rounded to 6.
+   * Clusters that lose all members drop out, identically on both
+   * engines. Ids are unique and non-null. Output: (idCol, cluster,
+   * dist) — final-round assignment with its squared L2 distance rounded
+   * to 6.
    *
-   * Scale shape: the slim (row, dim, value) frame localCheckpoints
-   * once; each round is one broadcast join against the k·dims centroid
-   * frame, a partial-agg distance sum, a per-row argmin window, and a
-   * per-(cluster, dim) mean. k·|rows| intermediate rows per round —
-   * the relational cost of verifiability; swap in refineCentroids +
-   * native assignment when the oracle is not watching.
+   * Scale shape: the corpus enters the [[Fixpoint]] kernel once as an
+   * RDD of (id, `double[]`) rows, which the first job (the seeds: each
+   * partition's first k in hash order) local-checkpoints. The k·dims
+   * centroids live on the driver; each centroid update is ONE job that
+   * broadcasts them, assigns every row of a partition and returns only
+   * that partition's per-(cluster, dim) sums and counts. The final
+   * assignment is a map over the checkpoint behind `createDataFrame`,
+   * run by whatever reads the result. No round plans a DataFrame.
    */
   def kmeansAssign(df: DataFrame, vecCol: String, idCol: String, k: Int,
                    iterations: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = df.sparkSession
-    import spark.implicits._
-    val x = df.select(col(idCol).cast(LongType).as("__vid"),
-        posexplode(col(vecCol)).as(Seq("__i", "__v0")))
-      .select(col("__vid"), col("__i"), col("__v0").cast("double").as("__v"))
-      .localCheckpoint()
-    val seedIds = df.select(col(idCol).cast(LongType).as("i"))
-      .orderBy(Hashing.mulHash(col("i")), col("i")).limit(k)
-      .collect().map(_.getLong(0))
-    val seedDf = broadcast(seedIds.toIndexedSeq.zipWithIndex
-      .map { case (v, c) => (v, c.toLong) }.toDF("__vid", "__c"))
-    var cent = x.join(seedDf, Seq("__vid"))
-      .select(col("__c"), col("__i"), col("__v").as("__cv"))
-      .localCheckpoint()
-    var assign: DataFrame = null
-    for (it <- 1 to iterations) {
-      val d = x.join(broadcast(cent), Seq("__i"))
-        .groupBy(col("__vid"), col("__c"))
-        .agg(sum(pow(col("__v") - col("__cv"), 2)).as("__d"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__vid")).orderBy(round(col("__d"), 9), col("__c"))
-      assign = d.withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1)
-        .select(col("__vid"), col("__c"), col("__d"))
-        .localCheckpoint()
-      if (it < iterations)
-        cent = assign.join(x, Seq("__vid"))
-          .groupBy(col("__c"), col("__i"))
-          .agg(round(avg(col("__v")), 6).as("__cv"))
-          .localCheckpoint()
+    val id = col(idCol).cast(LongType)
+    val x = vecs(df, id, vecCol)
+    var cents = firstInHashOrder(Fixpoint.run(x, "kmeansAssign:0")(
+        firstInHashOrder(_, k)).iterator.flatten, k)
+      .map(p => if (p.len == 0) null else p).toArray
+    for (it <- 1 until iterations) {
+      val bc = spark.sparkContext.broadcast(cents)
+      val sums = Fixpoint.job(x, s"kmeansAssign:$it") { rows =>
+        val acc = Array.fill(bc.value.length)(new DimSums)
+        rows.foreach { p =>
+          val c = nearest(p, bc.value)._1
+          if (c >= 0) acc(c).addVec(p)
+        }
+        acc
+      }
+      bc.destroy()
+      cents = cents.indices.map { c =>
+        val m = total(sums.map(_(c))).means
+        if (m.len == 0) null
+        else m.copy(v = m.v.map(roundHalfUp(_, 6)))
+      }.toArray
     }
-    assign.select(col("__vid").as(idCol), col("__c").as("cluster"),
-      round(col("__d"), 6).as("dist"))
+    val bc = spark.sparkContext.broadcast(cents)
+    spark.createDataFrame(x.flatMap { p =>
+        val (c, d) = nearest(p, bc.value)
+        if (c < 0) None
+        else Some(Row(p.id, c.toLong,
+          if (d == null) null else boxed(roundHalfUp(d, 6))))
+      }, StructType(Seq(df.select(id).schema.head.copy(name = idCol),
+        StructField("cluster", LongType, nullable = false),
+        StructField("dist", DoubleType, nullable = true))))
   }
+
+  /** Σ (p_i − mu_i)·v_i over the non-null dims `p` and `v` both have;
+    * null when there is none. */
+  private def centeredDot(p: Vec, mu: Vec, v: Array[Double])
+      : java.lang.Double =
+    sumTerms(math.min(p.len, v.length), i => p.has(i) && mu.has(i))(
+      i => (p.v(i) - mu.v(i)) * v(i))
 
   /**
    * Projection of every vector onto the corpus's TOP PRINCIPAL
@@ -1328,55 +1455,63 @@ object Similarity {
    * (dims×dims would be fine; rows×dims certainly not):
    * each iteration computes `d_r = xc_r · v` per row, then
    * `s = Σ_r xc_r · d_r` per dimension, normalizes, and ROUNDS v to 6
-   * decimals — the rounding pins the iterate across engines and
-   * partitionings (same contract as the rank-key roundings), so the
+   * decimals (HALF_UP) — the rounding pins the iterate across engines
+   * and partitionings (same contract as the rank-key roundings), so the
    * DuckDB oracle reproduces the projection bit-for-bit at 1e-6.
-   * Start vector = 1/√dims per dim (fixed, unseeded).
+   * Start vector = 1/√dims per dim (fixed, unseeded), dims the first
+   * row's length. Null elements drop out of every sum. Ids are unique.
    *
-   * Scale shape: the slim (row, dim, value) frame is localCheckpointed
-   * once and feeds every pass; per-iteration work is one broadcast
-   * join against the 64-double iterate (model-sized driver collect per
-   * iteration, the centroid-collect contract), one partial-aggregated
-   * per-row sum and one per-dim sum. Output: (idCol, pc1), pc1
-   * rounded to 6.
+   * Scale shape: the corpus enters the [[Fixpoint]] kernel once as an
+   * RDD of (id, `double[]`) rows; the first job local-checkpoints it
+   * and returns each partition's per-dim sums and counts (the mean).
+   * The 64-double iterate lives on the driver; each iteration is ONE
+   * job that broadcasts it, folds every row of a partition into `s` and
+   * returns only that partition's per-dim partial. The projection is a
+   * map over the checkpoint behind `createDataFrame`. Output:
+   * (idCol, pc1), pc1 rounded to 6.
    */
   def topPcProjection(df: DataFrame, vecCol: String, idCol: String,
                       iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = df.sparkSession
-    import spark.implicits._
-    val dims = df.select(size(col(vecCol)).as("d")).head().getInt(0)
-    require(dims >= 1, s"empty vectors in $vecCol")
-    val x = df.select(col(idCol).as("__vid"),
-        posexplode(col(vecCol)).as(Seq("__i", "__v0")))
-      .select(col("__vid"), col("__i"), col("__v0").cast("double").as("__v"))
-    val mu = x.groupBy(col("__i")).agg(avg(col("__v")).as("__m"))
-    val xc = x.join(mu, Seq("__i"))
-      .select(col("__vid"), col("__i"), (col("__v") - col("__m")).as("__v"))
-      .localCheckpoint()
-    var v: Array[Double] = Array.fill(dims)(1.0 / math.sqrt(dims.toDouble))
-    for (_ <- 1 to iterations) {
-      val vDf = broadcast(v.toIndexedSeq.zipWithIndex
-        .map { case (vi, i) => (i, vi) }.toDF("__i", "__vi"))
-      val d = xc.join(vDf, Seq("__i"))
-        .groupBy(col("__vid"))
-        .agg(sum(col("__v") * col("__vi")).as("__d"))
-      // 64 doubles to the driver per iteration (model-sized)
-      val s = xc.join(d, Seq("__vid"))
-        .groupBy(col("__i")).agg(sum(col("__v") * col("__d")).as("__s"))
-        .orderBy(col("__i"))
-        .collect().map(_.getDouble(1))
-      val nrm = math.sqrt(s.map(e => e * e).sum)
-      require(nrm > 0.0, "degenerate corpus: zero-variance along iterate")
-      // HALF_UP (away from zero) to match Spark's and DuckDB's round()
-      v = s.map(e => BigDecimal(e / nrm)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    val x = vecs(df, col(idCol), vecCol)
+    val first = Fixpoint.run(x, "topPcProjection:0") { rows =>
+      val head = rows.nextOption()
+      (head.map(p => if (p.v == null) -1 else p.len),
+        (head.iterator ++ rows).foldLeft(new DimSums)(_ addVec _))
     }
-    val vDf = broadcast(v.toIndexedSeq.zipWithIndex
-      .map { case (vi, i) => (i, vi) }.toDF("__i", "__vi"))
-    xc.join(vDf, Seq("__i"))
-      .groupBy(col("__vid").as(idCol))
-      .agg(round(sum(col("__v") * col("__vi")), 6).as("pc1"))
+    val dims = first.flatMap(_._1).headOption.getOrElse(-1)
+    require(dims >= 1, s"empty vectors in $vecCol")
+    val mu = total(first.map(_._2)).means
+    var v: Array[Double] = Array.fill(dims)(1.0 / math.sqrt(dims.toDouble))
+    for (it <- 1 to iterations) {
+      val bc = spark.sparkContext.broadcast((mu, v))
+      val s = total(Fixpoint.job(x, s"topPcProjection:$it") { rows =>
+        val (mu, v) = bc.value
+        val acc = new DimSums
+        rows.foreach { p =>
+          acc.touch(p.len)
+          val d = centeredDot(p, mu, v)
+          if (d != null) for (i <- 0 until p.len)
+            if (p.has(i) && mu.has(i)) acc.add(i, (p.v(i) - mu.v(i)) * d)
+        }
+        acc
+      })
+      bc.destroy()
+      require(s.n.forall(_ > 0),
+        "degenerate corpus: a dimension has no non-null term")
+      // 64 doubles to the driver per iteration (model-sized)
+      val nrm = math.sqrt(s.s.map(e => e * e).sum)
+      require(nrm > 0.0, "degenerate corpus: zero-variance along iterate")
+      v = s.s.map(e => roundHalfUp(e / nrm, 6))
+    }
+    val bc = spark.sparkContext.broadcast((mu, v))
+    spark.createDataFrame(x.flatMap { p =>
+        if (p.len == 0) None
+        else Some(Row(p.id, Option(centeredDot(p, bc.value._1, bc.value._2))
+          .map(d => boxed(roundHalfUp(d, 6))).orNull))
+      }, StructType(Seq(df.select(col(idCol)).schema.head.copy(name = idCol),
+        StructField("pc1", DoubleType, nullable = true))))
   }
 
   /**
@@ -1526,12 +1661,17 @@ object Similarity {
    * round to 9 dp and ties break on the smaller id, so every pick is
    * reproducible cross-engine (the [[kmeansAssign]] trick).
    *
-   * Scale: per round, ONE map-side pass scores the corpus against the
-   * \u2264 k broadcast chosen vectors and a 1-row argmax collects \u2014 k
-   * model-sized collects total, the corpus never shuffles. The
-   * min-distance column could carry over between rounds (each round
-   * only mins against the ONE new point); recomputing against \u2264 k
-   * points keeps the loop stateless, and k is small by contract.
+   * Scale shape: the corpus enters the [[Fixpoint]] kernel once as an
+   * RDD of (id, `double[]`) rows, which the first job (the seed: each
+   * partition's first row in hash order) local-checkpoints. The chosen
+   * points live on the driver; each round is ONE job that broadcasts
+   * them, scores every unchosen row of a partition against all of them
+   * and returns only that partition's farthest row — k jobs in all, and
+   * the corpus never shuffles. The min-distance could carry over
+   * between rounds (each round only mins against the ONE new point);
+   * recomputing against \u2264 k points keeps the loop stateless, and k is
+   * small by contract. Ids are unique and non-null; a k past the row
+   * count fails.
    *
    * Output: (sel_idx, vec_id) \u2014 selection order, k rows.
    */
@@ -1540,31 +1680,69 @@ object Similarity {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val base = corpus.select(col(idCol).cast(LongType).as("__vid"),
-      col(vecCol).cast("array<double>").as("__v"))
-    val seed = base
-      .orderBy(Hashing.mulHash(col("__vid")), col("__vid"))
-      .limit(1).collect()(0)
-    var chosen = Vector[(Long, Seq[Double])](
-      (seed.getLong(0), seed.getSeq[Double](1)))
+    val x = vecs(corpus, col(idCol).cast(LongType), vecCol)
+    // Spark's `ORDER BY d DESC, id`: a null distance last, NaN first
+    def before(a: (Vec, java.lang.Double), b: (Vec, java.lang.Double)) =
+      if (a._2 == null) b._2 == null && a._1.lid < b._1.lid
+      else b._2 == null || {
+        val c = java.lang.Double.compare(a._2, b._2)
+        c > 0 || c == 0 && a._1.lid < b._1.lid
+      }
+    def exhausted(n: Int) = new IllegalArgumentException(
+      s"farthestPoints: k = $k exceeds the corpus's $n rows")
+    var chosen = firstInHashOrder(Fixpoint.run(x, "farthestPoints:0")(
+      firstInHashOrder(_, 1)).iterator.flatten, 1).toVector
+    if (chosen.isEmpty) throw exhausted(0)
     while (chosen.length < k) {
-      val chosenDf = broadcast(chosen.map(_._2).zipWithIndex
-        .map { case (v, i) => (i, v) }.toDF("__ci", "__cv"))
-      val dTo = (v: Column, c: Column) =>
-        round(dotD(v, v) - lit(2.0) * dotD(v, c) + dotD(c, c), 9)
-      val next = base
-        .join(broadcast(chosen.map(_._1).toDF("__vid")), Seq("__vid"),
-          "left_anti")
-        .crossJoin(chosenDf)
-        .groupBy(col("__vid")).agg(min(dTo(col("__v"), col("__cv")))
-          .as("__d"), first(col("__v")).as("__v"))
-        .orderBy(col("__d").desc, col("__vid"))
-        .limit(1).collect()(0)
-      chosen = chosen :+ ((next.getLong(0), next.getSeq[Double](2)))
+      val bc = spark.sparkContext.broadcast(chosen)
+      val next = Fixpoint.job(x, s"farthestPoints:${chosen.length}") { rows =>
+        val ids = bc.value.map(_.lid).toSet
+        var best: (Vec, java.lang.Double) = null
+        rows.foreach { p =>
+          if (!ids(p.lid)) {
+            val cand = (p, minDist(p, bc.value))
+            if (best == null || before(cand, best)) best = cand
+          }
+        }
+        Option(best)
+      }
+      bc.destroy()
+      chosen :+= next.flatten.reduceOption((a, b) => if (before(b, a)) b else a)
+        .getOrElse(throw exhausted(chosen.length))._1
     }
-    chosen.map(_._1).zipWithIndex
+    chosen.map(_.lid).zipWithIndex
       .map { case (id, i) => (i.toLong, id) }
       .toDF("sel_idx", "vec_id")
+  }
+
+  /** [[dotD]] of two vectors: null when either is null, their lengths
+    * differ or a product is null; else the left-to-right sum from 0.0. */
+  private def dotVec(a: Vec, b: Vec): java.lang.Double =
+    if (a.v == null || b.v == null || a.len != b.len) null
+    else {
+      var acc = 0.0
+      var i = 0
+      while (i < a.len && a.has(i) && b.has(i)) {
+        acc += a.v(i) * b.v(i); i += 1
+      }
+      if (i < a.len) null else acc
+    }
+
+  /** `p`'s least distance to `chosen`, each `v·v − 2v·c + c·c` rounded
+    * HALF_UP to 9 dp; null distances drop out, and null when all do. */
+  private def minDist(p: Vec, chosen: Seq[Vec]): java.lang.Double = {
+    val vv = dotVec(p, p)
+    var best: java.lang.Double = null
+    chosen.foreach { c =>
+      val vc = dotVec(p, c)
+      val cc = dotVec(c, c)
+      if (vv != null && vc != null && cc != null) {
+        val d = roundHalfUp(vv.doubleValue - 2.0 * vc.doubleValue +
+          cc.doubleValue, 9)
+        if (best == null || java.lang.Double.compare(d, best) < 0) best = d
+      }
+    }
+    best
   }
 
   /**

@@ -89,4 +89,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.inflationContributors(results, prev, 10) ==
       Seq("big", "mid", "small"))
   }
+
+  test("priors come only from artifacts of the same sf and CPU count") {
+    val line = """{"metric":"total","value":1.0,"unit":"sec",""" +
+      """"queries":{"q01":0.5},"codegen_classes":{"q01":12},""" +
+      """"sf":"/data/sf0.1","cpus":4,"runs":2}"""
+    assert(Bench.sameShape(line, "/data/sf0.1", 4))
+    assert(!Bench.sameShape(line, "/data/sf0.1", 32))
+    assert(!Bench.sameShape(line, "/data/sf0.01", 4))
+    // an artifact from before the CPU count was recorded is another shape
+    val old = """{"metric":"total","queries":{"q01":0.5},"sf":"/data/sf0.1","runs":2}"""
+    assert(!Bench.sameShape(old, "/data/sf0.1", 4))
+    assert(!Bench.sameShape(old, "/data/sf0.1", 32))
+  }
 }

@@ -789,9 +789,9 @@ class FixpointKernelSpec extends AnyFunSuite {
         "q170_klevel_unanchored" -> 4,
         "g07_bfs_hops" -> 5,
         "g28_sssp_routes" -> 1,
-        "g05_kcore" -> 3,
-        "g14_harmonic" -> 6,
-        "g25_kcore_exact" -> 3)
+        "g05_kcore" -> 2,
+        "g14_harmonic" -> 5,
+        "g25_kcore_exact" -> 2)
       kernel {
         for ((name, maxUntagged) <- setup) {
           val build = () => SparkEntry.queries(name)(spark, dir.toString)
@@ -807,6 +807,38 @@ class FixpointKernelSpec extends AnyFunSuite {
             s"$name: ${tags.size - tagged.size} untagged jobs beside " +
             s"${tagged.mkString(", ")}")
         }
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
+        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+    }
+  }
+
+  test("the model loops launch one tagged job per round: s20, s22, s28") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_model_jobs")
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val rnd = new scala.util.Random(7)
+      (0 until 40).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat())))
+        .toDF("vec_id", "embedding")
+        .write.parquet(dir.resolve("embeddings.parquet").toString)
+      // the seed or mean job (`:0`), then one job per centroid update
+      // (s22's 2 assign rounds update once), power iteration (s20: 2) or
+      // further pick (s28: 4 after the seed), and no other job: the last
+      // assignment and the projection run when the result is read
+      val rounds = Map(
+        "s20_pca_project" -> Seq("topPcProjection:0", "topPcProjection:1",
+          "topPcProjection:2"),
+        "s22_kmeans" -> Seq("kmeansAssign:0", "kmeansAssign:1"),
+        "s28_farthest_points" -> (0 until 5).map(r => s"farthestPoints:$r"))
+      for ((name, want) <- rounds) {
+        val build = () => SparkEntry.queries(name)(spark, dir.toString)
+        build() // warm-up: the first read of each table lists its files
+        val tags = jobs.during(build())
+        assert(tags == want, s"$name: jobs $tags")
       }
     } finally {
       spark.sparkContext.removeSparkListener(jobs)
