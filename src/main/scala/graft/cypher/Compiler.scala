@@ -220,12 +220,13 @@ object Compiler {
    *  witness arrays widen every row by full-entity structs per hop, so
    *  they are materialized only for these (a generic product walk over
    *  the whole AST, so WHERE / projections / lambdas / CALL bodies all
-   *  count). */
-  private def witnessNeeds(x: Any): Set[String] = {
+   *  count). With `rels`, only those whose relationships it reads:
+   *  through relationships(), or carried whole. */
+  private def witnessNeeds(x: Any, rels: Boolean = false): Set[String] = {
     val out = scala.collection.mutable.Set[String]()
     def walk(v: Any): Unit = v match {
       case Func(n, args) =>
-        if (n == "nodes" || n == "relationships")
+        if (n == "relationships" || n == "nodes" && !rels)
           args match { case Seq(Ref(a, None)) => out += a; case _ => }
         args.foreach(walk)
       // a bare variable carried through a projection (`WITH p`): if it
@@ -2723,6 +2724,7 @@ object Compiler {
     // paths read through nodes()/relationships() anywhere in the query
     // get witness arrays materialized at MATCH time
     val witnessVars = witnessNeeds(sq)
+    val relVars = witnessNeeds(sq, rels = true)
     sq.parts.zipWithIndex.foreach { case (part, i) =>
       val isLast = i == sq.parts.size - 1
       val scope = ctx.map(_.scope).getOrElse(inherited)
@@ -2733,7 +2735,7 @@ object Compiler {
       // the ordinary branch union; the incoming frame (if any) can
       // anchor-seed a reach endpoint whose variable it already binds
       val (msH, catH) = HopPred.rewrite(part.matches, catalog)
-      val (ms, cat) = Reach.rewrite(msH, catH, ctx, witnessVars)
+      val (ms, cat) = Reach.rewrite(msH, catH, ctx, witnessVars, relVars)
       val afterMatch0: Option[Ctx] =
         if (ms.isEmpty) ctx
         else if (!VarLength.hasVarLength(ms) &&

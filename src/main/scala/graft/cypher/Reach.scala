@@ -200,10 +200,15 @@ private[cypher] object Reach {
     * the analyzer then binds the path var to the min-distance column
     * ([[isDistRel]]). `outer` (the incoming frame, when the clause
     * follows a WITH or correlates an EXISTS) enables piped-frame anchor
-    * seeding. No-op (same instances) when nothing is unbounded. */
+    * seeding. `witnessVars` are the path variables the query reads
+    * through `nodes()`/`relationships()` or as a whole; `relVars`, those
+    * of them whose relationships it reads (`relationships(p)` or `p`):
+    * only their reach frames resolve hop rows. No-op (same instances)
+    * when nothing is unbounded. */
   def rewrite(matches: Seq[MatchClause], catalog: GraphCatalog,
               outer: Option[Compiler.Ctx] = None,
-              witnessVars: Set[String] = Set.empty)
+              witnessVars: Set[String] = Set.empty,
+              relVars: Set[String] = Set.empty)
       : (Seq[MatchClause], GraphCatalog) = {
     if (!hasUnbounded(matches)) return (matches, catalog)
     val extra = Vector.newBuilder[(EdgeDef, DataFrame)]
@@ -255,18 +260,19 @@ private[cypher] object Reach {
           // nodes(p) over an unbounded shortestPath (round 13): the
           // BFS additionally records one PARENT pointer per pair
           // (first-discovery predecessor, min-id tie-break) and a
-          // driver loop bounded by the maximum DISTANCE — never the
-          // path count — walks the pointers back into one witness
-          // id array per pair, converted to the canonical node-struct
-          // array by a single posexplode + node join + re-collect.
-          // allShortestPaths (round 14) records ALL min-distance
-          // parents instead and the walk enumerates every minimal
-          // path — σ distinct witness rows per pair.
+          // pointer walk bounded by the maximum DISTANCE — never the
+          // path count — walks them back into one witness id array per
+          // pair, resolved into node structs on the kernel
+          // ([[witnessFrame]]). allShortestPaths (round 14) records ALL
+          // min-distance parents instead and the walk enumerates every
+          // minimal path — σ distinct witness rows per pair.
           // round 16 (VERDICT-r15 #2): k > 1 selectors now carry
           // witnesses too, via the per-level multi-parent walk
           val wantWitness =
             (pp.shortest || pp.allShortest || selK.isDefined) &&
               pp.pathVar.exists(witnessVars)
+          // hop rows resolve only when the query reads them
+          val needRels = wantWitness && pp.pathVar.exists(relVars)
           val rels2 = pp.rels.zipWithIndex.map { case (r, i) =>
             if (!isUnbounded(r)) r
             else {
@@ -375,21 +381,21 @@ private[cypher] object Reach {
                         case c => col(c)
                       }: _*))
                   val base =
-                    if (effSel.isDefined && wantWitness) {
-                      // k-level witnesses (round 16; VERDICT-r15 #2):
-                      // per-level parent sets + σ-fold walk
-                      val (kind, k) = effSel.get
-                      val w = witnessKReach(edf, e,
+                    if (wantWitness) {
+                      // `<-` patterns: path order runs against the
+                      // edge orientation — both arrays come out reversed
+                      // so nodes(p)/relationships(p) read pattern order
+                      val (paths, t) = witnessPaths(e.srcIdColumn,
+                        e.sinkIdColumn,
                         () => seedFor(m.where, srcPat.alias, node,
                           catalog, outer),
                         () => seedFor(m.where, dstPat.alias, node,
-                          catalog, outer),
-                        node, catalog.nodeDf(e.fromLabel),
-                        kind, k, minLen)
-                      if (r.dir == Direction.In)
-                        w.withColumn("__nodes", reverse(col("__nodes")))
-                          .withColumn("__rels", reverse(col("__rels")))
-                      else w
+                          catalog, outer))(
+                        walkWitnesses(edf, _, _, _, effSel,
+                          pp.allShortest, minLen, dagProven = false))
+                      witnessFrame(paths, t, homoDims(node,
+                          catalog.nodeDf(e.fromLabel), edf, e, t, needRels),
+                        reversed = r.dir == Direction.In)
                     }
                     else if (effSel.isDefined) {
                       // k-level lowering (round 15): σ DP, GQL row
@@ -413,26 +419,6 @@ private[cypher] object Reach {
                           minLen = minLen))
                       if (needDist) out else out.drop("__dist")
                     }
-                    else if (wantWitness) {
-                      val fwd = () => seedFor(m.where, srcPat.alias,
-                        node, catalog, outer)
-                      val rev = () => seedFor(m.where, dstPat.alias,
-                        node, catalog, outer)
-                      val w =
-                        if (pp.allShortest)
-                          witnessAllReach(edf, e, fwd, rev, node,
-                            catalog.nodeDf(e.fromLabel))
-                        else witnessReach(edf, e, fwd, rev,
-                          node, catalog.nodeDf(e.fromLabel),
-                          needRels = true)
-                      // `<-` patterns: path order runs against the
-                      // edge orientation — reverse both arrays so
-                      // nodes(p)/relationships(p) read pattern order
-                      if (r.dir == Direction.In)
-                        w.withColumn("__nodes", reverse(col("__nodes")))
-                          .withColumn("__rels", reverse(col("__rels")))
-                      else w
-                    }
                     else computeReach(edf, e.srcIdColumn, e.sinkIdColumn,
                       () => seedFor(m.where, srcPat.alias, node, catalog,
                         outer),
@@ -455,18 +441,13 @@ private[cypher] object Reach {
                   // the σ DP over the tagged union frame — the packed
                   // (ordinal, id) keys compose, the DP never reads
                   // the id content
-                  val (b0, fl, tl) = stratifiedReach(defs, verb, srcPat,
+                  stratifiedReach(defs, verb, srcPat,
                     dstPat, m.where, catalog, outer, needDist,
-                    pp.allShortest, wantWitness,
+                    pp.allShortest, wantWitness, needRels,
                     allowIdentity = r.varLength.exists(_._1 == 0),
                     selector = effSel, minLen = minLen,
-                    undirected = r.dir == Direction.Both)
-                  val b =
-                    if (wantWitness && r.dir == Direction.In)
-                      b0.withColumn("__nodes", reverse(col("__nodes")))
-                        .withColumn("__rels", reverse(col("__rels")))
-                    else b0
-                  (b, fl, tl)
+                    undirected = r.dir == Direction.Both,
+                    reversed = r.dir == Direction.In)
                 }
               // [*0..] (round 10): the REFLEXIVE closure — every node
               // of the (shared) endpoint label reaches itself by the
@@ -514,15 +495,16 @@ private[cypher] object Reach {
                         }, "relationship definition")
                       val own =
                         (node.idColumn +: node.properties).distinct.toSet
-                      ndf.select(idc.as("__src"), idc.as("__dst"),
+                      ndf.select(Seq(idc.as("__src"), idc.as("__dst"),
                         array(struct(nFields.map { f =>
                           (if (own(f.name)) col(f.name)
                            else lit(null).cast(f.dataType)).as(f.name)
                         }: _*))
                           .cast(ArrayType(StructType(nFields),
-                            containsNull = true)).as("__nodes"),
-                        array().cast(ArrayType(StructType(rFields),
-                          containsNull = true)).as("__rels"))
+                            containsNull = true)).as("__nodes")) ++
+                        (if (!needRels) Nil
+                         else Seq(array().cast(ArrayType(StructType(rFields),
+                           containsNull = true)).as("__rels"))): _*)
                     } else if (wantWitness) {
                       val e0 = catalog.graph.edgesByVerb(verb).head
                       val edf0 = catalog.edgeDf(e0)
@@ -531,11 +513,12 @@ private[cypher] object Reach {
                       val relT = ArrayType(StructType(eCols.map(c2 =>
                         StructField(c2, edf0.schema(c2).dataType))),
                         containsNull = true)
-                      ndf.select(idc.as("__src"), idc.as("__dst"),
+                      ndf.select(Seq(idc.as("__src"), idc.as("__dst"),
                         array(witnessElem(node, ndf))
                           .cast(witnessArrayType(node, ndf))
-                          .as("__nodes"),
-                        array().cast(relT).as("__rels"))
+                          .as("__nodes")) ++
+                        (if (!needRels) Nil
+                         else Seq(array().cast(relT).as("__rels"))): _*)
                     }
                     else ndf.select(idc.as("__src"), idc.as("__dst"))
                   val ident =
@@ -549,8 +532,8 @@ private[cypher] object Reach {
               val synth = EdgeDef(synthVerb, fromL, toL,
                 "__src", "__dst",
                 (if (needDist) Seq("__dist") else Seq.empty) ++
-                  (if (wantWitness) Seq("__nodes", "__rels")
-                   else Seq.empty),
+                  (if (wantWitness) Seq("__nodes") else Seq.empty) ++
+                  (if (needRels) Seq("__rels") else Seq.empty),
                 s"__reach_${id}_$verb")
               extra += ((synth, reach2))
               // an undirected pattern's reach frame is symmetrized
@@ -773,59 +756,17 @@ private[cypher] object Reach {
     expanded
   }
 
-  /** Witness accessors under `SHORTEST k` / `GROUPS` / `ANY k`, k > 1,
-    * over an unbounded range (round 16; VERDICT-r15 #2): the k-level
-    * DP keeps per-level parent SETS (distance × branching, never path
-    * count), the trim keys on (pair, length) before expansion, and a
-    * multi-parent pointer walk enumerates each kept level's paths —
-    * σ rows per (pair, length), every row carrying its own __nodes /
-    * __rels arrays (the q153/q163 machinery generalized to k kept
-    * levels). Parallel relationships multiply rows (identical node
-    * arrays, the q158 row-multiplicity contract); non-GROUPS kinds
-    * cap at k paths per pair after enumeration (deterministic
-    * (length, id-array) order). */
-  private def witnessKReach(edf: DataFrame, e: EdgeDef,
-      fwdSeeds: () => Option[DataFrame],
-      revSeeds: () => Option[DataFrame],
-      node: NodeDef, ndf: DataFrame, kind: String, k: Int,
-      minLen: Int): DataFrame = {
-    val (srcC, dstC) = (e.srcIdColumn, e.sinkIdColumn)
-    def run(sc: String, dc: String, sd: Option[DataFrame], rev: Boolean)
-        : DataFrame = {
-      val (levels, parentsOpt, bound) =
-        kLevelLevels(edf, sc, dc, sd, kind, k, withParents = true)
-      val eligible =
-        if (minLen <= 1) levels
-        else levels.where(col("__dist") >= minLen)
-      val chosen = kLevelTrim(eligible, kind, k).localCheckpoint(false)
-      val ids0 = kLevelWalk(chosen, parentsOpt.get, bound, kind, k)
-      val ids =
-        if (!rev) ids0
-        else ids0.select(col("__dst").as("__src"),
-          col("__src").as("__dst"), col("__dist"), col("__pi"),
-          reverse(col("__wids")).as("__wids"))
-      widsToNodesRels(ids, node, ndf, edf, e, perWitness = true,
-          extraKeys = Seq("__pi"))
-        .drop("__wids", "__pi")
-    }
-    fwdSeeds().map(sd => run(srcC, dstC, Some(sd), rev = false))
-      .orElse(revSeeds().map(sd => run(dstC, srcC, Some(sd), rev = true)))
-      .getOrElse(run(srcC, dstC, None, rev = false))
-  }
-
   /** Multi-parent pointer walk over the k-level parent sets: each
     * chosen (pair, length) row walks back level by level — the lookup
     * keys on (src, cur, REMAINING distance), so a node reached at
     * several distances never mixes levels — multiplying by the
     * branching and the per-hop parallel-edge multiplicity (σ-fold,
-    * guarded per step). Emits one row per enumerated path with its
-    * full id array and a per-path discriminator __pi (identical
-    * arrays from parallel edges stay distinct rows). */
+    * guarded per step). One path per enumeration (identical id arrays
+    * from parallel edges stay separate paths); non-GROUPS kinds keep
+    * the k first paths per pair in (length, id array) order. */
   private[cypher] def kLevelWalk(chosen: DataFrame, parents: DataFrame,
-      bound: Long, kind: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      bound: Long, kind: String, k: Int): Rows[WitnessPath] = {
     val spark = chosen.sparkSession
-    val elemT = chosen.schema("__dst").dataType
     val full = driverOrWalk(parents, chosen) { driver =>
       // finished and parent-less rows pass through
       val start = Fixpoint.rows(
@@ -837,7 +778,7 @@ private[cypher] object Reach {
       val par = Fixpoint.rows(parents.select(col("__ps"), col("__pn"),
           col("__pd"), col("__pp"), col("__pm")), driver)
         .map(a => ((a(0), a(1), a(2)): Any, (a(3), a(4).asInstanceOf[Long])))
-      val walked = Fixpoint.walk("kLevelWalk", start, par, spark, from = 0)(
+      Fixpoint.walk("kLevelWalk", start, par, spark, from = 0)(
         w => if (w.rem >= 1) (w.src, w.cur, w.rem) else null,
         _.dist) { (w, ps) =>
           if (ps == null) Iterator.single(w)
@@ -851,27 +792,19 @@ private[cypher] object Reach {
               s"k-level witnesses: the path expansion hit $n rows at " +
               s"step $step (bound maxClosureRows=$bound). Narrow the " +
               s"anchor, or raise $MaxClosureRowsConf deliberately.")
-        }
-      Fixpoint.frame(spark, walked.map(w => Row(w.src, w.dst, w.dist, w.ids)),
-        StructType(Seq(
-          StructField("__src", chosen.schema("__src").dataType),
-          StructField("__dst", elemT),
-          StructField("__dist", LongType),
-          StructField("__wids", ArrayType(elemT, containsNull = true)))))
+        }.map(w => WitnessPath(w.src, w.dst, w.dist, w.ids))
     }
-    val capped = kind match {
+    kind match {
       case "groups" | WalkKind => full
       case _ =>
         // k first paths per pair: ascending (length, id array) — the
         // enumeration equivalent of the trim's cumulative take
-        val w = Window.partitionBy("__src", "__dst")
-          .orderBy(col("__dist"), col("__wids"))
-        full.withColumn("__prk", row_number().over(w))
-          .where(col("__prk") <= k).drop("__prk")
+        Fixpoint.regroup(full.map(p => ((p.src, p.dst): Any, p)), spark) {
+          (_, ps) => ps.sortWith((a, b) => a.dist < b.dist ||
+            a.dist == b.dist && Fixpoint.compareIdSeqs(a.ids, b.ids) < 0)
+            .take(k)
+        }
     }
-    capped.withColumn("__pi", row_number().over(
-      Window.partitionBy("__src", "__dst", "__dist")
-        .orderBy(col("__wids"))))
   }
 
   /** Reverse BFS output → forward orientation: an R-path d→x over
@@ -927,72 +860,121 @@ private[cypher] object Reach {
     (node.idColumn +: node.properties).distinct
       .map(c => StructField(c, ndf.schema(c).dataType))
 
-  private def witnessArrayType(node: NodeDef, ndf: DataFrame): ArrayType =
+  private[cypher] def witnessArrayType(node: NodeDef, ndf: DataFrame): ArrayType =
     ArrayType(StructType(witnessFields(node, ndf)), containsNull = true)
 
-  private def witnessElem(node: NodeDef, ndf: DataFrame): Column =
+  private[cypher] def witnessElem(node: NodeDef, ndf: DataFrame): Column =
     struct(witnessFields(node, ndf).map(f => col(f.name).as(f.name)): _*)
 
-  /** Witness-bearing reach (round 13): the pair frame plus `__dist`,
-    * a `__nodes` array and (when `needRels`) a `__rels` array — ONE
-    * shortest path per pair, rebuilt from the BFS's per-pair parent
-    * pointers. The driver loop walking the pointers runs
-    * max-distance−1 iterations (path LENGTH, never path count); the
-    * struct conversions are one posexplode + node/edge join + ordered
-    * re-collect each, Σ path-length rows total. Arrays come out in
-    * EDGE-path order — the caller reverses for `<-` patterns. */
-  private def witnessReach(edf: DataFrame, e: EdgeDef,
-      fwdSeeds: () => Option[DataFrame],
-      revSeeds: () => Option[DataFrame],
-      node: NodeDef, ndf: DataFrame, needRels: Boolean): DataFrame = {
-    val (srcC, dstC) = (e.srcIdColumn, e.sinkIdColumn)
-    def run(sc: String, dc: String, sd: Option[DataFrame], rev: Boolean)
-        : DataFrame = {
-      val pairs = reachablePairs(edf, sc, dc, seeds = sd,
+  /** One walked witness path: its pair, its length and its ids, the
+    * source first. */
+  private[cypher] final case class WitnessPath(src: Any, dst: Any,
+      dist: Long, ids: List[Any])
+
+  /** The witness paths of one unbounded rel and their id type: walked
+    * from the source anchor, else from the destination anchor over
+    * reversed edges (each path then turned back into edge order: an
+    * R-path seed→x is an E-path x→seed), else from every source.
+    * `walk(srcCol, dstCol, seeds)` walks one orientation. */
+  private def witnessPaths(srcC: String, dstC: String,
+      fwdSeeds: () => Option[DataFrame], revSeeds: () => Option[DataFrame])(
+      walk: (String, String, Option[DataFrame]) =>
+        (Rows[WitnessPath], DataType)): (Rows[WitnessPath], DataType) =
+    fwdSeeds().map(sd => walk(srcC, dstC, Some(sd)))
+      .orElse(revSeeds().map { sd =>
+        val (ps, t) = walk(dstC, srcC, Some(sd))
+        (ps.map(p => WitnessPath(p.dst, p.src, p.dist, p.ids.reverse)), t)
+      })
+      .getOrElse(walk(srcC, dstC, None))
+
+  /** The witness walk of one path form over `edges` from `seeds`, and
+    * its id type:
+    *  - a k-level selector (round 16; VERDICT-r15 #2): the σ DP keeps
+    *    per-level parent SETS (distance × branching, never path count),
+    *    the trim keys on (pair, length), and [[kLevelWalk]] enumerates
+    *    each kept level's paths — σ rows per (pair, length);
+    *  - allShortestPaths (round 14): the BFS records ALL min-distance
+    *    parents and [[reconstructAllWitnessIds]] enumerates every
+    *    minimal path;
+    *  - shortestPath (round 13): ONE shortest path per pair, rebuilt
+    *    from the BFS's per-pair parent pointers
+    *    ([[reconstructWitnessIds]]). */
+  private def walkWitnesses(edges: DataFrame, sc: String, dc: String,
+      seeds: Option[DataFrame], selector: Option[(String, Int)],
+      allShortest: Boolean, minLen: Int, dagProven: Boolean)
+      : (Rows[WitnessPath], DataType) = selector match {
+    case Some((kind, k)) =>
+      val (levels, parents, bound) = kLevelLevels(edges, sc, dc, seeds,
+        kind, k, withParents = true, dagProven = dagProven)
+      val eligible =
+        if (minLen <= 1) levels
+        else levels.where(col("__dist") >= minLen)
+      val chosen = kLevelTrim(eligible, kind, k).localCheckpoint(false)
+      (kLevelWalk(chosen, parents.get, bound, kind, k),
+        chosen.schema("__src").dataType)
+    case None if allShortest =>
+      val (pairs, parents, bound) = allParentsPairs(edges, sc, dc, seeds)
+      (reconstructAllWitnessIds(pairs, parents, bound),
+        pairs.schema("__src").dataType)
+    case None =>
+      val pairs = reachablePairs(edges, sc, dc, seeds = seeds,
         withDist = true, withParent = true)
-      val ids0 = reconstructWitnessIds(pairs)
-      // reversed BFS: an R-path seed→x over reversed edges is an
-      // E-path x→seed — swap the pair AND reverse the node order
-      val ids =
-        if (!rev) ids0
-        else ids0.select(col("__dst").as("__src"),
-          col("__src").as("__dst"), col("__dist"),
-          reverse(col("__wids")).as("__wids"))
-      if (!needRels) widsToNodes(ids, node, ndf)
-      else widsToNodesRels(ids, node, ndf, edf, e)
-    }
-    fwdSeeds().map(sd => run(srcC, dstC, Some(sd), rev = false))
-      .orElse(revSeeds().map(sd => run(dstC, srcC, Some(sd), rev = true)))
-      .getOrElse(run(srcC, dstC, None, rev = false))
+      (reconstructWitnessIds(pairs), pairs.schema("__src").dataType)
   }
 
-  /** allShortestPaths witnesses over an unbounded range (round 14):
-    * the BFS records ALL min-distance parents per pair — bounded by
-    * distance × branching at the min layer, never path count — and
-    * the pointer walk then enumerates every minimal path (the walk's
-    * multi-parent join IS the σ-fold expansion, guarded per step).
-    * Each witness row keys on its OWN id array, so σ distinct
-    * (nodes, rels) rows come out per pair. */
-  private def witnessAllReach(edf: DataFrame, e: EdgeDef,
-      fwdSeeds: () => Option[DataFrame],
-      revSeeds: () => Option[DataFrame],
-      node: NodeDef, ndf: DataFrame): DataFrame = {
-    val (srcC, dstC) = (e.srcIdColumn, e.sinkIdColumn)
-    def run(sc: String, dc: String, sd: Option[DataFrame], rev: Boolean)
-        : DataFrame = {
-      val (pairs, parents, bound) = allParentsPairs(edf, sc, dc, sd)
-      val ids0 = reconstructAllWitnessIds(pairs, parents, bound)
-      val ids =
-        if (!rev) ids0
-        else ids0.select(col("__dst").as("__src"),
-          col("__src").as("__dst"), col("__dist"),
-          reverse(col("__wids")).as("__wids"))
-      widsToNodesRels(ids, node, ndf, edf, e, perWitness = true)
-        .drop("__wids")
-    }
-    fwdSeeds().map(sd => run(srcC, dstC, Some(sd), rev = false))
-      .orElse(revSeeds().map(sd => run(dstC, srcC, Some(sd), rev = true)))
-      .getOrElse(run(srcC, dstC, None, rev = false))
+  /** The dimension rows witness ids resolve against, shaped once by
+    * Catalyst: (key, element) node rows and, when relationships are
+    * read, (source key, destination key, element) hop rows — each with
+    * its element array type. */
+  private[cypher] final case class WitnessDims(nodes: DataFrame, nodeT: ArrayType,
+      hops: Option[(DataFrame, ArrayType)])
+
+  /** `c` as a key of the walk's id type `t`: an id that `t` cannot hold
+    * becomes null, which matches no walk id. */
+  private def idKey(df: DataFrame, c: String, t: DataType): Column =
+    if (df.schema(c).dataType == t) col(c) else col(c).try_cast(t)
+
+  /** A homogeneous chain's witness dimensions: the node table in the
+    * canonical element shape, the edge table in its DECLARED column
+    * order (entityCols' shape) — struct casts are positional, so the
+    * identity branch and bounded witnesses must agree field for
+    * field. */
+  private[cypher] def homoDims(node: NodeDef, ndf: DataFrame, edf: DataFrame,
+      e: EdgeDef, t: DataType, needRels: Boolean): WitnessDims = {
+    val eCols = (Seq(e.srcIdColumn, e.sinkIdColumn) ++ e.properties).distinct
+    WitnessDims(
+      ndf.select(idKey(ndf, node.idColumn, t).as("__k"),
+        witnessElem(node, ndf).as("__e")),
+      witnessArrayType(node, ndf),
+      if (!needRels) None
+      else Some((edf.select(idKey(edf, e.srcIdColumn, t).as("__hs"),
+          idKey(edf, e.sinkIdColumn, t).as("__hd"),
+          struct(eCols.map(col): _*).as("__e")),
+        ArrayType(StructType(eCols.map(c =>
+          StructField(c, edf.schema(c).dataType))), containsNull = true))))
+  }
+
+  /** Witness paths as reach rows (__src, __dst, __dist, __nodes[,
+    * __rels]), each path its own row: its ids resolve on the kernel
+    * ([[graft.ops.Fixpoint.resolve]]) — an id without a node row gives
+    * an element of null fields, parallel edges the least hop struct, and
+    * a hop whose successor id is null no element. `reversed` (a `<-`
+    * pattern, whose path runs against the edge orientation) reverses
+    * both arrays, so nodes(p)/relationships(p) read pattern order. */
+  private[cypher] def witnessFrame(paths: Rows[WitnessPath], t: DataType,
+      dims: WitnessDims, reversed: Boolean): DataFrame = {
+    val spark = dims.nodes.sparkSession
+    def order(es: Seq[Row]) = if (reversed) es.reverse else es
+    Fixpoint.frame(spark,
+      Fixpoint.resolve(paths, spark)(_.ids)(dims.nodes, dims.hops.map(_._1))
+        .map { case (p, ns, hs) =>
+          Row.fromSeq(Seq(p.src, p.dst, p.dist, order(ns)) ++
+            dims.hops.map(_ => order(hs)))
+        },
+      StructType(Seq(StructField("__src", t), StructField("__dst", t),
+        StructField("__dist", LongType),
+        StructField("__nodes", dims.nodeT, nullable = false)) ++
+        dims.hops.map(h => StructField("__rels", h._2, nullable = false))))
   }
 
   /** BFS recording ALL first-discovery parents per pair: (pairs with
@@ -1036,7 +1018,7 @@ private[cypher] object Reach {
     * (the reconstructWitnessIds walk over an all-parents frame — each
     * step multiplies a row by its node's parents, guarded per step). */
   private[cypher] def reconstructAllWitnessIds(pairs: DataFrame,
-      parents: DataFrame, bound: Long): DataFrame =
+      parents: DataFrame, bound: Long): Rows[WitnessPath] =
     driverOrWalk(parents, pairs) { driver =>
       // a pair row starts UNSTARTED (no ids yet) and its first step is
       // the inner join onto the pair's own parents; every later step
@@ -1047,7 +1029,7 @@ private[cypher] object Reach {
       val par = Fixpoint.rows(
           parents.select(col("__ps"), col("__pd"), col("__pp")), driver)
         .map(a => ((a(0), a(1)): Any, a(2)))
-      witnessFrame(pairs, Fixpoint.walk("allWalk", start, par,
+      Fixpoint.walk("allWalk", start, par,
           pairs.sparkSession, from = 0)(
         w => if (w.ids.isEmpty) (w.src, w.dst)
              else if (w.cur == w.src) null
@@ -1065,7 +1047,7 @@ private[cypher] object Reach {
               s"allShortestPaths witnesses: the path expansion hit $n rows " +
               s"at step $step (bound maxClosureRows=$bound). Narrow the " +
               s"anchor, or raise $MaxClosureRowsConf deliberately.")
-        })
+        }.map(walked)
     }
 
   /** One row of a pointer walk: the pair and its distance, the
@@ -1074,19 +1056,10 @@ private[cypher] object Reach {
   private final case class Walker(src: Any, dst: Any, dist: Long,
       rem: Long, cur: Any, ids: List[Any])
 
-  /** A finished single/all-parents walk as (__src, __dst, __dist,
-    * __wids) rows, the source prepended to each id array. */
-  private def witnessFrame(pairs: DataFrame, walked: Rows[Walker])
-      : DataFrame = {
-    val dstT = pairs.schema("__dst").dataType
-    Fixpoint.frame(pairs.sparkSession,
-      walked.map(w => Row(w.src, w.dst, w.dist, w.src :: w.ids)),
-      StructType(Seq(
-        StructField("__src", pairs.schema("__src").dataType),
-        StructField("__dst", dstT),
-        StructField("__dist", LongType),
-        StructField("__wids", ArrayType(dstT, containsNull = true)))))
-  }
+  /** A finished single/all-parents walk as a path, the source
+    * prepended to its ids. */
+  private def walked(w: Walker): WitnessPath =
+    WitnessPath(w.src, w.dst, w.dist, w.src :: w.ids)
 
   /** Parent-pointer walk: (src, dst, dist, par) pair rows → the full
     * witness id array [src, …, dst] per pair. A pair at distance k
@@ -1094,13 +1067,14 @@ private[cypher] object Reach {
     * ([[graft.ops.Fixpoint.walk]]: one job per step on the cluster;
     * in driver memory when the pair frame, which is also the parent
     * map, is admitted). */
-  private[cypher] def reconstructWitnessIds(pairs: DataFrame): DataFrame =
+  private[cypher] def reconstructWitnessIds(pairs: DataFrame)
+      : Rows[WitnessPath] =
     driverOrWalk(pairs) { driver =>
       val in = Fixpoint.rows(pairs.select(col("__src"), col("__dst"),
         col("__dist"), col("__par")), driver)
       val start = in.map(a =>
         Walker(a(0), a(1), a(2).asInstanceOf[Long], 0L, a(3), a(1) :: Nil))
-      witnessFrame(pairs, Fixpoint.walk("walk", start,
+      Fixpoint.walk("walk", start,
           in.map(a => ((a(0), a(1)): Any, a(3))), pairs.sparkSession,
           from = 1)(
         w => if (w.cur == w.src) null else (w.src, w.cur),
@@ -1108,97 +1082,8 @@ private[cypher] object Reach {
           if (ps == null) // a parent-less pointer: the left-join miss
             Iterator.single(w.copy(cur = null, ids = w.cur :: w.ids))
           else ps.iterator.map(pp => w.copy(cur = pp, ids = w.cur :: w.ids))
-        } { (_, _) => () })
+        } { (_, _) => () }.map(walked)
     }
-
-  /** Witness id array → the canonical node-struct array: posexplode
-    * the positions, join the node table ONCE, re-collect in order. */
-  private def widsToNodes(ids: DataFrame, node: NodeDef, ndf: DataFrame,
-      perWitness: Boolean = false, extraKeys: Seq[String] = Seq.empty)
-      : DataFrame = {
-    // perWitness (round 14): each enumerated minimal path keys on its
-    // own id array, so σ distinct witness rows per pair survive the
-    // re-collect instead of collapsing to one. extraKeys (round 16):
-    // a per-path discriminator — identical id arrays from
-    // parallel-edge multiplicity stay distinct rows.
-    val keys = Seq("__src", "__dst", "__dist") ++
-      (if (perWitness) Seq("__wids") else Seq.empty) ++ extraKeys
-    val cols = (node.idColumn +: node.properties).distinct
-    val ex = ids.select(keys.map(col) :+
-      posexplode(col("__wids")).as(Seq("__pos", "__wid")): _*)
-    val nslim = ndf.select(cols.map(col): _*)
-    ex.join(nslim, ex("__wid") === nslim(node.idColumn), "left")
-      .select(keys.map(col) :+
-        struct(col("__pos"), witnessElem(node, ndf).as("__e"))
-          .as("__pe"): _*)
-      .groupBy(keys.map(col): _*)
-      .agg(transform(sort_array(collect_list(col("__pe"))),
-        x => x.getField("__e")).as("__nodes0"))
-      .select(keys.map(col) :+
-        col("__nodes0").cast(witnessArrayType(node, ndf))
-          .as("__nodes"): _*)
-  }
-
-  /** One-pass witness resolution (optimization round 16): the nodes
-    * AND rels arrays from a SINGLE posexplode + two dimension joins +
-    * one grouped re-collect. The previous split shape (widsToNodes ⋈
-    * a widsToRels twin) exploded the same ids frame twice,
-    * re-aggregated twice and then sort-merge-joined the halves on the
-    * ARRAY-typed witness key — two extra exchanges plus two wide
-    * array sorts per witness query (guide §2.4: remove shuffles
-    * outright). Here each position row left-joins its node; positions
-    * with a successor also left-join their hop edge ((cur, next)
-    * pair — a hop with no surviving edge row keeps the all-null
-    * element, and parallel (src, snk) edges keep the deterministic
-    * min-property-struct pick via the per-position pre-aggregation);
-    * one final groupBy collects both ordered arrays. Value-identical
-    * to the join of the split halves (unit-pinned). Zero-hop identity
-    * rows never reach here (spliced separately), so every id array
-    * has ≥ 2 elements and the rels array is never empty. */
-  private def widsToNodesRels(ids: DataFrame, node: NodeDef,
-      ndf: DataFrame, edf: DataFrame, e: EdgeDef,
-      perWitness: Boolean = false,
-      extraKeys: Seq[String] = Seq.empty): DataFrame = {
-    val keys = Seq("__src", "__dst", "__dist") ++
-      (if (perWitness) Seq("__wids") else Seq.empty) ++ extraKeys
-    val nCols = (node.idColumn +: node.properties).distinct
-    val (srcC, dstC) = (e.srcIdColumn, e.sinkIdColumn)
-    // the DECLARED column order (entityCols' shape) — struct casts
-    // are positional, so the ident branch and bounded witnesses must
-    // agree field-for-field
-    val eCols = (Seq(srcC, dstC) ++ e.properties).distinct
-    val relT = ArrayType(StructType(eCols.map(c =>
-      StructField(c, edf.schema(c).dataType))), containsNull = true)
-    // one explode: each position carries its node id and (0-based,
-    // null past the end — `get`, not ANSI element_at) its successor
-    val ex = ids.select(keys.map(col) ++ Seq(col("__wids").as("__w0")) :+
-        posexplode(col("__wids")).as(Seq("__pos", "__wid")): _*)
-      .select(keys.map(col) ++ Seq(col("__pos"), col("__wid"),
-        get(col("__w0"), col("__pos") + lit(1)).as("__nxt")): _*)
-    val nslim = ndf.select(nCols.map(col): _*)
-    // edge columns renamed so node/edge property names can never
-    // collide in the combined row
-    val eslim = edf.select(eCols.map(c => col(c).as(s"__er_$c")): _*)
-    val estruct = struct(eCols.map(c => col(s"__er_$c").as(c)): _*)
-    val perPos = ex
-      .join(nslim, ex("__wid") === nslim(node.idColumn), "left")
-      .join(eslim, col("__wid") === col(s"__er_$srcC") &&
-        col("__nxt") === col(s"__er_$dstC"), "left")
-      .groupBy((keys :+ "__pos").map(col): _*)
-      .agg(first(struct(col("__pos"),
-          witnessElem(node, ndf).as("__e"))).as("__pn"),
-        min(when(col("__nxt").isNotNull, estruct)).as("__em"),
-        first(col("__nxt").isNotNull).as("__hasHop"))
-    perPos.groupBy(keys.map(col): _*)
-      .agg(transform(sort_array(collect_list(col("__pn"))),
-          x => x.getField("__e")).as("__nodes0"),
-        transform(sort_array(collect_list(when(col("__hasHop"),
-            struct(col("__pos"), col("__em").as("__e"))))),
-          x => x.getField("__e")).as("__rels0"))
-      .select(keys.map(col) ++ Seq(
-        col("__nodes0").cast(witnessArrayType(node, ndf)).as("__nodes"),
-        col("__rels0").cast(relT).as("__rels")): _*)
-  }
 
   /**
    * Heterogeneous unbounded chain (round 10): when a verb's edge
@@ -1229,8 +1114,9 @@ private[cypher] object Reach {
       srcPat: NodePat, dstPat: NodePat, where: Option[Expr],
       catalog: GraphCatalog, outer: Option[Compiler.Ctx],
       needDist: Boolean, allShortest: Boolean, wantWitness: Boolean,
-      allowIdentity: Boolean, selector: Option[(String, Int)], minLen: Int,
-      undirected: Boolean): (DataFrame, String, String) = {
+      needRels: Boolean, allowIdentity: Boolean,
+      selector: Option[(String, Int)], minLen: Int, undirected: Boolean,
+      reversed: Boolean): (DataFrame, String, String) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
       ShortType, StringType}
     val shape = defs.map(d => s"${d.fromLabel}→${d.toLabel}")
@@ -1316,6 +1202,48 @@ private[cypher] object Reach {
         sd.select(tag(label, col(sd.columns.head)).as("__seed")))
     val sT = catalog.nodeDf(srcLabel).schema(sNode.idColumn).dataType
     val dT = catalog.nodeDf(dstLabel).schema(dNode.idColumn).dataType
+    // schema-sized Kahn peel over the LABEL graph: acyclic labels
+    // prove the instance graph is a DAG, so the k-level DP skips its
+    // data-level cycle check (round 16 — the whole-graph peel over the
+    // tagged union was the dominant fixed cost here)
+    lazy val labelDagProven = {
+      var le = lEdges.toSet
+      var changed = true
+      while (changed && le.nonEmpty) {
+        val dsts = le.map(_._2)
+        val drop = le.filterNot(x => dsts.contains(x._1))
+        changed = drop.nonEmpty
+        le --= drop
+      }
+      le.isEmpty
+    }
+    val (sOrd, dOrd) = (ordinals(srcLabel), ordinals(dstLabel))
+    if (wantWitness) {
+      // heterogeneous unbounded witnesses (round 14): the SAME walks as
+      // the homogeneous path, run over the tagged union frame — the
+      // tagged id IS the per-wave label, so each witness element and
+      // each traversed hop resolves against its OWN table. Element
+      // shapes follow pathShapes' bounded-witness rule: the union of
+      // the participating labels'/defs' fields, null-filled where a
+      // label/def lacks one. allShortestPaths (round 15) and k > 1
+      // selectors (round 16) walk every enumerated path.
+      val (paths, t) = witnessPaths("__src", "__dst",
+        () => taggedSeeds(srcPat.alias, sNode, srcLabel),
+        () => taggedSeeds(dstPat.alias, dNode, dstLabel))(
+        walkWitnesses(union, _, _, _, selector, allShortest, minLen,
+          labelDagProven))
+      // only paths between the pattern's endpoint labels resolve
+      def label(id: Any) = id.asInstanceOf[Row].getInt(0)
+      val ends = paths.flatMap(p =>
+        if (label(p.src) == sOrd && label(p.dst) == dOrd) Some(p) else None)
+      val w = witnessFrame(ends, t,
+        heteroDims(defs, ordinals, idT, catalog, needRels), reversed)
+      val out = w.select(Seq(w("__src")("i").cast(sT).as("__src"),
+          w("__dst")("i").cast(dT).as("__dst"), col("__dist"),
+          col("__nodes")) ++
+        (if (needRels) Seq(col("__rels")) else Nil): _*)
+      return (out, srcLabel, dstLabel)
+    }
     // k > 1 selectors over the tagged union (round 16; VERDICT-r15
     // #4): the σ DP runs over packed (ordinal, id) keys unchanged —
     // the DAG guard, the multiplicity seeding and the k-trim never
@@ -1323,60 +1251,6 @@ private[cypher] object Reach {
     // the ordinary stratified tail
     if (selector.isDefined) {
       val (kind, k) = selector.get
-      // schema-sized Kahn peel over the LABEL graph: acyclic labels
-      // prove the instance graph is a DAG, so the k-level DP skips
-      // its data-level cycle check (round 16 — the whole-graph peel
-      // over the tagged union was the dominant fixed cost here)
-      val labelDagProven = {
-        var le = lEdges.toSet
-        var changed = true
-        while (changed && le.nonEmpty) {
-          val dsts = le.map(_._2)
-          val drop = le.filterNot(x => dsts.contains(x._1))
-          changed = drop.nonEmpty
-          le --= drop
-        }
-        le.isEmpty
-      }
-      if (wantWitness) {
-        // hetero k-level WITNESSES (round 16): the kLevelWalk over
-        // tagged parent sets — each enumerated path's tagged ids
-        // resolve to their OWN tables through the merged-shape
-        // converters, exactly the allShortest hetero posture with the
-        // per-path __pi discriminator
-        def run(sc: String, dc: String, sd: Option[DataFrame],
-            rev: Boolean): DataFrame = {
-          val (levels, parentsOpt, bound) =
-            kLevelLevels(union, sc, dc, sd, kind, k, withParents = true,
-              dagProven = labelDagProven)
-          val eligible =
-            if (minLen <= 1) levels
-            else levels.where(col("__dist") >= minLen)
-          val chosen = kLevelTrim(eligible, kind, k)
-            .localCheckpoint(false)
-          val ids0 = kLevelWalk(chosen, parentsOpt.get, bound, kind, k)
-          val ids =
-            if (!rev) ids0
-            else ids0.select(col("__dst").as("__src"),
-              col("__src").as("__dst"), col("__dist"), col("__pi"),
-              reverse(col("__wids")).as("__wids"))
-          heteroWidsToNodesRels(ids, defs, ordinals, idT, catalog,
-              perWitness = true, extraKeys = Seq("__pi"))
-            .drop("__wids", "__pi")
-        }
-        val t = taggedSeeds(srcPat.alias, sNode, srcLabel)
-          .map(sd => run("__src", "__dst", Some(sd), rev = false))
-          .orElse(taggedSeeds(dstPat.alias, dNode, dstLabel)
-            .map(sd => run("__dst", "__src", Some(sd), rev = true)))
-          .getOrElse(run("__src", "__dst", None, rev = false))
-        val out = t
-          .where(t("__src")("l") === lit(ordinals(srcLabel)) &&
-            t("__dst")("l") === lit(ordinals(dstLabel)))
-          .select(t("__src")("i").cast(sT).as("__src"),
-            t("__dst")("i").cast(dT).as("__dst"),
-            col("__dist"), col("__nodes"), col("__rels"))
-        return (out, srcLabel, dstLabel)
-      }
       val tagged = taggedSeeds(srcPat.alias, sNode, srcLabel)
         .map(sd => kLevelReach(union, "__src", "__dst", Some(sd),
           kind, k, dagProven = labelDagProven, minLen = minLen))
@@ -1387,60 +1261,12 @@ private[cypher] object Reach {
         .getOrElse(kLevelReach(union, "__src", "__dst", None, kind, k,
           dagProven = labelDagProven, minLen = minLen))
       val out = tagged
-        .where(tagged("__src")("l") === lit(ordinals(srcLabel)) &&
-          tagged("__dst")("l") === lit(ordinals(dstLabel)))
+        .where(tagged("__src")("l") === lit(sOrd) &&
+          tagged("__dst")("l") === lit(dOrd))
         .select(Seq(
           tagged("__src")("i").cast(sT).as("__src"),
           tagged("__dst")("i").cast(dT).as("__dst")) ++
           (if (needDist) Seq(col("__dist")) else Seq.empty): _*)
-      return (out, srcLabel, dstLabel)
-    }
-    if (wantWitness) {
-      // heterogeneous unbounded witnesses (round 14): the SAME
-      // parent-pointer BFS as the homogeneous path, run over the
-      // tagged union frame — the tagged id IS the per-wave label, so
-      // each witness element and each traversed hop joins back to its
-      // OWN table. Element shapes follow pathShapes' bounded-witness
-      // rule: the union of the participating labels'/defs' fields,
-      // null-filled where a label/def lacks one. Round 15 (VERDICT-r14
-      // #5): allShortestPaths composes — the tagged MULTI-parent BFS
-      // (allParentsPairs, the q153 machinery over tagged ids) plus the
-      // σ-fold pointer walk, each witness row keyed on its own id
-      // array (perWitness grouping) so σ distinct (nodes, rels) rows
-      // come out per pair.
-      def run(sc: String, dc: String, sd: Option[DataFrame],
-          rev: Boolean): DataFrame = {
-        val ids0 =
-          if (allShortest) {
-            val (pairs, parents, bound) = allParentsPairs(union, sc, dc, sd)
-            reconstructAllWitnessIds(pairs, parents, bound)
-          } else {
-            val pairs = reachablePairs(union, sc, dc, seeds = sd,
-              withDist = true, withParent = true)
-            reconstructWitnessIds(pairs)
-          }
-        val ids =
-          if (!rev) ids0
-          else ids0.select(col("__dst").as("__src"),
-            col("__src").as("__dst"), col("__dist"),
-            reverse(col("__wids")).as("__wids"))
-        if (allShortest)
-          heteroWidsToNodesRels(ids, defs, ordinals, idT, catalog,
-            perWitness = true).drop("__wids")
-        else
-          heteroWidsToNodesRels(ids, defs, ordinals, idT, catalog)
-      }
-      val t = taggedSeeds(srcPat.alias, sNode, srcLabel)
-        .map(sd => run("__src", "__dst", Some(sd), rev = false))
-        .orElse(taggedSeeds(dstPat.alias, dNode, dstLabel)
-          .map(sd => run("__dst", "__src", Some(sd), rev = true)))
-        .getOrElse(run("__src", "__dst", None, rev = false))
-      val out = t
-        .where(t("__src")("l") === lit(ordinals(srcLabel)) &&
-          t("__dst")("l") === lit(ordinals(dstLabel)))
-        .select(t("__src")("i").cast(sT).as("__src"),
-          t("__dst")("i").cast(dT).as("__dst"),
-          col("__dist"), col("__nodes"), col("__rels"))
       return (out, srcLabel, dstLabel)
     }
     val tagged = computeReach(union, "__src", "__dst",
@@ -1465,7 +1291,7 @@ private[cypher] object Reach {
 
   /** Merged (name → type) field universe with pathShapes' mixing rule:
     * a field stored as different types in two members is typed. */
-  private def mergeFields(fss: Seq[Seq[StructField]], what: String)
+  private[cypher] def mergeFields(fss: Seq[Seq[StructField]], what: String)
       : Seq[StructField] = {
     val out = scala.collection.mutable.LinkedHashMap[String, DataType]()
     fss.flatten.foreach { f =>
@@ -1482,90 +1308,49 @@ private[cypher] object Reach {
     out.iterator.map { case (n, t) => StructField(n, t) }.toSeq
   }
 
-  /** Tagged witness id array → node-struct array over the MERGED
-    * label namespace: one union of tagged node slims, one join, one
-    * ordered re-collect (the widsToNodes shape, heterogeneous). */
-  /** One-pass HETEROGENEOUS witness resolution (optimization round
-    * 16; the [[widsToNodesRels]] shape over tagged ids): each tagged
-    * position row left-joins the union of tagged node slims, the
-    * positions with a successor also left-join the union of tagged
-    * edge slims (the tag pair identifies the def — an edge key under
-    * one verb is unique per label pair; parallel edges keep the
-    * min-struct determinism via the per-position pre-aggregation),
-    * and one final groupBy collects both ordered merged-shape arrays.
-    * Replaces the split nodes ⋈ rels twin that sort-merge-joined the
-    * halves on the array-typed witness key. perWitness: each witness
-    * row keys on its OWN id array so σ rows per pair stay distinct;
-    * extraKeys — the per-path discriminator for identical arrays from
-    * parallel-edge multiplicity. */
-  private def heteroWidsToNodesRels(ids: DataFrame, defs: Seq[EdgeDef],
-      ordinals: Map[String, Int], idT: DataType,
-      catalog: GraphCatalog, perWitness: Boolean = false,
-      extraKeys: Seq[String] = Seq.empty): DataFrame = {
+  /** A heterogeneous chain's witness dimensions over the MERGED label
+    * namespace: the union of tagged node rows and, when relationships
+    * are read, of tagged edge rows (the tag pair identifies the def — an
+    * edge key under one verb is unique per label pair), each element
+    * null-filled where its label or def lacks a field. */
+  private[cypher] def heteroDims(defs: Seq[EdgeDef], ordinals: Map[String, Int],
+      idT: DataType, catalog: GraphCatalog, needRels: Boolean)
+      : WitnessDims = {
+    def tag(l: String, c: String) =
+      struct(lit(ordinals(l)).as("l"), col(c).cast(idT).as("i"))
+    def elem(fs: Seq[StructField], own: Set[String]) =
+      struct(fs.map { f =>
+        (if (own(f.name)) col(f.name)
+         else lit(null).cast(f.dataType)).as(f.name) }: _*)
     val labels = ordinals.keys.toSeq.sorted
     val nFields = mergeFields(labels.map { l =>
       val nd = catalog.graph.node(l)
       val sch = catalog.nodeDf(l).schema
       (nd.idColumn +: nd.properties).distinct.map(c => sch(c))
     }, "node label")
-    val nodeT = ArrayType(StructType(nFields), containsNull = true)
-    val taggedNodes = labels.map { l =>
+    val nodes = labels.map { l =>
       val nd = catalog.graph.node(l)
-      val ndf = catalog.nodeDf(l)
-      val own = (nd.idColumn +: nd.properties).distinct.toSet
-      ndf.select(
-        struct(lit(ordinals(l)).as("l"),
-          col(nd.idColumn).cast(idT).as("i")).as("__nwid"),
-        struct(nFields.map { f =>
-          (if (own(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name) }: _*).as("__ne"))
+      catalog.nodeDf(l).select(tag(l, nd.idColumn).as("__k"),
+        elem(nFields, (nd.idColumn +: nd.properties).toSet).as("__e"))
     }.reduce(_ unionByName _)
-    val rFields = mergeFields(defs.sortBy(_.key).map { e =>
-      val sch = catalog.edgeDf(e).schema
-      (Seq(e.srcIdColumn, e.sinkIdColumn) ++ e.properties).distinct
-        .map(c => sch(c))
-    }, "relationship definition")
-    val relT = ArrayType(StructType(rFields), containsNull = true)
-    val taggedEdges = defs.map { e =>
-      val edf = catalog.edgeDf(e)
-      val own =
-        (Seq(e.srcIdColumn, e.sinkIdColumn) ++ e.properties).distinct.toSet
-      edf.select(
-        struct(lit(ordinals(e.fromLabel)).as("l"),
-          col(e.srcIdColumn).cast(idT).as("i")).as("__hs"),
-        struct(lit(ordinals(e.toLabel)).as("l"),
-          col(e.sinkIdColumn).cast(idT).as("i")).as("__hd"),
-        struct(rFields.map { f =>
-          (if (own(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name) }: _*).as("__er"))
-    }.reduce(_ unionByName _)
-    val keys =
-      Seq(col("__src"), col("__dst"), col("__dist")) ++
-        (if (perWitness) Seq(col("__wids")) else Seq.empty) ++
-        extraKeys.map(col)
-    val keyNames = (Seq("__src", "__dst", "__dist") ++
-      (if (perWitness) Seq("__wids") else Seq.empty) ++ extraKeys)
-    val ex = ids.select(keys ++ Seq(col("__wids").as("__w0")) :+
-        posexplode(col("__wids")).as(Seq("__pos", "__wid")): _*)
-      .select(keys ++ Seq(col("__pos"), col("__wid"),
-        get(col("__w0"), col("__pos") + lit(1)).as("__nxt")): _*)
-    val perPos = ex
-      .join(taggedNodes, col("__wid") === col("__nwid"), "left")
-      .join(taggedEdges, col("__wid") === col("__hs") &&
-        col("__nxt") === col("__hd"), "left")
-      .groupBy((keyNames :+ "__pos").map(col): _*)
-      .agg(first(struct(col("__pos"), col("__ne").as("__e"))).as("__pn"),
-        min(when(col("__nxt").isNotNull, col("__er"))).as("__em"),
-        first(col("__nxt").isNotNull).as("__hasHop"))
-    perPos.groupBy(keyNames.map(col): _*)
-      .agg(transform(sort_array(collect_list(col("__pn"))),
-          x => x.getField("__e")).as("__nodes0"),
-        transform(sort_array(collect_list(when(col("__hasHop"),
-            struct(col("__pos"), col("__em").as("__e"))))),
-          x => x.getField("__e")).as("__rels0"))
-      .select(keys ++ Seq(
-        col("__nodes0").cast(nodeT).as("__nodes"),
-        col("__rels0").cast(relT).as("__rels")): _*)
+    val hops =
+      if (!needRels) None
+      else {
+        val rFields = mergeFields(defs.sortBy(_.key).map { e =>
+          val sch = catalog.edgeDf(e).schema
+          (Seq(e.srcIdColumn, e.sinkIdColumn) ++ e.properties).distinct
+            .map(c => sch(c))
+        }, "relationship definition")
+        Some((defs.map { e =>
+          catalog.edgeDf(e).select(tag(e.fromLabel, e.srcIdColumn).as("__hs"),
+            tag(e.toLabel, e.sinkIdColumn).as("__hd"),
+            elem(rFields, (Seq(e.srcIdColumn, e.sinkIdColumn) ++
+              e.properties).toSet).as("__e"))
+        }.reduce(_ unionByName _),
+          ArrayType(StructType(rFields), containsNull = true)))
+      }
+    WitnessDims(nodes, ArrayType(StructType(nFields), containsNull = true),
+      hops)
   }
 
   /** Top-level AND-conjuncts of a WHERE tree. */

@@ -1437,7 +1437,7 @@ object GraphOps {
         val (target, hop) = k.asInstanceOf[(Any, Any)]
         (target, (hop, back))
       })
-    Fixpoint.frame(spark, Fixpoint.regroup(hops) { (target, hs) =>
+    Fixpoint.frame(spark, Fixpoint.regroup(hops, spark) { (target, hs) =>
         val len = hs.iterator.map(_._2).max
         hs.iterator.map { case (hop, back) => Row(target, len - back, hop) }
       }, StructType(Seq(

@@ -73,11 +73,12 @@ object Replay {
   /** Checkpoint manager for the replay queries. Spark's default
     * FileContext-based manager makes Hadoop's local filesystem fork a
     * `readlink` process for every rename (one per state-store and log
-    * commit); the FileSystem-based manager renames through NIO. */
+    * commit), and creating a file or directory through Hadoop forks a
+    * `chmod`; [[NioCheckpointFileManager]] creates and renames local
+    * checkpoint files through NIO. */
   private val CheckpointManagerKey =
     "spark.sql.streaming.checkpointFileManagerClass"
-  private val CheckpointManager = "org.apache.spark.sql.execution." +
-    "streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private val CheckpointManager = classOf[NioCheckpointFileManager].getName
 
   private def withReplayConf[R](spark: SparkSession, partitions: Int,
       noDataBatches: Boolean)(body: String => R): R = {

@@ -1391,11 +1391,11 @@ class CypherExtensionsSpec extends AnyFunSuite {
           |RETURN length(p) AS l""".stripMargin).collect()
         .map(_.getLong(0))
       assert(plain.toSeq == Seq(2L, 2L))
-      // fused one-pass witness resolution (optimization round 16):
-      // the rel ARRAYS of both σ rows pick the deterministic
-      // min-property edge per hop (the old split-join contract,
-      // value-pinned through widsToNodesRels) while the node arrays
-      // stay aligned in the same output row
+      // witness resolution: the rel ARRAYS of both σ rows pick the
+      // deterministic min-property edge per hop (the old split-join
+      // contract, pinned against the DataFrame assembly in
+      // WitnessResolveSpec) while the node arrays stay aligned in the
+      // same output row
       val both = s.run(
         """MATCH p = SHORTEST 2 GROUPS (a:Person)-[:KNOWS*]->(b:Person)
           |WHERE a.Name = 'Tom Hanks' AND b.Name = 'Kevin Bacon'

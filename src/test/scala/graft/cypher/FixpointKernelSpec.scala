@@ -9,6 +9,10 @@ import scala.util.Using
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
@@ -108,6 +112,15 @@ class FixpointKernelSpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** Walked witness paths as (src, dst, dist, ids) rows of long ids. */
+  private def pathRows(ps: Fixpoint.Rows[Reach.WitnessPath]): DataFrame = {
+    import org.apache.spark.sql.types._
+    Fixpoint.frame(spark, ps.map(p => Row(p.src, p.dst, p.dist, p.ids)),
+      StructType(Seq(StructField("__src", LongType),
+        StructField("__dst", LongType), StructField("__dist", LongType),
+        StructField("__wids", ArrayType(LongType)))))
+  }
+
   private def witnessRow(r: Row): (Long, Long, Long, List[Long]) =
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3).toList)
 
@@ -134,13 +147,13 @@ class FixpointKernelSpec extends AnyFunSuite {
       val minimal = minimalPaths(es, seedIds)
       same(s"trial $trial closure")(
         Reach.reachablePairs(edges, "s", "d", withDist = true))
-      same(s"trial $trial witnesses")(Reach.reconstructWitnessIds(
+      same(s"trial $trial witnesses")(pathRows(Reach.reconstructWitnessIds(
         Reach.reachablePairs(edges, "s", "d", seeds = Some(seeds),
-          withDist = true, withParent = true)))
+          withDist = true, withParent = true))))
       val all = same(s"trial $trial all-parents witnesses") {
         val (pairs, parents, bound) =
           Reach.allParentsPairs(edges, "s", "d", Some(seeds))
-        Reach.reconstructAllWitnessIds(pairs, parents, bound)
+        pathRows(Reach.reconstructAllWitnessIds(pairs, parents, bound))
       }
       assert(bag(all.map(witnessRow)) == bag(minimal),
         s"trial $trial: all-parents witnesses ≠ every minimal path")
@@ -176,7 +189,7 @@ class FixpointKernelSpec extends AnyFunSuite {
         val (levels, parents, bound) = Reach.kLevelLevels(edges, "s", "d",
           Some(seeds), kind, k, withParents = true)
         val chosen = Reach.kLevelTrim(levels, kind, k)
-        Reach.kLevelWalk(chosen, parents.get, bound, kind, k)
+        pathRows(Reach.kLevelWalk(chosen, parents.get, bound, kind, k))
       }
     }
   }
@@ -244,19 +257,19 @@ class FixpointKernelSpec extends AnyFunSuite {
       val tags = jobs.during {
         same("closure")(Reach.reachablePairs(edges, "s", "d",
           withDist = true))
-        same("witnesses")(Reach.reconstructWitnessIds(
+        same("witnesses")(pathRows(Reach.reconstructWitnessIds(
           Reach.reachablePairs(edges, "s", "d", seeds = Some(seeds),
-            withDist = true, withParent = true)))
+            withDist = true, withParent = true))))
         same("all-parents witnesses") {
           val (pairs, parents, bound) =
             Reach.allParentsPairs(edges, "s", "d", Some(seeds))
-          Reach.reconstructAllWitnessIds(pairs, parents, bound)
+          pathRows(Reach.reconstructAllWitnessIds(pairs, parents, bound))
         }
         same("k-level walk") {
           val (levels, parents, bound) = Reach.kLevelLevels(edges, "s",
             "d", Some(seeds), "groups", 2, withParents = true)
-          Reach.kLevelWalk(Reach.kLevelTrim(levels, "groups", 2),
-            parents.get, bound, "groups", 2)
+          pathRows(Reach.kLevelWalk(Reach.kLevelTrim(levels, "groups", 2),
+            parents.get, bound, "groups", 2))
         }
         assert(rowsOf(GraphOps.weightedSsspTree(weighted, "s", "d", "w",
           seeds)) == base, "shortest-path tree")
@@ -815,6 +828,73 @@ class FixpointKernelSpec extends AnyFunSuite {
     }
   }
 
+  /** Every node of an executed plan: adaptive plans by their final
+    * plan, query stages and reused exchanges by the plans they hold. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec        => planNodes(s.plan)
+    case r: ReusedExchangeExec    => planNodes(r.child)
+    case o => (o.children ++ o.subqueries).flatMap(planNodes)
+  })
+
+  test("witness reach plans only scan resolved paths: q187–q189 within " +
+      "an exec job budget") {
+    val dir = Files.createTempDirectory("graft_witness_plans")
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      writeTables(dir)
+      // jobs while the built query is collected, as measured: the
+      // resolution's shuffles run inside them
+      val budget = Map(
+        "q187_dist_unbounded_witness" -> 5,
+        "q188_dist_hetero_klevel_witness" -> 5,
+        "q189_dist_allshortest_witness" -> 5)
+      val tail = Set("GenerateExec", "WindowExec", "SortAggregateExec",
+        "ObjectHashAggregateExec")
+      val seen = for ((name, _) <- budget) yield {
+        val build = () => SparkEntry.queries(name)(spark, dir.toString)
+        build().collect() // warm-up: the first read of each table lists its files
+        val df = build()
+        val tags = jobs.during(df.collect())
+        val ops = planNodes(df.queryExecution.executedPlan)
+          .map(_.getClass.getSimpleName)
+        assert(!ops.exists(tail), s"$name: ${ops.filter(tail)} in the plan")
+        name -> tags.size
+      }
+      assert(seen.forall { case (n, c) => c <= budget(n) },
+        s"exec jobs per query: $seen, budget $budget")
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
+        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+    }
+  }
+
+  test("kernel exits keep the loop width: a walk's rows and a regroup") {
+    val sc = spark.sparkContext
+    val width = Fixpoint.partitioner(spark).numPartitions
+    // a chain 0 ← 1 ← … ← 9 walked back from every node: 9 steps
+    val parents = Fixpoint.Dist(sc.parallelize((1L to 9L).map(i =>
+      (i: Any, i - 1)), 3))
+    val start = Fixpoint.Dist(sc.parallelize((0L to 9L).map(i => (i, i)), 5))
+    val walked = Fixpoint.walk("widthWalk", start, parents, spark, from = 0)(
+      w => if (w._2 > 0) w._1 else null, _._2) { (w, ps) =>
+        Iterator.single((ps.head, w._2 - 1))
+      } { (_, _) => () }
+    val regrouped = Fixpoint.regroup(Fixpoint.Dist(sc.parallelize(
+      (0 until 40).map(i => ((i % 6): Any, i)), 7)), spark)((k, vs) =>
+      Iterator.single((k, vs.sum)))
+    for ((what, rows) <- Seq("walk" -> walked, "regroup" -> regrouped))
+      rows match {
+        case Fixpoint.Dist(rdd) =>
+          assert(rdd.getNumPartitions == width, s"$what: partitions")
+        case _ => fail(s"$what: not on the cluster")
+      }
+    assert(walked.asInstanceOf[Fixpoint.Dist[(Long, Long)]].rdd.collect()
+      .sorted.toSeq == (0L to 9L).map(_ => (0L, 0L)))
+  }
+
   test("the model loops launch one tagged job per round: s20, s22, s28") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_model_jobs")
@@ -854,14 +934,15 @@ class FixpointKernelSpec extends AnyFunSuite {
     try {
       writeTables(dir)
       // untagged jobs while each query is built: the admission counts,
-      // the collects of the edge and seed frames and the DataFrame work
-      // around the loops — the counts the parent commit's driver twins
-      // launched
+      // the collects of the edge and seed frames, the DataFrame work
+      // around the loops and the witness resolution's collect of the
+      // node (and hop) rows its paths name — one job, plus the stage
+      // AQE runs first for q169's window-derived edge table
       val setup = Map(
-        "q124_unbounded_witness" -> 9,
-        "q163_hetero_allshortest_witness" -> 7,
-        "q173_hetero_klevel_witness" -> 11,
-        "q169_klevel_witness" -> 13,
+        "q124_unbounded_witness" -> 10,
+        "q163_hetero_allshortest_witness" -> 8,
+        "q173_hetero_klevel_witness" -> 12,
+        "q169_klevel_witness" -> 15,
         "q72_all_shortest" -> 9)
       val seen = for ((name, _) <- setup) yield {
         val build = () => SparkEntry.queries(name)(spark, dir.toString)

@@ -34,9 +34,8 @@ class ReplaySpec extends AnyFunSuite {
       ds.toDF("v")
     }
     assert(out.as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
-    assert(during == Seq(Some("2"), Some("false"), Some("org.apache.spark." +
-      "sql.execution.streaming.checkpointing." +
-      "FileSystemBasedCheckpointFileManager")))
+    assert(during == Seq(Some("2"), Some("false"),
+      Some(classOf[NioCheckpointFileManager].getName)))
     assert(confs == before)
     intercept[IllegalStateException](
       Replay.run(spark, Seq(Seq(1)), "append") { _ =>
