@@ -963,18 +963,16 @@ private[cypher] object Reach {
     * both arrays, so nodes(p)/relationships(p) read pattern order. */
   private[cypher] def witnessFrame(paths: Rows[WitnessPath], t: DataType,
       dims: WitnessDims, reversed: Boolean): DataFrame = {
-    val spark = dims.nodes.sparkSession
+    val rels = dims.hops.isDefined
     def order(es: Seq[Row]) = if (reversed) es.reverse else es
-    Fixpoint.frame(spark,
-      Fixpoint.resolve(paths, spark)(_.ids)(dims.nodes, dims.hops.map(_._1))
-        .map { case (p, ns, hs) =>
-          Row.fromSeq(Seq(p.src, p.dst, p.dist, order(ns)) ++
-            dims.hops.map(_ => order(hs)))
-        },
-      StructType(Seq(StructField("__src", t), StructField("__dst", t),
-        StructField("__dist", LongType),
+    Fixpoint.resolve(paths, dims.nodes.sparkSession)(_.ids)(dims.nodes,
+      dims.hops.map(_._1))(StructType(Seq(StructField("__src", t),
+        StructField("__dst", t), StructField("__dist", LongType),
         StructField("__nodes", dims.nodeT, nullable = false)) ++
-        dims.hops.map(h => StructField("__rels", h._2, nullable = false))))
+        dims.hops.map(h => StructField("__rels", h._2, nullable = false)))) {
+      (p, ns, hs) => Row.fromSeq(Seq(p.src, p.dst, p.dist, order(ns)) ++
+        (if (rels) Seq(order(hs)) else Nil))
+    }
   }
 
   /** BFS recording ALL first-discovery parents per pair: (pairs with

@@ -6,10 +6,11 @@ import scala.reflect.ClassTag
 import org.apache.spark.Partitioner
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge,
+  Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.functions.{col, lit, struct}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /**
  * Spark-core kernel for frontier loops and parent-pointer walks — the
@@ -53,10 +54,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *
  * Walks ([[walk]]) follow the same shape: parent entries are indexed
  * once per partition, each step shuffles only the rows still walking to
- * the index, and finished rows leave the loop. A walk's paths resolve
- * into element structs ([[resolve]]) the same way: the dimension rows
- * are indexed once per partition and the paths' positions shuffle to
- * them.
+ * the index, and finished rows leave the loop. On the cluster a walk's
+ * paths resolve into element structs ([[resolve]]) the same way: the
+ * dimension rows are indexed once per partition and the paths'
+ * positions shuffle to them.
  *
  * Executors: [[loop]] and [[walk]] run the same closures either on the
  * cluster or in driver memory, by where their input [[Rows]] are held
@@ -664,148 +665,133 @@ object Fixpoint {
     start.sparkContext.union((done :+ live).toSeq).coalesce(part.numPartitions)
   }
 
-  /** Distinct path ids past which [[resolve]] joins the dimension rows
-    * on the cluster: its `isin` filter would plan one literal per id. */
-  private val LocalKeys = 10000
-
-  /** Resolves every path of `paths` against dimension rows, held where
-    * the paths are. The ids of a path (`ids`, at least one) are keys of
-    * `nodes`, a (key, element) frame. With `hops`, a (source key,
-    * destination key, element) frame, each id with a non-null successor
-    * also resolves the hop between them. Keys are of the paths' id type;
-    * rows with a null key never match. A key with several rows resolves
-    * to its least element ([[compareIds]]), a key with none, or a null
-    * id, to an element whose fields are all null. Returns each path with
-    * its node elements and its hop elements (none without `hops`).
+  /** Resolves every path of `paths` against dimension rows into a frame
+    * of `schema`, one row `out(path, node elements, hop elements)` per
+    * path. The ids of a path (`ids`, at least one) are keys of `nodes`,
+    * a (key, element) frame. With `hops`, a (source key, destination
+    * key, element) frame, each id with a non-null successor also
+    * resolves the hop between them; without, a path has no hop
+    * elements. Keys are of the paths' id type; rows with a null key
+    * never match. A key with several rows resolves to its least element
+    * ([[compareIds]]), a key with none, or a null id, to an element
+    * whose fields are all null.
     *
-    * Up to `maxKeys` distinct ids (on the cluster, counted by one job
-    * that also checkpoints the paths), ONE job collects only the
-    * dimension rows whose keys lie on a path, through an `isin` filter,
-    * and each path resolves against them where it is held: on the
-    * cluster through a broadcast map over the paths, run when the result
-    * is read. A path names few rows next to the tables, which a join
-    * would shuffle whole. Past `maxKeys` the paths join on the cluster,
-    * also when the result is read: the dimension rows are
-    * hash-partitioned by (source) key at the loop width and indexed once
-    * per partition, the paths' positions shuffle to them, and the
-    * resolved positions regroup per path. */
-  def resolve[P: ClassTag](paths: Rows[P], spark: SparkSession,
-      maxKeys: Int = LocalKeys)(ids: P => collection.Seq[Any])(
-      nodes: DataFrame, hops: Option[DataFrame])
-      : Rows[(P, Seq[Row], Seq[Row])] = {
-    def empty(df: DataFrame): Row = Row.fromSeq(Seq.fill(
-      df.schema.last.dataType.asInstanceOf[StructType].length)(null))
-    val noNode = empty(nodes)
-    val noHop = hops.map(empty).orNull
-    val least = (es: collection.Seq[Row]) =>
-      es.reduce((a, b) => if (compareIds(a, b) <= 0) a else b)
-    // a dimension row as (key, element) and a hop row as (source,
-    // (destination, element)), null keys dropped
-    val node = (a: Array[Any]) =>
-      if (a(0) == null) None else Some((a(0), a(1).asInstanceOf[Row]))
-    val hop = (a: Array[Any]) =>
-      if (a(0) == null || a(1) == null) None
-      else Some((a(0), (a(1), a(2).asInstanceOf[Row])))
-    val hopsOf = (hs: collection.Seq[(Any, Row)]) =>
-      grouped(hs.iterator)(least)
-    // the distinct non-null ids of `it`, stopping once past maxKeys
-    def keysOf(it: Iterator[P]): mutable.HashSet[Any] = {
-      val keys = mutable.HashSet.empty[Any]
-      while (it.hasNext && keys.size <= maxKeys)
-        ids(it.next()).foreach(x => if (x != null) keys += x)
-      keys
-    }
-    val keys = paths match {
-      case Dist(rdd) => run(rdd, "resolve:keys")(keysOf).reduceOption { (a, b) =>
-        if (a.size > maxKeys) a else a ++= b }.getOrElse(mutable.HashSet.empty)
-      case Local(ps, _) => keysOf(ps.iterator)
-    }
-    if (keys.size <= maxKeys) {
-      def on(df: DataFrame, c: Int): Column = {
-        val f = df.schema(c)
-        col(f.name).isin(keys.toSeq.map(literal(_, f.dataType)): _*)
-      }
-      val rows =
-        if (keys.isEmpty) Array.empty[(Boolean, Array[Any])]
-        else {
-          val ns = values(nodes.where(on(nodes, 0))).map(a => (true, a))
-          val all = hops.fold(ns)(h => ns.union(
-            values(h.where(on(h, 0) && on(h, 1))).map(a => (false, a))))
-          paths match {
-            case Dist(_)     => job(all, "resolve:rows")(_.toArray).flatten
-            case Local(_, _) => all.collect()
+    * Nothing runs before the frame is read, and no dimension row
+    * reaches the driver. Paths in driver memory ([[Local]]) name their
+    * rows: their distinct ids, and with `hops` their distinct
+    * consecutive id pairs, filter the dimension rows in Catalyst (one
+    * hashed set test each), and the rows kept meet the paths in ONE
+    * partition, where every path resolves. That partition holds what
+    * the paths name, never the tables. On the cluster ([[Dist]]) the
+    * dimension rows are hash-partitioned by (source) key at the loop
+    * width and indexed once per partition, the paths' positions shuffle
+    * to them, and the resolved positions regroup per path. */
+  def resolve[P: ClassTag](paths: Rows[P], spark: SparkSession)(
+      ids: P => collection.Seq[Any])(nodes: DataFrame,
+      hops: Option[DataFrame])(schema: StructType)(
+      out: (P, Seq[Row], Seq[Row]) => Row): DataFrame = {
+    def elem(df: DataFrame) = df.schema.last.dataType.asInstanceOf[StructType]
+    def empty(t: StructType): Row = Row.fromSeq(Seq.fill(t.length)(null))
+    val noNode = empty(elem(nodes))
+    val noHop = hops.map(h => empty(elem(h))).orNull
+    val least = (a: Row, b: Row) => if (compareIds(a, b) <= 0) a else b
+    paths match {
+      case Local(ps, _) =>
+        val keys = mutable.HashSet.empty[Any]
+        val pairs = mutable.HashSet.empty[Row]
+        ps.foreach { p =>
+          val xs = ids(p)
+          xs.foreach(x => if (x != null) keys += x)
+          if (noHop != null) xs.iterator.zip(xs.iterator.drop(1)).foreach {
+            case (a, b) => if (a != null && b != null) pairs += Row(a, b)
           }
         }
-      val nm = grouped(rows.iterator.collect { case (true, a) => a }
-        .flatMap(node))(least)
-      val hm = grouped(rows.iterator.collect { case (false, a) => a }
-        .flatMap(hop))(hopsOf)
-      def resolved(nm: mutable.HashMap[Any, Row],
-          hm: mutable.HashMap[Any, mutable.HashMap[Any, Row]])(p: P) = {
-        val xs = ids(p).toIndexedSeq
-        val hs =
-          if (noHop == null) Seq.empty
-          else xs.indices.init.collect { case i if xs(i + 1) != null =>
-            hm.get(xs(i)).flatMap(_.get(xs(i + 1))).getOrElse(noHop)
+        // one frame of (tag, key, successor key, node element, hop
+        // element): the named node rows (0), the named hop rows (1),
+        // and a row standing for the paths (2), which keeps the one
+        // partition when no dimension row is named
+        def tagged(t: Int, a: Column, b: Column, n: Column, h: Column) =
+          Seq(lit(t).as("t"), a.as("a"), b.as("b"), n.as("n"), h.as("h"))
+        val none = (t: DataType) => lit(null).cast(t)
+        val Array(k, e) = nodes.columns
+        val named = (nodes.where(GraftSqlBridge.inSet(col(k), keys))
+          .select(tagged(0, col(k), none(nodes.schema(k).dataType), col(e),
+            none(hops.fold[DataType](NullType)(elem))): _*) +:
+          hops.toSeq.map { h =>
+            val Array(hs, hd, he) = h.columns
+            h.where(GraftSqlBridge.inSet(struct(col(hs), col(hd)), pairs))
+              .select(tagged(1, col(hs), col(hd), none(elem(nodes)),
+                col(he)): _*)
+          }).reduce(_ union _)
+        val all = named.union(spark.createDataFrame(
+          java.util.List.of(Row(2, null, null, null, null)),
+          StructType(named.schema.map(_.copy(nullable = true)))))
+        all.coalesce(1).mapPartitions { rows =>
+          val nm = mutable.HashMap.empty[Any, Row]
+          val hm = mutable.HashMap.empty[(Any, Any), Row]
+          rows.foreach { r =>
+            def keep[K](m: mutable.HashMap[K, Row], key: K, x: Row): Unit =
+              m(key) = m.get(key).fold(x)(least(_, x))
+            r.getInt(0) match {
+              case 0 => keep(nm, plain(r.get(1)), r.getStruct(3))
+              case 1 => keep(hm, (plain(r.get(1)), plain(r.get(2))),
+                r.getStruct(4))
+              case _ =>
+            }
           }
-        (p, xs.map(nm.getOrElse(_, noNode)), hs)
-      }
-      paths match {
-        case Dist(rdd) =>
-          val maps = spark.sparkContext.broadcast((nm, hm))
-          Dist(rdd.map(p => resolved(maps.value._1, maps.value._2)(p)))
-        case Local(ps, cap) => Local(ps.map(resolved(nm, hm)), cap)
-      }
-    } else {
-      val part = partitioner(spark)
-      val nodeIdx = adjacency(values(nodes).flatMap(node).partitionBy(part))(
-        least)
-      val hopIdx = hops.map(h =>
-        adjacency(values(h).flatMap(hop).partitionBy(part))(hopsOf))
-      // position i of path `rid`: its id, its successor when a hop
-      // resolves there, and (at i = 0) the path itself
-      val positions = (paths match {
-        case Dist(rdd)    => rdd
-        case Local(ps, _) => spark.sparkContext.parallelize(ps.toSeq)
-      }).zipWithUniqueId().flatMap { case (p, rid) =>
-        val xs = ids(p).toIndexedSeq
-        xs.indices.iterator.map { i =>
-          val nxt = if (noHop != null && i + 1 < xs.length) xs(i + 1) else null
-          (xs(i), (rid, i, nxt, if (i == 0) Some(p) else None))
+          ps.iterator.map { p =>
+            val xs = ids(p).toIndexedSeq
+            val hs =
+              if (noHop == null) Seq.empty
+              else xs.indices.init.collect { case i if xs(i + 1) != null =>
+                hm.getOrElse((xs(i), xs(i + 1)), noHop)
+              }
+            out(p, xs.map(nm.getOrElse(_, noNode)), hs)
+          }
+        }(Encoders.row(schema))
+      case Dist(rdd) =>
+        val part = partitioner(spark)
+        // node rows by key, hop rows by source as (destination,
+        // element), null keys dropped
+        val nodeIdx = adjacency(values(nodes).flatMap(a =>
+          if (a(0) == null) None else Some((a(0), a(1).asInstanceOf[Row])))
+          .partitionBy(part))(_.reduce(least))
+        val hopIdx = hops.map(h => adjacency(values(h).flatMap(a =>
+          if (a(0) == null || a(1) == null) None
+          else Some((a(0), (a(1), a(2).asInstanceOf[Row]))))
+          .partitionBy(part))(hs => grouped(hs.iterator)(_.reduce(least))))
+        // position i of path `rid`: its id, its successor when a hop
+        // resolves there, and (at i = 0) the path itself
+        val positions = rdd.zipWithUniqueId().flatMap { case (p, rid) =>
+          val xs = ids(p).toIndexedSeq
+          xs.indices.iterator.map { i =>
+            val nxt = if (noHop != null && i + 1 < xs.length) xs(i + 1) else null
+            (xs(i), (rid, i, nxt, if (i == 0) Some(p) else None))
+          }
+        }.partitionBy(part)
+        def look(pit: Iterator[(Any, (Long, Int, Any, Option[P]))],
+            nm: mutable.HashMap[Any, Row],
+            hm: mutable.HashMap[Any, mutable.HashMap[Any, Row]]) =
+          pit.map { case (id, (rid, i, nxt, p)) =>
+            val h = if (nxt == null) null
+                    else hm.get(id).flatMap(_.get(nxt)).getOrElse(noHop)
+            (rid: Any, (i, nm.getOrElse(id, noNode), h, p))
+          }
+        val looked = hopIdx match {
+          case None     => positions.zipPartitions(nodeIdx)((pit, nit) =>
+            look(pit, nit.next(), mutable.HashMap.empty))
+          case Some(hi) => positions.zipPartitions(nodeIdx, hi)(
+            (pit, nit, hit) => look(pit, nit.next(), hit.next()))
         }
-      }.partitionBy(part)
-      def look(pit: Iterator[(Any, (Long, Int, Any, Option[P]))],
-          nm: mutable.HashMap[Any, Row],
-          hm: mutable.HashMap[Any, mutable.HashMap[Any, Row]]) =
-        pit.map { case (id, (rid, i, nxt, p)) =>
-          val h = if (nxt == null) null
-                  else hm.get(id).flatMap(_.get(nxt)).getOrElse(noHop)
-          (rid: Any, (i, nm.getOrElse(id, noNode), h, p))
-        }
-      val looked = hopIdx match {
-        case None     => positions.zipPartitions(nodeIdx)((pit, nit) =>
-          look(pit, nit.next(), mutable.HashMap.empty))
-        case Some(hi) => positions.zipPartitions(nodeIdx, hi)(
-          (pit, nit, hit) => look(pit, nit.next(), hit.next()))
-      }
-      Dist(looked.groupByKey(part).map { case (_, es) =>
-        val p = es.iterator.flatMap(_._4).next()
-        val n = ids(p).length
-        val ns = new Array[Row](n)
-        val hs = new Array[Row](n)
-        es.foreach { case (i, ne, he, _) => ns(i) = ne; hs(i) = he }
-        (p, ns.toSeq, hs.iterator.filter(_ != null).toSeq)
-      })
+        spark.createDataFrame(looked.groupByKey(part).map { case (_, es) =>
+          val p = es.iterator.flatMap(_._4).next()
+          val n = ids(p).length
+          val ns = new Array[Row](n)
+          val hs = new Array[Row](n)
+          es.foreach { case (i, ne, he, _) => ns(i) = ne; hs(i) = he }
+          out(p, ns.toSeq, hs.iterator.filter(_ != null).toSeq)
+        }, schema)
     }
-  }
-
-  /** `v`, a value of type `t` as a loop holds it (a struct as a [[Row]]),
-    * as a literal column of type `t`. */
-  private def literal(v: Any, t: DataType): Column = (v, t) match {
-    case (r: Row, s: StructType) =>
-      struct(s.fields.indices.map(i =>
-        literal(r.get(i), s(i).dataType).as(s(i).name)): _*)
-    case _ => lit(v).cast(t)
   }
 
   /** Total ordering matching Spark's own sort/min semantics for the

@@ -62,6 +62,13 @@ object GraftSqlBridge {
     column(catalyst.expressions.BloomFilterMightContain(
       expression(bloom), expression(value)))
 
+  /** `c` IN `values` as one hashed set test (the `InSet` the optimizer
+    * turns a long `isin` into), with no literal expression per value.
+    * `values` are external values of `c`'s type: rows for structs. */
+  def inSet(c: Column, values: Iterable[Any]): Column =
+    column(catalyst.expressions.InSet(expression(c), values.iterator
+      .map(catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
+
   /** The catalog-derived MANAGED location a table identifier maps to
     * (database-aware: `db.table` → `<db location>/table`, never a
     * string concat on warehouse.dir) plus whether the identifier is

@@ -934,15 +934,14 @@ class FixpointKernelSpec extends AnyFunSuite {
     try {
       writeTables(dir)
       // untagged jobs while each query is built: the admission counts,
-      // the collects of the edge and seed frames, the DataFrame work
-      // around the loops and the witness resolution's collect of the
-      // node (and hop) rows its paths name — one job, plus the stage
-      // AQE runs first for q169's window-derived edge table
+      // the collects of the edge and seed frames and the DataFrame work
+      // around the loops — the counts the parent commit's driver twins
+      // launched
       val setup = Map(
-        "q124_unbounded_witness" -> 10,
-        "q163_hetero_allshortest_witness" -> 8,
-        "q173_hetero_klevel_witness" -> 12,
-        "q169_klevel_witness" -> 15,
+        "q124_unbounded_witness" -> 9,
+        "q163_hetero_allshortest_witness" -> 7,
+        "q173_hetero_klevel_witness" -> 11,
+        "q169_klevel_witness" -> 13,
         "q72_all_shortest" -> 9)
       val seen = for ((name, _) <- setup) yield {
         val build = () => SparkEntry.queries(name)(spark, dir.toString)

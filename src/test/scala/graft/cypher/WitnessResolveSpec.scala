@@ -226,27 +226,17 @@ class WitnessResolveSpec extends AnyFunSuite {
         StructField("__dist", LongType),
         StructField("__wids", ArrayType(t)), StructField("__pi", LongType))))
 
-  /** `paths` resolved on the kernel: in driver memory, on the cluster
-    * against the collected rows they name, and on the cluster through
-    * the shuffle join (no ids collected), which must agree; returns the
-    * driver frame. */
+  /** `paths` resolved on the kernel in driver memory and on the
+    * cluster, which must agree; returns the driver frame. */
   private def kernel(paths: Seq[Reach.WitnessPath], t: DataType,
       dims: Reach.WitnessDims, reversed: Boolean = false): DataFrame = {
-    def dist = Fixpoint.Dist(spark.sparkContext.parallelize(paths, 3))
     val local = Reach.witnessFrame(Fixpoint.Local(paths, Long.MaxValue), t,
       dims, reversed)
-    val onCluster = Reach.witnessFrame(dist, t, dims, reversed)
+    val onCluster = Reach.witnessFrame(
+      Fixpoint.Dist(spark.sparkContext.parallelize(paths, 3)), t, dims,
+      reversed)
     assert(onCluster.schema == local.schema)
     assert(rowsOf(onCluster) == rowsOf(local), "in-memory ≠ RDD executor")
-    def resolved(maxKeys: Int) = Fixpoint.resolve(dist, spark, maxKeys)(
-        _.ids)(dims.nodes, dims.hops.map(_._1)) match {
-      case Fixpoint.Dist(rdd) =>
-        rdd.collect().map { case (p, ns, hs) =>
-          (p, ns.toList, hs.toList).toString }.toSeq.sorted
-      case l => fail(s"resolved in driver memory: $l")
-    }
-    assert(resolved(0) == resolved(Int.MaxValue),
-      "shuffle join ≠ collected rows")
     local
   }
 
