@@ -47,6 +47,11 @@ import org.apache.spark.sql.types.{DataType, NullType, StructType}
  *    written and growing entry counts, plus one summed and one maxed
  *    per-entry measure.
  *
+ * A dense loop, writing every node every round, is a [[power]]
+ * iteration (PageRank plain, personalized and weighted, HITS, the
+ * Markov stationary distribution): the same grouped adjacency, a vector
+ * RDD co-partitioned with it, one push-and-combine job per round.
+ *
  * Loops without a graph use the tagged job alone: the model loops of
  * [[Similarity]] (k-means, power iteration, farthest-point picks)
  * local-checkpoint their corpus in a first [[run]], then [[job]] once
@@ -162,7 +167,7 @@ object Fixpoint {
   /** The loop's entry: `df`'s rows as arrays of plain values (nested
     * struct values become schema-free rows, so shuffles do not carry a
     * schema per id). */
-  private def values(df: DataFrame): RDD[Array[Any]] =
+  private[ops] def values(df: DataFrame): RDD[Array[Any]] =
     df.rdd.map(r => Array.tabulate[Any](r.length)(i => plain(r.get(i))))
 
   private def plain(v: Any): Any = v match {
@@ -587,6 +592,77 @@ object Fixpoint {
       }
     } catch { case _: ArithmeticException => throw new DriverOverflow }
     if (f.merge.isEmpty) levels else state.toSeq
+  }
+
+  /** Power iteration on the cluster over weighted edges (source →
+    * (destination, weight), non-null ends), grouped once by [[graph]]:
+    * `out` turns a node's (destination, weight) pairs into its out-edges
+    * (destination, p(u, v)), behind a null edge carrying its teleport
+    * weight tele(u) — 1, or with `tele` 1 on its ids and 0 elsewhere.
+    * Every edge end has an entry; a `tele` id off the graph is no node.
+    * `guard` sees n = Σ tele. With `reverse`, the rounds alternate with
+    * the reversed out-edges (weighted by their p), grouped once more
+    * (`<name>:reverse`) on the same partitioner.
+    *
+    * From x,,0,, = tele/n, round r is ONE job (`<name>:<r>`) computing
+    * x,,r,,(v) = (1 − d)·tele(v)/n + d·Σ,,u→v,, x,,r−1,,(u)·p(u, v): the
+    * vector pushes along the out-edges (the null edge pushes the
+    * teleport term to its own node), combines per node in the round's
+    * one shuffle onto the adjacency's partitioner, and is
+    * local-checkpointed while the job sums its L1 total. With
+    * `normalize` a vector reads divided by its total, and a round with
+    * total 0 keeps x,,r−1,,. Returns each node's x,,R,,, after x,,R−1,,
+    * with `reverse`. */
+  def power(name: String, edges: RDD[(Any, (Any, Double))],
+      tele: Option[RDD[Any]], spark: SparkSession)(
+      out: collection.Seq[(Any, Double)] => Array[(Any, Double)])(
+      rounds: Int, damping: Double, normalize: Boolean, reverse: Boolean)(
+      guard: Long => Unit): RDD[(Any, Array[Double])] = {
+    // rows: out-edges, (null, dflt) per edge end, (Root, 1) per tele id
+    val dflt = if (tele.isEmpty) 1.0 else 0.0
+    def build(n: String, rows: RDD[(Any, (Any, Double))]) = graph(n,
+      Dist(rows), spark) { (es: collection.Seq[(Any, Double)]) =>
+        val ws = es.filter(e => e._1 != null && e._1 != Root)
+        if (ws.isEmpty && es.forall(_._1 == Root)) Array.empty[(Any, Double)]
+        else (null, es.iterator.filter(e => e._1 == null || e._1 == Root)
+          .map(_._2).foldLeft(dflt)(math.max)) +: out(ws)
+      }(es => if (es.isEmpty) 0L else es(0)._2.toLong)
+      .asInstanceOf[Graph[(Any, Double)]]
+    val fwd = build(name, edges.flatMap { case (u, (v, w)) =>
+      Iterator((u, (v, w)), (v, (null, dflt))) } ++
+      tele.fold(spark.sparkContext.emptyRDD[(Any, (Any, Double))])(
+        _.map(t => (t, (Root, 1.0)))))
+    val gs = fwd +: (if (!reverse) Nil else Seq(build(s"$name:reverse",
+      fwd.adj.flatMap(_.iterator.flatMap { case (u, es) =>
+        es.headOption.map(h => (u, h)) ++
+          es.iterator.drop(1).map { case (v, p) => (v, (u, p)) } }))))
+    require(gs.forall(_.part == fwd.part), "power: graphs differ in width")
+    val n = fwd.sum
+    guard(n)
+    var cur = (fwd.adj.mapPartitions(_.flatMap(_.iterator.collect {
+      case (u, es) if es.nonEmpty => (u: Any, es(0)._2 / n)
+    }), preservesPartitioning = true), 1.0) // (vector, its L1 total)
+    var before = cur
+    for (r <- 1 to rounds) {
+      val g = gs((r - 1) % gs.size)
+      val scale = if (normalize) cur._2 else 1.0
+      val next = expand(cur._1, g) { (x: Double, u, e: (Any, Double)) =>
+        if (e._1 == null) (u, (1 - damping) * e._2 / n)
+        else (e._1, damping * (x / scale) * e._2)
+      }.reduceByKey(g.part, _ + _)
+      val total = run(next, s"$name:$r")(
+        _.foldLeft(0.0)((s, kv) => s + math.abs(kv._2))).sum
+      before = cur
+      if (!normalize || total > 0) cur = (next, total)
+    }
+    def read(v: (RDD[(Any, Double)], Double)) =
+      if (normalize) { val t = v._2; v._1.mapValues(_ / t) } else v._1
+    if (!reverse) read(cur).mapValues(Array(_))
+    else read(before).zipPartitions(read(cur), preservesPartitioning = true) {
+      (bit, cit) =>
+        val last = mutable.HashMap.empty[Any, Double] ++= cit
+        bit.map { case (u, x) => (u, Array(x, last(u))) }
+    }
   }
 
   /** Parent-pointer walk, run where `start` is held. Each step `s` of

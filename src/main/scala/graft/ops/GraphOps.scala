@@ -9,10 +9,9 @@ import graft.ops.Fixpoint.compareIds
 
 /**
  * Graph analytics over edge lists, complementing
- * [[Dedup.connectedComponents]] — the same scale posture: the graph
- * never materializes as adjacency lists (skew-prone at 100 TB), every
- * round works on slim (src, dst[, weight]) rows, and iteration lineage
- * is cut with local checkpoints so plan depth stays bounded.
+ * [[Dedup.connectedComponents]]. The iterative ones run on the
+ * [[Fixpoint]] kernel; the DataFrame loops left work on slim
+ * (src, dst[, weight]) rows and cut lineage with local checkpoints.
  *
  * PageRank follows the classic formulation (Page et al. 1999,
  * "The PageRank Citation Ranking"); triangle counting is the canonical
@@ -21,25 +20,18 @@ import graft.ops.Fixpoint.compareIds
  */
 object GraphOps {
 
-  /** Session conf key bounding per-round broadcast joins in the
-    * iterative operators (this file and the [[graft.cypher]] reach
-    * lowering). A frontier / rank / parent frame whose EXACT row count
-    * — every loop here already counts its frames for guards and
-    * termination — sits at or under the bound joins with an explicit
-    * broadcast hint, so the static edge frame is never shuffled per
-    * round (optimization guide §3.1 "pick the join strategy
-    * deliberately", §2.4 "a broadcast join replaces a shuffle of the
-    * large side"). LocalCheckpoint frames carry no size statistics,
-    * so without the hint every per-round join degenerates to
-    * sort-merge: both sides, INCLUDING the static edge frame, are
-    * re-shuffled and re-sorted every round. Rows at these sites are
-    * slim (16–64 B: ids, distances, σ counters), so the 1M-row
-    * default is ≲ 64 MB framed — comfortably inside the guide's
-    * broadcast band. The decision keys off the measured per-round
-    * count, not a constant tuned to any one scale: a 100 TB run whose
-    * frontier outgrows the bound falls back to the shuffle strategy
-    * automatically. Set 0 to disable; raise deliberately on
-    * big-memory clusters. */
+  /** Session conf key bounding the per-round broadcast joins of the
+    * DataFrame loops left here and the compiler's key-set semi joins
+    * ([[bcastIf]]). A frame whose EXACT row count — the loops count
+    * their frames for guards and termination anyway — sits at or under
+    * the bound joins with an explicit broadcast hint, so the static edge
+    * frame is never shuffled per round (optimization guide §3.1, §2.4).
+    * LocalCheckpoint frames carry no size statistics, so without the
+    * hint every per-round join degenerates to sort-merge, re-shuffling
+    * the edge frame every round. Rows at these sites are slim (16–64 B),
+    * so the 1M-row default is ≲ 64 MB framed. A 100 TB run whose
+    * frontier outgrows the bound falls back to the shuffle strategy.
+    * Set 0 to disable. */
   val BroadcastRowsConf = "spark.graft.broadcastRows"
   val BroadcastRowsDefault = 1000000L
 
@@ -77,10 +69,11 @@ object GraphOps {
     * caller already holds) is within [[BroadcastRowsConf]] AND the
     * estimated payload (rows × [[estRowBytes]]) is within
     * [[BroadcastBytesConf]]; `df` unchanged otherwise, keeping the
-    * planner's shuffle strategy for frames past either bound. The
-    * intended call sites are SLIM frames (ids, distances, σ counters,
-    * 16–64 B rows); the byte gate makes that contract enforced rather
-    * than assumed (ADVICE-r16). */
+    * planner's shuffle strategy for frames past either bound. The call
+    * sites are SLIM frames: [[labelPropagation]]'s labels,
+    * [[deterministicWalks]]' walkers, [[betweennessSampled]]'s waves
+    * and the compiler's key sets, 16–64 B rows; the byte gate makes
+    * that contract enforced rather than assumed (ADVICE-r16). */
   private[graft] def bcastIf(df: DataFrame, rows: Long): DataFrame = {
     val conf = df.sparkSession.conf
     val lim = conf.getOption(BroadcastRowsConf)
@@ -99,22 +92,20 @@ object GraphOps {
    *
    * Dangling mass (nodes with no out-edges) is NOT redistributed —
    * both this and any mirror must use the same convention; documented
-   * so results are reproducible.
+   * so results are reproducible. Parallel edges count once; an edge set
+   * with no row whose ends are both non-null fails as an empty graph.
    *
-   * 100 TB posture: edges dedupe once to slim (src, dst) rows and the
-   * out-degree joins in ONCE up front, so each iteration is a single
-   * (broadcastable rank)-to-edges join plus one groupBy(dst) shuffle of
-   * 16-byte rows. Rank state is 16 B/node. Lineage is cut every
-   * `checkpointEvery` iterations with a lazy localCheckpoint (the
-   * connectedComponents pattern) so the plan doesn't deepen linearly
-   * with k. Co-partitioning edges by src (bucketed input) makes the
-   * per-iteration rank join shuffle-free on the edge side.
+   * Scale: one [[Fixpoint.power]] iteration ([[powerIteration]]). The
+   * edges are grouped by source once, with 1/outdeg on each out-edge;
+   * the rank vector is an RDD co-partitioned with them, 8 B of rank per
+   * node; each iteration is one job whose one shuffle combines the
+   * pushed ranks per node.
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int = 10, damping: Double = 0.85,
-               checkpointEvery: Int = 5): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, damping,
-      checkpointEvery, sources = None)
+               iterations: Int = 10, damping: Double = 0.85): DataFrame =
+    powerIteration("pageRank", unweighted(edges, srcCol, dstCol), None,
+      iterations, damping, normalize = false, (w, _) => w,
+      stochastic = true, Seq("rank"))(n => require(n > 0, "empty graph"))
 
   /**
    * Personalized PageRank (Jeh & Widom 2003, "Scaling personalized web
@@ -122,68 +113,68 @@ object GraphOps {
    * of all nodes —
    * rank_0 = 1_S/|S|; rank_{k+1}(v) = (1-d)·1_S(v)/|S| + d·Σ rank_k(u)/outdeg(u).
    * Ranks measure proximity to the sources (recommendation /
-   * relatedness queries); nodes unreachable from S stay at 0.
-   * Same per-iteration plan as [[pageRank]] — the teleport vector is a
-   * broadcastable membership flag on the node table, not a new join.
+   * relatedness queries); nodes unreachable from S stay at 0. S counts
+   * only sources that are graph nodes, and must not be empty.
+   * Same iteration as [[pageRank]]: the source flag is each node's
+   * teleport weight, set once when the edges are grouped.
    */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            sources: DataFrame, iterations: Int = 10,
-                           damping: Double = 0.85,
-                           checkpointEvery: Int = 5): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, damping,
-      checkpointEvery, sources = Some(sources))
+                           damping: Double = 0.85): DataFrame =
+    powerIteration("personalizedPageRank", unweighted(edges, srcCol, dstCol),
+      Some(sources), iterations, damping, normalize = false, (w, _) => w,
+      stochastic = true, Seq("rank"))(n => require(n > 0,
+        "personalized PageRank needs >= 1 source in the graph"))
 
-  private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                           iterations: Int, damping: Double,
-                           checkpointEvery: Int,
-                           sources: Option[DataFrame]): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+  /** (src, dst, w = 1) rows of the edges with both ends non-null. */
+  private def unweighted(edges: DataFrame, srcCol: String, dstCol: String)
+      : DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        lit(1.0).as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    // lazy checkpoints: nodes and (src, dst, deg) are static across
-    // iterations — materialize them once (the count() job below) so no
-    // iteration re-reads or re-dedupes the raw edge input
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    // teleport column: uniform over all nodes, or over the source set
-    // (personalized). The source flag joins ONCE onto the static node
-    // table, so iterations never touch the source frame again.
-    val nodes = (sources match {
-      case None => nodes0.withColumn("__tele", lit(1.0))
-      case Some(s) =>
-        nodes0.join(broadcast(s.toDF("node").distinct()
-            .withColumn("__in", lit(true))), Seq("node"), "left")
-          .select(col("node"),
-            when(col("__in"), lit(1.0)).otherwise(lit(0.0)).as("__tele"))
-    }).localCheckpoint(false)
-    // teleport mass denominator: N for classic, |S ∩ nodes| for
-    // personalized (one job; parameterizes the literals below)
-    val n = nodes.agg(sum("__tele")).head().getDouble(0)
-    require(n > 0, "personalized PageRank needs >= 1 source in the graph")
-    // rank/contrib frames hold exactly nNodes (≤ nNodes for contribs)
-    // rows every iteration — broadcast them under the bound so eDeg
-    // and nodes are never shuffled per iteration (the one remaining
-    // per-iteration exchange is the groupBy("node") partial agg)
-    val nNodes = nodes.count()
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint(false)
-    var ranks = nodes.select(col("node"),
-      (col("__tele") / lit(n)).as("rank"))
-    for (k <- 1 to iterations) {
-      val contribs = eDeg.join(bcastIf(ranks, nNodes),
-          eDeg("src") === ranks("node"))
-        .select(eDeg("dst").as("node"),
-          (ranks("rank") / eDeg("deg")).as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = nodes.join(bcastIf(contribs, nNodes), Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("__tele") / lit(n) +
-            lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-      if (k % checkpointEvery == 0 && k < iterations)
-        ranks = ranks.localCheckpoint(false)
+
+  /** [[Fixpoint.power]] run as `name` over the (src, dst, w) rows of `e`
+    * (non-null ends, w > 0), as a (node, `cols`) frame. The ids are cast
+    * to one type with `tele`'s one column ([[Fixpoint.commonType]]), and
+    * the node column back to the edges' type. Parallel edges merge their
+    * weights by `parallel`; p(u, v) is the merged weight over u's total
+    * out-weight when `stochastic`, else the weight itself. One column
+    * holds the vector after `iterations` rounds; two hold HITS' last two
+    * half-steps of `2·iterations`, forward then reverse. */
+  private[ops] def powerIteration(name: String, e: DataFrame,
+      tele: Option[DataFrame], iterations: Int, damping: Double,
+      normalize: Boolean, parallel: (Double, Double) => Double,
+      stochastic: Boolean, cols: Seq[String])(guard: Long => Unit)
+      : DataFrame = {
+    require(iterations >= 1, "iterations must be >= 1")
+    val spark = e.sparkSession
+    val te = Fixpoint.commonType(e.schema("src").dataType,
+      e.schema("dst").dataType)
+    val t = Fixpoint.commonType(te +: tele.toSeq.map(_.schema.head.dataType)
+      : _*)
+    val edges = Fixpoint.values(e.select(Fixpoint.castTo(e, "src", t),
+        Fixpoint.castTo(e, "dst", t), col("w").cast(DoubleType)))
+      .map(a => (a(0), (a(1), a(2).asInstanceOf[Double])))
+    val ids = tele.map { s =>
+      val c = s.columns.head
+      Fixpoint.values(s.where(col(c).isNotNull)
+        .select(Fixpoint.castTo(s, c, t))).map(_(0))
     }
-    ranks.select("node", "rank")
+    val out = (ws: collection.Seq[(Any, Double)]) => {
+      val m = scala.collection.mutable.LinkedHashMap.empty[Any, Double]
+      ws.foreach { case (v, w) => m(v) = m.get(v).fold(w)(parallel(_, w)) }
+      val tot = if (stochastic) m.valuesIterator.sum else 1.0
+      m.iterator.map { case (v, w) => (v, w / tot) }.toArray
+    }
+    val hits = cols.size == 2
+    val x = Fixpoint.power(name, edges, ids, spark)(out)(
+      if (hits) 2 * iterations else iterations, damping, normalize,
+      reverse = hits)(guard)
+    val df = spark.createDataFrame(x.map { case (n, xs) =>
+        Row.fromSeq(n +: xs.toSeq) },
+      StructType(StructField("node", t, nullable = false) +:
+        cols.map(StructField(_, DoubleType, nullable = false))))
+    if (t == te) df else df.withColumn("node", col("node").cast(te))
   }
 
   /** Per-node out/in degrees over a directed edge list (0 for absent
@@ -787,44 +778,17 @@ object GraphOps {
    * with [[bipartiteProject]]: co-occurrence weights make strongly
    * co-supplying partners matter more than one-off pairings. Parallel
    * (src, dst) rows pre-sum their weights; non-positive weights drop.
-   * Same per-iteration plan shape as [[pageRank]] (one slim-key
-   * shuffle per iteration, static edge+weight frame checkpointed
-   * once, lineage cut every `checkpointEvery` rounds).
+   * Same iteration as [[pageRank]], with w(u,v)/W(u) on each grouped
+   * out-edge.
    */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int = 10,
-                       damping: Double = 0.85,
-                       checkpointEvery: Int = 5): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
-    val n = nodes.count().toDouble
-    require(n > 0, "empty graph")
-    val outW = e.groupBy("src").agg(sum(col("w")).as("ow"))
-    val eW = e.join(outW, "src").localCheckpoint(false)
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (k <- 1 to iterations) {
-      // node-sized rank/contrib frames broadcast under the bound —
-      // eW and nodes never re-shuffle per iteration (see bcastIf)
-      val contribs = eW.join(bcastIf(ranks, n.toLong),
-          eW("src") === ranks("node"))
-        .select(eW("dst").as("node"),
-          (ranks("rank") * eW("w") / eW("ow")).as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = nodes.join(bcastIf(contribs, n.toLong), Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-      if (k % checkpointEvery == 0 && k < iterations)
-        ranks = ranks.localCheckpoint(false)
-    }
-    ranks.select("node", "rank")
-  }
+                       damping: Double = 0.85): DataFrame =
+    powerIteration("pageRankWeighted", edges.select(col(srcCol).as("src"),
+        col(dstCol).as("dst"), col(weightCol).cast("double").as("w"))
+      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0),
+      None, iterations, damping, normalize = false, _ + _, stochastic = true,
+      Seq("rank"))(n => require(n > 0, "empty graph"))
 
   /**
    * Harmonic centrality of the `sources` nodes over the undirected
@@ -1179,55 +1143,19 @@ object GraphOps {
    *
    * hub_0 ≡ 1. Nodes with no in-edges keep authority 0; nodes with no
    * out-edges keep hub 0 (on a bipartite graph the two scores live on
-   * opposite sides — that is the expected shape, not a bug).
+   * opposite sides — that is the expected shape, not a bug). Parallel
+   * edges count once; an empty edge set has no rows.
    *
-   * 100 TB posture: mirrors [[pageRank]] — edges dedupe once to slim
-   * (src, dst) rows and checkpoint; each half-step is one join of the
-   * 16 B/node score state to the edge list plus one groupBy shuffle;
-   * the L1 total is a 1-row aggregate broadcast back in (the same
-   * model-sized-scalar contract as the centroid collects). Score
-   * frames checkpoint every `checkpointEvery` rounds to bound plan
-   * depth. No adjacency lists, no windows.
+   * Scale: [[pageRank]]'s iteration with p = 1 and no teleport, its
+   * half-steps alternating between the forward and the reversed edges,
+   * each grouped once: one job per half-step, whose L1 total
+   * normalizes the scores.
    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iterations: Int = 3, checkpointEvery: Int = 4): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
-    // node-sized score frames broadcast under the bound (bcastIf): the
-    // edge frame and the node table never re-shuffle per half-step
-    val nNodes = nodes.count()
-    var hub = nodes.withColumn("hub", lit(1.0))
-    var auth = nodes.withColumn("auth", lit(0.0))
-    for (k <- 1 to iterations) {
-      val aRaw = e.join(bcastIf(hub, nNodes), e("src") === hub("node"))
-        .groupBy(e("dst").as("node")).agg(sum("hub").as("__a"))
-      val aTot = aRaw.agg(sum("__a").as("__t"))
-      auth = nodes.join(bcastIf(aRaw, nNodes), Seq("node"), "left")
-        .crossJoin(broadcast(aTot))
-        .select(col("node"),
-          (coalesce(col("__a"), lit(0.0)) / col("__t")).as("auth"))
-      val hRaw = e.join(bcastIf(auth, nNodes), e("dst") === auth("node"))
-        .groupBy(e("src").as("node")).agg(sum("auth").as("__h"))
-      val hTot = hRaw.agg(sum("__h").as("__t"))
-      hub = nodes.join(bcastIf(hRaw, nNodes), Seq("node"), "left")
-        .crossJoin(broadcast(hTot))
-        .select(col("node"),
-          (coalesce(col("__h"), lit(0.0)) / col("__t")).as("hub"))
-      if (k % checkpointEvery == 0 && k < iterations) {
-        auth = auth.localCheckpoint(false)
-        hub = hub.localCheckpoint(false)
-      }
-    }
-    // final assembly: two node-sized frames — broadcast one under the
-    // bound so the LAST join of the query is hash, not sort-merge
-    // (optimization round 17; VERDICT-r16 #8)
-    auth.join(bcastIf(hub, nNodes), Seq("node"))
-  }
+           iterations: Int = 3): DataFrame =
+    powerIteration("hits", unweighted(edges, srcCol, dstCol), None,
+      iterations, 1.0, normalize = true, (w, _) => w, stochastic = false,
+      Seq("auth", "hub"))(_ => ())
 
   /**
    * Recommended quadratic-valve settings read off a [[graphCard]] —

@@ -845,45 +845,30 @@ object Sessionize {
    * absorbing types (types never seen as `from`) proportionally to the
    * current π (dividing by the L1 total scales every surviving entry
    * by the same factor) — documented convention, mirrored by the
-   * oracle. Deterministic: P is a ratio of exact counts and the
-   * iteration count is fixed.
+   * oracle. If the whole mass sits in absorbing types, the step's total
+   * is 0: π is already stationary and is kept. Deterministic: P is a
+   * ratio of exact counts and the iteration count is fixed. A null
+   * type is no state.
    *
    * Scale: the heavy step is the ONE per-user lead() shuffle inside
-   * [[eventTransitions]]; everything after lives on the (types×types)
-   * transition table, so each round is a broadcast join plus a tiny
-   * aggregate, and the L1 total is a 1-row broadcast scalar (the
-   * model-sized contract). State never exceeds O(types).
+   * [[eventTransitions]]. The rest is weighted PageRank with d = 1, no
+   * teleport and L1 normalization ([[GraphOps.powerIteration]]) on the
+   * (types × types) transition counts: grouped by `from` type once,
+   * then one job per round over a vector of O(types).
    */
   def markovStationary(events: DataFrame, iterations: Int = 3,
                        typeCol: String = "event_type",
                        userCol: String = "user_id",
                        tsCol: String = "ts",
-                       eventIdCol: String = "event_id"): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val p = eventTransitions(events, typeCol, userCol, tsCol, eventIdCol)
-      .select(col("from_type"), col("to_type"), col("p"))
-      .localCheckpoint(false)
-    val types = p.select(col("from_type").as("t"))
-      .union(p.select(col("to_type").as("t"))).distinct()
-      .localCheckpoint(false)
-    val n = types.count().toDouble
-    var pi = types.withColumn("pi", lit(1.0) / lit(n))
-    for (_ <- 1 to iterations) {
-      val stepped = p.join(pi, p("from_type") === pi("t"))
-        .groupBy(col("to_type").as("t")).agg(sum(col("pi") * col("p")).as("__m"))
-      val tot = stepped.agg(sum("__m").as("__t"))
-      // if the whole mass sits in absorbing types (no out-transitions),
-      // the step total is 0 — the distribution is already stationary;
-      // keep it instead of dividing by zero
-      pi = pi.join(stepped, Seq("t"), "left").crossJoin(broadcast(tot))
-        .select(col("t"),
-          when(col("__t") > 0,
-            coalesce(col("__m"), lit(0.0)) / col("__t"))
-            .otherwise(col("pi")).as("pi"))
-    }
-    pi.select(col("t").as("event_type"), col("pi"))
-  }
-
+                       eventIdCol: String = "event_id"): DataFrame =
+    GraphOps.powerIteration("markovStationary",
+      eventTransitions(events, typeCol, userCol, tsCol, eventIdCol)
+        .where(col("from_type").isNotNull)
+        .select(col("from_type").as("src"), col("to_type").as("dst"),
+          col("n_transitions").as("w")),
+      None, iterations, 1.0, normalize = true, _ + _, stochastic = true,
+      Seq("pi"))(_ => ())
+      .withColumnRenamed("node", "event_type")
 
   /**
    * Behavioral diversity per user: Shannon entropy (bits) of the

@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
-import graft.ops.{Fixpoint, GraphContractViolation, GraphOps}
+import graft.ops.{Fixpoint, GraphContractViolation, GraphOps, Sessionize}
 
 /**
  * The reach, DAG-check, BFS, k-core and shortest-path loops on the
@@ -925,6 +925,44 @@ class FixpointKernelSpec extends AnyFunSuite {
       Using.resource(Files.walk(dir))(_.iterator().asScala.toVector)
         .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
     }
+  }
+
+  test("the power iterations launch one tagged job per round: PageRank, " +
+      "personalized, weighted, HITS, markovStationary") {
+    import spark.implicits._
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 1L, 1.0), (3L, 4L, 1.0))
+        .toDF("s", "d", "w")
+      val ev = Seq((1L, 1L, "A"), (2L, 1L, "B"), (3L, 1L, "A"), (4L, 2L, "B"))
+        .map { case (id, u, t) =>
+          (id, u, t, new java.sql.Timestamp(1700000000000L + id * 1000)) }
+        .toDF("event_id", "user_id", "event_type", "ts")
+      // (name, operator at k iterations, rounds at k, its graph builds)
+      val ops = Seq[(String, Int => DataFrame, Int => Int, Seq[String])](
+        ("pageRank", GraphOps.pageRank(e, "s", "d", _), identity,
+          Seq("pageRank:edges")),
+        ("personalizedPageRank", GraphOps.personalizedPageRank(e, "s", "d",
+          Seq(1L).toDF("n"), _), identity, Seq("personalizedPageRank:edges")),
+        ("pageRankWeighted", GraphOps.pageRankWeighted(e, "s", "d", "w", _),
+          identity, Seq("pageRankWeighted:edges")),
+        ("hits", GraphOps.hits(e, "s", "d", _), 2 * _,
+          Seq("hits:edges", "hits:reverse:edges")),
+        ("markovStationary", Sessionize.markovStationary(ev, _), identity,
+          Seq("markovStationary:edges")))
+      for ((name, op, rounds, builds) <- ops) {
+        val untagged = Seq(2, 5).map { k =>
+          val tags = jobs.during(op(k))
+          assert(tags.filter(_ != null) ==
+            builds ++ (1 to rounds(k)).map(r => s"$name:$r"),
+            s"$name at $k iterations: jobs $tags")
+          tags.count(_ == null)
+        }
+        assert(untagged.distinct.size == 1,
+          s"$name: untagged jobs at 2 and 5 iterations: $untagged")
+      }
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
   test("the driver executor launches no round jobs") {

@@ -15,6 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * repartitioned input; grid-valued corpora make distance ties common.
  * Rows and schemas (nullability included) must be equal, and an input
  * the reference fails on must fail.
+ *
+ * The power iterations ([[Fixpoint.power]]: PageRank plain, personalized
+ * and weighted, HITS, `markovStationary`) against a plain-Scala power
+ * iteration on random graphs, and on empty ones.
  */
 class ModelLoopSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -242,5 +246,132 @@ class ModelLoopSpec extends AnyFunSuite {
     assert(!same("k past the rows")(
       farthestRef(small, "embedding", "vec_id", 4),
       Similarity.farthestPoints(small, "embedding", "vec_id", 4)))
+  }
+
+  // ------------------------------------------------ power iterations
+
+  /** x,,r,,(v) = (1 − d)·tele(v)/n + d·Σ,,u→v,, x,,r−1,,(u)·p(u, v) in
+    * plain Scala over the (u, v, w) edges `es`: parallel edges sum their
+    * weights (`sum`) or count once, p is w over u's out-weight when
+    * `stochastic`, and teleport lands on every node or on `tele`'s.
+    * `normalize` divides each round by its L1 total, keeping the last
+    * vector when that is 0; `reverse` alternates with the reversed edges
+    * and keeps the last two vectors. */
+  private def powerRef[K](es: Seq[(K, K, Double)], tele: Option[Set[K]],
+      rounds: Int, d: Double, normalize: Boolean, sum: Boolean,
+      stochastic: Boolean, reverse: Boolean): Map[Any, Seq[Double]] = {
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+    val w = es.groupMapReduce(e => (e._1, e._2))(_._3)(
+      (a, b) => if (sum) a + b else a)
+    val outW = w.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val p = w.map { case ((u, v), x) =>
+      ((u, v), if (stochastic) x / outW(u) else x) }
+    val tl = nodes.map(v => v -> tele.fold(1.0)(s => if (s(v)) 1.0 else 0.0))
+      .toMap
+    val n = tl.values.sum
+    var xs = List(tl.map { case (v, t) => (v, t / n) })
+    for (r <- 1 to rounds) {
+      val fwd = !reverse || r % 2 == 1
+      val x = xs.head
+      val y = nodes.map(v => v -> ((1 - d) * tl(v) / n + d * p.collect {
+        case ((a, b), q) if (if (fwd) b else a) == v => x(if (fwd) a else b) * q
+      }.sum)).toMap
+      val tot = y.values.sum
+      xs = (if (!normalize) y else if (tot > 0) y.map(kv => (kv._1, kv._2 / tot))
+            else x) :: xs
+    }
+    nodes.map(v => (v: Any) ->
+      (if (reverse) Seq(xs(1)(v), xs.head(v)) else Seq(xs.head(v)))).toMap
+  }
+
+  /** `got`'s (node, values…) rows are `want`'s, to 1e-9. */
+  private def near(what: String, got: DataFrame, want: Map[Any, Seq[Double]])
+      : Unit = {
+    val g = got.collect().map(r => r.get(0) ->
+      (1 until r.length).map(r.getDouble)).toMap
+    assert(g.keySet == want.keySet, s"$what: nodes")
+    for ((k, v) <- want; (a, b) <- g(k).zip(v))
+      assert(math.abs(a - b) <= 1e-9, s"$what: node $k: $a, want $b")
+  }
+
+  /** Random (u, v, w) edges over `n` nodes: parallel edges, a self-loop
+    * and a sink among them, weights in {0.5, 1.5, 2.5, 3.5}. */
+  private def randomEdges(seed: Int, n: Int, m: Int): Seq[(Long, Long, Double)] = {
+    val rnd = new scala.util.Random(seed)
+    val es = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong,
+      0.5 + rnd.nextInt(4)))
+    es ++ es.take(3).map(e => e.copy(_3 = e._3 + 1)) ++
+      Seq((1L, 1L, 2.0), (2L, n.toLong, 1.5))
+  }
+
+  /** Events whose per-user type sequences are `seqs`, in order. */
+  private def events(seqs: Seq[Seq[String]]): DataFrame = {
+    val rows = seqs.zipWithIndex.flatMap { case (ts, u) =>
+      ts.zipWithIndex.map { case (t, i) =>
+        val id = u * 100L + i
+        Row(id, u.toLong, t, new java.sql.Timestamp(1700000000000L + id * 1000))
+      }
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("event_id", LongType), StructField("user_id", LongType),
+      StructField("event_type", StringType), StructField("ts", TimestampType))))
+  }
+
+  test("the power iterations match a plain-Scala power iteration: " +
+      "PageRank plain, personalized (int sources) and weighted, HITS, Markov") {
+    import spark.implicits._
+    for (seed <- 1 to 2) {
+      val es = randomEdges(seed, 10, 24)
+      val df = es.toDF("s", "d", "w").repartition(3)
+      val ones = es.map(e => (e._1, e._2, 1.0))
+      val srcs = Seq(Some(1), Some(3), Some(99), None).toDF("n")
+      near(s"pageRank $seed", GraphOps.pageRank(df, "s", "d", 4),
+        powerRef(ones, None, 4, 0.85, false, false, true, false))
+      val ppr = GraphOps.personalizedPageRank(df, "s", "d", srcs, 3, 0.8)
+      assert(ppr.schema("node").dataType == LongType)
+      near(s"personalizedPageRank $seed", ppr,
+        powerRef(ones, Some(Set(1L, 3L)), 3, 0.8, false, false, true, false))
+      near(s"pageRankWeighted $seed",
+        GraphOps.pageRankWeighted(df, "s", "d", "w", 5),
+        powerRef(es, None, 5, 0.85, false, true, true, false))
+      near(s"hits $seed", GraphOps.hits(df, "s", "d", 3),
+        powerRef(ones, None, 6, 1.0, true, false, false, true))
+    }
+    // a cyclic chain, and one whose mass drains into the absorbing D
+    val rnd = new scala.util.Random(5)
+    val cyclic = Seq.fill(6)(Seq.fill(2 + rnd.nextInt(5))(
+      "ABCE".charAt(rnd.nextInt(4)).toString))
+    val draining = Seq.fill(6)(
+      (Seq("A", "B", "C").filter(_ => rnd.nextBoolean()) :+ "D"))
+      .map(s => if (s.size == 1) "A" +: s else s)
+    for ((what, seqs) <- Seq("cyclic" -> cyclic, "draining" -> draining)) {
+      val trans = seqs.flatMap(s => s.zip(s.tail))
+        .groupMapReduce(identity)(_ => 1.0)(_ + _)
+        .map { case ((f, t), c) => (f, t, c) }.toSeq
+      val want = powerRef(trans, None, 6, 1.0, true, true, true, false)
+      if (what == "draining") assert(want("D") == Seq(1.0))
+      near(s"markovStationary $what",
+        Sessionize.markovStationary(events(seqs), iterations = 6), want)
+    }
+  }
+
+  test("an empty graph: PageRank fails as empty, personalized PageRank " +
+      "wants a source, HITS and markovStationary have no rows") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Long, Double)].toDF("s", "d", "w")
+    val nullEnds = Seq((Some(1L), None, 1.0), (None, Some(2L), 1.0))
+      .toDF("s", "d", "w")
+    def msg(f: => DataFrame): String =
+      intercept[IllegalArgumentException](f.collect()).getMessage
+    for (e <- Seq(none, nullEnds)) {
+      assert(msg(GraphOps.pageRank(e, "s", "d")).contains("empty graph"))
+      assert(msg(GraphOps.personalizedPageRank(e, "s", "d",
+        Seq(1L).toDF("n"))).contains("needs >= 1 source in the graph"))
+      assert(msg(GraphOps.pageRankWeighted(e, "s", "d", "w"))
+        .contains("empty graph"))
+      assert(GraphOps.hits(e, "s", "d").collect().isEmpty)
+    }
+    for (ev <- Seq(events(Nil), events(Seq(Seq(null, null, null)))))
+      assert(Sessionize.markovStationary(ev).collect().isEmpty)
   }
 }
