@@ -618,7 +618,7 @@ object Fixpoint {
       out: collection.Seq[(Any, Double)] => Array[(Any, Double)])(
       rounds: Int, damping: Double, normalize: Boolean, reverse: Boolean)(
       guard: Long => Unit): RDD[(Any, Array[Double])] = {
-    // rows: out-edges, (null, dflt) per edge end, (Root, 1) per tele id
+    // rows: out-edges, (null, dflt) marking edge ends, (Root, 1) per tele id
     val dflt = if (tele.isEmpty) 1.0 else 0.0
     def build(n: String, rows: RDD[(Any, (Any, Double))]) = graph(n,
       Dist(rows), spark) { (es: collection.Seq[(Any, Double)]) =>
@@ -628,8 +628,13 @@ object Fixpoint {
           .map(_._2).foldLeft(dflt)(math.max)) +: out(ws)
       }(es => if (es.isEmpty) 0L else es(0)._2.toLong)
       .asInstanceOf[Graph[(Any, Double)]]
-    val fwd = build(name, edges.flatMap { case (u, (v, w)) =>
-      Iterator((u, (v, w)), (v, (null, dflt))) } ++
+    val fwd = build(name, edges.mapPartitions { it =>
+      val marked = mutable.HashSet.empty[Any] // bounded: repeats are harmless
+      it.flatMap { case (u, (v, w)) =>
+        if (marked.size >= (1 << 16)) marked.clear()
+        Iterator((u, (v, w))) ++
+          (if (marked.add(v)) Iterator((v, (null, dflt))) else Iterator.empty)
+      } } ++
       tele.fold(spark.sparkContext.emptyRDD[(Any, (Any, Double))])(
         _.map(t => (t, (Root, 1.0)))))
     val gs = fwd +: (if (!reverse) Nil else Seq(build(s"$name:reverse",
